@@ -168,7 +168,11 @@ object Adressen {
     // buffer is not hash-map-mutable, so it PLANS AS A SORT AGGREGATE and
     // the 1M-address BAG probe measured curate 14 s -> 45 s (the sort of
     // the full five-way-wide frame). The TypedImperativeAggregate arg_max
-    // keeps the ObjectHashAggregate plan: map-side partials, no sort.
+    // keeps the ObjectHashAggregate plan: map-side partials, no Sort
+    // operator. A task whose hash map passes
+    // spark.sql.objectHashAggregate.sortBased.fallbackThreshold (128) keys
+    // still sorts its remaining input at run time (SortBasedAggregator
+    // fallback, see ArgMax).
     val j1Cols = j1.columns
     val j1Rest = j1Cols.filter(_ != "nummer_id").toIndexedSeq
     val j1Ord = struct((col("verblijfsobject_id") +:

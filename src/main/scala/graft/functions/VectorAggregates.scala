@@ -791,7 +791,14 @@ object TopK {
  * aggregate runs in ObjectHashAggregate: O(1) state per group (one owned
  * UnsafeRow), map-side partials (each mapper ships one winner per group it
  * saw — shuffle volume is |groups| rows, independent of input size), no
- * sort anywhere in the plan.
+ * Sort operator in the plan. At run time a task is not sort-free, though:
+ * once its hash map holds more than
+ * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` (default
+ * 128) keys, ObjectAggregationIterator falls back to a SortBasedAggregator
+ * that sorts the task's remaining input by group key (visible as
+ * SortBasedAggregator frames under `ArgMax.update` in a profile of the
+ * BAG curate). That sort is per task and bounded by the task's input; it
+ * does not add an exchange.
  *
  * Ordering: any orderable type via the interpreted ordering — pass
  * `struct(c1, c2, ...)` for a composite; struct comparison is field-by-

@@ -298,9 +298,11 @@ object VectorKernels {
     n
   }
 
-  /** Spark's Round(DoubleType, 6) semantics, verbatim. */
+  /** Spark's Round(DoubleType, 6) semantics, verbatim: NaN and ±Inf pass
+    * through unrounded (BigDecimal has no representation for them). */
   private def round6(d: Double): Double =
-    java.math.BigDecimal.valueOf(d)
+    if (d.isNaN || d.isInfinite) d
+    else java.math.BigDecimal.valueOf(d)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   def nearestSeed(x: ArrayData, cids: Array[Long],

@@ -46,9 +46,9 @@ class VectorKernelSpec extends AnyFunSuite {
     .map(r => r.getLong(0) -> r.getSeq[Double](1))
     .sortBy(_._1)
 
-  test("nearest_seed == element_at(array_sort(round-6 HOF structs), 1) bit-for-bit") {
-    val emb = corpus(600)
-    val seeds = seedsOf(emb)
+  /** (vec_id, d, c) from the HOF chain nearest_seed replaces, and from the kernel. */
+  private def nearestBoth(emb: org.apache.spark.sql.DataFrame,
+      seeds: Array[(Long, Seq[Double])]) = {
     val scored = array(seeds.map { case (cid, c) =>
       val cArr = array(c.map(lit): _*)
       struct(
@@ -66,6 +66,12 @@ class VectorKernelSpec extends AnyFunSuite {
           seeds.map(_._1).toSeq, seeds.map(_._2.toSeq).toSeq))
       .select(col("vec_id"), col("__best.dist2").as("d"),
         col("__best.cluster_id").as("c"))
+    (hof, kern)
+  }
+
+  test("nearest_seed == element_at(array_sort(round-6 HOF structs), 1) bit-for-bit") {
+    val emb = corpus(600)
+    val (hof, kern) = nearestBoth(emb, seedsOf(emb))
     val diff = hof.join(kern, Seq("vec_id"))
     assert(diff.count() == 600)
     val bad = hof.alias("h").join(kern.alias("k"), Seq("vec_id"))
@@ -106,6 +112,22 @@ class VectorKernelSpec extends AnyFunSuite {
       .filter(expr("cast(h.s as string) != cast(k.s as string)") ||
         expr("cast(h.r as string) != cast(k.r as string)"))
     assert(bad.count() == 0, s"pca kernels drifted: ${bad.take(3).mkString}")
+  }
+
+  test("nearest_seed passes NaN and +Inf distances through, as round(x, 6) does") {
+    import spark.implicits._
+    val emb = Seq(
+      (1L, Array(Float.NaN, 1.0f)),
+      (2L, Array(Float.PositiveInfinity, 1.0f)),
+      (3L, Array(Float.NegativeInfinity, 1.0f)),
+      (4L, Array(0.5f, 1.0f))).toDF("vec_id", "embedding")
+    val seeds = Array(0L -> Seq(0.0, 0.0), 1L -> Seq(1.0, 1.0))
+    val (hof, kern) = nearestBoth(emb, seeds)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("vec_id").collect().toSeq
+      .map(r => (r.getLong(0), r.getDouble(1).toString, r.getLong(2)))
+    assert(rows(kern) === Seq((1L, "NaN", 0L), (2L, "Infinity", 0L),
+      (3L, "Infinity", 0L), (4L, "0.25", 1L)))
+    assert(rows(kern) === rows(hof))
   }
 
   test("nearest_seed fails loudly on ragged dims") {

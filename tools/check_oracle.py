@@ -35,6 +35,16 @@ def table_key(rows, cols):
     return "\n".join(out)
 
 
+def hugeint_columns(rel):
+    """[column, type] of every HUGEINT output column of a DuckDB relation.
+
+    Built from the zipped (column, type) pairs, not a dict keyed by name:
+    two output columns may share a name, and a dict keeps only the last
+    one's type."""
+    return [[c, str(t).upper()] for c, t in zip(rel.columns, rel.types)
+            if "HUGEINT" in str(t).upper()]
+
+
 def main(sfdir, outdir):
     con = duckdb.connect()
     for t in TABLES:
@@ -55,10 +65,7 @@ def main(sfdir, outdir):
             # class that breaks the driver's Arrow-path hash (HUGEINT
             # fetches as double there, so "1" hashes as "1.0"). Flag any
             # oracle output column whose DuckDB type Spark cannot emit.
-            o_types = {c: str(t).upper() for c, t in
-                       zip(*[con.sql(sql).columns, con.sql(sql).types])}
-            bad_types = {c: t for c, t in o_types.items()
-                         if "HUGEINT" in t}
+            bad_types = hugeint_columns(con.sql(sql))
             spark_rel = con.execute(
                 f"SELECT * FROM read_parquet('{outdir}/{name}/*.parquet')")
             s_cols = [d[0] for d in spark_rel.description]
