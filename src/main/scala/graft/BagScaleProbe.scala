@@ -495,15 +495,7 @@ object BagScaleProbe {
   def main(args: Array[String]): Unit = {
     val workDir = if (args.length > 0) args(0) else "/tmp/bag_scale_probe"
     val n = if (args.length > 1) args(1).toInt else 1002000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"$workDir/spark-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.get(warehouseDir = Some(s"$workDir/spark-warehouse"))
     // staging is zip-IO + scheduling bound and showed cross-run inversion
     // (r11: 60.9 s at 9M vs 38.5 s at 18M) — pin reproducibility by
     // re-timing the stage step alone `repeats` extra times (fresh target

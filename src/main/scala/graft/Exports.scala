@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Export CLI — mirrors the reference's `export_to_csv.py` argparse surface
  * (reference: export_to_csv.py:7-37) over a warehouse written by
@@ -67,17 +65,7 @@ object Exports {
       case "postcode" => "adressen_postcodes.csv"
       case v          => s"adressen_${v.replace("pc", "p")}_stats.csv"
     }
-    // reuse a live session when embedded (tests, notebooks); only stop a
-    // session this CLI itself created
-    val hadSession = SparkSession.getDefaultSession.nonEmpty
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-export")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
+    Sessions.run(master, 32) { spark =>
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$warehouse/adressen"))
           && !warehouse.contains("://")) {
         System.err.println(
@@ -90,6 +78,6 @@ object Exports {
       Pipeline.export(adressen, t, variant, s"$out/$fileName",
         useShortStreetNames = shortNames, singleFile = singleFile)
       println(s"[export] $variant -> $out/$fileName")
-    } finally if (!hadSession) spark.stop()
+    }
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Import CLI — mirrors the reference's `import_bag.py` entry point
  * (reference: import_bag.py:13-90): stage the BAG zip-of-zips, parse the
@@ -89,15 +87,7 @@ object ImportBag {
     val cfg = Config(asOfDate = asOfDate, parseGeometries = geometries,
       useShortStreetNames = shortNames, deleteNoLongerNeededBagTables = dropRaw)
 
-    val hadSession = SparkSession.getDefaultSession.nonEmpty
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-import")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
+    Sessions.run(master, 32) { spark =>
       val t0 = System.nanoTime()
       val adressen = Pipeline.importBag(spark, bag, gemeenten,
         Pipeline.Layout(staging, warehouse), cfg)
@@ -121,6 +111,6 @@ object ImportBag {
           Pipeline.Layout(staging, warehouse))
         println(f"[import] dropped raw tables + staging: ${reclaimed / 1048576.0}%.1f MB reclaimed")
       }
-    } finally if (!hadSession) spark.stop()
+    }
   }
 }

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.queries.Queries
-import org.apache.spark.sql.SparkSession
 
 /**
  * Plan-audit main: dumps `explain("formatted")` for the headline queries to
@@ -780,13 +779,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("PLANS.md")
     val sf = "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.get("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val curated = headline.toMap

@@ -110,15 +110,8 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_scaleprobe_wh")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    implicit val spark: SparkSession =
+      Sessions.get("local[32]", 32, Some("/tmp/graft_scaleprobe_wh"))
     val sf = "/root/testdata/sf0.1"
     val big = "/tmp/sf1_synth"
 

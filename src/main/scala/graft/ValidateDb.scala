@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Standalone validation CLI — the reference's `test_sqlite_db.py:12-14`
  * entry point: run the [[Validate]] integrity suite against an EXISTING
@@ -73,15 +71,7 @@ object ValidateDb {
       }
       i += 1
     }
-    val hadSession = SparkSession.getDefaultSession.nonEmpty
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-validate")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
+    Sessions.run(master, 32) { spark =>
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$warehouse/adressen"))
           && !warehouse.contains("://")) {
         System.err.println(
@@ -98,6 +88,6 @@ object ValidateDb {
         sys.exit(1)
       }
       println("[validate] all checks passed")
-    } finally if (!hadSession) spark.stop()
+    }
   }
 }

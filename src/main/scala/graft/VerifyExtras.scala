@@ -403,17 +403,7 @@ object VerifyExtras {
     * any failing check. */
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val (passed, total) = writeReport(spark, sfDir, outDir)
-    spark.stop()
+    val (passed, total) = Sessions.run()(writeReport(_, sfDir, outDir))
     if (passed != total) sys.exit(1)
   }
 }

@@ -3,7 +3,6 @@ package graft.functions
 import java.io.ByteArrayInputStream
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -81,9 +80,4 @@ object SketchExpressions {
   def cmsEstimate(sketch: Column, item: Column): Column =
     ColumnBridge.column(CmsEstimate(
       ColumnBridge.expression(sketch), ColumnBridge.expression(item)))
-
-  /** SQL-surface registration (idempotent), mirroring TextExpressions. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_estimate", exprs => CmsEstimate(exprs(0), exprs(1)), "built-in")
 }

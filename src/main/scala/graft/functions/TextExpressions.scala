@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
@@ -760,22 +759,4 @@ object TextExpressions {
 
   def charStats(text: Column): Column =
     ColumnBridge.column(CharStats(ColumnBridge.expression(text)))
-
-  /** SQL-surface registration (idempotent), mirroring VectorExpressions. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "shingle_hashes",
-      exprs => ShingleHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "word_count", exprs => WordCount(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "regex_token_count", exprs => RegexTokenCount(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "pii_redact", exprs => PiiRedact(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "char_stats", exprs => CharStats(exprs(0)), "built-in")
-  }
 }

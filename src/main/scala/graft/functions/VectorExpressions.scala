@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -26,33 +24,32 @@ import org.apache.spark.sql.types._
  */
 object VectorExpressions {
 
-  /** Register vec_dot / vec_norm as temp functions on a session (idempotent).
-    * For spark.sql.extensions users, [[GraftExtensions]] injects the same. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vec_dot",
-      exprs => FloatVecDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_norm",
-      exprs => FloatVecNorm(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("hamming_dist",
-      exprs => PackedHamming(exprs(0), exprs(1)), "built-in")
-  }
+  import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 
-  import org.apache.spark.sql.graft.ColumnBridge
+  /** Column bindings: operators build the kernels directly, so they work
+    * on any session, whether or not the SQL surface is registered. */
+  def vecDot(a: Column, b: Column): Column =
+    column(FloatVecDot(expression(a), expression(b)))
 
-  /** Column bindings for the literal-model serve kernels (r13) — no
-    * registry needed; models are Scala-side literals by construction. */
-  def nearestSeed(e: org.apache.spark.sql.Column, clusterIds: Seq[Long],
-                  seeds: Seq[Seq[Double]]): org.apache.spark.sql.Column =
-    ColumnBridge.column(NearestSeed(ColumnBridge.expression(e), clusterIds, seeds))
+  def vecNorm(a: Column): Column =
+    column(FloatVecNorm(expression(a)))
 
-  def pcaScore(e: org.apache.spark.sql.Column, mu: Seq[Double],
-               pc: Seq[Double]): org.apache.spark.sql.Column =
-    ColumnBridge.column(PcaScore(ColumnBridge.expression(e), mu, pc))
+  def hammingDist(a: Column, b: Column): Column =
+    column(PackedHamming(expression(a), expression(b)))
 
-  def pcaResid2(e: org.apache.spark.sql.Column, mu: Seq[Double],
-                pc: Seq[Double]): org.apache.spark.sql.Column =
-    ColumnBridge.column(PcaResid2(ColumnBridge.expression(e), mu, pc))
+  /** The literal-model serve kernels (r13): models are Scala-side
+    * literals by construction. */
+  def nearestSeed(e: Column, clusterIds: Seq[Long],
+                  seeds: Seq[Seq[Double]]): Column =
+    column(NearestSeed(expression(e), clusterIds, seeds))
+
+  def pcaScore(e: Column, mu: Seq[Double],
+               pc: Seq[Double]): Column =
+    column(PcaScore(expression(e), mu, pc))
+
+  def pcaResid2(e: Column, mu: Seq[Double],
+                pc: Seq[Double]): Column =
+    column(PcaResid2(expression(e), mu, pc))
 }
 
 /** dot(a, b) over array<float> with double accumulation. */
@@ -164,7 +161,7 @@ case class FloatVecNorm(child: Expression)
  * and a seed ERRORS (the HOF form would null-pad and produce a NULL
  * dist2 that array_sort orders*, silently mis-assigning; no vector in
  * any internal path has ragged dims, so fail-loud wins — the
- * PackedHamming policy).
+ * PackedHamming policy). A null element errors the same way.
  */
 case class NearestSeed(child: Expression, clusterIds: Seq[Long],
                        seeds: Seq[Seq[Double]])
@@ -214,7 +211,8 @@ case class NearestSeed(child: Expression, clusterIds: Seq[Long],
  * `aggregate(zip_with(__c, pcLit, (c, p) -> c * p), 0.0, +)` where
  * `__c = zip_with(cast(embedding as array<double>), muLit, (x, m) -> x - m)`.
  * (double)getFloat(d) - mu_d is bit-identical to the cast-then-subtract
- * HOF chain. Dimension mismatch errors (same policy as nearest_seed).
+ * HOF chain. Dimension mismatch and null elements error (same policy as
+ * nearest_seed).
  */
 case class PcaScore(child: Expression, mu: Seq[Double], pc: Seq[Double])
     extends UnaryExpression {
@@ -298,6 +296,17 @@ object VectorKernels {
     n
   }
 
+  /** A null element fails loudly, as in [[PackedHamming]]: getFloat on a
+    * null slot reads 0.0f, a silently wrong distance or score. */
+  private def checkNoNulls(x: ArrayData, who: String): Unit = {
+    var d = 0
+    while (d < x.numElements()) {
+      if (x.isNullAt(d))
+        throw new IllegalArgumentException(s"$who: null element at dim $d in embedding")
+      d += 1
+    }
+  }
+
   /** Spark's Round(DoubleType, 6) semantics, verbatim: NaN and ±Inf pass
     * through unrounded (BigDecimal has no representation for them). */
   private def round6(d: Double): Double =
@@ -307,6 +316,7 @@ object VectorKernels {
 
   def nearestSeed(x: ArrayData, cids: Array[Long],
                   seeds: Array[Array[Double]]): org.apache.spark.sql.catalyst.InternalRow = {
+    checkNoNulls(x, "nearest_seed")
     var bestR = Double.PositiveInfinity
     var bestC = 0L
     var first = true
@@ -333,8 +343,13 @@ object VectorKernels {
       Array[Any](bestR, bestC))
   }
 
-  def pcaScore(x: ArrayData, mu: Array[Double], pc: Array[Double]): Double = {
-    val n = dims(x, mu.length, "pca_score")
+  def pcaScore(x: ArrayData, mu: Array[Double], pc: Array[Double]): Double =
+    score(x, mu, pc, "pca_score")
+
+  private def score(x: ArrayData, mu: Array[Double], pc: Array[Double],
+                    who: String): Double = {
+    val n = dims(x, mu.length, who)
+    checkNoNulls(x, who)
     var s = 0.0
     var d = 0
     while (d < n) { s += (x.getFloat(d).toDouble - mu(d)) * pc(d); d += 1 }
@@ -342,7 +357,7 @@ object VectorKernels {
   }
 
   def pcaResid2(x: ArrayData, mu: Array[Double], pc: Array[Double]): Double = {
-    val s = pcaScore(x, mu, pc)
+    val s = score(x, mu, pc, "pca_resid2")
     val n = x.numElements()
     var r = 0.0
     var d = 0
@@ -434,92 +449,4 @@ case class PackedHamming(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PackedHamming =
     copy(left = newLeft, right = newRight)
-}
-
-/**
- * SparkSessionExtensions entry point:
- * `--conf spark.sql.extensions=graft.functions.GraftExtensions` registers
- * the library's full native-function surface in every session of the
- * cluster, so plain `spark.sql` users (notebooks, JDBC, SQL pipelines) get
- * the codegen'd kernels and bounded-state aggregates without touching the
- * Scala API. Scalar args that parameterize codegen (shingle width, top-k
- * size, stopword lists) must be literals — evaluated once at resolution.
- */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private def litInt(e: Expression): Int =
-    e.eval().asInstanceOf[Number].intValue()
-  private def litStrings(e: Expression): Seq[String] = e.eval() match {
-    case a: ArrayData =>
-      a.toObjectArray(StringType).map(_.toString).toSeq
-    case other => throw new IllegalArgumentException(
-      s"expected a string-array literal, got $other")
-  }
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // optimizer rules: rewrite unbounded levenshtein comparisons into the
-    // banded thresholded form (see graft.plans.BoundedLevenshtein)
-    ext.injectOptimizerRule(_ => graft.plans.BoundedLevenshtein)
-    ext.injectFunction((FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => FloatVecDot(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("vec_norm"),
-      new ExpressionInfo(classOf[FloatVecNorm].getName, "vec_norm"),
-      (exprs: Seq[Expression]) => FloatVecNorm(exprs(0))))
-    ext.injectFunction((FunctionIdentifier("hamming_dist"),
-      new ExpressionInfo(classOf[PackedHamming].getName, "hamming_dist"),
-      (exprs: Seq[Expression]) => PackedHamming(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (exprs: Seq[Expression]) => ShingleHashes(exprs(0), litInt(exprs(1)))))
-    ext.injectFunction((FunctionIdentifier("word_count"),
-      new ExpressionInfo(classOf[WordCount].getName, "word_count"),
-      (exprs: Seq[Expression]) => WordCount(exprs(0))))
-    ext.injectFunction((FunctionIdentifier("regex_token_count"),
-      new ExpressionInfo(classOf[RegexTokenCount].getName, "regex_token_count"),
-      (exprs: Seq[Expression]) => RegexTokenCount(exprs(0))))
-    ext.injectFunction((FunctionIdentifier("stopword_count"),
-      new ExpressionInfo(classOf[StopwordCount].getName, "stopword_count"),
-      (exprs: Seq[Expression]) => StopwordCount(exprs(0), litStrings(exprs(1)))))
-    ext.injectFunction((FunctionIdentifier("bpe_token_count"),
-      new ExpressionInfo(classOf[BpeTokenCount].getName, "bpe_token_count"),
-      (exprs: Seq[Expression]) => BpeTokenCount(exprs(0), litStrings(exprs(1)))))
-    ext.injectFunction((FunctionIdentifier("normalize_spaces"),
-      new ExpressionInfo(classOf[NormalizeSpaces].getName, "normalize_spaces"),
-      (exprs: Seq[Expression]) => NormalizeSpaces(exprs(0))))
-    ext.injectFunction((FunctionIdentifier("rd_lat"),
-      new ExpressionInfo(classOf[RdToLat].getName, "rd_lat"),
-      (exprs: Seq[Expression]) => RdToLat(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("rd_lon"),
-      new ExpressionInfo(classOf[RdToLon].getName, "rd_lon"),
-      (exprs: Seq[Expression]) => RdToLon(exprs(0), exprs(1))))
-    // aggregates: the analyzer wraps a bare AggregateFunction from a
-    // registry builder into an AggregateExpression
-    ext.injectFunction((FunctionIdentifier("vec_sum"),
-      new ExpressionInfo(classOf[VecSum].getName, "vec_sum"),
-      (exprs: Seq[Expression]) => VecSum(exprs(0))))
-    ext.injectFunction((FunctionIdentifier("top_k"),
-      new ExpressionInfo(classOf[TopK].getName, "top_k"),
-      (exprs: Seq[Expression]) => TopK(exprs(0), exprs(1), litInt(exprs(2)))))
-    ext.injectFunction((FunctionIdentifier("top_k_str"),
-      new ExpressionInfo(classOf[TopKStr].getName, "top_k_str"),
-      (exprs: Seq[Expression]) => TopKStr(exprs(0), exprs(1), litInt(exprs(2)))))
-    ext.injectFunction((FunctionIdentifier("arg_max"),
-      new ExpressionInfo(classOf[ArgMax].getName, "arg_max"),
-      (exprs: Seq[Expression]) => ArgMax(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("perceptual_hash"),
-      new ExpressionInfo(classOf[PerceptualHash].getName, "perceptual_hash"),
-      (exprs: Seq[Expression]) => PerceptualHash(exprs(0))))
-    ext.injectFunction((FunctionIdentifier("cms_estimate"),
-      new ExpressionInfo(classOf[CmsEstimate].getName, "cms_estimate"),
-      (exprs: Seq[Expression]) => CmsEstimate(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("bitmap_distinct"),
-      new ExpressionInfo(classOf[BitmapDistinct].getName, "bitmap_distinct"),
-      (exprs: Seq[Expression]) => BitmapDistinct(exprs(0))))
-    ext.injectFunction((FunctionIdentifier("bitmap_agg"),
-      new ExpressionInfo(classOf[BitmapAgg].getName, "bitmap_agg"),
-      (exprs: Seq[Expression]) => BitmapAgg(exprs(0))))
-    ext.injectFunction((FunctionIdentifier("bitmap_or_count"),
-      new ExpressionInfo(classOf[BitmapOrCount].getName, "bitmap_or_count"),
-      (exprs: Seq[Expression]) => BitmapOrCount(exprs(0))))
-  }
 }

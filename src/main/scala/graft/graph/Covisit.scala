@@ -64,36 +64,6 @@ object Covisit {
    * user). `maxFanout = 0` (default, and the registered query's form)
    * is exact end to end.
    */
-  /** r13 A/B variant of [[jaccardEdges]] pair generation: instead of the
-    * equi self-join on `u` (two sorted sides + SortMergeJoin + the full
-    * C(fanout,2) pair-row stream into the partial agg), group each user's
-    * page set into ONE row (sort_array(collect_list)) and emit its ordered
-    * pairs in-row. Same C(f,2) arithmetic cost and the same exchange count
-    * (one by u, one by (p1,p2)) — what it deletes is the SMJ's two sorts
-    * and the join machinery. Pair multiset is identical by construction:
-    * `up` is distinct, so each user's pages are unique and the emitted
-    * (min, max) pairs don't depend on collect order once sorted. */
-  private[graft] def jaccardEdgesEmit(incidence: DataFrame, tauNum: Long,
-                                      tauDen: Long): DataFrame = {
-    require(tauNum >= 0 && tauDen > 0, "threshold must be a non-negative rational")
-    val up = materialized(
-      incidence.select(col("u"), col("p").cast("long").as("p")).distinct())
-    val pairs = up.groupBy("u")
-      .agg(sort_array(collect_list(col("p"))).as("ps"))
-      .select(explode(expr(
-        "flatten(transform(ps, (x, i) -> " +
-          "transform(slice(ps, i + 2, size(ps)), y -> struct(x, y))))")).as("pr"))
-      .select(col("pr.x").as("p1"), col("pr.y").as("p2"))
-      .groupBy("p1", "p2").agg(count(lit(1)).as("inter"))
-    val sizes = up.groupBy(col("p")).agg(count(lit(1)).as("c"))
-    pairs
-      .join(broadcast(sizes.select(col("p").as("p1"), col("c").as("c1"))), Seq("p1"))
-      .join(broadcast(sizes.select(col("p").as("p2"), col("c").as("c2"))), Seq("p2"))
-      .withColumn("uni", col("c1") + col("c2") - col("inter"))
-      .filter(lit(tauDen) * col("inter") >= lit(tauNum) * col("uni"))
-      .select("p1", "p2", "inter", "uni")
-  }
-
   def jaccardEdges(incidence: DataFrame, tauNum: Long, tauDen: Long,
                    maxFanout: Int = 0): DataFrame = {
     require(tauNum >= 0 && tauDen > 0, "threshold must be a non-negative rational")

@@ -40,22 +40,14 @@ import org.apache.spark.sql.functions._
  */
 object Scc {
 
-  /** `hopsPerRound`: propagation hops fused into each materialized round
-    * (optimization guide §1.2/§2: the fixpoint loops here are
-    * SCHEDULING-bound at small scale — the r12 probe measured x37 at 169
-    * one-task jobs — and synchronization-bound on a cluster, where every
-    * barrier is a full round trip; both propagation passes are monotone
-    * lattice folds, so fusing k hops between lineage cuts reaches the
-    * SAME fixpoint with 1/k of the barriers at <= one wasted in-plan hop
-    * past convergence). Convergence is detected on the materialized
-    * frame with one scalar aggregate per round — sum(color) strictly
-    * decreases / reach count strictly increases until fixpoint — instead
-    * of a per-row change flag, so the probe action is a metadata-cheap
-    * scan of the checkpointed blocks. */
+  /** Convergence is detected on the materialized frame with one scalar
+    * aggregate per round — sum(color) strictly decreases / reach count
+    * strictly increases until fixpoint — instead of a per-row change
+    * flag, so the probe action is a metadata-cheap scan of the
+    * checkpointed blocks. (Fusing several hops between lineage cuts lost
+    * its A/B: OPTIMIZATION_r13.md.) */
   def stronglyConnected(edges: DataFrame, maxOuterRounds: Int = 25,
-                        maxFixpointRounds: Int = 200,
-                        hopsPerRound: Int = 1): DataFrame = {
-    require(hopsPerRound >= 1, "hopsPerRound must be >= 1")
+                        maxFixpointRounds: Int = 200): DataFrame = {
     val e0 = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).distinct()
     var rem = e0.localCheckpoint(true)
@@ -70,7 +62,7 @@ object Scc {
     // only SHRINKS from here: size the loop's shuffle once (LoopConf).
     graft.LoopConf.scoped(edges.sparkSession, edgeRows) {
     while (remaining > 0 && outer < maxOuterRounds) {
-      // 1. forward-min coloring to fixpoint: k fused hops per round, each
+      // 1. forward-min coloring to fixpoint: one hop per round, each
       //    hop ONE exchange — state and edge-propagated candidates union
       //    into a single min-aggregate on node (instead of join-back +
       //    merge, which cost two more exchanges per hop).
@@ -89,21 +81,16 @@ object Scc {
       var converged = remaining == 0
       var it = 0
       while (!converged && it < maxFixpointRounds) {
-        var cur = colors
-        var h = 0
-        while (h < hopsPerRound && it + h < maxFixpointRounds) {
-          cur = cur.unionByName(
-              rem.join(cur.select(col("node").as("src"), col("color")), "src")
-                .select(col("dst").as("node"), col("color")))
-            .groupBy("node").agg(min("color").as("color"))
-          h += 1
-        }
-        it += h
         // r13: LAZY checkpoint — the colorSum probe right below is a
         // full-scan aggregate, so it materializes the checkpoint blocks
         // and computes the convergence scalar in ONE job (the eager form
         // paid a separate materialization job per hop)
-        colors = cur.localCheckpoint(false)
+        colors = colors.unionByName(
+            rem.join(colors.select(col("node").as("src"), col("color")), "src")
+              .select(col("dst").as("node"), col("color")))
+          .groupBy("node").agg(min("color").as("color"))
+          .localCheckpoint(false)
+        it += 1
         val s = colorSum(colors)
         converged = s.compareTo(prevSum) == 0
         prevSum = s
@@ -111,7 +98,7 @@ object Scc {
           System.err.println(s"[scc] outer=$outer colorIt=$it converged=$converged")
       }
       require(converged || {
-        // cap hit mid-batch: one more single-hop probe decides exactness
+        // cap hit: one more hop decides exactness
         val probe = rem
           .join(colors.select(col("node").as("src"), col("color").as("c")), "src")
           .groupBy(col("dst").as("node")).agg(min(col("c")).as("pc"))
@@ -121,33 +108,28 @@ object Scc {
 
       // 2. backward reach from every root, within its color region: the
       //    reach flag is monotone increasing, so the reached-row count is
-      //    the convergence scalar. Same k-hop fusion; per hop the hits
-      //    aggregate to one per-node color-set row (groupBy on the 8-byte
-      //    node id — the hop's single exchange) and merge back through a
-      //    join both of whose sides already carry hash(node).
+      //    the convergence scalar. Per hop the hits aggregate to one
+      //    per-node color-set row (groupBy on the 8-byte node id — the
+      //    hop's single exchange) and merge back through a join both of
+      //    whose sides already carry hash(node).
       var reached = colors
         .withColumn("r", col("node") === col("color")).localCheckpoint(false)
       var prevReached = reached.filter(col("r")).count()
       converged = false
       it = 0
       while (!converged && it < maxFixpointRounds) {
-        var cur = reached
-        var h = 0
-        while (h < hopsPerRound && it + h < maxFixpointRounds) {
-          val hit = rem
-            .join(cur.select(col("node").as("dst"), col("color").as("dc"),
-              col("r").as("dr")), "dst")
-            .filter(col("dr"))
-            .groupBy(col("src").as("node"))
-            .agg(collect_set(col("dc")).as("__hc"))
-          cur = cur.join(hit, Seq("node"), "left")
-            .select(col("node"), col("color"),
-              (col("r") || coalesce(array_contains(col("__hc"), col("color")),
-                lit(false))).as("r"))
-          h += 1
-        }
-        it += h
-        reached = cur.localCheckpoint(false) // materialized by the count probe
+        val hit = rem
+          .join(reached.select(col("node").as("dst"), col("color").as("dc"),
+            col("r").as("dr")), "dst")
+          .filter(col("dr"))
+          .groupBy(col("src").as("node"))
+          .agg(collect_set(col("dc")).as("__hc"))
+        it += 1
+        reached = reached.join(hit, Seq("node"), "left")
+          .select(col("node"), col("color"),
+            (col("r") || coalesce(array_contains(col("__hc"), col("color")),
+              lit(false))).as("r"))
+          .localCheckpoint(false) // materialized by the count probe
         val n = reached.filter(col("r")).count()
         converged = n == prevReached
         prevReached = n

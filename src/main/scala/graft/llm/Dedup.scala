@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.VectorExpressions.{vecDot, vecNorm}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -1029,7 +1030,6 @@ object Dedup {
    * inside one cluster by construction (pairs never cross `cl`).
    */
   def semanticDedup(emb: DataFrame, tau: Double, c: Int = 0): DataFrame = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     val spark = emb.sparkSession
     import spark.implicits._
     val cents = Similarity.ivfCentroids(emb, c)
@@ -1041,9 +1041,8 @@ object Dedup {
     val scored = materialized(
       Similarity.ivfAssigned(emb, cents).join(centsDf, Seq("cl"))
         .select(col("cl"), col("vec_id"), col("embedding"),
-          round(expr(
-            "try_divide(vec_dot(embedding, centroid), vec_norm(embedding) * vec_norm(centroid))"),
-            6).as("cos_c")))
+          round(try_divide(vecDot(col("embedding"), col("centroid")),
+            vecNorm(col("embedding")) * vecNorm(col("centroid"))), 6).as("cos_c")))
     // within-cluster pairs: a self-equi-join on the cluster id — the
     // SemDeDup cost model made explicit in the plan (no cross product)
     val l = scored.select(col("cl"), col("vec_id").as("id_a"),
@@ -1055,7 +1054,8 @@ object Dedup {
       // zero-norm discipline mirrors cosinePairs: try_divide NULLs the
       // 0/0, and the null-rejecting filter drops the pair
       .withColumn("cos",
-        round(expr("try_divide(vec_dot(ea, eb), vec_norm(ea) * vec_norm(eb))"), 6))
+        round(try_divide(vecDot(col("ea"), col("eb")),
+          vecNorm(col("ea")) * vecNorm(col("eb"))), 6))
       .filter(!isnan(col("cos")) && col("cos") >= tau)
       .select("id_a", "id_b")
     val comps = dedupComponents(pairs)

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.VectorExpressions.{hammingDist, vecDot, vecNorm}
 
 /**
  * Embedding similarity search over `embeddings(vec_id, embedding:
@@ -40,13 +41,6 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Ensure the native vector expressions are registered on the session the
-    * given frame belongs to, then build with them. */
-  private def withVectorFns(df: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
-    df
-  }
-
   /** L2-normalize an embedding (double elements). */
   def normalize(a: Column): Column = {
     val n = norm(a)
@@ -67,15 +61,15 @@ object Similarity {
    * query), so shuffle volume is |queries| x k, independent of corpus size.
    */
   def knnBrute(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = broadcast(withVectorFns(queries).select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb"), expr("vec_norm(embedding)").as("nrm_q")))
+    val q = broadcast(queries.select(col("vec_id").as("query_id"),
+      col("embedding").as("q_emb"), vecNorm(col("embedding")).as("nrm_q")))
     val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"),
-      expr("vec_norm(embedding)").as("nrm_c"))
+      vecNorm(col("embedding")).as("nrm_c"))
     // norms computed once per SIDE (N + Q loops), not once per pair (N * Q);
     // cos = dot / (norm_q * norm_c) in the same association as the oracle.
     val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), round(
-        expr("vec_dot(q_emb, c_emb)") / (col("nrm_q") * col("nrm_c")), 6).as("cos"))
+        vecDot(col("q_emb"), col("c_emb")) / (col("nrm_q") * col("nrm_c")), 6).as("cos"))
     topKByCosine(scored, k)
   }
 
@@ -169,9 +163,9 @@ object Similarity {
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb")))
     val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"))
-    val scored = withVectorFns(c.join(q, col("query_id") =!= col("neighbor_id")))
+    val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(expr("vec_dot(q_emb, c_emb)"), 6).as("dot"))
+        round(vecDot(col("q_emb"), col("c_emb")), 6).as("dot"))
     val guard = coalesce(
       assert_true(!isnan(col("dot")), lit("NaN dot product")).cast("double"), lit(0.0))
     scored
@@ -197,8 +191,8 @@ object Similarity {
    * Map-only after one 1-row max-norm aggregate broadcast in-plan.
    */
   def mipsAugment(corpus: DataFrame, queries: DataFrame): (DataFrame, DataFrame) = {
-    val withNorm = withVectorFns(corpus)
-      .withColumn("__nrm", expr("vec_norm(embedding)"))
+    val withNorm = corpus
+      .withColumn("__nrm", vecNorm(col("embedding")))
     val m = broadcast(withNorm.agg(max(col("__nrm")).as("__m")))
     val corpusAug = withNorm.crossJoin(m)
       .withColumn("embedding", concat(col("embedding"), array(
@@ -216,8 +210,8 @@ object Similarity {
    * scale use [[annLsh]] or [[Dedup.minhashLshPairs]]-style bucketing.
    */
   def cosinePairs(emb: DataFrame, minCos: Double): DataFrame = {
-    val n = withVectorFns(emb)
-      .select(col("vec_id"), col("embedding"), expr("vec_norm(embedding)").as("nrm"))
+    val n = emb
+      .select(col("vec_id"), col("embedding"), vecNorm(col("embedding")).as("nrm"))
     val a = n.select(col("vec_id").as("id_a"), col("embedding").as("e_a"), col("nrm").as("nrm_a"))
     val b = n.select(col("vec_id").as("id_b"), col("embedding").as("e_b"), col("nrm").as("nrm_b"))
     a.join(b, col("id_a") < col("id_b"))
@@ -228,7 +222,7 @@ object Similarity {
       // minCos` would either crash (ANSI) or, with NaN, KEEP the pair:
       // Spark's NaN-safe ordering ranks NaN ABOVE every number.)
       .withColumn("cos",
-        round(expr("try_divide(vec_dot(e_a, e_b), nrm_a * nrm_b)"), 6))
+        round(try_divide(vecDot(col("e_a"), col("e_b")), col("nrm_a") * col("nrm_b")), 6))
       .filter(!isnan(col("cos")) && col("cos") >= minCos)
       .select("id_a", "id_b", "cos")
   }
@@ -402,12 +396,12 @@ object Similarity {
    * the same threshold rule.
    */
   def semanticAdmit(batch: DataFrame, corpus: DataFrame, tau: Double): DataFrame = {
-    val b = broadcast(withVectorFns(batch)
+    val b = broadcast(batch
       .select(col("vec_id").as("__bid"), col("embedding").as("__be"),
-        expr("vec_norm(embedding)").as("__bn")))
-    val hits = withVectorFns(corpus)
-      .select(col("embedding").as("__ce"), expr("vec_norm(embedding)").as("__cn"))
-      .join(b, round(expr("vec_dot(__be, __ce)") / (col("__bn") * col("__cn")), 6)
+        vecNorm(col("embedding")).as("__bn")))
+    val hits = corpus
+      .select(col("embedding").as("__ce"), vecNorm(col("embedding")).as("__cn"))
+      .join(b, round(vecDot(col("__be"), col("__ce")) / (col("__bn") * col("__cn")), 6)
         >= tau)
       .select(col("__bid")).distinct()
     batch.join(hits, batch("vec_id") === hits("__bid"), "left_anti")
@@ -637,7 +631,6 @@ object Similarity {
    */
   def annIvf(emb: DataFrame, queries: DataFrame, k: Int, c: Int = 0,
              nprobe: Int = 12): DataFrame = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     val units = unitRows(ivfCentroids(emb, c))
     // candidate generation moves IDS ONLY: (neighbor_id, cl) x (query_id, cl).
     // The r3 form carried both embedding payloads through the candidate
@@ -684,12 +677,12 @@ object Similarity {
           .select(col("neighbor_id"), explode(col("qids")).as("query_id"))
       else candidates
     val c = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"),
-      expr("vec_norm(embedding)").as("nrm_c"))
+      vecNorm(col("embedding")).as("nrm_c"))
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb"), expr("vec_norm(embedding)").as("nrm_q")))
+      col("embedding").as("q_emb"), vecNorm(col("embedding")).as("nrm_q")))
     val scored = cand.join(c, Seq("neighbor_id")).join(q, Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"), round(
-        expr("vec_dot(q_emb, c_emb)") / (col("nrm_q") * col("nrm_c")), 6).as("cos"))
+        vecDot(col("q_emb"), col("c_emb")) / (col("nrm_q") * col("nrm_c")), 6).as("cos"))
     topKByCosine(scored, k)
   }
 
@@ -701,7 +694,6 @@ object Similarity {
    */
   def annLsh(emb: DataFrame, queries: DataFrame, k: Int, seed: Long = 42L,
              tables: Int = 16, planes: Int = 4): DataFrame = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     // banding moves IDS ONLY — (table, bucket, vec_id) is ~20 bytes/row where
     // the r3 form exploded the corpus embedding `tables` times into the join
     // and then shuffled candidate PAIRS with both payloads attached; the
@@ -812,7 +804,7 @@ object Similarity {
    */
   def hammingAnn(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
     hammingAnnFrom(
-      withVectorFns(corpus)
+      corpus
         .select(col("vec_id").as("neighbor_id"), signBits(col("embedding")).as("c_sig")),
       queries, k)
 
@@ -820,12 +812,11 @@ object Similarity {
     * query half of the index/query split ([[buildSignIndex]]): a stored
     * signature table is scanned as-is, nothing re-packs per query. */
   def hammingAnnFrom(signed: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(signed.sparkSession)
-    val q = broadcast(withVectorFns(queries)
+    val q = broadcast(queries
       .select(col("vec_id").as("query_id"), signBits(col("embedding")).as("q_sig")))
     val scored = signed.join(q, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        expr("hamming_dist(q_sig, c_sig)").as("ham"))
+        hammingDist(col("q_sig"), col("c_sig")).as("ham"))
     // top_k keeps the LARGEST ord: feed a composite negative key that
     // encodes (ham asc, neighbor_id asc) exactly in a double — valid only
     // for neighbor_id in [0, 2^31) and ham < 2^20; ham is a bit count
@@ -887,7 +878,7 @@ object Similarity {
                      path: Option[String] = None,
                      writerTasksPerBucket: Int = 1): Unit =
     graft.relational.Bucketing.writeBucketed(
-      withVectorFns(emb).select(col("vec_id"), signBits(col("embedding")).as("sig"),
+      emb.select(col("vec_id"), signBits(col("embedding")).as("sig"),
         col("embedding")),
       table, "vec_id", buckets, path = path,
       writerTasksPerBucket = writerTasksPerBucket)
@@ -903,7 +894,7 @@ object Similarity {
   def appendToSignIndex(emb: DataFrame, table: String,
                         writerTasksPerBucket: Int = 1): Unit =
     graft.relational.Bucketing.appendBucketed(
-      withVectorFns(emb).select(col("vec_id"), signBits(col("embedding")).as("sig"),
+      emb.select(col("vec_id"), signBits(col("embedding")).as("sig"),
         col("embedding")),
       table, writerTasksPerBucket = writerTasksPerBucket)
 
@@ -1092,7 +1083,6 @@ object Similarity {
   def annIvfIndexed(spark: SparkSession, table: String, queries: DataFrame,
                     k: Int, nprobe: Int = 12,
                     predicate: Option[Column] = None): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val units = unitRows(readIvfCentroids(spark, table))
     val idx0 = graft.relational.Bucketing.read(spark, table)
     val idx = predicate.fold(idx0)(idx0.filter)
@@ -1102,8 +1092,8 @@ object Similarity {
     val scored = idx.join(q, Seq("cl"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(expr("vec_dot(q_emb, embedding)") /
-          (expr("vec_norm(q_emb)") * expr("vec_norm(embedding)")), 6).as("cos"))
+        round(vecDot(col("q_emb"), col("embedding")) /
+          (vecNorm(col("q_emb")) * vecNorm(col("embedding"))), 6).as("cos"))
     topKByCosine(scored, k)
   }
 
@@ -1255,7 +1245,6 @@ object Similarity {
   def annPq(emb: DataFrame, queries: DataFrame, k: Int, m: Int = PqM,
             ksub: Int = PqKsub, shortlist: Int = 192): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     val books = pqCodebooks(emb, m, ksub)
     val codes = emb.select(col("vec_id").as("neighbor_id"),
       pqEncodeUdf(books, ksub)(col("embedding")).as("codes"))
@@ -1362,7 +1351,6 @@ object Similarity {
   def annPqIndexed(spark: SparkSession, table: String, queries: DataFrame,
                    k: Int, shortlist: Int = 192): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    graft.functions.VectorExpressions.register(spark)
     val (books, ksub) = readPqCodebooks(spark, table)
     val idx = graft.relational.Bucketing.read(spark, table)
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
@@ -1504,7 +1492,6 @@ object Similarity {
                m: Int = PqM, ksub: Int = PqKsub, nprobe: Int = 12,
                shortlist: Int = 192): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     val cents = ivfCentroids(emb, c)
     val units = unitRows(cents)
     val cus = unitCentroidsF(cents)
@@ -1619,7 +1606,6 @@ object Similarity {
                       k: Int, nprobe: Int = 12, shortlist: Int = 192,
                       predicate: Option[Column] = None): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    graft.functions.VectorExpressions.register(spark)
     val cents = readIvfCentroids(spark, table)
     val (books, ksub) = readPqCodebooks(spark, table)
     val units = unitRows(cents)

@@ -2298,13 +2298,11 @@ object Queries {
   }
 
   /** Embedding norms / dimensionality audit (native codegen'd vec_norm). */
-  val v04Norms: Q = (s, dir) => {
-    graft.functions.VectorExpressions.register(s)
+  val v04Norms: Q = (s, dir) =>
     embeddings(s, dir)
       .select(col("vec_id"), size(col("embedding")).cast("long").as("dim"),
-        round(expr("vec_norm(embedding)"), 6).as("norm_r"))
+        round(graft.functions.VectorExpressions.vecNorm(col("embedding")), 6).as("norm_r"))
       .orderBy("vec_id")
-  }
 
   // ===== LLM: multimodal ====================================================
 
@@ -3395,10 +3393,6 @@ object Queries {
     * fifth, and one cross edge entering each block (except b%5==0) at
     * its id%10==0 node. Dense inside blocks, sparse between — the
     * structure x37 peels into SCCs and x42 scores as communities. */
-  /** Exposed for the AbBench scchops A/B (r13). */
-  private[graft] def plantedBlockEdgesFor(n: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    plantedBlockEdges(n)
-
   def plantedBlockEdges(n: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val ring = n.filter(col("b") % 5 =!= 4)
       .select(col("id").as("src"),
@@ -4260,10 +4254,6 @@ object Queries {
   /** The distinct (user, page) incidence behind x22/x23 — the same
     * props.k page derivation as [[eventsBipartiteEdges]], kept as the
     * two-column frame [[graft.graph.Covisit]] projects. */
-  /** Exposed for the AbBench jpairs A/B (r13). */
-  private[graft] def covisitIncidenceFor(s: SparkSession, dir: String): DataFrame =
-    covisitIncidence(s, dir)
-
   private def covisitIncidence(s: SparkSession, dir: String): DataFrame =
     tblPar(s, dir, "events")
       .select(col("user_id").as("u"),

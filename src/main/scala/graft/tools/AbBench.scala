@@ -16,14 +16,7 @@ object AbBench {
     val what = args.headOption.getOrElse("pii")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get()
 
     def force(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -61,29 +54,6 @@ object AbBench {
           "wordcount" -> (() => sh(
             graft.functions.TextExpressions.wordCount(col("text")) >= 5)),
           "splitsize" -> (() => sh(size(split(col("text"), " ")) >= 5)))
-      case "jpairs" =>
-        // r13: jaccardEdges pair generation — SMJ self-join vs in-row
-        // grouped emitter, on the real x22 incidence
-        import org.apache.spark.sql.functions._
-        def inc = graft.queries.Queries.covisitIncidenceFor(spark, sfDir)
-        def withShj[T](f: => T): T = {
-          val k = "spark.sql.join.preferSortMergeJoin"
-          val prev = spark.conf.getOption(k)
-          spark.conf.set(k, "false")
-          try f finally prev match {
-            case Some(v) => spark.conf.set(k, v); case None => spark.conf.unset(k)
-          }
-        }
-        Seq(
-          "selfjoin" -> (() => graft.graph.Covisit.jaccardEdges(inc, 17, 50)),
-          // the conf must be live at ACTION time: force inside the scope,
-          // hand the runner a no-op frame (costs ~ms against a 1.3 s body)
-          "selfjoin_shj" -> (() => withShj {
-            graft.graph.Covisit.jaccardEdges(inc, 17, 50)
-              .write.format("noop").mode("overwrite").save()
-            spark.range(0).toDF()
-          }),
-          "emit" -> (() => graft.graph.Covisit.jaccardEdgesEmit(inc, 17, 50)))
       case "jsonk" =>
         // r13 scoping: what does get_json_object('$.k') actually cost on
         // the events scan vs a raw projection of the same column?
@@ -98,19 +68,6 @@ object AbBench {
               .getField("k").as("p"))),
           "json_key_long" -> (() => ev.select(
             graft.functions.JsonExpressions.jsonKeyLong(col("props"), "k").as("p"))))
-      case "scchops" =>
-        // r13: SCC hop fusion under LoopConf (AQE-off loops) — r12
-        // rejected hopsPerRound with AQE ON; the loop conf changed since
-        import org.apache.spark.sql.functions._
-        def edges = {
-          val n = spark.read.parquet(s"$sfDir/documents.parquet")
-            .select(col("doc_id").as("id"), expr("doc_id div 10").as("b"))
-          graft.queries.Queries.plantedBlockEdgesFor(n)
-        }
-        Seq(
-          "hops1" -> (() => graft.graph.Scc.stronglyConnected(edges)),
-          "hops2" -> (() => graft.graph.Scc.stronglyConnected(edges, hopsPerRound = 2)),
-          "hops4" -> (() => graft.graph.Scc.stronglyConnected(edges, hopsPerRound = 4)))
       case other => sys.error(s"unknown A/B target: $other")
     }
 

@@ -48,14 +48,7 @@ object CorpusBuild10x {
     // base-family split's doc_id % 1e7 grouping and the <1e7 bench
     // membership intact), giving the chain's scaling datapoint
     val scale = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get()
     val base10 = "/tmp/sf1_synth"
     if (!new java.io.File(s"$base10/documents.parquet").exists()) {
       println("[corpus] synthesizing 10x sf0.1 at " + base10)

@@ -306,6 +306,10 @@ class BagPipelineSpec extends AnyFunSuite {
     val root = JFiles.createTempDirectory("bag_cli_e2e")
     val (outerZip, csv) = packFixtureZip(root)
     val wh = root.resolve("warehouse").toString
+    // the CLIs run inside this suite's session and must leave its settings alone
+    val keys = Seq("spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.shuffle.partitions", "spark.sql.session.timeZone")
+    val confBefore = keys.map(k => k -> spark.conf.get(k))
     graft.ImportBag.main(Array(
       "--bag", outerZip.toString, "--gemeenten", csv,
       "--warehouse", wh, "--staging", root.resolve("staging").toString,
@@ -326,6 +330,8 @@ class BagPipelineSpec extends AnyFunSuite {
     val p6 = new java.io.File(s"$out/adressen_p6_stats.csv")
     assert(p6.isFile, "--single-file must produce a plain CSV file, not a directory")
     assert(scala.io.Source.fromFile(p6).getLines().exists(_.startsWith("2514GL,")))
+    assert(keys.map(k => k -> spark.conf.get(k)) === confBefore)
+    assert(!spark.sparkContext.isStopped)
   }
 
   test("K4: registered temp views are SQL-queryable by name") {

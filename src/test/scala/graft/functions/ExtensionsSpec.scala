@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,11 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
  *
  * `spark.sql.extensions` is a STATIC config resolved from the
  * SparkContext's conf — on the suite-shared context it cannot bind, so
- * this spec uses the programmatic `builder.withExtensions(new
- * GraftExtensions())` route (the same injection code spark-submit runs
- * from the conf string), on a fresh session over the shared context, and
- * restores the previous default session afterwards (suites run
- * sequentially in the forked test JVM).
+ * this spec builds its session through [[graft.Sessions]] (the
+ * programmatic `withExtensions(new GraftExtensions())` route, the same
+ * injection code spark-submit runs from the conf string), on a fresh
+ * session over the shared context, and restores the previous default
+ * session afterwards (suites run sequentially in the forked test JVM).
  */
 class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -27,14 +28,45 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     previousDefault = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[2]")
-      .appName("extensions-spec")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    graft.Sessions.get("local[2]", 2)
+  }
+
+  /** One sample call per SQL function, keyed by name; the key set must
+    * equal the function table's. */
+  private val sampleCalls: Map[String, String] = Map(
+    "vec_dot" -> "vec_dot(array(cast(1 as float)), array(cast(2 as float)))",
+    "vec_norm" -> "vec_norm(array(cast(3 as float)))",
+    "hamming_dist" -> "hamming_dist(array(1L), array(3L))",
+    "shingle_hashes" -> "shingle_hashes('a b c', 2)",
+    "word_count" -> "word_count('a b')",
+    "regex_token_count" -> "regex_token_count('a b')",
+    "stopword_count" -> "stopword_count('the a', array('the'))",
+    "bpe_token_count" -> "bpe_token_count('aa', array('aa'))",
+    "normalize_spaces" -> "normalize_spaces(' A ')",
+    "pii_redact" -> "pii_redact('x@y.org')",
+    "char_stats" -> "char_stats('ab')",
+    "rd_lat" -> "rd_lat(155000.0d, 463000.0d)",
+    "rd_lon" -> "rd_lon(155000.0d, 463000.0d)",
+    "vec_sum" -> "vec_sum(array(cast(1 as float)))",
+    "top_k" -> "top_k(1.0d, 1L, 1)",
+    "top_k_str" -> "top_k_str(1.0d, 'a', 1)",
+    "arg_max" -> "arg_max(named_struct('v', 1.0d, 'id', 1L), 'a')",
+    "perceptual_hash" -> "perceptual_hash(cast('a' as binary))",
+    "cms_estimate" -> "cms_estimate(cast('' as binary), 'x')",
+    "bitmap_distinct" -> "bitmap_distinct(1L)",
+    "bitmap_agg" -> "bitmap_agg(1L)",
+    "bitmap_or_count" -> "bitmap_or_count(cast('' as binary))")
+
+  /** Every table entry resolves through `spark.sql` to its own expression
+    * class (analysis only: the sample arguments need not be evaluable). */
+  private def assertResolvesAll(s: SparkSession): Unit = {
+    assert(sampleCalls.keySet === GraftExtensions.functions.map(_._1.funcName).toSet)
+    GraftExtensions.functions.foreach { case (id, info, _) =>
+      val plan = s.sql(s"SELECT ${sampleCalls(id.funcName)}").queryExecution.analyzed
+      val classes = plan.expressions.flatMap(_.collect { case e => e.getClass.getName })
+      assert(classes.contains(info.getClassName),
+        s"${id.funcName} did not resolve to ${info.getClassName}:\n$plan")
+    }
   }
 
   override def afterAll(): Unit = {
@@ -58,7 +90,9 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
         |       round(rd_lat(155000.0d, 463000.0d), 6) AS lat,
         |       round(rd_lon(155000.0d, 463000.0d), 6) AS lon,
         |       hamming_dist(array(0L, 255L), array(3L, 255L)) AS ham,
-        |       bpe_token_count('aaaa ab', array('aa', 'ab')) AS bpe
+        |       bpe_token_count('aaaa ab', array('aa', 'ab')) AS bpe,
+        |       pii_redact('mail x@y.org') AS pii,
+        |       char_stats('aab') AS cs
         |""".stripMargin).head()
     assert(r.getAs[Int]("wc") === 3)
     assert(r.getAs[Int]("rc") === 3)
@@ -72,6 +106,39 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(math.abs(r.getAs[Double]("lon") - 5.387206) < 1e-4)
     assert(r.getAs[Long]("ham") === 2L) // 0^3 = two bits differ, 255^255 = 0
     assert(r.getAs[Long]("bpe") === 3L) // aaaa -> aa+aa, ab -> ab
+    assert(r.getAs[Row]("pii").getAs[Long]("n_emails") === 1L)
+    assert(r.getAs[Row]("cs").getAs[Long]("n_chars") === 3L)
+    assert(r.getAs[Row]("cs").getAs[Long]("n_distinct") === 2L)
+    // and both structs equal their Column-API forms
+    val cols = spark.range(1).select(
+      TextExpressions.piiRedact(lit("mail x@y.org")).as("pii"),
+      TextExpressions.charStats(lit("aab")).as("cs")).head()
+    assert(r.getAs[Row]("pii") === cols.getAs[Row]("pii"))
+    assert(r.getAs[Row]("cs") === cols.getAs[Row]("cs"))
+  }
+
+  test("every function in the table resolves through spark.sql on a factory session") {
+    assertResolvesAll(spark)
+  }
+
+  test("register gives a session built without extensions the same surface, once") {
+    val factory = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val plain = try SparkSession.builder().getOrCreate() finally {
+      SparkSession.setDefaultSession(factory)
+      SparkSession.setActiveSession(factory)
+    }
+    assert(plain ne factory)
+    val reg = plain.sessionState.functionRegistry
+    val ids = GraftExtensions.functions.map(_._1)
+    assert(ids.forall(id => !reg.functionExists(id)), "the plain session already had them")
+    GraftExtensions.register(plain)
+    assertResolvesAll(plain)
+    // a second call replaces nothing: every builder is the same object
+    val before = ids.map(reg.lookupFunctionBuilder(_).get)
+    GraftExtensions.register(plain)
+    assert(ids.map(reg.lookupFunctionBuilder(_).get).zip(before).forall { case (a, b) => a eq b })
   }
 
   test("injected optimizer rule bands unbounded levenshtein comparisons") {

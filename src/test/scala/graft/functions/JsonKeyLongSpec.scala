@@ -105,12 +105,8 @@ class JsonKeyLongSpec extends AnyFunSuite {
     val bad = corpus.flatMap { s =>
       val truth = outcome(s, get_json_object(col("props"), "$.k").cast("long"))
       val kernel = outcome(s, JsonExpressions.jsonKeyLong(col("props"), "k"))
-      val same = (truth, kernel) match {
-        case (Right(a), Right(b)) => a == b
-        case (Left(_), Left(_)) => true // both throw; class may differ in wrapping
-        case _ => false
-      }
-      if (same) None else Some(s"  props=$s truth=$truth kernel=$kernel")
+      // equal values, or both throw with the same root-cause class
+      if (truth == kernel) None else Some(s"  props=$s truth=$truth kernel=$kernel")
     }
     assert(bad.isEmpty, "divergences:\n" + bad.mkString("\n"))
   }

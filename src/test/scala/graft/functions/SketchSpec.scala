@@ -74,7 +74,7 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("cms_estimate resolves from plain SQL via register()") {
-    SketchExpressions.register(spark)
+    GraftExtensions.register(spark)
     val r = spark.sql(
       """WITH sk AS (SELECT count_min_sketch(t, 0.001d, 0.99d, 7) AS s
         |  FROM (SELECT explode(array('x','x','x','y')) AS t))

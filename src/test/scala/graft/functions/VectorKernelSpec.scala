@@ -130,6 +130,36 @@ class VectorKernelSpec extends AnyFunSuite {
     assert(rows(kern) === rows(hof))
   }
 
+  test("nearest_seed / pca_score / pca_resid2 fail loudly on a null element, codegen and interpreted") {
+    // the null is data-dependent, so no constant folding evaluates it early
+    val emb = spark.range(2).select(col("id").as("vec_id"),
+      array(lit(1.0f), when(col("id") === 1, lit(null)).otherwise(lit(2.0f)).cast("float"))
+        .as("embedding"))
+    val kernels = Seq(
+      "nearest_seed" -> VectorExpressions.nearestSeed(col("embedding"),
+        Seq(0L, 1L), Seq(Seq(0.0, 0.0), Seq(1.0, 1.0))),
+      "pca_score" -> VectorExpressions.pcaScore(col("embedding"), Seq(0.0, 0.0), Seq(1.0, 0.0)),
+      "pca_resid2" -> VectorExpressions.pcaResid2(col("embedding"), Seq(0.0, 0.0), Seq(1.0, 0.0)))
+    val paths = Seq(
+      "codegen" -> Map("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for ((name, kernel) <- kernels; (path, confs) <- paths) {
+      val prev = confs.keys.map(k => k -> spark.conf.getOption(k))
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val ex = intercept[Exception](emb.select(kernel.as("k")).collect())
+        val msgs = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+          .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+        assert(msgs.contains(s"$name: null element at dim 1 in embedding"), s"$path: $msgs")
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
   test("nearest_seed fails loudly on ragged dims") {
     import spark.implicits._
     val df = Seq((1L, Array(1.0f, 2.0f))).toDF("vec_id", "embedding")

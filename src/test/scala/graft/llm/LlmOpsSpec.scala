@@ -79,7 +79,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("embedding near-dup: keep-first grouping; LSH-candidate scale path recalls the exact groups") {
     import org.apache.spark.sql.functions.{col, expr, round => f_round}
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val tau = 0.35
     val exact = Dedup.embeddingNearDup(emb, tau).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -838,7 +838,7 @@ class LlmOpsSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted
     assert(kernel === spec)
     // registered SQL surface
-    graft.functions.TextExpressions.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     df.createOrReplaceTempView("pii_in")
     val sqlRows = spark.sql(
       """SELECT doc_id, p.redacted AS redacted, p.n_emails AS n_emails,
@@ -1225,7 +1225,7 @@ class LlmOpsSpec extends AnyFunSuite {
     //    dims whose sign (x >= 0) disagrees, computed straight off the floats
     val a = emb.select(col("vec_id"), col("embedding"))
     val b = emb.select(col("vec_id").as("vid_b"), col("embedding").as("emb_b"))
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val pairs = a.join(b, col("vec_id") < col("vid_b") - 480) // sparse pair sample
       .select(col("vec_id"), col("vid_b"),
         Similarity.signBits(col("embedding")).as("sig_a"),
@@ -1370,7 +1370,7 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("native vec_dot/vec_norm match the HOF fold bit-for-bit") {
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val pairs = emb.limit(50).select(col("vec_id").as("ia"), col("embedding").as("ea"))
       .crossJoin(emb.limit(5).select(col("vec_id").as("ib"), col("embedding").as("eb")))
     val diffs = pairs.select(
