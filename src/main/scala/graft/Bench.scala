@@ -182,26 +182,11 @@ object Bench {
     val loadJson = s""""loadavg":{"start":$loadStart,"end":$loadEnd}"""
     val remeasuredJson = suspect.toSeq.sorted
       .map("\"" + _ + "\"").mkString("\"remeasured\":[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$qmins,"repeats":$repeats,"sf":"$sfDir",$loadJson,$remeasuredJson$bagImport}"""
-    println(line)
-    // Truncation defense (VERDICT r8/r9): the consumer's terminal capture
-    // keeps a TAIL window, which twice cut the front of the line above and
-    // left the committed artifact unparseable. The LAST line is therefore a
-    // compact, self-contained summary — total, counts, the judge's
-    // headliner set — so whatever tail survives capture still answers
-    // "how fast, any failures" as valid standalone JSON.
+    // The LAST stdout line is the full record (consumers parse the final
+    // line); BENCH_LAST.json keeps a durable copy.
     val nFailed = results.count(_._2 < 0)
-    val headliners = Seq("s05_scan_project", "j01_join_5way",
-      "p11_prefix_stats", "p12_date_trunc", "a01_group_stats")
-    val hl = results.filter(r => headliners.contains(r._1))
-    val hlSum = hl.map(_._2).filter(_ >= 0).sum
-    val hlJson = hl.map { case (k, med, _) => "\"" + k + "\":" + med }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
-      s""""n_failed":$nFailed,"repeats":$repeats,"sf":"$sfDir",""" +
-      s""""headliner_sec":$hlSum,"headliners":$hlJson,$loadJson,""" +
-      s""""n_remeasured":${suspect.size}$bagImport,""" +
-      s""""queries_detail":"$out"}""")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"queries":$qs,"queries_min":$qmins,"repeats":$repeats,"sf":"$sfDir",$loadJson,$remeasuredJson$bagImport}"""
+    println(line)
     // Durable copy: r8's committed artifact lost the front half of the
     // JSON line to the consumer's terminal-capture truncation, making the
     // per-query numbers unreproducible. The file is the artifact of

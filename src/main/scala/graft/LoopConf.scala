@@ -1,10 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
- * Shuffle settings for MANY-ROUND fixpoint loops (SCC, k-core/k-truss
- * peels, BFS frontiers, label propagation, component closures).
+ * The skeleton and the shuffle settings of MANY-ROUND fixpoint loops (SCC,
+ * k-core/k-truss peels, BFS frontiers, label propagation, component
+ * closures). [[fixpoint]] is the one probe-until-stable loop; [[scoped]]
+ * sizes the shuffles of any loop, and stays a separate call because not
+ * every loop wants it (kTruss's wedge join keeps AQE).
  *
  * Two facts, both measured with the r12 QProbe (optimization guide §1):
  *
@@ -60,15 +63,16 @@ object LoopConf {
    * parallelism-first. Actions inside `body` run under the scope; the
    * caller's conf is restored on exit.
    */
-  def scopedPlanHeavy[T](spark: SparkSession,
-                         advisoryBytes: Long = 8L * 1024 * 1024)(body: => T): T = {
+  private val PlanHeavyAdvisoryBytes: Long = 8L * 1024 * 1024
+
+  def scopedPlanHeavy[T](spark: SparkSession)(body: => T): T = {
     val conf = spark.conf
     val k1 = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
     val k2 = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     val o1 = conf.get(k1, "true")
     val o2 = conf.get(k2, "67108864b")
     conf.set(k1, "false")
-    conf.set(k2, advisoryBytes.toString)
+    conf.set(k2, PlanHeavyAdvisoryBytes.toString)
     try body
     finally { conf.set(k1, o1); conf.set(k2, o2) }
   }
@@ -86,5 +90,47 @@ object LoopConf {
       conf.set("spark.sql.adaptive.enabled", oldAqe)
       conf.set("spark.sql.shuffle.partitions", oldPart)
     }
+  }
+
+  /**
+   * Iterate `step` from `state0` until `probe` stops changing; returns the
+   * stable state. `name` names the loop in the failure.
+   *
+   * Per round the loop cuts the step's lineage with a LAZY
+   * `localCheckpoint`, and `probe` — which must scan the whole state, e.g.
+   * a count or a sum — is the one action that materializes those blocks
+   * and yields the round's convergence scalar in the same job: R rounds
+   * cost R + 1 probe executions (state0's probe included), never an extra
+   * materialization job per round. `state0` is probed as the caller built
+   * it.
+   *
+   * Stop rule: the probe value repeats, or satisfies `empty` (a state the
+   * step cannot change, e.g. zero edges left: stopping there saves the
+   * round that would only confirm it). The probe must be monotone in the
+   * state (a count of a shrinking set, a sum of decreasing labels), so a
+   * repeat IS the fixpoint.
+   *
+   * Cap: after `maxRounds` rounds without a repeat, one more step decides
+   * exactness — if its probe repeats, the loop had converged exactly at
+   * the cap; otherwise it fails with "`name` did not converge in
+   * `maxRounds` rounds". The default is uncapped, for loops whose state
+   * strictly shrinks until the stop.
+   */
+  def fixpoint[P](name: String, state0: DataFrame, maxRounds: Int = Int.MaxValue,
+                  empty: P => Boolean = (_: P) => false)(probe: DataFrame => P)(
+                  step: DataFrame => DataFrame): DataFrame = {
+    var state = state0
+    var prev = probe(state)
+    var converged = empty(prev)
+    var rounds = 0
+    while (!converged) {
+      require(rounds <= maxRounds, s"$name did not converge in $maxRounds rounds")
+      state = step(state).localCheckpoint(false)
+      val cur = probe(state)
+      converged = cur == prev || empty(cur)
+      prev = cur
+      rounds += 1
+    }
+    state
   }
 }

@@ -242,13 +242,12 @@ object ScaleProbe {
       // exchange-free; only the rank vector shuffles per round). The build
       // is timed separately — it amortizes over every rerun of the loop.
       time(s"$tag x16 10-iter direct") {
-        graft.graph.PageRank.pageRankFixed(bip, iters = 10, checkpointEvery = 5)
+        graft.graph.PageRank.pageRankFixed(bip, iters = 10)
           .write.format("noop").mode("overwrite").save() }
       time(s"$tag x16 layout build") {
         graft.graph.PageRank.buildEdgeLayout(bip, s"pr_probe_${tag.trim}", buckets = 32) }
       time(s"$tag x16 10-iter indexed") {
-        graft.graph.PageRank.pageRankIndexed(spark, s"pr_probe_${tag.trim}",
-            iters = 10, checkpointEvery = 5)
+        graft.graph.PageRank.pageRankIndexed(spark, s"pr_probe_${tag.trim}", iters = 10)
           .write.format("noop").mode("overwrite").save() }
       // BFS over the same bipartite graph: per-round cost is the frontier
       // equi-join; the folded known set keeps the anti-join side at

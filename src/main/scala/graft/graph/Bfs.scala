@@ -75,44 +75,9 @@ object Bfs {
     * ([[graft.LoopConf]]) — pass it when the caller already materialized
     * the edge frame and knows its count; -1 keeps the session conf. */
   def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-                   edgeRowsHint: Long = -1L): DataFrame = {
-    require(maxHops >= 0, "maxHops must be >= 0")
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-    def loop(): DataFrame = {
-      // one stored block per hop for the OUTPUT (disjoint, never
-      // rewritten); the anti-join side folds the same node sets with
-      // bounded fan-in
-      val frontiers = scala.collection.mutable.ArrayBuffer(
-        seeds.select(col("node").cast("long").as("node")).distinct()
-          .select(col("node"), lit(0L).as("dist"))
-          .localCheckpoint(true))
-      val known = new FoldedSet
-      known.add(frontiers.last.select("node"))
-      var h = 1
-      var exhausted = frontiers.last.isEmpty
-      while (h <= maxHops && !exhausted) {
-        val frontier = frontiers.last
-        val next = frontier.join(e, frontier("node") === e("src"))
-          .select(e("dst").as("node")).distinct()
-          .join(known.view, Seq("node"), "left_anti")
-          .select(col("node"), lit(h.toLong).as("dist"))
-          // r13: lazy — the isEmpty probe (and the next hop's join)
-          // materialize the blocks; the plan cut is identical
-          .localCheckpoint(false)
-        frontiers += next
-        known.add(next.select("node"))
-        exhausted = next.isEmpty
-        h += 1
-      }
-      // hop blocks are pairwise disjoint by the anti-join: plain union,
-      // no min-aggregate needed
-      frontiers.reduce(_ union _)
-    }
-    if (edgeRowsHint >= 0L)
-      graft.LoopConf.scoped(edges.sparkSession, edgeRowsHint)(loop())
-    else loop()
-  }
+                   edgeRowsHint: Long = -1L): DataFrame =
+    frontierLoop(edges, seeds.select(col("node").cast("long").as("node")).distinct()
+      .select(col("node"), lit(0L).as("dist")), Seq("node"), maxHops, edgeRowsHint)
 
   /**
    * Per-LANDMARK BFS distances: the [[bfsDistances]] loop with the seed
@@ -130,34 +95,51 @@ object Bfs {
    * [[bfsIndexed]] bucketed-layout serving applies unchanged.
    */
   def landmarkDistances(edges: DataFrame, landmarks: DataFrame,
-                        maxHops: Int, edgeRowsHint: Long = -1L): DataFrame = {
+                        maxHops: Int, edgeRowsHint: Long = -1L): DataFrame =
+    frontierLoop(edges, landmarks.select(col("node").cast("long").as("seed")).distinct()
+      .select(col("seed"), col("seed").as("node"), lit(0L).as("dist")),
+      Seq("seed", "node"), maxHops, edgeRowsHint)
+
+  /** The hop loop of [[bfsDistances]] and [[landmarkDistances]]. Rows are
+    * keyed by `keys` (ending in "node"; a leading "seed" rides through
+    * unchanged), `start` holds the hop-0 rows as `keys :+ "dist"`. */
+  private def frontierLoop(edges: DataFrame, start: DataFrame, keys: Seq[String],
+                           maxHops: Int, edgeRowsHint: Long): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    if (edgeRowsHint >= 0L)
-      return graft.LoopConf.scoped(edges.sparkSession, edgeRowsHint)(
-        landmarkDistances(edges, landmarks, maxHops, -1L))
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    val frontiers = scala.collection.mutable.ArrayBuffer(
-      landmarks.select(col("node").cast("long").as("seed")).distinct()
-        .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
-        .localCheckpoint(true))
-    val known = new FoldedSet
-    known.add(frontiers.last.select("seed", "node"))
-    var h = 1
-    var exhausted = frontiers.last.isEmpty
-    while (h <= maxHops && !exhausted) {
-      val frontier = frontiers.last
-      val next = frontier.join(e, frontier("node") === e("src"))
-        .select(col("seed"), e("dst").as("node")).distinct()
-        .join(known.view, Seq("seed", "node"), "left_anti")
-        .select(col("seed"), col("node"), lit(h.toLong).as("dist"))
-        .localCheckpoint(false)
-      frontiers += next
-      known.add(next.select("seed", "node"))
-      exhausted = next.isEmpty
-      h += 1
+    val keyCols = keys.map(col)
+    val carried = keys.filter(_ != "node").map(col)
+    def loop(): DataFrame = {
+      // one stored block per hop for the OUTPUT (disjoint, never
+      // rewritten); the anti-join side folds the same key sets with
+      // bounded fan-in
+      val frontiers = scala.collection.mutable.ArrayBuffer(start.localCheckpoint(true))
+      val known = new FoldedSet
+      known.add(frontiers.last.select(keyCols: _*))
+      var h = 1
+      var exhausted = frontiers.last.isEmpty
+      while (h <= maxHops && !exhausted) {
+        val frontier = frontiers.last
+        val next = frontier.join(e, frontier("node") === e("src"))
+          .select(carried :+ e("dst").as("node"): _*).distinct()
+          .join(known.view, keys, "left_anti")
+          .select(keyCols :+ lit(h.toLong).as("dist"): _*)
+          // r13: lazy — the isEmpty probe (and the next hop's join)
+          // materialize the blocks; the plan cut is identical
+          .localCheckpoint(false)
+        frontiers += next
+        known.add(next.select(keyCols: _*))
+        exhausted = next.isEmpty
+        h += 1
+      }
+      // hop blocks are pairwise disjoint by the anti-join: plain union,
+      // no min-aggregate needed
+      frontiers.reduce(_ union _)
     }
-    frontiers.reduce(_ union _)
+    if (edgeRowsHint >= 0L)
+      graft.LoopConf.scoped(edges.sparkSession, edgeRowsHint)(loop())
+    else loop()
   }
 
   /** BFS served from a [[PageRank.buildEdgeLayout]] layout: the

@@ -118,55 +118,35 @@ object Covisit {
    *
    * Scale shape: each round is one partial-aggregated degree count plus
    * two LEFT SEMI equi-joins (edges whose BOTH endpoints survive) — no
-   * window, no cartesian; the edge set shrinks monotonically, each
-   * round's state is cut to a stored block (eager localCheckpoint, the
-   * BFS loop discipline), and the convergence probe doubles as the
-   * materializing action. Rounds are bounded by the peel depth (small in
+   * window, no cartesian; the edge set shrinks monotonically, so the peel
+   * runs uncapped under [[graft.LoopConf.fixpoint]] (each round's state is
+   * a lazy localCheckpoint, and the convergence count is the action that
+   * materializes it). Rounds are bounded by the peel depth (small in
    * practice — single digits even on web graphs at fixed k).
    *
    * Input: canonical `(p1, p2)` edges with `p1 < p2`. Output:
    * `(node, core_deg)` for k-core members, `core_deg` the within-core
    * degree (>= k by construction).
    */
-  /** `peelsPerRound`: peel passes fused into each materialized round —
-    * the peel is confluent (removing sub-k nodes in any grouping reaches
-    * the same fixpoint), so fusing k passes between lineage cuts halves+
-    * the barrier count (the r12 probe measured these loops
-    * scheduling-bound at bench scale; on a cluster each barrier is a
-    * full synchronization round trip) at the cost of at most one wasted
-    * in-plan pass after convergence. */
-  def kCore(edges: DataFrame, k: Int, peelsPerRound: Int = 1): DataFrame = {
+  def kCore(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    require(peelsPerRound >= 1, "peelsPerRound must be >= 1")
-    var e = edges.select(col("p1").cast("long").as("a"), col("p2").cast("long").as("b"))
+    val e0 = edges.select(col("p1").cast("long").as("a"), col("p2").cast("long").as("b"))
       .select(explode(array(
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("d"))
       .select(col("d.src").as("src"), col("d.dst").as("dst"))
-      .localCheckpoint(true)
-    var n = e.count()
-    var converged = n == 0L
+      .localCheckpoint(false) // materialized by the sizing count below
     // the peel is a many-round loop over monotonically shrinking state:
     // size its shuffles once from the edge count (graft.LoopConf)
-    graft.LoopConf.scoped(edges.sparkSession, n) {
-      while (!converged) {
-        var cur = e
-        for (_ <- 1 to peelsPerRound) {
-          val keep = cur.groupBy("src").agg(count(lit(1)).as("d"))
-            .filter(col("d") >= k).select(col("src").as("node"))
-          cur = cur
-            .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
-            .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        }
-        // r13: lazy — the convergence count materializes the blocks
-        val e2 = cur.localCheckpoint(false)
-        val n2 = e2.count()
-        converged = n2 == n || n2 == 0L
-        e = e2
-        n = n2
+    val core = graft.LoopConf.scoped(edges.sparkSession, e0.count()) {
+      graft.LoopConf.fixpoint("kCore", e0, empty = (_: Long) == 0L)(_.count()) { e =>
+        val keep = e.groupBy("src").agg(count(lit(1)).as("d"))
+          .filter(col("d") >= k).select(col("src").as("node"))
+        e.join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
+          .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
       }
     }
-    e.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
+    core.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
   }
 
   /**
@@ -187,33 +167,24 @@ object Covisit {
    */
   def kTruss(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3 (support threshold k-2 >= 1)")
-    var e = edges.select(col("p1").cast("long").as("a"), col("p2").cast("long").as("b"))
+    val e0 = edges.select(col("p1").cast("long").as("a"), col("p2").cast("long").as("b"))
       .distinct().localCheckpoint(true)
-    var n = e.count()
-    var converged = n == 0L
     // NOT LoopConf-scoped (unlike kCore/SCC/BFS): each round's triangle
     // enumeration is real compute (the wedge join), which wants AQE's
     // dynamic post-shuffle sizing — an edge-count-derived constant
     // under-parallelizes the wedge stage (r12 probe: scoping cost +0.8 s)
     //
-    // r13: each round CHECKPOINTS its support frame, and the terminal
-    // round's support IS the final answer — convergence via n2 == n means
-    // every edge of e passed `support >= k-2`, so `sup` (computed over
-    // exactly that e) is complete for the survivors. The r12 form ended
-    // with `e.join(edgeSupport(e), ...)`, paying one full extra triangle
-    // enumeration after the fixpoint (~1/(rounds+1) of the query).
-    // The loop's e is already a localCheckpoint, so edgeSupport skips its
-    // persist+count round trip (materializeInput = false).
+    // each round CHECKPOINTS its support frame, and the terminal round's
+    // support IS the final answer — convergence means every edge of the
+    // last state passed `support >= k-2`, so `sup` (computed over exactly
+    // that state) is complete for the survivors, and no triangle
+    // enumeration runs after the fixpoint (it would cost ~1/(rounds+1) of
+    // the query).
     var sup: DataFrame = null
-    while (!converged) {
-      // r13: lazy — e2's count materializes BOTH checkpoints in one job
-      sup = edgeSupport(e, materializeInput = false).localCheckpoint(false)
-      val e2 = e.join(sup.filter(col("support") >= k - 2), Seq("a", "b"), "left_semi")
-        .localCheckpoint(false)
-      val n2 = e2.count()
-      converged = n2 == n || n2 == 0L
-      e = e2
-      n = n2
+    val e = graft.LoopConf.fixpoint("kTruss", e0, empty = (_: Long) == 0L)(_.count()) { e =>
+      // lazy: the round's count materializes BOTH checkpoints in one job
+      sup = edgeSupport(e).localCheckpoint(false)
+      e.join(sup.filter(col("support") >= k - 2), Seq("a", "b"), "left_semi")
     }
     if (sup == null) // empty input graph: no support was ever computed
       e.select(col("a").as("p1"), col("b").as("p2"), lit(0L).as("support"))
@@ -223,20 +194,16 @@ object Covisit {
           coalesce(col("support"), lit(0L)).as("support"))
   }
 
-  /** Per-edge triangle support over a canonical (a < b) edge list:
-    * every triangle credits its three edges once. Same oriented wedge
-    * enumeration as [[triangleCounts]], exploded per edge.
-    * `materializeInput = false` skips the persist+count when the caller's
-    * frame is already materialized (a loop checkpoint): the three subtree
-    * reads (degrees, orientation, closure) then re-scan stored blocks
-    * instead of paying a per-round cache write + count job. */
-  private def edgeSupport(e0: DataFrame,
-                          materializeInput: Boolean = true): DataFrame = {
-    val e =
-      if (materializeInput) materialized(e0.select(col("a"), col("b")))
-      else e0.select(col("a"), col("b"))
+  /** Every triangle of a canonical (a < b) edge list exactly once, as
+    * (n1, n2, n3) with n2 < n3: edges are oriented lower (degree, id) ->
+    * higher, wedges are two out-edges of one src deduped by id order on
+    * the tips, and the closure check joins the canonical edge list
+    * (x < y matches a < b). `e` feeds degree counting, orientation AND the
+    * closure check, so callers pass a materialized frame. */
+  private def triangles(e: DataFrame): DataFrame = {
     val deg = e.select(col("a").as("n")).union(e.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
+    // a < b canonically, so the id tie-break folds into "<=" on the degrees
     val oriented = e
       .join(deg.select(col("n").as("a"), col("d").as("da")), Seq("a"))
       .join(deg.select(col("n").as("b"), col("d").as("db")), Seq("b"))
@@ -246,15 +213,19 @@ object Covisit {
     val wedges = oriented.select(col("src"), col("dst").as("x"))
       .join(oriented.select(col("src"), col("dst").as("y")), Seq("src"))
       .filter(col("x") < col("y"))
-    val tris = wedges.join(e.select(col("a").as("x"), col("b").as("y")), Seq("x", "y"))
+    wedges.join(e.select(col("a").as("x"), col("b").as("y")), Seq("x", "y"))
       .select(col("src").as("n1"), col("x").as("n2"), col("y").as("n3"))
-    tris.select(explode(array(
+  }
+
+  /** Per-edge triangle support over a canonical (a < b) edge list: every
+    * triangle credits its three edges once. */
+  private def edgeSupport(e: DataFrame): DataFrame =
+    triangles(e).select(explode(array(
         struct(least(col("n1"), col("n2")).as("a"), greatest(col("n1"), col("n2")).as("b")),
         struct(least(col("n1"), col("n3")).as("a"), greatest(col("n1"), col("n3")).as("b")),
         struct(col("n2").as("a"), col("n3").as("b")))).as("t"))
       .select(col("t.a").as("a"), col("t.b").as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("support"))
-  }
 
   /**
    * Per-node triangle participation counts over a canonical undirected
@@ -263,29 +234,11 @@ object Covisit {
    * each of its three corners.
    */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    // the edge frame feeds degree counting, orientation, AND the closure
-    // check — materialize it so an expensive upstream edge derivation
-    // (x22's similarity pipeline) runs once, not three times
+    // materialized so an expensive upstream edge derivation (x22's
+    // similarity pipeline) runs once, not three times
     val e = materialized(
       edges.select(col("p1").cast("long").as("a"), col("p2").cast("long").as("b")))
-    val deg = e.select(col("a").as("n")).union(e.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    // orient lower (degree, id) -> higher; a < b canonically, so the
-    // id tie-break folds into "<=" on the degrees
-    val oriented = e
-      .join(deg.select(col("n").as("a"), col("d").as("da")), Seq("a"))
-      .join(deg.select(col("n").as("b"), col("d").as("db")), Seq("b"))
-      .select(
-        when(col("da") <= col("db"), col("a")).otherwise(col("b")).as("src"),
-        when(col("da") <= col("db"), col("b")).otherwise(col("a")).as("dst"))
-    // wedges: two out-edges of one src, deduped by id order on the tips;
-    // the closure check joins the canonical edge list (x < y matches a < b)
-    val wedges = oriented.select(col("src"), col("dst").as("x"))
-      .join(oriented.select(col("src"), col("dst").as("y")), Seq("src"))
-      .filter(col("x") < col("y"))
-    val tris = wedges.join(e.select(col("a").as("x"), col("b").as("y")), Seq("x", "y"))
-      .select(col("src").as("n1"), col("x").as("n2"), col("y").as("n3"))
-    tris.select(explode(array(col("n1"), col("n2"), col("n3"))).as("node"))
+    triangles(e).select(explode(array(col("n1"), col("n2"), col("n3"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("tri_cnt"))
   }
 }

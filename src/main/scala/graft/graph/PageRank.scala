@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
  * current rank vector on the 8-byte src id plus one partial-aggregated
  * groupBy on dst — the standard distributed PageRank round (GraphX's
  * Pregel formulation lowers to the same join+aggregate). The iteration
- * count is a compile-time constant (plans unroll; for tens of rounds,
- * checkpoint every ~5 to cut lineage). Mass at dangling nodes (out-degree
+ * count is a compile-time constant (plans unroll; every 5th round cuts
+ * lineage, [[RoundsPerCut]]). Mass at dangling nodes (out-degree
  * 0) is dropped, which is deterministic and harmless for a fixed-round
  * scoring pass; feed an undirected (doubled) edge list to avoid danglers
  * entirely.
@@ -59,20 +59,11 @@ object PageRank {
     s
   }
 
-  /** `scale <= 0` (the default) auto-sizes via [[autoScale]].
-    *
-    * `checkpointEvery`: for real corpus-graph scoring (10-30 rounds) the
-    * unrolled plan grows linearly in iteration count and the planner
-    * stalls long before the executors do — cut lineage every N rounds
-    * with an eager `localCheckpoint` (executor-block, unreplicated: the
-    * right tier for loop state that is cheap to reconstruct from `edges`;
-    * the same lesson as the components closure's self-join loop). Each
-    * checkpoint is one materialize of the rank vector (|nodes| rows), so
-    * the default 0 (never) is right for fixture-scale runs while ~5 keeps
-    * a 30-round job's plan depth flat. Integer ranks are bit-stable, so
-    * checkpointing can never change the result, only the plan. */
-  def pageRankFixed(edges: DataFrame, iters: Int = 3,
-                    scale: Long = 0L, checkpointEvery: Int = 0): DataFrame = {
+  /** `scale <= 0` (the default) auto-sizes via [[autoScale]]. PageRank is
+    * [[trustRankFixed]] with every node a seed: the teleport term's 0/1
+    * weight is 1 everywhere, so the ranks are exactly the plain damping
+    * update's. */
+  def pageRankFixed(edges: DataFrame, iters: Int = 3, scale: Long = 0L): DataFrame = {
     // The edge list, degrees, and node set are loop-invariant and appear
     // in every round's plan — deliberately NOT persisted: ReuseExchange
     // already dedupes the identical exchanges inside the one job, and an
@@ -86,7 +77,7 @@ object PageRank {
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    iterate(e, deg, nodes, iters, scale, checkpointEvery)
+    iterate(e, deg, nodes.withColumn("__s", lit(1L)), iters, scale, "pageRankFixed: node count")
   }
 
   /** The L62/L64 index-split applied to iterated graph scoring: persist
@@ -196,14 +187,13 @@ object PageRank {
     * correct after growth; both run on the bucketed scans' own hash
     * distribution, so they add no exchange to the loop. */
   def pageRankIndexed(spark: org.apache.spark.sql.SparkSession, name: String,
-                      iters: Int = 3, scale: Long = 0L,
-                      checkpointEvery: Int = 0): DataFrame = {
+                      iters: Int = 3, scale: Long = 0L): DataFrame = {
     import graft.relational.Bucketing
     iterate(Bucketing.read(spark, s"${name}_edges"),
       Bucketing.read(spark, s"${name}_degrees")
         .groupBy("src").agg(sum(col("deg")).as("deg")),
-      Bucketing.read(spark, s"${name}_nodes").distinct(),
-      iters, scale, checkpointEvery)
+      Bucketing.read(spark, s"${name}_nodes").distinct().withColumn("__s", lit(1L)),
+      iters, scale, "pageRankFixed: node count")
   }
 
   /**
@@ -225,9 +215,7 @@ object PageRank {
    * node frame, no extra join in the loop.
    */
   def trustRankFixed(edges: DataFrame, seeds: DataFrame, iters: Int = 3,
-                     scale: Long = 0L, checkpointEvery: Int = 0): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(checkpointEvery >= 0, "checkpointEvery must be >= 0 (0 = never)")
+                     scale: Long = 0L): DataFrame = {
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).distinct()
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -239,18 +227,54 @@ object PageRank {
       .union(e.select(col("dst").as("node"))).distinct()
       .join(sd, Seq("node"), "left")
       .select(col("node"), coalesce(col("__s"), lit(0L)).as("__s"))
+    iterate(e, deg, nodes, iters, scale, "trustRankFixed: seed count")
+  }
+
+  /** Rounds between lineage cuts of the rank vector. The unrolled plan
+    * grows linearly in iteration count and the planner stalls long before
+    * the executors do (10-30 round corpus-graph scoring), so every 5th
+    * round — never the last: the final plan returns to the caller lazily —
+    * is cut with an eager `localCheckpoint` (executor-block, unreplicated:
+    * the right tier for loop state that is cheap to reconstruct from
+    * `edges`). Each cut is one materialize of the rank vector (|nodes|
+    * rows); fixture-scale 3-round runs never reach one. Integer ranks are
+    * bit-stable, so a cut can never change the result, only the plan. */
+  private val RoundsPerCut = 5
+
+  /** Core fixed-point loop over pre-built (edge, degree, node) frames —
+    * plain parquet-derived (pageRankFixed, trustRankFixed) or stored
+    * bucketed (pageRankIndexed); the math is identical. `nodes` carries
+    * the 0/1 teleport weight `__s`, and the auto-sized scale bounds on its
+    * sum (`what` names that count in the overflow assert). */
+  private def iterate(e: DataFrame, deg: DataFrame, nodes: DataFrame,
+                      iters: Int, scale: Long, what: String): DataFrame = {
+    require(iters >= 1, "iters must be >= 1")
+    // The auto-sized scale rides IN-PLAN as a broadcast 1-row scalar
+    // computed by the same rule as [[autoScale]] (pow(10,k) is exact in a
+    // double through 10^18, the cast back to long exact through 10^18) —
+    // one job end to end, where a driver-side nodes.count() action would
+    // scan the edge list a second time before the iteration even starts.
+    // ReuseExchange dedupes the node-set subtree against the main plan.
+    // An empty graph yields an empty result (no scale to compute); a node
+    // count too large for scale >= 1 fails the in-plan assert.
     val scFrame =
       if (scale > 0L)
         e.sparkSession.range(1).select(lit(scale).as("__scale"))
       else nodes.agg(sum(col("__s")).as("__n")).select(expr(
+        // __n NULL (empty graph) empties the filter, so coalesce supplies a
+        // dummy positive scale — the crossJoin with zero nodes discards
+        // the row, preserving the empty-in/empty-out contract.
         "coalesce(array_max(filter(transform(sequence(0, 18)," +
           " k -> cast(pow(10, k) as bigint))," +
           s" s -> s <= ${Long.MaxValue}L div 85 div __n)), 1L)" +
           s" + coalesce(cast(assert_true(__n = 0 OR ${Long.MaxValue}L div 85 div __n >= 1," +
-          " 'trustRankFixed: seed count too large for integer scale') as bigint), 0L)")
+          s" '$what too large for integer scale') as bigint), 0L)")
         .as("__scale"))
     var ranks = nodes.crossJoin(broadcast(scFrame))
       .select(col("node"), col("__s"), (col("__s") * col("__scale")).as("rank"))
+    // guard BEFORE the 85x damping multiply: m outside [0, 2^63/85)
+    // would wrap. coalesce folds the assert's NULL into the arithmetic
+    // so pruning can never drop it.
     val maxMass = Long.MaxValue / 85L
     for (it <- 1 to iters) {
       val contrib = e.join(deg, "src")
@@ -264,64 +288,9 @@ object PageRank {
             expr(s"(85 * (coalesce(m, 0L) + " +
               s"coalesce(cast(assert_true(coalesce(m, 0L) >= 0 and " +
               s"coalesce(m, 0L) <= ${maxMass}L) as long), 0L))) div 100")).as("rank"))
-      if (checkpointEvery > 0 && it % checkpointEvery == 0 && it < iters)
+      if (it % RoundsPerCut == 0 && it < iters)
         ranks = ranks.localCheckpoint(true)
     }
     ranks.select(col("node"), col("rank"))
-  }
-
-  /** Core fixed-point loop over pre-built (edge, degree, node) frames —
-    * plain parquet-derived (pageRankFixed) or stored bucketed
-    * (pageRankIndexed); the math is identical. */
-  private def iterate(e: DataFrame, deg: DataFrame, nodes: DataFrame,
-                      iters: Int, scale: Long, checkpointEvery: Int): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(checkpointEvery >= 0, "checkpointEvery must be >= 0 (0 = never)")
-    // The auto-sized scale rides IN-PLAN as a broadcast 1-row scalar
-    // computed by the same rule as [[autoScale]] (pow(10,k) is exact in a
-    // double through 10^18, the cast back to long exact through 10^18) —
-    // one job end to end, where a driver-side nodes.count() action would
-    // scan the edge list a second time before the iteration even starts.
-    // ReuseExchange dedupes the node-set subtree against the main plan.
-    // An empty graph yields an empty result (no scale to compute); a node
-    // count too large for scale >= 1 fails the in-plan assert.
-    val scFrame =
-      if (scale > 0L)
-        e.sparkSession.range(1).select(lit(scale).as("__scale"))
-      else nodes.agg(count(lit(1)).as("__n")).select(expr(
-        // __n = 0 (empty graph): the div-by-zero NULL empties the filter, so
-        // coalesce supplies a dummy positive scale and the assert's `__n = 0`
-        // arm keeps it from firing — the crossJoin with zero nodes discards
-        // the row, preserving the empty-in/empty-out contract.
-        "coalesce(array_max(filter(transform(sequence(0, 18)," +
-          " k -> cast(pow(10, k) as bigint))," +
-          s" s -> s <= ${Long.MaxValue}L div 85 div __n)), 1L)" +
-          s" + coalesce(cast(assert_true(__n = 0 OR ${Long.MaxValue}L div 85 div __n >= 1," +
-          " 'pageRankFixed: node count too large for integer scale') as bigint), 0L)")
-        .as("__scale"))
-    var ranks = nodes.crossJoin(broadcast(scFrame))
-      .select(col("node"), col("__scale").as("rank"))
-    for (it <- 1 to iters) {
-      val contrib = e.join(deg, "src")
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"), expr("rank div deg").as("c"))
-      // guard BEFORE the 85x damping multiply: m outside [0, 2^63/85)
-      // would wrap. coalesce folds the assert's NULL into the arithmetic
-      // so pruning can never drop it.
-      val maxMass = Long.MaxValue / 85L
-      ranks = nodes
-        .join(contrib.groupBy("node").agg(sum(col("c")).as("m")), Seq("node"), "left")
-        .crossJoin(broadcast(scFrame))
-        .select(col("node"),
-          (expr("(15 * __scale) div 100") +
-            expr(s"(85 * (coalesce(m, 0L) + " +
-              s"coalesce(cast(assert_true(coalesce(m, 0L) >= 0 and " +
-              s"coalesce(m, 0L) <= ${maxMass}L) as long), 0L))) div 100")).as("rank"))
-      // cut the unrolled lineage to a LogicalRDD leaf mid-loop (never after
-      // the final round: the last plan returns to the caller lazily)
-      if (checkpointEvery > 0 && it % checkpointEvery == 0 && it < iters)
-        ranks = ranks.localCheckpoint(true)
-    }
-    ranks
   }
 }

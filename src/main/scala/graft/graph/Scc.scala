@@ -40,28 +40,36 @@ import org.apache.spark.sql.functions._
  */
 object Scc {
 
+  /** Outer peel rounds: one SCC per color region per round, O(log n)
+    * expected on random labelings. */
+  private val MaxOuterRounds = 25
+  /** Hops per coloring or reach fixpoint ([[graft.LoopConf.fixpoint]]). */
+  private val MaxFixpointRounds = 200
+
   /** Convergence is detected on the materialized frame with one scalar
     * aggregate per round — sum(color) strictly decreases / reach count
     * strictly increases until fixpoint — instead of a per-row change
     * flag, so the probe action is a metadata-cheap scan of the
     * checkpointed blocks. (Fusing several hops between lineage cuts lost
-    * its A/B: OPTIMIZATION_r13.md.) */
-  def stronglyConnected(edges: DataFrame, maxOuterRounds: Int = 25,
-                        maxFixpointRounds: Int = 200): DataFrame = {
+    * its A/B: OPTIMIZATION_r13.md.) An empty edge frame yields an empty
+    * result. */
+  def stronglyConnected(edges: DataFrame): DataFrame = {
     val e0 = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).distinct()
     var rem = e0.localCheckpoint(true)
     var nodes = rem.select(col("src").as("node"))
       .union(rem.select(col("dst").as("node")))
       .distinct().localCheckpoint(true)
+    var remaining = nodes.count()
+    if (remaining == 0)
+      return nodes.select(col("node"), col("node").as("scc_id"), lit(0L).as("scc_size"))
     var done: DataFrame = null
     var outer = 0
-    var remaining = nodes.count()
     val edgeRows = rem.count()
     // Every round below is loop-internal materialization over state that
     // only SHRINKS from here: size the loop's shuffle once (LoopConf).
     graft.LoopConf.scoped(edges.sparkSession, edgeRows) {
-    while (remaining > 0 && outer < maxOuterRounds) {
+    while (remaining > 0 && outer < MaxOuterRounds) {
       // 1. forward-min coloring to fixpoint: one hop per round, each
       //    hop ONE exchange — state and edge-propagated candidates union
       //    into a single min-aggregate on node (instead of join-back +
@@ -69,7 +77,7 @@ object Scc {
       //    sum(color) over the node frame is strictly monotone decreasing
       //    under the min-fold (colors only ever decrease), so round-over-
       //    round equality of the exact DECIMAL(38,0) sum IS the fixpoint.
-      var colors = nodes.withColumn("color", col("node"))
+      val colors0 = nodes.withColumn("color", col("node"))
         .groupBy("node").agg(min("color").as("color")) // establish hash(node)
         .localCheckpoint(true)
       def colorSum(df: DataFrame): java.math.BigDecimal = {
@@ -77,34 +85,13 @@ object Scc {
         if (v == null) java.math.BigDecimal.ZERO
         else v.asInstanceOf[java.math.BigDecimal]
       }
-      var prevSum = colorSum(colors)
-      var converged = remaining == 0
-      var it = 0
-      while (!converged && it < maxFixpointRounds) {
-        // r13: LAZY checkpoint — the colorSum probe right below is a
-        // full-scan aggregate, so it materializes the checkpoint blocks
-        // and computes the convergence scalar in ONE job (the eager form
-        // paid a separate materialization job per hop)
-        colors = colors.unionByName(
-            rem.join(colors.select(col("node").as("src"), col("color")), "src")
+      val colors = graft.LoopConf.fixpoint("SCC coloring", colors0,
+          MaxFixpointRounds)(colorSum) { c =>
+        c.unionByName(
+            rem.join(c.select(col("node").as("src"), col("color")), "src")
               .select(col("dst").as("node"), col("color")))
           .groupBy("node").agg(min("color").as("color"))
-          .localCheckpoint(false)
-        it += 1
-        val s = colorSum(colors)
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-        if (sys.env.contains("GRAFT_LOOP_DEBUG"))
-          System.err.println(s"[scc] outer=$outer colorIt=$it converged=$converged")
       }
-      require(converged || {
-        // cap hit: one more hop decides exactness
-        val probe = rem
-          .join(colors.select(col("node").as("src"), col("color").as("c")), "src")
-          .groupBy(col("dst").as("node")).agg(min(col("c")).as("pc"))
-        colors.join(probe, Seq("node"), "left")
-          .filter(coalesce(col("pc"), col("color")) < col("color")).isEmpty
-      }, s"SCC coloring did not converge in $maxFixpointRounds rounds")
 
       // 2. backward reach from every root, within its color region: the
       //    reach flag is monotone increasing, so the reached-row count is
@@ -112,42 +99,22 @@ object Scc {
       //    per-node color-set row (groupBy on the 8-byte node id — the
       //    hop's single exchange) and merge back through a join both of
       //    whose sides already carry hash(node).
-      var reached = colors
+      val reached0 = colors
         .withColumn("r", col("node") === col("color")).localCheckpoint(false)
-      var prevReached = reached.filter(col("r")).count()
-      converged = false
-      it = 0
-      while (!converged && it < maxFixpointRounds) {
+      val reached = graft.LoopConf.fixpoint("SCC backward reach", reached0,
+          MaxFixpointRounds)(_.filter(col("r")).count()) { cur =>
         val hit = rem
-          .join(reached.select(col("node").as("dst"), col("color").as("dc"),
+          .join(cur.select(col("node").as("dst"), col("color").as("dc"),
             col("r").as("dr")), "dst")
           .filter(col("dr"))
           .groupBy(col("src").as("node"))
           .agg(collect_set(col("dc")).as("__hc"))
-        it += 1
-        reached = reached.join(hit, Seq("node"), "left")
+        cur.join(hit, Seq("node"), "left")
           .select(col("node"), col("color"),
             (col("r") || coalesce(array_contains(col("__hc"), col("color")),
               lit(false))).as("r"))
-          .localCheckpoint(false) // materialized by the count probe
-        val n = reached.filter(col("r")).count()
-        converged = n == prevReached
-        prevReached = n
       }
-      require(converged || {
-        val probe = rem
-          .join(reached.select(col("node").as("dst"), col("color").as("dc"),
-            col("r").as("dr")), "dst")
-          .filter(col("dr"))
-          .select(col("src").as("node"), col("dc").as("color"))
-          .distinct()
-        reached.filter(!col("r"))
-          .join(probe, Seq("node", "color"), "left_semi").isEmpty
-      }, s"SCC backward reach did not converge in $maxFixpointRounds rounds")
 
-      if (sys.env.contains("GRAFT_LOOP_DEBUG"))
-        System.err.println(s"[scc] outer=$outer colorHops+reachHops done, " +
-          s"remaining=$remaining prevReached=$prevReached")
       // r13: lazy round-tail checkpoints — nodes is materialized by the
       // remaining-count probe, members/done/rem by their first consumer;
       // the plan cut (LogicalRDD leaf) happens either way
@@ -166,7 +133,7 @@ object Scc {
     }
     }
     require(remaining == 0,
-      s"SCC peeling exceeded $maxOuterRounds outer rounds")
+      s"SCC peeling exceeded $MaxOuterRounds outer rounds")
     val sizes = done.groupBy("scc_id").agg(count(lit(1)).as("scc_size"))
     done.join(sizes, "scc_id").select("node", "scc_id", "scc_size")
   }

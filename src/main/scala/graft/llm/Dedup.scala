@@ -1092,12 +1092,12 @@ object Dedup {
    * more equi-join on the label id. Labels are monotonically
    * non-increasing, so the loop stops the first round nothing changes.
    * Step (1) alone needs diameter rounds — an adversarial long-chain pair
-   * graph used to FAIL the maxIter=25 cap; with the jump the label-chain
+   * graph used to FAIL the 25-round cap; with the jump the label-chain
    * distance halves per round, so rounds = O(log diameter) (diameter
    * 2^25 before the cap bites; a 100-node path converges in ~8 rounds,
-   * property-tested). Each round's frames are persisted and the previous
-   * round released deterministically; the final frame is registered with
-   * [[graft.SessionResources]].
+   * property-tested). The loop is [[graft.LoopConf.fixpoint]]: each
+   * round's labels are a local checkpoint that the label-sum probe
+   * materializes, freed by the ContextCleaner once the loop drops them.
    */
   /** Below this many (undirected) pairs the component closure runs as a
     * driver-side union-find over the collected edge list instead of the
@@ -1112,7 +1112,10 @@ object Dedup {
     * aggregation is the plan that scales. */
   val componentsDriverMaxEdges: Long = 1000000L
 
-  def dedupComponents(pairs: DataFrame, maxIter: Int = 25,
+  /** Round cap of the distributed closure: label-chain diameter 2^25. */
+  private val ComponentsMaxRounds = 25
+
+  def dedupComponents(pairs: DataFrame,
                       driverMaxEdges: Long = componentsDriverMaxEdges): DataFrame = {
     // Double each undirected pair into both directions with ONE explode
     // pass, not union(pairs, pairs.swapped): a union materializes the pair
@@ -1128,21 +1131,19 @@ object Dedup {
       return componentsDriverSide(pairs.sparkSession, edges)
     // initialize with the neighborhood min (self + direct neighbors): this
     // IS round 1 of the propagation, folded into the init pass — one fewer
-    // persist/aggregate cycle in the loop
-    var labels = edges.select(col("src").as("id"), col("src").as("comp"))
+    // checkpoint/aggregate cycle in the loop
+    val labels0 = edges.select(col("src").as("id"), col("src").as("comp"))
       .union(edges.select(col("dst").as("id"), col("src").as("comp")))
       .groupBy("id").agg(min("comp").as("comp"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false) // materialized by the first label sum
     // ONE join-free action per round: labels only ever decrease, so the
     // decimal(38,0) label sum (overflow-safe for any 64-bit id universe)
     // strictly decreases exactly when any label changed — equal sums are
-    // the fixpoint. The agg also materializes the round's persist.
+    // the fixpoint. A NULL sum is the empty graph: nothing to propagate.
     def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0)
-    var prev = labelSum(labels)
-    var converged = prev == null // empty graph: nothing to propagate
-    var i = 0
-    while (!converged && i < maxIter) {
+    val labels = graft.LoopConf.fixpoint("dedupComponents", labels0, ComponentsMaxRounds,
+        empty = (_: java.math.BigDecimal) == null)(labelSum) { cur =>
       // the jump below is a SELF-join of this round's propagation result:
       // without a leaf-node barrier the logical plan would double every
       // round (2^rounds nodes — plan strings alone OOM by round ~10), so
@@ -1151,8 +1152,8 @@ object Dedup {
       // checkpoint tier for loop state that is cheap to reconstruct from
       // `pairs`; the blocks are label-table-sized and the ContextCleaner
       // frees each round's blocks as the loop drops its reference.
-      val prop = labels.union(
-          edges.join(labels.withColumnRenamed("id", "src"), "src")
+      val prop = cur.union(
+          edges.join(cur.withColumnRenamed("id", "src"), "src")
             .select(col("dst").as("id"), col("comp")))
         .groupBy("id").agg(min("comp").as("comp"))
         .localCheckpoint(true)
@@ -1161,21 +1162,11 @@ object Dedup {
       // matches; ids are unique on both sides, so the join is 1:1 and
       // jump <= comp by monotonicity. This is the path-doubling half of
       // small-star contraction, expressed as the same equi-join shape.
-      val next = prop.join(
+      prop.join(
           prop.select(col("id").as("comp"), col("comp").as("jump")), Seq("comp"), "left")
         .select(col("id"), coalesce(col("jump"), col("comp")).as("comp"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val cur = labelSum(next)
-      labels.unpersist()
-      labels = next
-      converged = cur.compareTo(prev) == 0
-      prev = cur
-      i += 1
     }
-    require(converged, s"dedupComponents did not converge in $maxIter rounds " +
-      s"(label-chain diameter exceeds 2^$maxIter — raise maxIter)")
-    graft.SessionResources.trackPersisted(labels)
-      .select(col("id").as("doc_id"), col("comp").as("comp_id"))
+    labels.select(col("id").as("doc_id"), col("comp").as("comp_id"))
   }
 
   /**

@@ -1128,7 +1128,8 @@ object Oracle {
     * monotone and idempotent at fixpoint, so a fixed unroll >= the true
     * round count computes the exact fixpoint; measured rounds are 2/2/5
     * at sf0.001/0.01/0.1, so 12 is a 2x+ margin. Each round = one degree
-    * census + both-endpoints-survive join, exactly Covisit.kCore's loop. */
+    * census + both-endpoints-survive join, exactly the step Covisit.kCore
+    * iterates under LoopConf.fixpoint. */
   private def kcoreSql(k: Int, rounds: Int): String = {
     val sb = new StringBuilder
     sb.append("WITH ").append(covisitEdgesCte).append(",\n")
@@ -1151,9 +1152,10 @@ object Oracle {
   }
 
   /** Per-round k-truss support census over edge set `t$r`: the same
-    * degree-ordered wedge enumeration as Covisit.edgeSupport (ties orient
-    * a->b via <=, wedges deduped x < y, each triangle credits its three
-    * canonical edges once). */
+    * degree-ordered wedge enumeration as Covisit.triangles, which kTruss's
+    * edgeSupport and triangleCounts share (ties orient a->b via <=, wedges
+    * deduped x < y, each triangle credits its three canonical edges
+    * once). */
   private def trussRoundCtes(r: Int): String =
     s"""d$r AS MATERIALIZED (SELECT n, count(*) AS d FROM
       |  (SELECT a AS n FROM t$r UNION ALL SELECT b FROM t$r) GROUP BY n),

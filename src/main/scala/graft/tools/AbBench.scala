@@ -138,9 +138,8 @@ object AbBench {
 
     val pairs: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
       ("x18_pagerank_10iter",
-        () => graft.graph.PageRank.pageRankFixed(bip, iters = 10, checkpointEvery = 5),
-        () => graft.graph.PageRank.pageRankIndexed(spark, "ab10x_layout",
-          iters = 10, checkpointEvery = 5)),
+        () => graft.graph.PageRank.pageRankFixed(bip, iters = 10),
+        () => graft.graph.PageRank.pageRankIndexed(spark, "ab10x_layout", iters = 10)),
       ("x20_bfs",
         () => graft.graph.Bfs.bfsDistances(bip, seeds, maxHops = 4),
         () => graft.graph.Bfs.bfsIndexed(spark, "ab10x_layout", seeds, maxHops = 4)),

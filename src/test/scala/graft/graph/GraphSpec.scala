@@ -141,26 +141,28 @@ class GraphSpec extends AnyFunSuite {
   test("checkpointEvery cuts plan depth at 10 iterations without changing a single rank") {
     // a small ring: every rank stays exactly S each round (closed-form
     // golden), so any checkpoint-induced divergence is immediately fatal.
-    val s = spark
-    import s.implicits._
     val n = 50L
     val ring = spark.range(n).select(col("id").as("src"),
         ((col("id") + 1L) % n).as("dst"))
     val e = ring.union(ring.select(col("dst").as("src"), col("src").as("dst")))
-    val plain = PageRank.pageRankFixed(e, iters = 10)
-    val chk = PageRank.pageRankFixed(e, iters = 10, checkpointEvery = 3)
+    val five = PageRank.pageRankFixed(e, iters = 5)
+    val ten = PageRank.pageRankFixed(e, iters = 10)
     val scale = PageRank.autoScale(n)
-    val stats = chk.agg(count(lit(1)), min(col("rank")), max(col("rank"))).head()
-    assert(stats.getLong(0) == n && stats.getLong(1) == scale && stats.getLong(2) == scale)
-    // integer ranks are bit-stable: checkpointing must be plan-only
-    assert(chk.exceptAll(plain).isEmpty && plain.exceptAll(chk).isEmpty)
-    // and the plan actually stays flat: 3 unrolled rounds above the last
-    // LogicalRDD cut vs 10 — the checkpointed analyzed plan must be far
-    // smaller than the fully unrolled one
-    val plainLen = plain.queryExecution.analyzed.treeString.length
-    val chkLen = chk.queryExecution.analyzed.treeString.length
-    assert(chkLen * 2 < plainLen,
-      s"checkpoint did not cut lineage: $chkLen vs $plainLen")
+    for (r <- Seq(five, ten)) {
+      val stats = r.agg(count(lit(1)), min(col("rank")), max(col("rank"))).head()
+      assert(stats.getLong(0) == n && stats.getLong(1) == scale && stats.getLong(2) == scale)
+    }
+    // every 5th round is cut, never the last: 5 rounds plan fully
+    // unrolled, 10 rounds plan only the 5 above one LogicalRDD cut — so the
+    // 10-round analyzed plan is about the 5-round one's size, where a fully
+    // unrolled one would be about twice it
+    def cuts(df: org.apache.spark.sql.DataFrame): Int = df.queryExecution.analyzed
+      .collect { case r: org.apache.spark.sql.execution.LogicalRDD => r }.size
+    assert(cuts(five) === 0 && cuts(ten) === 1)
+    val fiveLen = five.queryExecution.analyzed.treeString.length
+    val tenLen = ten.queryExecution.analyzed.treeString.length
+    assert(tenLen * 2 < fiveLen * 3,
+      s"checkpoint did not cut lineage: $tenLen vs $fiveLen")
   }
 
   test("pageRankFixed auto-scale golden on a 10^6-node ring") {
@@ -455,6 +457,14 @@ class GraphSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got === Map(9L -> ((9L, 1L)), 8L -> ((8L, 1L)),
       7L -> ((7L, 1L)), 6L -> ((6L, 1L))))
+  }
+
+  test("scc: an empty edge frame yields an empty (node, scc_id, scc_size) frame") {
+    val s = spark
+    import s.implicits._
+    val got = Scc.stronglyConnected(Seq.empty[(Long, Long)].toDF("src", "dst"))
+    assert(got.columns.toSeq === Seq("node", "scc_id", "scc_size"))
+    assert(got.collect().isEmpty)
   }
 
   test("labelPropagation: two bridged cliques settle into two min-id communities") {

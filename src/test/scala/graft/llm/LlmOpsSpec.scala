@@ -138,9 +138,9 @@ class LlmOpsSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     // adversarial long chain 0-1-2-...-99: pure neighbor propagation needs
-    // 99 rounds and used to FAIL require(converged) at maxIter=25; pointer
-    // jumping halves label-chain distance per round (~8 rounds). Forced
-    // through the distributed loop (driverMaxEdges = 0) at DEFAULT maxIter.
+    // 99 rounds and used to FAIL the 25-round cap; pointer jumping halves
+    // label-chain distance per round (~8 rounds). Forced through the
+    // distributed loop (driverMaxEdges = 0).
     val pairs = (0L until 99L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val comps = graft.llm.Dedup.dedupComponents(pairs, driverMaxEdges = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

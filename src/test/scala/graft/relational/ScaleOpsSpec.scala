@@ -869,10 +869,12 @@ class ScaleOpsSpec extends AnyFunSuite {
     val indexed = graft.graph.PageRank.pageRankIndexed(spark, "pr_layout_t", iters = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(indexed === direct)
-    val indexedCk = graft.graph.PageRank
-      .pageRankIndexed(spark, "pr_layout_t", iters = 5, checkpointEvery = 2)
+    // 7 rounds cross the every-5th-round lineage cut on both forms
+    val directCk = graft.graph.PageRank.pageRankFixed(edges, iters = 7)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(indexedCk === direct)
+    val indexedCk = graft.graph.PageRank.pageRankIndexed(spark, "pr_layout_t", iters = 7)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(indexedCk === directCk)
 
     // plan guarantee: with broadcast off (fixture tables are tiny; at
     // corpus scale neither side broadcasts — that is the case the layout
