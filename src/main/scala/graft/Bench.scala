@@ -1,10 +1,18 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /**
  * Benchmark main: runs every SparkEntry query against
- * $SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
+ * $SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds
+ * and, under "counters", the jobs, stages, tasks and shuffle bytes of
+ * each query's last timed repeat — the numbers that say whether a slow
+ * query is shuffle-bound or scheduling-bound (many tiny fixpoint rounds).
+ *
+ * A subset run (`SPARK_GRAFT_ONLY=q1,q2`, `SPARK_GRAFT_BENCH_REPEATS=n`)
+ * is the same-sitting A/B tool: run it alternately from two checkouts.
  *
  * Work is forced with a noop-format write (not `.count()`): count() lets
  * Catalyst prune every computed column (UDFs, projections, join columns
@@ -13,6 +21,64 @@ import org.apache.spark.sql.SparkSession
  * row/column, measuring the full pipeline including codegen'd expressions.
  */
 object Bench {
+  /** Spark counters keyed by job group. Each timed run executes under its
+    * own group, so a listener event that arrives after the run returned
+    * still lands on that run, never on the next query's. Counts follow
+    * completed stages: a stage skipped because its shuffle output is
+    * reused is not counted. */
+  private[graft] final class Counters extends SparkListener {
+    private val Drain = "graft.bench.drain"
+    // group -> jobs, stages, tasks, shuffle read bytes, shuffle write bytes
+    private val counts = scala.collection.mutable.Map.empty[String, Array[Long]]
+    private val stageGroup = scala.collection.mutable.Map.empty[Int, String]
+    private var drainJob = -1
+    private val drained = new java.util.concurrent.CountDownLatch(1)
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+      Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .foreach { g =>
+          counts.getOrElseUpdate(g, new Array[Long](5))(0) += 1
+          if (g == Drain) drainJob = j.jobId
+          j.stageIds.foreach(id => stageGroup.getOrElseUpdate(id, g))
+        }
+    }
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = synchronized {
+      stageGroup.remove(s.stageInfo.stageId).foreach { g =>
+        val c = counts.getOrElseUpdate(g, new Array[Long](5))
+        c(1) += 1
+        c(2) += s.stageInfo.numTasks
+        val m = s.stageInfo.taskMetrics
+        if (m != null) {
+          c(3) += m.shuffleReadMetrics.totalBytesRead
+          c(4) += m.shuffleWriteMetrics.bytesWritten
+        }
+      }
+    }
+    override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
+      if (j.jobId == drainJob) drained.countDown()
+    }
+
+    /** Runs `body` with its jobs tagged as `group`. */
+    def tagged[A](sc: SparkContext, group: String)(body: => A): A = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+
+    /** Waits (once, before the counts are read) until every event posted
+      * so far has been delivered: the listener bus delivers in order, so
+      * once a marker job's end has arrived, so has everything ahead of it. */
+    def drain(sc: SparkContext): Unit = {
+      tagged(sc, Drain)(sc.parallelize(Seq(0), 1).count())
+      drained.await(30, java.util.concurrent.TimeUnit.SECONDS)
+    }
+
+    def json(group: String): String = {
+      val c = synchronized(counts.get(group).map(_.clone)).getOrElse(new Array[Long](5))
+      s"""{"jobs":${c(0)},"stages":${c(1)},"tasks":${c(2)},""" +
+        s""""shuffle_read_bytes":${c(3)},"shuffle_write_bytes":${c(4)}}"""
+    }
+  }
+
   /** First three /proc/loadavg fields as a JSON array, "[]" off-Linux. */
   private def loadavg(): String =
     try {
@@ -23,8 +89,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // SPARK_GRAFT_ONLY=d03_neardup_ngram,d04_minhash_lsh — subset filter for
+    // local iteration; the driver leaves it unset and measures everything.
+    // An unknown name fails the run before a session starts.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val selected = queries.Queries.select(only.getOrElse(Nil))
     val loadStart = loadavg()
     val spark = Sessions.get()
+    val counters = new Counters
+    spark.sparkContext.addSparkListener(counters)
     // Warm-up actions so JVM/codegen/file-listing startup cost isn't
     // attributed to the first queries: scan every input table (file
     // listing + parquet footers + page cache) and exercise the common
@@ -50,10 +124,6 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] warm-up failed: ${e.getMessage}")
     }
-    // SPARK_GRAFT_ONLY=d03_neardup_ngram,d04_minhash_lsh — subset filter for
-    // local iteration; the driver leaves it unset and measures everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     // Repeat each query k times and report the MEDIAN (plus min): this box
     // has documented ±30-50% ambient-load swings, and two rounds running a
     // single-shot artifact reported phantom regressions on untouched code
@@ -62,16 +132,19 @@ object Bench {
     // signal. SPARK_GRAFT_BENCH_REPEATS=1 restores single-shot for quick
     // local iteration.
     val repeats = sys.env.get("SPARK_GRAFT_BENCH_REPEATS").map(_.toInt).getOrElse(3)
-    val selected = queries.Queries.all
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // every run gets its own job group, "<query>#<run>"
+    var runs = 0
+    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, String) = {
+      runs += 1
+      val group = s"$name#$runs"
       val t0 = System.nanoTime()
-      val ok =
+      val ok = counters.tagged(spark.sparkContext, group) {
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           false
         }
+      }
       // Measurement hygiene (r3 "What's wrong" #1): release the query's
       // tracked broadcasts/persists and clear the cache BETWEEN runs, so
       // accumulated storage from query N never lands in query M's wall time
@@ -81,10 +154,11 @@ object Bench {
       graft.SessionResources.release(spark)
       // failures record -1 so automated consumers can't mistake a partial
       // run for a fast success
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0, group)
     }
+    /** (name, median, min, job group of the last timed repeat) */
     def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame):
-        (String, Double, Double) = {
+        (String, Double, Double, String) = {
       // One UNTIMED warm-up pass per query before the timed repeats (when
       // repeating at all): the session-wide warm-up above covers scans and
       // common operators, but a query's own codegen'd stages still JIT on
@@ -95,14 +169,16 @@ object Bench {
       // surface via the timed runs. Skipped at repeats=1 (quick local
       // iteration stays one execution per query).
       if (repeats > 1) timeOnce(name, fn)
-      val runs = (1 to repeats).map(_ => timeOnce(name, fn))
+      val timed = (1 to repeats).map(_ => timeOnce(name, fn))
+      val secs = timed.map(_._1)
+      val last = timed.last._2
       // any failed run fails the query — a median over a mix of -1 and
       // wall seconds would be meaningless
-      if (runs.exists(_ < 0)) (name, -1.0, -1.0)
+      if (secs.exists(_ < 0)) (name, -1.0, -1.0, last)
       else {
-        val sorted = runs.sorted
+        val sorted = secs.sorted
         val median = sorted(sorted.length / 2)
-        (name, median, sorted.head)
+        (name, median, sorted.head, last)
       }
     }
     val firstPass = selected.map { case (name, fn) => measure(name, fn) }
@@ -138,7 +214,7 @@ object Bench {
       } catch { case _: Throwable => Map.empty }
     }
     val suspect = firstPass.collect {
-      case (name, med, _) if med > 0 && refTimes.get(name).exists(r =>
+      case (name, med, _, _) if med > 0 && refTimes.get(name).exists(r =>
         r > 0 && med > r * 1.5 && med - r > 0.5) => name
     }.toSet
     if (suspect.nonEmpty)
@@ -146,16 +222,19 @@ object Bench {
         s">1.5x their reference time (ambient-load suspects): " +
         suspect.toSeq.sorted.mkString(","))
     val results = firstPass.map {
-      case r @ (name, med, mn) if suspect.contains(name) =>
+      case r @ (name, med, mn, _) if suspect.contains(name) =>
         val fn = selected.collectFirst { case (`name`, f) => f }.get
-        val (_, med2, mn2) = measure(name, fn)
-        if (med2 >= 0 && med2 < med) (name, med2, math.min(mn, mn2)) else r
+        val (_, med2, mn2, group2) = measure(name, fn)
+        if (med2 >= 0 && med2 < med) (name, med2, math.min(mn, mn2), group2) else r
       case r => r
     }
-    val qs = results.map { case (k, med, _) => "\"" + k + "\":" + med }
+    val qs = results.map { case (k, med, _, _) => "\"" + k + "\":" + med }
       .mkString("{", ",", "}")
-    val qmins = results.map { case (k, _, mn) => "\"" + k + "\":" + mn }
+    val qmins = results.map { case (k, _, mn, _) => "\"" + k + "\":" + mn }
       .mkString("{", ",", "}")
+    counters.drain(spark.sparkContext)
+    val countersJson = results.map { case (k, _, _, g) => "\"" + k + "\":" + counters.json(g) }
+      .mkString("\"counters\":{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     // GRAFT_BAGBENCH_N=1002000 additionally runs the BAG ingest probe
     // (generate + full import path + exact-count validation,
@@ -185,7 +264,7 @@ object Bench {
     // The LAST stdout line is the full record (consumers parse the final
     // line); BENCH_LAST.json keeps a durable copy.
     val nFailed = results.count(_._2 < 0)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"queries":$qs,"queries_min":$qmins,"repeats":$repeats,"sf":"$sfDir",$loadJson,$remeasuredJson$bagImport}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"queries":$qs,"queries_min":$qmins,$countersJson,"repeats":$repeats,"sf":"$sfDir",$loadJson,$remeasuredJson$bagImport}"""
     println(line)
     // Durable copy: r8's committed artifact lost the front half of the
     // JSON line to the consumer's terminal-capture truncation, making the

@@ -5,11 +5,13 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [queryName ...] — trailing names restrict the
-    // dump to those queries (local iteration); the driver passes none.
-    val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
+    // dump to those queries (local iteration); the driver passes none. An
+    // unknown name fails before anything runs.
+    val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSeq)
+    val selected = queries.Queries.select(only)
     val spark = Sessions.get()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       // delete any previous dump FIRST: a query that now throws must not
       // leave a stale result behind for the oracle compare to silently
       // PASS against (overwrite only happens on success)

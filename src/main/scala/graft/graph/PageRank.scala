@@ -212,7 +212,8 @@ object PageRank {
    * exists), giving small trusted sets finer granularity than the
    * all-nodes bound. Per round: the same one edge equi-join + one
    * partial-aggregated groupBy as PageRank; the seed flag rides on the
-   * node frame, no extra join in the loop.
+   * node frame, no extra join in the loop. A seed set that holds none of
+   * the graph's nodes is not an error: every node comes back with rank 0.
    */
   def trustRankFixed(edges: DataFrame, seeds: DataFrame, iters: Int = 3,
                      scale: Long = 0L): DataFrame = {
@@ -256,17 +257,21 @@ object PageRank {
     // scan the edge list a second time before the iteration even starts.
     // ReuseExchange dedupes the node-set subtree against the main plan.
     // An empty graph yields an empty result (no scale to compute); a node
-    // count too large for scale >= 1 fails the in-plan assert.
+    // count too large for scale >= 1 fails the in-plan assert; a weight sum
+    // of 0 (TrustRank whose seeds hold none of the graph's nodes) yields
+    // every node with rank 0 — no mass ever enters the graph.
     val scFrame =
       if (scale > 0L)
         e.sparkSession.range(1).select(lit(scale).as("__scale"))
       else nodes.agg(sum(col("__s")).as("__n")).select(expr(
-        // __n NULL (empty graph) empties the filter, so coalesce supplies a
-        // dummy positive scale — the crossJoin with zero nodes discards
-        // the row, preserving the empty-in/empty-out contract.
+        // __n NULL (empty graph) or 0 (no seed in the graph) empties the
+        // filter (nullif keeps the ANSI divide from throwing), so coalesce
+        // supplies a dummy positive scale: the crossJoin with zero nodes
+        // discards it, preserving the empty-in/empty-out contract, and
+        // zero weights multiply it away.
         "coalesce(array_max(filter(transform(sequence(0, 18)," +
           " k -> cast(pow(10, k) as bigint))," +
-          s" s -> s <= ${Long.MaxValue}L div 85 div __n)), 1L)" +
+          s" s -> s <= ${Long.MaxValue}L div 85 div nullif(__n, 0))), 1L)" +
           s" + coalesce(cast(assert_true(__n = 0 OR ${Long.MaxValue}L div 85 div __n >= 1," +
           s" '$what too large for integer scale') as bigint), 0L)")
         .as("__scale"))

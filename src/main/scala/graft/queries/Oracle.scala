@@ -6,14 +6,10 @@ package graft.queries
  * exactly (the driver sorts columns by name and hash-compares values).
  *
  * Queries intentionally omitted (no faithful SQL equivalent, driver records
- * a rows-only check): d05_simhash, t04_fingerprint, v03_ann_lsh,
- * v05_ann_ivf, v12_indexed_ivf, d16_semantic_dedup, a08_approx_distinct,
- * a16_approx_percentiles — their
- * semantics rest on engine-side hash kernels (xxhash64 / FNV+splitmix),
- * approximate candidate generation (LSH buckets, IVF probing), or sketch
- * internals (HLL++, KLL) that DuckDB cannot reproduce; each is covered by
- * ScalaTest / VerifyExtras instead (recall floors / error bounds asserted
- * against exact computations).
+ * a rows-only check): a08_approx_distinct and a16_approx_percentiles —
+ * their answers rest on sketch internals (HLL++, KLL) that DuckDB cannot
+ * reproduce; VerifyExtras covers each with an error bound against the
+ * exact computation. RegistrySpec pins this list.
  */
 object Oracle {
 

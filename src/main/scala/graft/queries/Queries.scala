@@ -1177,7 +1177,9 @@ object Queries {
   val d02DedupExactKeep: Q = (s, dir) =>
     Dedup.exactDedup(tbl(s, dir, "documents")).orderBy("doc_id")
 
-  /** n-gram Jaccard near-dup via shingle inverted index (no cartesian). */
+  /** n-gram Jaccard near-dup via shingle inverted index (no cartesian).
+    * Candidates come from an equi-join on 8-byte shingle hashes, skew-guarded
+    * by a window count on the same exchange. */
   val d03NeardupNgram: Q = (s, dir) =>
     Dedup.ngramJaccardPairs(tbl(s, dir, "documents"), w = 5, minJ = 0.2)
       .orderBy("id_a", "id_b")
@@ -1245,7 +1247,10 @@ object Queries {
     * ([[Dedup.containmentPairs]]) — Broder's |A∩B|/|A| over the d03
     * shingle sets: catches the short-doc-quoted-in-long-doc case whose
     * Jaccard stays tiny because the union is container-sized. Both
-    * directions evaluated per candidate pair. */
+    * directions evaluated per candidate pair.
+    * Candidates come from d03's skew-guarded postings equi-join, and both
+    * directions come from one verified pair row, so nothing corpus-sized
+    * moves twice. */
   val d17Containment: Q = (s, dir) =>
     Dedup.containmentPairs(tbl(s, dir, "documents"), w = 5, minC = 0.5)
       .orderBy("contained_id", "container_id")
@@ -1374,7 +1379,9 @@ object Queries {
     * assignment, within-cluster pairs, closure, survivor election — in
     * plain JVM code against the dumped parquet and requires exact
     * equality, and LlmOpsSpec pins the pair-pruning contract against the
-    * exact grid. */
+    * exact grid.
+    * The closure moves 8-byte id labels, and survivor election is one arg_max
+    * hash aggregate on the component id, never a window sort. */
   val d16SemanticDedup: Q = (s, dir) =>
     Dedup.semanticDedup(embeddings(s, dir), tau = 0.35)
       .orderBy("vec_id")
@@ -1575,7 +1582,10 @@ object Queries {
     * ([[Dedup.chunkSharedContent]]) — boundary-by-content chunks, 16-byte
     * chunk hashes, per-doc shared-chunk fraction. The oracle rebuilds the
     * identical chunking (same md5-prefix boundary rule, same running-sum
-    * chunk ids, same joined-chunk md5) in SQL. */
+    * chunk ids, same joined-chunk md5) in SQL.
+    * Chunking is an in-kernel fold over each doc's word array (map-only: no
+    * explode, no window), and everything after it rides 16-byte chunk hashes
+    * through partial-aggregated group-bys. */
   val d12ChunkDedup: Q = (s, dir) =>
     Dedup.chunkSharedContent(tblPar(s, dir, "documents"), modBoundary = 4)
       .orderBy("doc_id")
@@ -1584,7 +1594,10 @@ object Queries {
     * dump (doc_id % 3 == 0) against the existing corpus, keyed on a
     * canonical 5-word-prefix fingerprint so near-dup families share an
     * admission key (the full-content key is d01/d02's surface; at sf0.01
-    * it would make the anti-join vacuously total). */
+    * it would make the anti-join vacuously total).
+    * The anti-join runs on the 16-byte fingerprint, so only hashes shuffle,
+    * and the keep-first election is a partial-aggregated min(doc_id)
+    * semi-joined back, with no window sort. */
   val d10IncrementalDedup: Q = (s, dir) => {
     val docs = tbl(s, dir, "documents")
     val fp = (t: Column) => md5(array_join(slice(split(t, " "), 1, 5), " "))
@@ -1698,21 +1711,6 @@ object Queries {
     TextOps.chunkWindows(tbl(s, dir, "documents"), w = 32, s = 24)
       .orderBy("doc_id", "chunk_idx")
 
-  /** T47: code-switching census — the mixed-language detector a
-    * WHOLE-DOC langid (t03) is structurally blind to: a half-English/
-    * half-Spanish page argmaxes to one label and then either pollutes
-    * the en bucket or is lost to es, when the right routing is "mixed"
-    * (drop, split, or route to a multilingual pipeline — the CCNet/
-    * fastText curation step after per-doc labeling). Mechanism: the doc
-    * is cut into non-overlapping 10-word windows (t26's chunker at
-    * w = s = 10, map-only), EACH window classified with t03's stopword
-    * argmax, then a per-doc census: window count, distinct guessed
-    * langs, the majority lang (ties to the alphabetically smallest via
-    * the struct arg-min — no vote sort), and the SWITCH count (adjacent
-    * windows disagreeing — a lag over each doc's own windows, the only
-    * window function here and bounded by the doc's chunk count, never
-    * the corpus). is_mixed = more than one guessed lang. All counting
-    * — integer-exact, fully mirrorable. */
   /** T48: SFT conversation assembly — the gate between raw interaction
     * logs and instruction-tuning data: flat per-turn events become
     * per-conversation training rows ONLY if they pass the structural
@@ -1807,6 +1805,21 @@ object Queries {
       .orderBy("lang", "bucket")
   }
 
+  /** T47: code-switching census — the mixed-language detector a
+    * WHOLE-DOC langid (t03) is structurally blind to: a half-English/
+    * half-Spanish page argmaxes to one label and then either pollutes
+    * the en bucket or is lost to es, when the right routing is "mixed"
+    * (drop, split, or route to a multilingual pipeline — the CCNet/
+    * fastText curation step after per-doc labeling). Mechanism: the doc
+    * is cut into non-overlapping 10-word windows (t26's chunker at
+    * w = s = 10, map-only), EACH window classified with t03's stopword
+    * argmax, then a per-doc census: window count, distinct guessed
+    * langs, the majority lang (ties to the alphabetically smallest via
+    * the struct arg-min — no vote sort), and the SWITCH count (adjacent
+    * windows disagreeing — a lag over each doc's own windows, the only
+    * window function here and bounded by the doc's chunk count, never
+    * the corpus). is_mixed = more than one guessed lang. All counting
+    * — integer-exact, fully mirrorable. */
   val t47CodeswitchCensus: Q = (s, dir) => {
     val wins = TextOps.chunkWindows(tblPar(s, dir, "documents"), w = 10, s = 10)
     val lid = TextOps.langIdScores(wins, textCol = "chunk")
@@ -1887,7 +1900,10 @@ object Queries {
     * survivors, so the under-fill and disagreement failure modes
     * post-filtering pays are BOTH live in the data, not just priced in
     * the spec). Hash-exact: both rankings share the round-6 cosine
-    * total order. */
+    * total order.
+    * Both rankings stream the corpus once through the bounded-heap top-k with
+    * the queries broadcast (shuffle = queries x k), and the re-rank window
+    * covers at most 20 rows per query. */
   val v24FilteredKnn: Q = (s, dir) => {
     val emb = embeddings(s, dir)
     Similarity.filteredKnnAudit(emb, emb.filter(col("vec_id") < 32),
@@ -2377,7 +2393,10 @@ object Queries {
     * frames (ham <= 3 per frame), the re-encoded/trimmed-copy detector
     * whole-payload hashing misses. Same ASCII oracle-parity guard as
     * m04; the DuckDB mirror recomputes frame slicing + per-frame hash +
-    * pairwise popcount from the text bytes. */
+    * pairwise popcount from the text bytes.
+    * Frames hash in the native perceptual_hash kernel straight off the scan,
+    * and the terminal count(DISTINCT frame) absorbs band-collision
+    * duplicates, so the pair set shuffles once. */
   val m05VideoNearDup: Q = (s, dir) => {
     val docs = tbl(s, dir, "documents")
     val t = coalesce(col("text"), lit(""))
@@ -2586,7 +2605,10 @@ object Queries {
     * attribution-completeness sibling: every click emits, null-padded
     * when no view preceded it in the lookback (streaming defers those
     * rows until the watermark closes the window; the batch mirror shows
-    * them immediately — same rows either way, StreamingSpec proves it). */
+    * them immediately — same rows either way, StreamingSpec proves it).
+    * The time-range predicate is the join condition of a user-keyed
+    * equi-join, never a nested loop; in streaming, the two-sided watermark
+    * bounds the buffered state. */
   val st12OuterJoin: Q = (s, dir) =>
     graft.streaming.EventStreams.clickViewJoinOuter(eventsTs(s, dir))
       .select(col("click_id"), col("user_id"),
@@ -2600,7 +2622,10 @@ object Queries {
     * audit-completeness form closing the family: every click AND every
     * view emits exactly once (matched, or null-padded from its side),
     * so source-vs-output row reconciliation is one count. User id
-    * totalized by coalescing the surviving side. */
+    * totalized by coalescing the surviving side.
+    * The time-range predicate is the join condition of a user-keyed
+    * equi-join, never a nested loop; in streaming, the two-sided watermark
+    * bounds both buffers. */
   val st16FullJoin: Q = (s, dir) =>
     graft.streaming.EventStreams.clickViewJoinFull(eventsTs(s, dir))
       .select(coalesce(col("user_id"), col("view_user_id")).as("user"),
@@ -2692,12 +2717,6 @@ object Queries {
         col("segment"), col("cnt"), col("sum_value_r"))
       .orderBy("win_start", "segment")
 
-  /** Batch mirror of the composed streaming ingest
-    * ([[graft.streaming.EventStreams.ingestStream]]): quality gate ->
-    * keep-first fingerprint dedup -> per-language admission counts. The
-    * batch election is the deterministic min-doc_id form of the stream's
-    * first-arrival-wins (StreamingSpec proves they coincide under ordered
-    * arrival). */
   /** ST8: NATIVE session windows ([[EventStreams.sessionWindowCounts]]) —
     * the engine-managed gap-merged session aggregation (vs st02's custom
     * keyed-state sessionizer). Same code path batch and streaming; output
@@ -2742,6 +2761,14 @@ object Queries {
         col("event_type"), col("n_users"), col("n_events"))
       .orderBy("win_start", "event_type")
 
+  /** Batch mirror of the composed streaming ingest
+    * ([[graft.streaming.EventStreams.ingestStream]]): quality gate ->
+    * keep-first fingerprint dedup -> per-language admission counts. The
+    * batch election is the deterministic min-doc_id form of the stream's
+    * first-arrival-wins (StreamingSpec proves they coincide under ordered
+    * arrival). The gate is map-side, the election a partial min over md5
+    * fingerprints and the counts partial-aggregated; text crosses a
+    * shuffle only in the semi-join probe. */
   val st07StreamIngest: Q = (s, dir) => {
     val gated = tbl(s, dir, "documents")
       .filter(size(split(col("text"), " ")) >= 30)
@@ -2873,7 +2900,10 @@ object Queries {
     * `dropDuplicates` states the stream's keep-first contract exactly
     * (StreamingSpec proves the watermark-bounded streaming form admits
     * the same set, duplicates dropped, exactly once). Oracle: the
-    * original log — dedup must reconstruct it. */
+    * original log — dedup must reconstruct it.
+    * One hash-aggregate dedup on event_id; the streaming form holds one id
+    * per event inside the watermark horizon instead, and either way the
+    * payload shuffles once on the key, never sorts. */
   val st18DedupRedelivery: Q = (s, dir) => {
     val ev = eventsTs(s, dir)
     val redelivered = ev.unionByName(ev.filter(col("event_id") % 3 === 0))
@@ -2883,17 +2913,6 @@ object Queries {
       .orderBy("event_id")
   }
 
-  /** ST24 batch mirror: streaming forward-fill
-    * ([[graft.streaming.EventStreams.ffillStream]]) — u03's LOCF repair
-    * run UNBOUNDED: each reading emits with its series' most recent
-    * observed value, exactly once, in event-time order, under late /
-    * out-of-order / replayed delivery (rows buffer until the watermark
-    * passes them; a constant (hasLast, lastVal) summary absorbs
-    * everything below it — O(watermark horizon) state). Same 25% md5
-    * mask as u03; on this bounded run the same flatMapGroupsWithState
-    * code path emits everything, and the oracle is u03's group-trick
-    * fill restated over the FfillOut schema. StreamingSpec proves
-    * stream == batch across chunkings, late delivery and replays. */
   /** ST25: the streaming SFT conversation gate
     * ([[graft.streaming.EventStreams.sftGateStream]]) run in its
     * bounded/batch execution — t48's gate as keyed state: turns buffer
@@ -2916,6 +2935,17 @@ object Queries {
       .orderBy("user_id", "day")
   }
 
+  /** ST24 batch mirror: streaming forward-fill
+    * ([[graft.streaming.EventStreams.ffillStream]]) — u03's LOCF repair
+    * run UNBOUNDED: each reading emits with its series' most recent
+    * observed value, exactly once, in event-time order, under late /
+    * out-of-order / replayed delivery (rows buffer until the watermark
+    * passes them; a constant (hasLast, lastVal) summary absorbs
+    * everything below it — O(watermark horizon) state). Same 25% md5
+    * mask as u03; on this bounded run the same flatMapGroupsWithState
+    * code path emits everything, and the oracle is u03's group-trick
+    * fill restated over the FfillOut schema. StreamingSpec proves
+    * stream == batch across chunkings, late delivery and replays. */
   val st24StreamFfill: Q = (s, dir) => {
     import s.implicits._
     val readings = eventsTs(s, dir)
@@ -2974,7 +3004,10 @@ object Queries {
     * multiply + floor are bit-reproducible in DuckDB, unlike an FP sum),
     * so replays/convergence are hash-checkable, not approximately so.
     * The oracle states the converged table declaratively: plain
-    * GROUP BY over the whole log. */
+    * GROUP BY over the whole log.
+    * Each delta pre-aggregates map-side to (key, cnt, sum) partials, and only
+    * the touched hash slots of the stored table are read back and merged, so
+    * a refresh costs the delta plus the touched slots, never the log. */
   val st20MaintainedAgg: Q = (s, dir) => {
     val tmp = scratch("graft_magg") + "/state"
     val kv = eventsTs(s, dir).select(
@@ -2992,7 +3025,10 @@ object Queries {
   }
 
   /** ANN via IVF coarse quantization — the second scale path (rows-only;
-    * recall asserted vs brute force in ScalaTest). */
+    * recall asserted vs brute force in ScalaTest).
+    * Cost is the cluster-id equi-join of probed query lists against the
+    * corpus inverted lists (~ corpus * nprobe / c); centroids train
+    * driver-side on one bounded TakeOrdered sample. */
   val v05AnnIvf: Q = (s, dir) => {
     val emb = embeddings(s, dir)
     Similarity.annIvf(emb, emb.filter(col("vec_id") < 32), k = 5)
@@ -3016,7 +3052,10 @@ object Queries {
     * fluency score WITHIN each language (absolute thresholds would empty
     * low-resource languages). Tile assigned over the rounded score +
     * doc_id tie-break: the identical total order in both engines, so
-    * ntile splits identically. */
+    * ntile splits identically.
+    * One language's ranking sorts in one task, the exact form CCNet runs per
+    * language; at corpus scale, sampled-quantile thresholds turn the window
+    * into a broadcast-joined map. */
   val t22QualityBuckets: Q = (s, dir) =>
     TextOps.qualityBuckets(tblPar(s, dir, "documents"))
       .orderBy("doc_id")
@@ -3068,6 +3107,11 @@ object Queries {
       .orderBy("doc_id")
   }
 
+  /** Hash bucket in [0, 100) for any id value (no overflow path: the hex
+    * prefix is < 2^32 before the modulo). */
+  def sampleBucket(docId: Column): Column =
+    conv(substring(md5(docId.cast("string")), 1, 8), 16, 10).cast("long") % 100
+
   /** Deterministic stratified sampling for training-mix construction:
     * per-language quotas via a hash-bucket threshold — reproducible across
     * runs/engines, no rand(). Bucket = first 32 bits of md5(doc_id as text)
@@ -3075,11 +3119,6 @@ object Queries {
     * `doc_id * 2654435761 % 100` overflowed Long past doc_id ~3.5e9 —
     * negative buckets silently widened the sample at exactly the corpus
     * sizes this engine targets.) */
-  /** Hash bucket in [0, 100) for any id value (no overflow path: the hex
-    * prefix is < 2^32 before the modulo). */
-  def sampleBucket(docId: Column): Column =
-    conv(substring(md5(docId.cast("string")), 1, 8), 16, 10).cast("long") % 100
-
   val t06StratifiedSample: Q = (s, dir) =>
     tbl(s, dir, "documents")
       .withColumn("bucket", sampleBucket(col("doc_id")))
@@ -3129,9 +3168,8 @@ object Queries {
     * greedy token-budget packing. One lineage end to end: no collect
     * between stages, dedup is ONE arg_max hash aggregate, the bench
     * side broadcasts (eval sets are small by nature), packing is the
-    * single stratum-key shuffle. The 10x artifact
-    * (graft.tools.CorpusBuild10x / CORPUS_BUILD_10X.md) runs THIS
-    * function; the oracle restates every stage in SQL — the quality
+    * single stratum-key shuffle. The committed 10x record
+    * (CORPUS_BUILD_10X.md) timed THIS function; the oracle restates every stage in SQL — the quality
     * score from x08's mirror, keep-first dedup as a row_number, the
     * w=5 string-shingle overlap from d08's mirror, and t08's recursive
     * packer — so the full chain is hash-exact, not just its pieces. */
@@ -3176,7 +3214,11 @@ object Queries {
       .orderBy("doc_id")
 
   /** T9: TF-IDF top-3 terms per document — integer-deterministic ranking
-    * (tf desc, df asc, term asc), informational rounded score. */
+    * (tf desc, df asc, term asc), informational rounded score.
+    * ONE job: the tf aggregation feeds the df build, the probe side and the
+    * corpus-size scalar through one reused exchange, and selection is
+    * partial_top_k_str on an integer (tf, df) composite, never a per-doc
+    * window sort. */
   val t09Tfidf: Q = (s, dir) =>
     TextOps.tfidfTopTerms(tbl(s, dir, "documents"), k = 3)
       .orderBy("doc_id", "rnk")
@@ -3223,7 +3265,10 @@ object Queries {
 
   /** T36: token-distribution drift between two corpus snapshots (PSI over
     * the top-50 tokens, add-1 smoothed) — snapshots stood in by doc_id
-    * parity, deterministically. The crawl-refresh QA gate. */
+    * parity, deterministically. The crawl-refresh QA gate.
+    * Both snapshots are conditional sums of ONE partial-aggregated token
+    * census, the top-50 cut is a bounded TakeOrdered, and the smoothing
+    * totals are a whole-frame window over those 50 rows. */
   val t36TokenDrift: Q = (s, dir) => {
     val docs = tbl(s, dir, "documents")
     TextOps.tokenDrift(docs, col("doc_id") % 2 === 0).orderBy("token")
@@ -3232,7 +3277,11 @@ object Queries {
   /** T35: per-source boilerplate strip (CCNet/jusText template removal) —
     * t11's complement: a line repeated across >= 2 distinct docs of the
     * SAME source is host chrome and is removed from all of them. Same
-    * 10-word-chunk line segmentation as t11. */
+    * 10-word-chunk line segmentation as t11.
+    * The census dedups (source, md5(line), doc) rows in one
+    * partial-aggregated exchange of hashes, the strip is a left-anti
+    * equi-join on (source, hash) against the boilerplate set, and text moves
+    * twice: the anti-join probe and the per-doc reassembly. */
   val t35Boilerplate: Q = (s, dir) => {
     val docs = tbl(s, dir, "documents")
     val words = split(col("text"), " ")
@@ -3300,7 +3349,10 @@ object Queries {
     * public-suffix rule), 40-54 a subdomain-of-registered case
     * (www.blog.example.com -> example.com), the rest spread over eight
     * site{k}.org domains; four rotating hosts per domain. The detector
-    * sees only the url+text columns. */
+    * sees only the url+text columns.
+    * One hash aggregation on the registered domain (its distinct counts
+    * expand inside the same exchange) plus a broadcast 1-row corpus total;
+    * only the text's md5 enters the aggregate. */
   val t39DomainReputation: Q = (s, dir) => {
     val b = sampleBucket(col("doc_id"))
     val sub = element_at(
@@ -3328,7 +3380,10 @@ object Queries {
     * dedup with twins). The fixture gives every 4-doc page group the four
     * classic decorations of one logical URL (unsorted params; trailing
     * slash + utm tracking param; uppercase scheme+host + explicit :443;
-    * fragment) — all four must collapse to the same canonical row. */
+    * fragment) — all four must collapse to the same canonical row.
+    * Canonicalization is map-only built-in string expressions, then ONE hash
+    * aggregation on the canonical key whose map-side partials collapse the
+    * variants before the exchange. */
   val d24UrlDedup: Q = (s, dir) => {
     val p = expr("doc_id div 4")
     val hostL = concat(lit("www.site"), (p % 7).cast("string"), lit(".org"))
@@ -3353,7 +3408,9 @@ object Queries {
     * 10-19 added (only in B), 20-34 changed (content version differs by
     * snapshot), the rest unchanged (content a function of the page
     * alone) — all four statuses live at every SF, detector sees only
-    * (doc_id, url, text) per snapshot. */
+    * (doc_id, url, text) per snapshot.
+    * Two map-side-collapsed aggregations and ONE full-outer equi-join on the
+    * canonical key; only the 16-byte fingerprint rides the join. */
   val d25CrawlDiff: Q = (s, dir) => {
     val pg = expr("doc_id div 2")
     val base = tbl(s, dir, "documents")
@@ -3377,17 +3434,6 @@ object Queries {
       .orderBy("canonical_url")
   }
 
-  /** X37: strongly connected components
-    * ([[graft.graph.Scc.stronglyConnected]]) — the directed bowtie
-    * decomposition undirected components cannot see. Planted directed
-    * graph over doc_ids (dense 0..N-1, N % 10 == 0 at every SF): blocks
-    * of 10; four of every five blocks are forward RINGS (one SCC of 10),
-    * every fifth block a REVERSED chain (10 singleton SCCs — its head
-    * has descending ids downstream, so every node is its own color
-    * root and the whole block peels as singletons in the same round);
-    * chain-of-5 cross edges between block heads keep the DuckDB
-    * reachability closure linear in the corpus. Detector sees only the
-    * edge list. */
   /** The planted block graph shared by x37/x42: docs in blocks of 10 —
     * directed rings in four of five blocks, a descending chain in the
     * fifth, and one cross edge entering each block (except b%5==0) at
@@ -3404,6 +3450,21 @@ object Queries {
     ring.union(chain).union(cross)
   }
 
+  /** X37: strongly connected components
+    * ([[graft.graph.Scc.stronglyConnected]]) — the directed bowtie
+    * decomposition undirected components cannot see. Planted directed
+    * graph over doc_ids (dense 0..N-1, N % 10 == 0 at every SF): blocks
+    * of 10; four of every five blocks are forward RINGS (one SCC of 10),
+    * every fifth block a REVERSED chain (10 singleton SCCs — its head
+    * has descending ids downstream, so every node is its own color
+    * root and the whole block peels as singletons in the same round);
+    * chain-of-5 cross edges between block heads keep the DuckDB
+    * reachability closure linear in the corpus. Detector sees only the
+    * edge list.
+    * Per round: one edge equi-join plus a partial-aggregated min or a (node,
+    * color) semi-join, with localCheckpoint lineage cuts; every color root
+    * peels its SCC in the same outer round, so rounds track SCC-chain depth,
+    * not node count. */
   val x37Scc: Q = (s, dir) => {
     val n = tbl(s, dir, "documents")
       .select(col("doc_id").as("id"), expr("doc_id div 10").as("b"))
@@ -3504,7 +3565,10 @@ object Queries {
     * list in web-quality pipelines). The fixture appends 1-3
     * deterministic `<a href>` anchors per doc pointing at rotating
     * neighbor domains; the detector extracts them back with one
-    * regexp_extract_all and censuses the (src, dst) domain edges. */
+    * regexp_extract_all and censuses the (src, dst) domain edges.
+    * One regexp scan and a links-per-doc explode feed a single hash
+    * aggregation on the (src, dst) domain key, so the edge list is
+    * domain-sized, not corpus-sized. */
   val x36LinkGraph: Q = (s, dir) => {
     val dom = concat(lit("site"), (col("doc_id") % 5).cast("string"),
       lit(".org"))
@@ -3550,7 +3614,10 @@ object Queries {
     * ([[TextOps.tokenBudgetSample]]) — the mixture-recipe admission step
     * (training mixes are specified in tokens per source, not documents).
     * Budget 800 tokens/source keeps a strict ~8-doc prefix of every
-    * source at every SF, so admission is live everywhere. */
+    * source at every SF, so admission is live everywhere.
+    * The running sum is one window sort per source; at corpus scale the
+    * same admission would run on a per-source token-count quantile sketch
+    * instead. */
   val t41TokenBudget: Q = (s, dir) =>
     TextOps.tokenBudgetSample(tbl(s, dir, "documents"), 800L)
       .orderBy("doc_id")
@@ -3912,12 +3979,6 @@ object Queries {
         ((col("t.ord").cast("long") + col("t.id")) / lit(1L << 24)).cast("long").as("cnt"))
       .orderBy("lang", "rnk")
 
-  /** T17: BPE tokenizer application ([[TextOps.bpeEncode]]) — closes the
-    * loop t16 opens: the global top-8 merge pairs (cnt desc, pair asc —
-    * vocabulary-sized TakeOrdered, 8 rows collected) become plan
-    * literals, and every document is encoded map-only. All-integer
-    * output; the oracle derives the identical merge table and walks the
-    * identical per-word replace chain in SQL. */
   /** The t16-trained top-8 merge table as a driver-side literal list —
     * 8 bounded rows (documented collect), shared by t17 and t28 so the
     * tokenizer both queries apply is identical by construction. */
@@ -3937,6 +3998,12 @@ object Queries {
     merges
   }
 
+  /** T17: BPE tokenizer application ([[TextOps.bpeEncode]]) — closes the
+    * loop t16 opens: the global top-8 merge pairs (cnt desc, pair asc —
+    * vocabulary-sized TakeOrdered, 8 rows collected) become plan
+    * literals, and every document is encoded map-only. All-integer
+    * output; the oracle derives the identical merge table and walks the
+    * identical per-word replace chain in SQL. */
   val t17BpeEncode: Q = (s, dir) => {
     val docs = tblPar(s, dir, "documents")
     TextOps.bpeEncode(docs, bpeMergesTop8(docs)).orderBy("doc_id")
@@ -4291,7 +4358,10 @@ object Queries {
     * node peels away (a mirror-cluster detector raw degree can't give).
     * Rows-only: the iterate-until-fixpoint peel is not expressible in
     * the oracle's SQL; VerifyExtras recomputes the core independently
-    * (driver-side peel from raw events, no shared code path). */
+    * (driver-side peel from raw events, no shared code path).
+    * Per round: one partial-aggregated degree count and two left-semi
+    * equi-joins over a shrinking, checkpointed edge set; the convergence
+    * count is the action that materializes the round. */
   val x25Kcore: Q = (s, dir) =>
     graft.graph.Covisit.kCore(
         graft.graph.Covisit.jaccardEdges(covisitIncidence(s, dir), 17, 50), k = 8)
@@ -4304,7 +4374,10 @@ object Queries {
     * k = 3: surviving edges sit in >= 1 triangle among survivors.
     * Iterative like x25 -> rows-only for the driver; VerifyExtras
     * recomputes the whole pipeline sequentially (regex incidence, set
-    * Jaccard, textbook support peel) and requires exact equality. */
+    * Jaccard, textbook support peel) and requires exact equality.
+    * Per round: degree-ordered triangle enumeration over the shrinking edge
+    * set (hubs generate no wedges), a per-edge support count with map-side
+    * partials and a left-semi filter, with a lineage cut per round. */
   val x30Ktruss: Q = (s, dir) =>
     graft.graph.Covisit.kTruss(
         graft.graph.Covisit.jaccardEdges(covisitIncidence(s, dir), 17, 50), k = 3)
@@ -4813,7 +4886,10 @@ object Queries {
     * (de) and three updates (en/es/zh count changes) at every SF. The
     * oracle recomputes both versions straight from `documents` — which
     * also independently proves the versioned storage round-trips the
-    * aggregates faithfully. */
+    * aggregates faithfully.
+    * Two snapshot scans meet in ONE co-partitioned full-outer equi-join on
+    * the key columns, and 16-byte payload fingerprints decide update vs
+    * unchanged, so the payload crosses the exchange once. */
   val s22ChangeFeed: Q = (s, dir) => {
     val tmp = scratch("graft_cdf") + "/t"
     val docs = tbl(s, dir, "documents")
@@ -4887,7 +4963,10 @@ object Queries {
     * no-op (the st18 idempotence story for deletes). The readback is
     * the full surviving projection, so one wrongly-kept or
     * wrongly-dropped row fails the hash; the oracle is the plain
-    * predicate filter the MoR pipeline must reproduce. */
+    * predicate filter the MoR pipeline must reproduce.
+    * The read's anti-join strategy is left to AQE: broadcast for small delete
+    * sets, shuffle for mass deletes, where a forced broadcast would run out
+    * of memory exactly when deletes are largest. */
   val s24DeleteVectors: Q = (s, dir) => {
     // the base rewrite pays a global row_number sort — memoized per input
     // dir so repeated invocations in one run reuse the materialization
@@ -4914,7 +4993,10 @@ object Queries {
     * the newest two; the query ASSERTS in-plan that v1's directory is
     * physically gone and that the expiry reported exactly [1], then
     * reads the two survivors. A failed delete, an over-eager one, or a
-    * moved pointer all either throw or hash-mismatch. */
+    * moved pointer all either throw or hash-mismatch.
+    * Pure filesystem-catalog work: a bounded listing and a recursive delete
+    * per doomed version, with no data read and no job; the pointer target is
+    * spared, so serving never breaks mid-expiry. */
   val s20SnapshotExpire: Q = (s, dir) => {
     val tmp = scratch("graft_exp") + "/t"
     val docs = tbl(s, dir, "documents")
@@ -5051,25 +5133,6 @@ object Queries {
       .orderBy("gen_level", "nation_out", "segment_out")
   }
 
-  /** A31: exact two-sample Kolmogorov-Smirnov drift per event_type —
-    * t36's numeric sibling (PSI watches categorical token mass, KS
-    * watches a continuous feature's whole CDF): between two snapshots
-    * (user_id parity as the deterministic dump-id stand-in), the KS
-    * statistic D = max |ecdf_A - ecdf_B| over `value`, computed as the
-    * INTEGER cross-multiplication max |cumA * nB - cumB * nA| so the
-    * reported statistic is exact (the only float is the final rounded
-    * ratio). Tie-safe by construction: cumulative counts are
-    * aggregated per distinct value with max(), and because both
-    * running counts are nondecreasing, the max within a tie group is
-    * attained at the group's last row — inclusive-through-v counts on
-    * both engines regardless of their tie order.
-    *
-    * Scale shape: ONE window sort per event_type (exact KS is
-    * sort-bound by definition) + a distinct-value dedup + a broadcast
-    * of the per-type totals (#event_types rows). At corpus scale the
-    * exact sort swaps for the a22 binned-histogram KS (D evaluated at
-    * bin edges, error bounded by bin width) — kept exact here because
-    * the driver hash-compares D's integer numerator. */
   /** A32: Zipf-law fit over the token-frequency head
     * ([[TextOps.zipfFit]]) — the one-number corpus-health check
     * (natural language: freq ~ rank^-s, s ~ 1; flatter = template
@@ -5335,7 +5398,9 @@ object Queries {
     * corr() of the doubled ranks (scaling-invariant), rounded 6. Per
     * type: one user fold, two rank windows over |users| rows, one
     * corr aggregate — everything after the per-user fold is
-    * user-count-sized. */
+    * user-count-sized.
+    * try_divide keeps a zero-variance group's rho NULL instead of throwing
+    * under ANSI. */
   val a39Spearman: Q = (s, dir) => {
     val perUser = events(s, dir)
       .groupBy("event_type", "user_id")
@@ -5364,6 +5429,25 @@ object Queries {
       .orderBy("event_type")
   }
 
+  /** A31: exact two-sample Kolmogorov-Smirnov drift per event_type —
+    * t36's numeric sibling (PSI watches categorical token mass, KS
+    * watches a continuous feature's whole CDF): between two snapshots
+    * (user_id parity as the deterministic dump-id stand-in), the KS
+    * statistic D = max |ecdf_A - ecdf_B| over `value`, computed as the
+    * INTEGER cross-multiplication max |cumA * nB - cumB * nA| so the
+    * reported statistic is exact (the only float is the final rounded
+    * ratio). Tie-safe by construction: cumulative counts are
+    * aggregated per distinct value with max(), and because both
+    * running counts are nondecreasing, the max within a tie group is
+    * attained at the group's last row — inclusive-through-v counts on
+    * both engines regardless of their tie order.
+    *
+    * Scale shape: ONE window sort per event_type (exact KS is
+    * sort-bound by definition) + a distinct-value dedup + a broadcast
+    * of the per-type totals (#event_types rows). At corpus scale the
+    * exact sort swaps for the a22 binned-histogram KS (D evaluated at
+    * bin edges, error bounded by bin width) — kept exact here because
+    * the driver hash-compares D's integer numerator. */
   val a31KsDrift: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val e = events(s, dir).select(col("event_type"), col("value"),
@@ -5828,25 +5912,14 @@ object Queries {
     * scene/slideshow detector (min-ham ~ 0) and hard-cut locator
     * (max-ham) of video curation, m05's within-video complement. Same
     * ASCII fixture contract as m04/m05 — the oracle recomputes the
-    * identical average-hash from the text bytes. */
+    * identical average-hash from the text bytes.
+    * The lag window's partitions hold at most 8 frames by construction,
+    * followed by one hash aggregate, so the per-video cost is constant. */
   val m08FrameCoherence: Q = (s, dir) =>
     Multimodal.frameCoherence(
         Multimodal.fromDocuments(tbl(s, dir, "documents")))
       .orderBy("doc_id")
 
-  /** M9: VAD-style energy segmentation census ([[Multimodal
-    * .vadCensus]]) — the silence-trim pass before ASR / audio-token
-    * packing: per clip, how many windows carry signal, how many speech
-    * RUNS there are, and the trimmable leading/trailing silence. A
-    * deterministic silence gap (1-3 windows of spaces at an md5-chosen
-    * window-aligned offset, overwriting the payload so length is
-    * preserved) is planted per document; the offset range includes
-    * both edges, so split clips (2+ segments), leading-silence and
-    * trailing-silence trims are all live at every SF. Energy is
-    * codepoint-based (the m-family's documented codec stand-in),
-    * windows of 16 chars, threshold 400 — natural text scores ~900,
-    * spaces 0. Map-only in-row operator, docs under 6 windows dropped
-    * (no room for the plant). */
   /** m09/m12 shared plant: the doc text as a synthetic waveform with an
     * md5-planted silence gap (length and position doc-deterministic), so
     * every VAD branch is live at every SF. */
@@ -5866,6 +5939,19 @@ object Queries {
           "cast((__nw - __sw - __lw) * 16 as int)))"))
       .drop("__nw")
 
+  /** M9: VAD-style energy segmentation census ([[Multimodal
+    * .vadCensus]]) — the silence-trim pass before ASR / audio-token
+    * packing: per clip, how many windows carry signal, how many speech
+    * RUNS there are, and the trimmable leading/trailing silence. A
+    * deterministic silence gap (1-3 windows of spaces at an md5-chosen
+    * window-aligned offset, overwriting the payload so length is
+    * preserved) is planted per document; the offset range includes
+    * both edges, so split clips (2+ segments), leading-silence and
+    * trailing-silence trims are all live at every SF. Energy is
+    * codepoint-based (the m-family's documented codec stand-in),
+    * windows of 16 chars, threshold 400 — natural text scores ~900,
+    * spaces 0. Map-only in-row operator, docs under 6 windows dropped
+    * (no room for the plant). */
   val m09AudioSegments: Q = (s, dir) =>
     Multimodal.vadCensus(m09Planted(tblPar(s, dir, "documents")),
       "__wave", "doc_id").orderBy("doc_id")
@@ -5945,7 +6031,10 @@ object Queries {
     * sf0.1's planted exact-dup texts add the offset-0 "same recording
     * twice" class. Peaks -> constellation keys -> capped-postings
     * equi-join -> per-pair offset vote; min-match floor suppresses
-    * coincidence. */
+    * coincidence.
+    * One window sort per track serves both the peak test and the
+    * constellation leads, and the offset vote is hash folds plus a struct
+    * arg_max, never a window over the pair space. */
   val m11Constellation: Q = (s, dir) => {
     val base = tblPar(s, dir, "documents")
       .withColumn("__w", coalesce(col("text"), lit("")))
@@ -6064,18 +6153,10 @@ object Queries {
       .orderBy("event_id")
   }
 
-  /** X16: integer-exact PageRank ([[graft.graph.PageRank.pageRankFixed]])
-    * over the bipartite user <-> page co-visitation graph from the event
-    * log (page = the JSON `k` prop). Doubled (undirected) edges so no node
-    * dangles; 3 unrolled join+aggregate rounds; every rank is a 64-bit
-    * integer, so the oracle (the same three rounds as chained CTEs)
-    * matches hash-exactly with NO rounding contract — float PageRank
-    * could never be cross-engine hash-stable. */
   /** Bipartite user <-> page edge list from the event log (page = the
     * JSON `k` prop offset into its own id range), doubled into both
-    * directions so no node dangles. Shared by [[x16Pagerank]] and
-    * `graft.ScaleProbe`, so the probe measures exactly the graph the
-    * query contract runs. */
+    * directions so no node dangles. Shared by the graph queries that
+    * run over the event log. */
   def eventsBipartiteEdges(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val e0 = events
       .select(col("user_id").as("src"),
@@ -6101,7 +6182,9 @@ object Queries {
     * election is a 1-row limit over (dist DESC, node ASC) — no driver
     * collect anywhere, the 1-row frames chain through broadcast
     * nested-loop assembly (the x31 one-row-profile discipline).
-    * n_reached doubles as the seed-component size census. */
+    * n_reached doubles as the seed-component size census.
+    * The loop-invariant edge frame materializes once for both sweeps instead
+    * of being re-derived per frontier join (2.3x). */
   val x40DiameterSweep: Q = (s, dir) => {
     // the edge frame is loop-invariant across ~10 frontier joins (two
     // sweeps x rounds) — materialize it ONCE instead of re-running the
@@ -6202,7 +6285,10 @@ object Queries {
     * have edges); the horizon is 4 hops over the same undirected
     * bipartite user-page graph as x16. Exact integer hop counts; the
     * oracle is a DuckDB recursive CTE over the same edge derivation,
-    * min(dist) per node. */
+    * min(dist) per node.
+    * Round h equi-joins only the previous frontier against the loop-invariant
+    * edge list and anti-joins the known set; the loop exits early when the
+    * frontier empties. */
   val x19BfsDist: Q = (s, dir) => {
     val ev = tbl(s, dir, "events")
     val seeds = ev.filter(col("user_id") % 50 === 0)
@@ -6248,7 +6334,10 @@ object Queries {
     * instead of poisoning the mean. INTEGER-EXACT: the horizon is 4, so
     * 1/d scales by lcm(1..4) = 12 — contributions 12, 6, 4, 3 — and
     * `12 div dist` sums as 64-bit integers; no FP crosses the hash.
-    * Self-distances (d = 0) are excluded by definition. */
+    * Self-distances (d = 0) are excluded by definition.
+    * Each round is one src equi-join against the loop-invariant edge side
+    * plus one anti-join against the known set, and the 12/d fold is a
+    * partial-aggregated sum. */
   val x27Harmonic: Q = (s, dir) => {
     val ev = tbl(s, dir, "events")
     val lms = ev.filter(col("user_id") % 100 === 0)
@@ -6346,6 +6435,15 @@ object Queries {
         col("max_component"), col("max_degree"))
   }
 
+  /** X16: integer-exact PageRank ([[graft.graph.PageRank.pageRankFixed]])
+    * over the bipartite user <-> page co-visitation graph from the event
+    * log (page = the JSON `k` prop). Doubled (undirected) edges so no node
+    * dangles; 3 unrolled join+aggregate rounds; every rank is a 64-bit
+    * integer, so the oracle (the same three rounds as chained CTEs)
+    * matches hash-exactly with NO rounding contract — float PageRank
+    * could never be cross-engine hash-stable.
+    * The scale auto-sizes to the node count, so the same plan serves graphs
+    * of 10^2 and 10^9 nodes. */
   val x16Pagerank: Q = (s, dir) => {
     graft.graph.PageRank.pageRankFixed(eventsBipartiteEdges(tbl(s, dir, "events")), iters = 3)
       .select(col("node").as("node_id"),
@@ -6389,6 +6487,16 @@ object Queries {
     wide.unpivot(Array(col("o_orderpriority")),
         Array(col("cnt_O"), col("cnt_F"), col("cnt_P")), "status_col", "cnt")
       .orderBy("o_orderpriority", "status_col")
+  }
+
+  /** The [[all]] entries named in `names`, in registry order; no names
+    * selects every query. Throws on any unknown name, listing them, so a
+    * typo'd subset fails instead of silently running fewer queries. */
+  def select(names: Iterable[String]): Seq[(String, Q)] = {
+    val want = names.toSet
+    val unknown = want -- all.map(_._1)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    if (want.isEmpty) all else all.filter { case (n, _) => want(n) }
   }
 
   /** name -> query, in SURVEY §2 / brief order. */

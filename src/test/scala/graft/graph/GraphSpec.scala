@@ -216,6 +216,17 @@ class GraphSpec extends AnyFunSuite {
     assert(again.map(_.toString).sorted === first.map(_.toString).sorted)
   }
 
+  test("trustRankFixed: a seed set outside the graph yields all-zero ranks, not DIVIDE_BY_ZERO") {
+    // seed count 0 on a non-empty graph: no mass ever enters, so every
+    // node of the graph is present with rank 0
+    val ranks = PageRank.trustRankFixed(edgesDf(Seq(1L -> 2L)), nodesDf(Seq.empty), iters = 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(ranks === Map(1L -> 0L, 2L -> 0L))
+    val stray = PageRank.trustRankFixed(edgesDf(Seq(1L -> 2L)), nodesDf(Seq(7L)), iters = 1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(stray === Map(1L -> 0L, 2L -> 0L))
+  }
+
   private def canonEdges(e: Seq[(Long, Long)]) = {
     val s = spark
     import s.implicits._

@@ -5,11 +5,11 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The composed corpus-build chain (graft.tools.CorpusBuild10x.chain —
+/** The composed corpus-build chain (Queries.x44Chain —
   * quality -> exact dedup -> decontaminate -> sample -> pack) runs as ONE
   * lineage: this pins its plan shape (no cartesian product, exactly one
   * aggregate-based dedup, broadcast decontamination) and non-degeneracy
-  * at fixture scale, so the committed 10x artifact can't silently rot. */
+  * at fixture scale. */
 class CorpusBuildSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -23,7 +23,7 @@ class CorpusBuildSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("chain: one lineage, no cartesian, non-degenerate at sf0.001") {
-    val out = graft.tools.CorpusBuild10x.chain(spark, "/root/testdata/sf0.001")
+    val out = Queries.x44Chain(spark, "/root/testdata/sf0.001")
     val packed = out.collect()
     assert(packed.nonEmpty, "chain produced zero packed rows at sf0.001")
     val plan = out.queryExecution.executedPlan.toString
