@@ -412,11 +412,19 @@ object BagScaleProbe {
       secStage: Double, secRaw: Double, secCurate: Double, secValidate: Double) {
     def secImport: Double = secStage + secRaw + secCurate
     def addressesPerSec: Double = adressen / secImport
+
+    /** The record as JSON object members (no braces): the one format of
+      * the probe's output line and of Bench's `bag_import` object. The
+      * four seconds split the run into stage, raw XML, curate and
+      * validate; `sec_import` is the first three, the reference's window. */
+    def jsonFields: String =
+      s""""n":$n,"adressen":$adressen,"errors":$errors,""" +
+        s""""parse_geometries":${probeCfg.parseGeometries},""" +
+        s""""sec_stage":$secStage,"sec_raw_xml":$secRaw,"sec_curate":$secCurate,""" +
+        s""""sec_validate":$secValidate,"sec_import":$secImport,""" +
+        s""""addresses_per_sec":${addressesPerSec.round},"reference_addresses_per_sec":25000"""
   }
 
-  /** Stage → raw-materialize → curate → validate, each timed. The three
-    * import stages are the reference's measured window (readme.MD:86-87
-    * times parse+insert+index, not validation). */
   /** The probe's pipeline Config — geometry parsing ON (the reference's
     * heavier configuration, readme.MD:87-88: every pand/lig/standplaats
     * GML polygon is parsed, RD->WGS84-transformed and serialized to
@@ -424,6 +432,9 @@ object BagScaleProbe {
     * geometries, so with this flag the probe prices the full work. */
   private[graft] val probeCfg = Config(asOfDate = "2024-06-30")
 
+  /** Stage → raw-materialize → curate → validate, each timed. The three
+    * import stages are the reference's measured window (readme.MD:86-87
+    * times parse+insert+index, not validation). */
   def run(spark: SparkSession, workDir: String, n: Int): Result = {
     val sh = Shape(n)
     val (outerZip, csvPath) = generate(workDir, n)
@@ -432,64 +443,44 @@ object BagScaleProbe {
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
     }
-    // XML members are NON-SPLITTABLE, so scan parallelism = files per
-    // partition bin, not bytes: under the default 128 MB bins + 4 MB
-    // open-cost the ~3-5 MB members pack ~15 to a partition and the two
-    // biggest scans (620 MB NUM / 933 MB VBO, ~204 files each) ran
-    // 12-14-wide on a 32-core box — the r10 ingest ask's missing
-    // parallelism. Parse-bound work wants ~one member per task: 8 MB
-    // bins + 1 MB open-cost puts every core on the scan (same rule on a
-    // cluster: bins sized to the member, tasks = files). Restored after
-    // the import so a shared session (Bench) keeps its defaults.
-    val prevMax = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    val prevOpen = spark.conf.getOption("spark.sql.files.openCostInBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-    spark.conf.set("spark.sql.files.openCostInBytes", "1m")
-    def restoreSplitConf(): Unit = {
-      prevMax.fold(spark.conf.unset("spark.sql.files.maxPartitionBytes"))(
-        spark.conf.set("spark.sql.files.maxPartitionBytes", _))
-      prevOpen.fold(spark.conf.unset("spark.sql.files.openCostInBytes"))(
-        spark.conf.set("spark.sql.files.openCostInBytes", _))
-    }
-    try {
+    Pipeline.withXmlSplits(spark) {
+      val (xmlDirs, tStage) = timed(ingest.BagZip.stage(outerZip, layout.stagingDir))
+      val (raw, tRaw) = timed {
+        val r0 = Pipeline.rawTables(spark, xmlDirs, csvPath, cfg)
+        Pipeline.materialize(spark, r0, s"${layout.warehouseDir}/raw")
+      }
+      val (adressen, tCurate) = timed {
+        val a = Adressen.curated(raw, cfg)
+        a.write.mode("overwrite").parquet(s"${layout.warehouseDir}/adressen")
+        Adressen.releaseCaches(spark)
+        spark.read.parquet(s"${layout.warehouseDir}/adressen")
+      }
 
-    val (xmlDirs, tStage) = timed(ingest.BagZip.stage(outerZip, layout.stagingDir))
-    val (raw, tRaw) = timed {
-      val r0 = Pipeline.rawTables(spark, xmlDirs, csvPath, cfg)
-      Pipeline.materialize(spark, r0, s"${layout.warehouseDir}/raw")
-    }
-    val (adressen, tCurate) = timed {
-      val a = Adressen.curated(raw, cfg)
-      a.write.mode("overwrite").parquet(s"${layout.warehouseDir}/adressen")
-      Adressen.releaseCaches(spark)
-      spark.read.parquet(s"${layout.warehouseDir}/adressen")
-    }
+      val th = Validate.Thresholds(
+        minAdressen = sh.expectedAdressen,
+        // multi-pand rows (i%50==3) keep a NULL pand_id by reference
+        // semantics: J1 joins the raw comma-joined pand ref, so only
+        // single-pand rows match, and J3 repairs bouwjaar/geometry ONLY
+        // (BagPipelineSpec "pand_id stays null")
+        minAdressenMetPand = sh.n.toLong - sh.nLig - sh.nSta - sh.n / 50,
+        minLigplaatsen = sh.nLig,
+        minStandplaatsen = sh.nSta,
+        minOpenbareRuimten = sh.nStreets,
+        minWoonplaatsen = sh.nWpl,
+        minGemeenten = sh.nGem + 1,
+        exactProvincies = sh.nProvincies)
+      val (checks, tValidate) = timed(
+        Validate.run(adressen, raw, th, goldenChecks = sh.planted))
+      checks.foreach(c => System.err.println(
+        s"[probe] ${if (c.isError) "FAIL" else "ok  "} ${c.name} (${c.value})"))
 
-    val th = Validate.Thresholds(
-      minAdressen = sh.expectedAdressen,
-      // multi-pand rows (i%50==3) keep a NULL pand_id by reference
-      // semantics: J1 joins the raw comma-joined pand ref, so only
-      // single-pand rows match, and J3 repairs bouwjaar/geometry ONLY
-      // (BagPipelineSpec "pand_id stays null")
-      minAdressenMetPand = sh.n.toLong - sh.nLig - sh.nSta - sh.n / 50,
-      minLigplaatsen = sh.nLig,
-      minStandplaatsen = sh.nSta,
-      minOpenbareRuimten = sh.nStreets,
-      minWoonplaatsen = sh.nWpl,
-      minGemeenten = sh.nGem + 1,
-      exactProvincies = sh.nProvincies)
-    val (checks, tValidate) = timed(
-      Validate.run(adressen, raw, th, goldenChecks = sh.planted))
-    checks.foreach(c => System.err.println(
-      s"[probe] ${if (c.isError) "FAIL" else "ok  "} ${c.name} (${c.value})"))
-
-    val count = adressen.count()
-    val exactErr = if (count == sh.expectedAdressen) 0 else 1
-    if (exactErr == 1) System.err.println(
-      s"[probe] FAIL adressen count $count != expected ${sh.expectedAdressen}")
-    Result(n, count, Validate.errorCount(checks) + exactErr,
-      tStage, tRaw, tCurate, tValidate)
-    } finally restoreSplitConf()
+      val count = adressen.count()
+      val exactErr = if (count == sh.expectedAdressen) 0 else 1
+      if (exactErr == 1) System.err.println(
+        s"[probe] FAIL adressen count $count != expected ${sh.expectedAdressen}")
+      Result(n, count, Validate.errorCount(checks) + exactErr,
+        tStage, tRaw, tCurate, tValidate)
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -522,12 +513,8 @@ object BagScaleProbe {
       // one JSON line, the BENCH_r artifact shape, addresses/s next to the
       // reference's ~25k/s headline (9M addresses / ~360 s, readme.MD:86-87)
       println(s"""{"metric":"bag_import_addresses_per_sec","value":${r.addressesPerSec.round},""" +
-        s""""unit":"addresses/sec","n":${r.n},"adressen":${r.adressen},"errors":${r.errors},""" +
-        s""""parse_geometries":${probeCfg.parseGeometries},""" +
-        s""""sec_stage":${r.secStage},"sec_raw_xml":${r.secRaw},"sec_curate":${r.secCurate},""" +
-        s""""sec_validate":${r.secValidate},"sec_import":${r.secImport}$repeatsJson,""" +
-        f""""loadavg_start":$load0%.2f,"loadavg_end":$loadavg%.2f,""" +
-        s""""reference_addresses_per_sec":25000}""")
+        s""""unit":"addresses/sec",${r.jsonFields}$repeatsJson,""" +
+        f""""loadavg_start":$load0%.2f,"loadavg_end":$loadavg%.2f}""")
       if (r.errors > 0) sys.exit(1)
     } finally spark.stop()
   }

@@ -247,9 +247,7 @@ object Bench {
       try {
         val dir = java.nio.file.Files.createTempDirectory("graft_bagbench").toString
         val r = BagScaleProbe.run(spark, dir, n)
-        s""","bag_import":{"n":${r.n},"adressen":${r.adressen},"errors":${r.errors},""" +
-          s""""sec_import":${r.secImport},"addresses_per_sec":${r.addressesPerSec.round},""" +
-          s""""reference_addresses_per_sec":25000}"""
+        s""","bag_import":{${r.jsonFields}}"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] bag probe failed: ${e.getMessage}")
         s""","bag_import":{"error":true}"""

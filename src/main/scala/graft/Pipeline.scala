@@ -17,8 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * Materializing the raw layer as parquet mirrors the reference's SQLite raw
  * tables and turns the XML scan (90% of the reference's runtime,
  * database_sqlite.py:16-17) into a one-time cost; every downstream query then
- * reads columnar storage with pushdown + pruning. Pass `materializeRaw=false`
- * to fuse everything into a single plan instead.
+ * reads columnar storage with pushdown + pruning.
  */
 object Pipeline {
 
@@ -116,12 +115,35 @@ object Pipeline {
       provincies = plain(t.provincies, "provincies"))
   }
 
-  /** Full import: zip -> staging -> raw -> curated adressen parquet. */
+  /** Runs `body` with the file-scan bins sized for the XML import, then
+    * puts back the session's prior values (set or unset), so a shared
+    * session keeps its own. XML members are NON-SPLITTABLE, so scan
+    * parallelism = files per partition bin, not bytes: under the default
+    * 128 MB bins + 4 MB open-cost the ~3-5 MB members pack ~15 to a
+    * partition and the two biggest scans of a full extract (620 MB NUM /
+    * 933 MB VBO, ~204 files each) ran 12-14-wide on a 32-core box.
+    * Parse-bound work wants ~one member per task: 8 MB bins + 1 MB
+    * open-cost put every core on the scan (same rule on a cluster: bins
+    * sized to the member, tasks = files). [[importBag]] and the ingest
+    * probe ([[BagScaleProbe.run]]) both import inside this window. */
+  def withXmlSplits[T](spark: SparkSession)(body: => T): T = {
+    val sizing = Seq("spark.sql.files.maxPartitionBytes" -> "8m",
+      "spark.sql.files.openCostInBytes" -> "1m")
+    // getAll holds only the keys set in this session (getOption would
+    // report the default of an unset key, and restoring that sets it)
+    val prior = sizing.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    sizing.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Full import: zip -> staging -> raw -> curated adressen parquet, under
+    * the XML split sizing of [[withXmlSplits]]. */
   def importBag(spark: SparkSession, bagZip: String, gemeentenCsv: String,
-      layout: Layout, cfg: Config, materializeRaw: Boolean = true): DataFrame = {
+      layout: Layout, cfg: Config): DataFrame = withXmlSplits(spark) {
     val xmlDirs = BagZip.stage(bagZip, layout.stagingDir)
-    val raw0 = rawTables(spark, xmlDirs, gemeentenCsv, cfg)
-    val raw = if (materializeRaw) materialize(spark, raw0, s"${layout.warehouseDir}/raw") else raw0
+    val raw = materialize(spark, rawTables(spark, xmlDirs, gemeentenCsv, cfg),
+      s"${layout.warehouseDir}/raw")
     val adressen =
       if (cfg.createAdressenTable && cfg.activeOnly) Adressen.curated(raw, cfg)
       else raw.nummers

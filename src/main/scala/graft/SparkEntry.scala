@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{Oracle, Queries}
+import graft.queries.{CoreQueries, Oracle, Queries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -14,29 +14,18 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * the five-way star join + aggregation (J1/J8 shape). */
   def entry(spark: SparkSession): DataFrame =
-    Queries.j01Join5way(spark, "/root/testdata/sf0.001")
+    CoreQueries.j01Join5way(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Queries.all.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted ONLY for the two genuinely
-    * randomized estimators (a08_approx_distinct, a16_approx_percentiles
-    * — HLL/KLL sketch internals with no deterministic SQL equivalent)
-    * -> rows-only check, each backed by a [[VerifyExtras]] error-bound
-    * in verify_extras.json.
-    * r11 flipped x25_kcore/x30_ktruss (fixpoint unrolled as chained
-    * MATERIALIZED CTEs) and d05_simhash/t04_fingerprint (FNV-1a/
-    * splitmix64/XXH64 reproduced bit-exactly in HUGEINT mod-2^64 SQL)
-    * from rows-only to hash-exact; r12 flipped the entire remaining ANN
-    * family — v03_ann_lsh, d16_semantic_dedup, v05/v12 (IVF),
-    * v13/v14 (PQ), v15/v16 (IVFADC) — by mirroring the float pipelines
-    * too: splitmix64-derived hyperplanes, the deterministic Lloyd
-    * quantizer (hash-ordered sample, stride init, 5 unrolled iterations,
-    * float-cast means), per-subspace L2 codebooks, residual encode and
-    * raw-double ADC shortlists, all reproduced bit-exactly in SQL
-    * (Oracle.scala's ANN-mirror section). VerifyExtras recomputes remain
-    * as independent second evidence for all flipped queries. */
+    * the same parquet tables: each query's `oracle` beside its plan in its
+    * family's file (graft.queries.CoreQueries and its siblings), collected
+    * by [[Oracle.sql]]. Omitted only for a08_approx_distinct and
+    * a16_approx_percentiles (HLL/KLL sketch internals with no
+    * deterministic SQL equivalent) -> rows-only check, each backed by a
+    * [[VerifyExtras]] error bound in verify_extras.json. */
   def oracleSql: Map[String, String] = Oracle.sql
 }

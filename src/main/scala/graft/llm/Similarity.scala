@@ -844,7 +844,7 @@ object Similarity {
    * (cheap popcount scan over the 32x-compressed signatures, `shortlist`
    * candidates per query through the bounded heap) followed by an exact
    * cosine rerank of only those candidates — the two-stage design the
-   * [[graft.queries.Queries.v09AnnRecallAudit]] measurement motivates:
+   * v09_ann_recall_audit measurement motivates:
    * raw sign-bit top-k alone recalls poorly, but as a pre-filter it cuts
    * the exact-scoring cost |corpus|/shortlist-fold while the rerank
    * restores cosine-exact ordering within the shortlist. Same shape as

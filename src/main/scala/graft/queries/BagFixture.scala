@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
  * every other operator (VERDICT r10 #1).
  *
  * Every derived column is an integer/modulo/lpad pipeline over the
- * contiguous 0-based testdata keys, mirrored 1:1 in Oracle.sql's
- * `j00_adressen_build` CTEs — nothing floating, nothing engine-specific.
+ * contiguous 0-based testdata keys, mirrored 1:1 in the CTEs of the
+ * `j00_adressen_build` oracle (CoreQueries.j00Sql) — nothing floating,
+ * nothing engine-specific.
  * The synthesis deliberately exercises every branch of the chain:
  *  - nummers without a vbo (k%10==0) and duplicate hoofdadres-vbo's
  *    (k%21==0: a second '5…' vbo whose greater id must win the arg_max

@@ -334,6 +334,50 @@ class BagPipelineSpec extends AnyFunSuite {
     assert(!spark.sparkContext.isStopped)
   }
 
+  test("importBag scans under the ingest probe's XML split sizing, then restores the session's values") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (maxKey, openKey) = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    val root = java.nio.file.Files.createTempDirectory("bag_split_sizing")
+    val (outerZip, csv) = packFixtureZip(root)
+    // A SQL execution copies the session's SQL confs into its jobs'
+    // properties: (group, execution id, maxPartitionBytes, openCostInBytes)
+    // per job. Events arrive in order, so the marker job closes the import.
+    type Job = (String, String, String, String)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val p = j.properties
+        jobs.add((p.getProperty("spark.jobGroup.id"), p.getProperty("spark.sql.execution.id"),
+          p.getProperty(maxKey), p.getProperty(openKey)))
+      }
+    }
+    def seen: Seq[Job] = jobs.toArray(Array.empty[Job]).toSeq
+    spark.conf.set(maxKey, "64m") // one prior value set, the other unset
+    spark.conf.unset(openKey)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Pipeline.importBag(spark, outerZip.toString, csv, Pipeline.Layout(
+        root.resolve("staging").toString, root.resolve("warehouse").toString), cfg)
+      assert(spark.conf.getAll.get(maxKey) === Some("64m"))
+      assert(spark.conf.getAll.get(openKey) === None, "an unset key stays unset")
+      spark.sparkContext.setJobGroup("split_marker", "split_marker")
+      try spark.range(1).collect() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.exists(_._1 == "split_marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.unset(maxKey)
+    }
+    val (imported, marker) = seen.span(_._1 != "split_marker")
+    assert(marker.nonEmpty, "marker job never arrived")
+    val sqlJobs = imported.filter(_._2 != null)
+    assert(sqlJobs.nonEmpty)
+    assert(sqlJobs.forall(j => j._3 == "8m" && j._4 == "1m"),
+      s"(group, execution, maxPartitionBytes, openCostInBytes) per job: $sqlJobs")
+    assert(marker.head._3 === "64m" && marker.head._4 === null)
+  }
+
   test("K4: registered temp views are SQL-queryable by name") {
     Pipeline.registerViews(raw, Some(adressen))
     val n = spark.sql(

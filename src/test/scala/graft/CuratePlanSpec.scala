@@ -59,7 +59,7 @@ class CuratePlanSpec extends AnyFunSuite {
   }
 
   test("curate chain: one nummer_id shuffle of the wide frame, reused by J3-J7") {
-    val df = queries.Queries.j00AdressenBuild(spark, "/root/testdata/sf0.001")
+    val df = queries.CoreQueries("j00_adressen_build")(spark, "/root/testdata/sf0.001")
     df.collect()
     val nodes = allNodes(df.queryExecution.executedPlan)
     val shuffles = nodes.collect { case e: ShuffleExchangeLike => e }

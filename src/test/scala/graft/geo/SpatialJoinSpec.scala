@@ -66,7 +66,7 @@ class SpatialJoinSpec extends AnyFunSuite {
     (1L to 5L).toDF("o_orderkey").write.parquet(s"$dir/orders.parquet")
     def r6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val got = graft.queries.Queries.p14PolygonCensus(spark, dir).collect()
+    val got = graft.queries.CoreQueries("p14_polygon_census")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4)))).toMap
     val expected = (1L to 5L).map { k =>

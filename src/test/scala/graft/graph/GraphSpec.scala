@@ -389,7 +389,7 @@ class GraphSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_x34").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
-    val got = graft.queries.Queries.x34RandomWalks(spark, dir).collect()
+    val got = graft.queries.ExtendedQueries("x34_random_walks")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
 
     // independent recompute of the whole walk from first principles
@@ -412,7 +412,7 @@ class GraphSpec extends AnyFunSuite {
     }.toMap
     assert(got === expected, s"got $got expected $expected")
     // determinism across reruns (no RNG state anywhere)
-    val again = graft.queries.Queries.x34RandomWalks(spark, dir).collect()
+    val again = graft.queries.ExtendedQueries("x34_random_walks")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(again === got)
   }
@@ -539,7 +539,7 @@ class GraphSpec extends AnyFunSuite {
     // so group 1 lands entirely in 'other'
     val dir = java.nio.file.Files.createTempDirectory("graft_x43").toString
     (0L until 100L).toDF("doc_id").write.parquet(s"$dir/documents.parquet")
-    val got = graft.queries.Queries.x43Bowtie(spark, dir).collect()
+    val got = graft.queries.ExtendedQueries("x43_bowtie")(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
     assert(got === Map(

@@ -1214,7 +1214,7 @@ class LlmOpsSpec extends AnyFunSuite {
       val best = members.map { case (id, _) => (score(id), id) }.max
       comp -> ((members.length.toLong, best._2, best._1))
     }
-    val got = graft.queries.Queries.d15ClusterKeepBest(spark, sf)
+    val got = graft.queries.DedupQueries("d15_cluster_keep_best")(spark, sf)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got === expected)
@@ -1752,7 +1752,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("soft-dedup weights: ppm = 1e6 div cluster size; per-cluster mass within truncation of 1.0") {
     val sfDocs = "/root/testdata/sf0.001"
-    val out = graft.queries.Queries.d19SoftDedupWeights(spark, sfDocs).collect()
+    val out = graft.queries.DedupQueries("d19_soft_dedup_weights")(spark, sfDocs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(out.nonEmpty)
     // every row: weight_ppm == 1_000_000 / n_members exactly (integer div)
@@ -1779,7 +1779,7 @@ class LlmOpsSpec extends AnyFunSuite {
       .withColumn("n_chars", length(col("text")).cast("long"))
     val dir = java.nio.file.Files.createTempDirectory("graft_t49").toString
     df.write.parquet(s"$dir/documents.parquet")
-    val res = graft.queries.Queries.t49QualityTradeoff(spark, dir).collect()
+    val res = graft.queries.TextQueries("t49_quality_tradeoff")(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toSeq
     assert(res === Seq(
@@ -1796,7 +1796,7 @@ class LlmOpsSpec extends AnyFunSuite {
       3L -> "t t t t"))            // template spam: 1 type, 0 hapax
     val dir = java.nio.file.Files.createTempDirectory("graft_t25").toString
     df.write.parquet(s"$dir/documents.parquet")
-    val res = graft.queries.Queries.t25LexicalDiversity(spark, dir).collect()
+    val res = graft.queries.TextQueries("t25_lexical_diversity")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
       .toMap
     assert(res === Map(
@@ -1812,7 +1812,7 @@ class LlmOpsSpec extends AnyFunSuite {
       3L -> "x y"))          // < 3 words: no row
     val dir = java.nio.file.Files.createTempDirectory("graft_t30").toString
     df.write.parquet(s"$dir/documents.parquet")
-    val res = graft.queries.Queries.t30Repetition(spark, dir).collect()
+    val res = graft.queries.TextQueries("t30_repetition")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2), r.getLong(3))))
       .toMap
     // doc 1: 11 chars, top 'a b a' (5 chars) x2 -> 1e6*2*5 div 11 = 909090
@@ -1835,7 +1835,7 @@ class LlmOpsSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "source")
     val dir = java.nio.file.Files.createTempDirectory("graft_d22").toString
     df.write.parquet(s"$dir/documents.parquet")
-    val got = graft.queries.Queries.d22SourceOverlap(spark, dir).collect()
+    val got = graft.queries.DedupQueries("d22_source_overlap")(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got === Map(("sA", "sB") -> 1L), s"got $got")
   }
@@ -1870,7 +1870,7 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(math.abs(lambda - rayleigh) / rayleigh < 0.01,
       s"lambda $lambda vs rayleigh $rayleigh")
     // serve: per-row Pythagoras (unit component: score^2 + resid2 = |c|^2)
-    val got = graft.queries.Queries.v26PcaPower(spark, dir).collect()
+    val got = graft.queries.VectorQueries("v26_pca_power")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2), r.getDouble(3))))
       .toMap
     assert(got.size === 12)
@@ -1884,7 +1884,7 @@ class LlmOpsSpec extends AnyFunSuite {
       assert(math.abs(lamR - lambda) < 1e-6, s"lambda_r $lamR vs $lambda")
     }
     // determinism: a second train+serve run is identical
-    val again = graft.queries.Queries.v26PcaPower(spark, dir).collect()
+    val again = graft.queries.VectorQueries("v26_pca_power")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2), r.getDouble(3))))
       .toMap
     assert(again === got)
@@ -1942,7 +1942,7 @@ class LlmOpsSpec extends AnyFunSuite {
       rows.sortBy(r => (r._4, r._2)).take(4).zipWithIndex.map {
         case ((_, id, sc, r2), i) => (cl, i + 1L, id, sc, r2, n) }
     }.sortBy(r => (r._1, r._2))
-    val got = graft.queries.Queries.x45Coreset(spark, dir).collect().map(r =>
+    val got = graft.queries.ExtendedQueries("x45_coreset")(spark, dir).collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getDouble(4), r.getLong(5))).toSeq
     assert(got === want, s"got\n${got.mkString("\n")}\nwant\n${want.mkString("\n")}")
@@ -1961,7 +1961,7 @@ class LlmOpsSpec extends AnyFunSuite {
       (11L, Array(2.5f, 0.0f)))  // nearest seed 1 at 0.25
     val dir = java.nio.file.Files.createTempDirectory("graft_v23").toString
     vecs.toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
-    val got = graft.queries.Queries.v23KmeansAssign(spark, dir).collect()
+    val got = graft.queries.VectorQueries("v23_kmeans_assign")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(got(10L) === ((0L, 1.0)), s"tie broke wrong: ${got(10L)}")
     assert(got(11L) === ((1L, 0.25)))
@@ -1981,7 +1981,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_t32").toString
     df.write.parquet(s"$dir/documents.parquet")
     // query phrases: 'x y z' (df 2), then df-1 ties ASC: 'q r s', 'r s t'
-    val got = graft.queries.Queries.t32PhraseIndex(spark, dir).collect()
+    val got = graft.queries.TextQueries("t32_phrase_index")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
     assert(got === Map(1L -> (("en", 1L)), 2L -> (("en", 1L)),
       3L -> (("fr", 2L))), s"got $got")
@@ -1995,7 +1995,7 @@ class LlmOpsSpec extends AnyFunSuite {
       2L -> "a b c d e f"))
     val dir = java.nio.file.Files.createTempDirectory("graft_t33").toString
     df.write.parquet(s"$dir/documents.parquet")
-    def run() = graft.queries.Queries.t33WordDropout(spark, dir).collect()
+    def run() = graft.queries.TextQueries("t33_word_dropout")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
     val got = run()
     assert(got(1L) === ((12L, 0L, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12")))
@@ -2012,7 +2012,7 @@ class LlmOpsSpec extends AnyFunSuite {
       5L -> (1 to 33).map(i => s"w$i").mkString(" "))) // 33 -> cap 64
     val dir = java.nio.file.Files.createTempDirectory("graft_t34").toString
     df.write.parquet(s"$dir/documents.parquet")
-    val got = graft.queries.Queries.t34LengthBuckets(spark, dir).collect()
+    val got = graft.queries.TextQueries("t34_length_buckets")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
     // cap 16: docs {1, 2, 4} words 15+16+1=32, pad 1+0+15=16, waste 16/48
@@ -2080,7 +2080,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_v22").toString
     vecs.toSeq.map { case (id, v) => (id, v) }.toDF("vec_id", "embedding")
       .write.parquet(s"$dir/embeddings.parquet")
-    val got = graft.queries.Queries.v22MarginMining(spark, dir).collect()
+    val got = graft.queries.VectorQueries("v22_margin_mining")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3)))).toMap
 
     // independent scala recompute from first principles (same round-6
@@ -2180,7 +2180,7 @@ class LlmOpsSpec extends AnyFunSuite {
       (1L, base), (2L, base),                       // identical: est == exact == 1
       (3L, base + " extra tail words here"))        // near pair vs 1/2
       .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    val got = graft.queries.Queries.d27SketchCalibration(spark, dir).collect()
+    val got = graft.queries.DedupQueries("d27_sketch_calibration")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(5)))).toMap
     // identical docs: identical shingle sets -> identical signatures
@@ -2209,7 +2209,7 @@ class LlmOpsSpec extends AnyFunSuite {
       (2L, w9),                            // B = A -> inter 5 uni 5, band 20
       (3L, "w1 w2 w3 w4 w5 a b c d"))      // C shares one shingle -> 1/9, band 2
       .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    val got = graft.queries.Queries.d26ThresholdAudit(spark, dir).collect()
+    val got = graft.queries.DedupQueries("d26_threshold_audit")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got === Map(
       20L -> ((1000000L, 1L, 1L)),
@@ -2290,7 +2290,7 @@ class LlmOpsSpec extends AnyFunSuite {
         }
       }
     }
-    val got = graft.queries.Queries.m12AvAlign(spark, dir).collect().map(r =>
+    val got = graft.queries.MediaQueries("m12_av_align")(spark, dir).collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getLong(5), r.getLong(6))).toSeq
     assert(got === want, s"got\n${got.mkString("\n")}\nwant\n${want.mkString("\n")}")
@@ -2332,7 +2332,7 @@ class LlmOpsSpec extends AnyFunSuite {
     def pmi(cxy: Long): Double =
       BigDecimal(math.log(cxy.toDouble * 26 * 26 / (24.0 * 12 * 12)))
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val got = graft.queries.Queries.t45PmiCollocations(spark, dir).collect()
+    val got = graft.queries.TextQueries("t45_pmi_collocations")(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5)))).toMap
     assert(got === Map(
@@ -2353,7 +2353,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val df = docsDf(docs)
     val dir = java.nio.file.Files.createTempDirectory("graft_d28").toString
     df.write.parquet(s"$dir/documents.parquet")
-    val got = graft.queries.Queries.d28CdcEditStability(spark, dir).collect()
+    val got = graft.queries.DedupQueries("d28_cdc_edit_stability")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))
     assert(got.length === 30, s"got ${got.length}")
@@ -2383,7 +2383,7 @@ class LlmOpsSpec extends AnyFunSuite {
     }
     val xy = r6(term(2, 3, 1, 3) + term(1, 3, 2, 3))
     val ln2 = r6(math.log(2.0))
-    val got = graft.queries.Queries.t46JsDivergence(spark, dir).collect()
+    val got = graft.queries.TextQueries("t46_js_divergence")(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getDouble(3)))).toMap
     assert(got === Map(
@@ -2405,7 +2405,7 @@ class LlmOpsSpec extends AnyFunSuite {
       3L -> wave("Z")))
     val dir = java.nio.file.Files.createTempDirectory("graft_m11").toString
     df.write.parquet(s"$dir/documents.parquet")
-    val got = graft.queries.Queries.m11Constellation(spark, dir).collect()
+    val got = graft.queries.MediaQueries("m11_constellation")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
     assert(got.keySet === Set((2L, 4L), (10L, 11L)), s"got $got")
@@ -2449,7 +2449,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val rows = (0L to 7L).map(i => (i, Array((i * 10).toFloat, 0f))) :+
       (100L, Array(2f, 0f))
     rows.toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
-    val got = graft.queries.Queries.v25LloydStep(spark, dir).collect()
+    val got = graft.queries.VectorQueries("v25_lloyd_step")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
     assert(got(0L) === ((2L, 1.0, 1.0)), s"got $got")
     (1L to 7L).foreach { c =>
@@ -2502,7 +2502,7 @@ class LlmOpsSpec extends AnyFunSuite {
       (3L, s"$fr $fr les des une est est", "fr", "src2", 83L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = graft.queries.Queries.t47CodeswitchCensus(spark, dir).collect()
+    val got = graft.queries.TextQueries("t47_codeswitch_census")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getString(4), r.getBoolean(5)))).toMap
     assert(got === Map(
@@ -2514,7 +2514,7 @@ class LlmOpsSpec extends AnyFunSuite {
   test("d29: negative sampling — no self, no near-dup contamination, <= 4 distinct, deterministic") {
     val s = spark
     import s.implicits._
-    val got = graft.queries.Queries.d29NegativeSampling(spark, sf)
+    val got = graft.queries.DedupQueries("d29_negative_sampling")(spark, sf)
     val rows = got.as[(Long, Long, Long, Long)].collect()
     assert(rows.nonEmpty, "no negatives sampled at sf0.001")
     // the false-negative guard IS the op: no sampled negative may be a
@@ -2537,7 +2537,7 @@ class LlmOpsSpec extends AnyFunSuite {
         s"anchor $anchor rnk not dense")
     }
     // deterministic: a second evaluation returns the identical set
-    val again = graft.queries.Queries.d29NegativeSampling(spark, sf)
+    val again = graft.queries.DedupQueries("d29_negative_sampling")(spark, sf)
       .as[(Long, Long, Long, Long)].collect()
     assert(again.toSet === rows.toSet, "re-evaluation changed the sample")
     // distributed contract: no cartesian product in the plan

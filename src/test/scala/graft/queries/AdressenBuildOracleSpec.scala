@@ -26,7 +26,7 @@ class AdressenBuildOracleSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("j00 fixture exercises every branch of the curate chain") {
-    val df = Queries.j00AdressenBuild(spark, sf).cache()
+    val df = CoreQueries("j00_adressen_build")(spark, sf).cache()
     try {
       val total = df.count()
       val nOrders = Queries.tbl(spark, sf, "orders").count()

@@ -62,7 +62,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
         (pick(role), u * 1440L + k, u, "view", 1.0) }
     }
     val dir = writeEvents(rows)
-    val got = Queries.t48SftAssembly(spark, dir).collect().map(r =>
+    val got = TextQueries("t48_sft_assembly")(spark, dir).collect().map(r =>
       (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getString(6), r.getLong(7),
         r.getBoolean(8)))).toMap
@@ -93,7 +93,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (i.toLong, i.toLong, 1L, "t", v)
     }
     val dir = writeEvents(rows)
-    val got = Queries.a25MadOutliers(spark, dir).collect()
+    val got = AnalyticsQueries("a25_mad_outliers")(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
     assert(got === Map("t" -> ((10L, 200L, 100L, 1L))), s"got $got")
@@ -108,7 +108,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (5L, 125L, 1L, "u", 1.0), (6L, 130L, 1L, "u", 1.0),
       (7L, 310L, 1L, "u", 1.0), (8L, 320L, 1L, "u", 1.0))
     val dir = writeEvents(rows)
-    val got = Queries.a33HourChi2(spark, dir).collect()
+    val got = AnalyticsQueries("a33_hour_chi2")(spark, dir).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getDouble(2), r.getLong(3), r.getLong(4)))).toMap
     assert(got === Map(
@@ -128,7 +128,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (6L, 102L, 1L, "click", 1.0),
       (7L, 200L, 1L, "purchase", 1.0), (8L, 201L, 1L, "view", 1.0))
     val dir = writeEvents(rows)
-    val got = Queries.a26SessionFunnel(spark, dir).collect()
+    val got = AnalyticsQueries("a26_session_funnel")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
     assert(got === Map(1L -> ((3L, 3L, 2L, 1L))), s"got $got")
@@ -144,7 +144,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (2L, 2 * wk, 1L, "view", 1.0),       // two weeks later
       (3L, 2 * wk + 10, 2L, "view", 1.0))  // user 2's first week
     val dir = writeEvents(rows)
-    val got = Queries.a27CohortRetention(spark, dir).collect()
+    val got = AnalyticsQueries("a27_cohort_retention")(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     // user 1: cohort 1969-12-29, week_idx 0 and 2; user 2: cohort
     // 1970-01-12, week_idx 0
@@ -163,7 +163,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (6L, 0L, 3L, "view", 1.0),
       (7L, 360L, 3L, "view", 1.0))   // exactly 6h: NOT > threshold
     val dir = writeEvents(rows)
-    val got = Queries.a28InactivityGaps(spark, dir).collect()
+    val got = AnalyticsQueries("a28_inactivity_gaps")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
     assert(got === Map(
@@ -181,7 +181,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
     // orders: key 1 x2, key 2 x1, key 7 x5 (unmatched on lineitem)
     Seq(1L, 1L, 2L, 7L, 7L, 7L, 7L, 7L).toDF("o_orderkey")
       .write.parquet(s"$dir/orders.parquet")
-    val r = Queries.x33JoinProfile(spark, dir).collect().head
+    val r = ExtendedQueries("x33_join_profile")(spark, dir).collect().head
     // keys {1,2,7,9}; matched {1,2}; rows 9/8; join = 3*2 + 2*1 = 8;
     // max fanout 6 at key 1; amp = 1e6*8 div 17
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
@@ -204,7 +204,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (10L, 0L, 0L, "split", 1.0), (11L, 0L, 2L, "split", 2.0),
       (12L, 0L, 1L, "split", 10.0), (13L, 0L, 3L, "split", 11.0))
     val dir = writeEvents(rows)
-    val got = Queries.a31KsDrift(spark, dir).collect()
+    val got = AnalyticsQueries("a31_ks_drift")(spark, dir).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     assert(got === Map(
@@ -221,7 +221,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       Seq.fill(6)((2L, "A")) ++ Seq.fill(5)((2L, "B")) ++ // pool to nation 2: 11
       Seq.fill(4)((3L, "A"))                        // still < 10: fully suppressed
     rows.toDF("c_nationkey", "c_mktsegment").write.parquet(s"$dir/customer.parquet")
-    val got = Queries.a30Kanonymity(spark, dir).collect()
+    val got = AnalyticsQueries("a30_kanonymity")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)) -> r.getLong(3)).toMap
     assert(got === Map(
       (0L, "1", "A") -> 12L,
@@ -248,7 +248,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
         Seq((41L, 4L, "A", 100.0), (81L, 4L, "A", 100.0), (121L, 4L, "A", 100.0))
     rows.toDF("c_custkey", "c_nationkey", "c_mktsegment", "c_acctbal")
       .write.parquet(s"$dir/customer.parquet")
-    val got = Queries.a35LDiversity(spark, dir).collect()
+    val got = AnalyticsQueries("a35_ldiversity")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(5), r.getString(6)))).toMap
     assert(got === Map(
@@ -267,7 +267,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
     prices.zipWithIndex.map { case (p, i) => (i.toLong, p) }
       .toDF("o_orderkey", "o_totalprice")
       .write.parquet(s"$dir/orders.parquet")
-    val got = Queries.a36Benford(spark, dir).collect()
+    val got = AnalyticsQueries("a36_benford")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(4),
         r.getString(5)))).toMap
     assert(got === Map(
@@ -290,7 +290,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (5L, 30L, "P3", "O"))
       .toDF("o_orderkey", "o_custkey", "o_orderpriority", "o_orderstatus")
       .write.parquet(s"$dir/orders.parquet")
-    val got = Queries.x35FdProfile(spark, dir).collect()
+    val got = ExtendedQueries("x35_fd_profile")(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(3)))).toMap
     assert(got === Map(
       "o_orderkey->o_custkey" -> ((5L, 0L, true)),
@@ -305,7 +305,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (3L, 190L, 2L, "a", 1.0),  // hour 3: hours 1, 2 must zero-fill
       (4L, 70L, 3L, "b", 1.0))   // hour 1 only: single-cell spine
     val dir = writeEvents(rows)
-    val got = Queries.a29GapfillSpine(spark, dir).collect()
+    val got = AnalyticsQueries("a29_gapfill_spine")(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got === Map(
       ("a", 0L) -> 2L, ("a", 1L) -> 0L, ("a", 2L) -> 0L, ("a", 3L) -> 1L,
@@ -322,7 +322,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (3L, 120L, 1L, "t", 1.0), (4L, 121L, 1L, "t", 1.0),
       (5L, 240L, 1L, "t", 1.0), (6L, 241L, 1L, "t", 1.0))
     val dir = writeEvents(rows)
-    val got = Queries.a34AcfHourly(spark, dir).collect()
+    val got = AnalyticsQueries("a34_acf_hourly")(spark, dir).collect()
       .map(r => r.getLong(1) -> ((r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     assert(got.size === 4, s"lags 1..4 only, got $got")
     assert(got(1L) === ((-96L, 120L, -0.8)), s"got $got")
@@ -338,7 +338,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (i.toLong, ((i * 37) % 720).toLong, 1L, if (i % 2 == 0) "a" else "b", 1.0)
     }
     val dir = writeEvents(rows)
-    val got = Queries.st22WatermarkAudit(spark, dir).collect()
+    val got = StreamQueries("st22_watermark_audit")(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> ((r.getLong(3), r.getLong(5)))).toMap
     // flat recompute
     def d10(id: Long): Long = {
@@ -392,7 +392,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
     }.toMap
     assert(expected.nonEmpty, "fixture must mask at least one row")
     assert(expected.size < 60, "fixture must keep observed rows")
-    val got = Queries.u02ImputeMedian(spark, dir).collect()
+    val got = CoreQueries("u02_impute_median")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))).toMap
     assert(got === expected, s"got $got, want $expected")
@@ -424,7 +424,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
     }
     assert(expected.exists(e => e._2._2 && e._2._3.nonEmpty), "filled class must be live")
     assert(expected.exists(e => e._2._2 && e._2._3.isEmpty), "leading-null class must be live")
-    val got = Queries.u03Ffill(spark, dir).collect().map { r =>
+    val got = CoreQueries("u03_ffill")(spark, dir).collect().map { r =>
       r.getLong(0) -> ((r.getLong(1), r.getBoolean(2),
         if (r.isNullAt(3)) None else Some(r.getLong(3)), r.getBoolean(4)))
     }.toMap
@@ -440,7 +440,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
     (1L to 40L).map(i => (i, 7, i.toDouble))
       .toDF("c_custkey", "c_nationkey", "c_acctbal")
       .write.parquet(s"$dir/customer.parquet")
-    val got = Queries.u04Winsorize(spark, dir).collect()
+    val got = CoreQueries("u04_winsorize")(spark, dir).collect()
     assert(got.length === 1, s"got ${got.toSeq}")
     val r = got(0)
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -459,7 +459,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (5L, 4L, 2L, "t", 1.0), (6L, 5L, 4L, "t", 2.0),
       (7L, 6L, 1L, "t", 1.0))
     val dir = writeEvents(rows)
-    val got = Queries.a41MannWhitney(spark, dir).collect()
+    val got = AnalyticsQueries("a41_mann_whitney")(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))).toMap
     assert(got === Map(
@@ -482,7 +482,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
     val keys = (0L to 99L).filter(lbl).take(2) ++ (0L to 99L).filterNot(lbl).take(18)
     keys.map(k => (k, 0, 10.00)).toDF("c_custkey", "c_nationkey", "c_acctbal")
       .write.parquet(s"$dir/customer.parquet")
-    val got = Queries.a43GainsTable(spark, dir).collect()
+    val got = AnalyticsQueries("a43_gains_table")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))).toMap
     // 20 rows -> 10 deciles of 2; decile 1 = the two positives
@@ -498,7 +498,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (0 until n).map(i => (id * 100 + i, hr * 60 + i.toLong, 1L, "t", 1.0))
     val rows = mk(1, 0, 3) ++ mk(2, 24, 5) ++ mk(3, 25, 4) ++ mk(4, 48, 5)
     val dir = writeEvents(rows)
-    val got = Queries.a45SeasonalBacktest(spark, dir).collect()
+    val got = AnalyticsQueries("a45_seasonal_backtest")(spark, dir).collect()
     assert(got.length === 1, s"got ${got.toSeq}")
     val r = got(0)
     // scored hours: 24 (5 vs 3 -> err 2) and 48 (5 vs 5 -> err 0):
@@ -540,7 +540,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
     assert(po > pe && kappa > 0, s"fixture must keep kappa positive: po=$po pe=$pe")
     // classes with disagreement must exist (pe < po < 1e6)
     assert(po < 1000000L, "fixture must contain disagreements")
-    val got = Queries.a46CohensKappa(spark, dir).collect()
+    val got = AnalyticsQueries("a46_cohens_kappa")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7), r.getLong(8))))
       .toMap
@@ -589,7 +589,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       BigInt(1000000) * o2 * (n - 1) / (2 * (BigInt(n) * n - sq))).toLong
     assert(o2 > 0 && alpha > 0 && alpha < 1000000L,
       s"agreement must be above chance but imperfect: o2=$o2 alpha=$alpha")
-    val got = Queries.a48Krippendorff(spark, dir).collect()
+    val got = AnalyticsQueries("a48_krippendorff")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))).toMap
     val want = (0L to 2L).map(c => c -> ((nC.getOrElse(c, 0L),
@@ -632,7 +632,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
     assert(prec < 1000000L && rec < 1000000L,
       s"fixture must keep both error modes live: P=$prec R=$rec")
     assert(rec < prec, "splitting gold mass must hurt recall most here")
-    val got = Queries.a47Bcubed(spark, dir).collect()
+    val got = AnalyticsQueries("a47_bcubed")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7), r.getLong(8))))
       .toMap
@@ -673,7 +673,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       bin -> ((n, pos, mp, obs, math.abs(obs - mp)))
     }
     val ece = flat.values.map(v => v._1 * v._5).sum / flat.values.map(_._1).sum
-    val got = Queries.a44CalibrationCensus(spark, dir).collect()
+    val got = AnalyticsQueries("a44_calibration")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
     assert(got === flat.map { case (b, v) =>
@@ -695,7 +695,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (15L, "Dee", 0, 40.00, "HOUS"))
       .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
       .write.parquet(s"$dir/customer.parquet")
-    val got = Queries.u05GoldenRecord(spark, dir).collect()
+    val got = CoreQueries("u05_golden_record")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3),
         r.getLong(4), r.getString(5)))).toMap
     assert(got === Map(
@@ -715,7 +715,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (2L, 2L, 1L, "a", 1.0), (3L, 3L, 1L, "b", 1.0),
       (4L, 0L, 2L, "a", 1.0), (5L, 1L, 2L, "a", 1.0))
     val dir = writeEvents(rows)
-    val got = Queries.a42MarkovTransitions(spark, dir).collect()
+    val got = AnalyticsQueries("a42_markov_transitions")(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(got === Map(
@@ -733,7 +733,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (0 until c).map(i => (h * 100 + i, h * 60 + i % 30, 1L, "t", 1.0))
     }.map { case (id, t, u, ty, v) => (id.toLong, t.toLong, u, ty, v) }
     val dir = writeEvents(rows)
-    val got = Queries.a40TheilSen(spark, dir).collect()
+    val got = AnalyticsQueries("a40_theil_sen")(spark, dir).collect()
     assert(got.length === 1, s"got ${got.toSeq}")
     val r = got(0)
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)) ===
@@ -754,7 +754,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
         evs("b", 1L, 1, 40.0) ++ evs("b", 2L, 2, 15.0) ++
         evs("b", 3L, 3, 20.0 / 3) ++ evs("b", 4L, 4, 2.5)
     val dir = writeEvents(rows)
-    val got = Queries.a39Spearman(spark, dir).collect()
+    val got = AnalyticsQueries("a39_spearman")(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1),
         Option(r.get(2)).map(_.asInstanceOf[Double]),
         Option(r.get(3)).map(_.asInstanceOf[Double])))).toMap
@@ -777,7 +777,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
     docs.zipWithIndex.map { case ((src, t), i) => (i.toLong, t, src) }
       .toDF("doc_id", "text", "source")
       .write.parquet(s"$dir/documents.parquet")
-    val got = Queries.a38GiniSources(spark, dir).collect()
+    val got = AnalyticsQueries("a38_gini_sources")(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))).toMap
     assert(got === Map(
@@ -794,7 +794,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (5L, 120L, 1L, "a", 1.0), (6L, 130L, 1L, "a", 1.0),  // hour 2 x2
       (7L, 300L, 1L, "a", 1.0), (8L, 310L, 1L, "a", 1.0))  // hour 5 x2
     val dir = writeEvents(rows)
-    val got = Queries.a37Cusum(spark, dir).collect()
+    val got = AnalyticsQueries("a37_cusum")(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getString(7)))).toMap
     assert(got === Map(
@@ -807,7 +807,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
     val rows = Seq((0L, 30L, 1L, "t", 1.0), (8L, 0L, 2L, "t", 1.0))
     val dir = writeEvents(rows)
     val M = 60000000L
-    val got = Queries.x41IntervalApportion(spark, dir).collect()
+    val got = ExtendedQueries("x41_interval_apportion")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got === Map(
       0L -> ((90L * M, 2L)), 1L -> ((120L * M, 2L)),
@@ -828,7 +828,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       .withColumn("ts", timestamp_micros(col("event_id") * 60000000L))
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
-    val got = Queries.x40DiameterSweep(spark, dir).collect().map(r =>
+    val got = ExtendedQueries("x40_diameter_sweep")(spark, dir).collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getLong(5))).toSeq
     assert(got === Seq((1L, 4L, 3L, 4L, 1L, 5L)), s"got $got")
@@ -849,7 +849,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       .withColumn("ts", timestamp_micros(col("event_id") * 60000000L))
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
-    val got = Queries.x39AdamicAdar(spark, dir).collect()
+    val got = ExtendedQueries("x39_adamic_adar")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     assert(got(1L) === ((2L, 2L, 2.000806)), s"got $got")   // niche + hub
     assert(got(2L) === ((1L, 2L, 2.000806)), s"got $got")
@@ -875,7 +875,7 @@ class AnalyticsGoldenSpec extends AnyFunSuite {
       (24L, 100L, 2L, "t", 1.0))  // user 2 singleton [100, 280]
     val dir = writeEvents(rows)
     val M = 60000000L // minutes -> micros
-    val got = Queries.x38IntervalIslands(spark, dir).collect()
+    val got = ExtendedQueries("x38_interval_islands")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(5)))).toMap
     assert(got === Map(

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The composed corpus-build chain (Queries.x44Chain —
+/** The composed corpus-build chain (ExtendedQueries.x44Chain —
   * quality -> exact dedup -> decontaminate -> sample -> pack) runs as ONE
   * lineage: this pins its plan shape (no cartesian product, exactly one
   * aggregate-based dedup, broadcast decontamination) and non-degeneracy
@@ -23,7 +23,7 @@ class CorpusBuildSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("chain: one lineage, no cartesian, non-degenerate at sf0.001") {
-    val out = Queries.x44Chain(spark, "/root/testdata/sf0.001")
+    val out = ExtendedQueries.x44Chain(spark, "/root/testdata/sf0.001")
     val packed = out.collect()
     assert(packed.nonEmpty, "chain produced zero packed rows at sf0.001")
     val plan = out.queryExecution.executedPlan.toString

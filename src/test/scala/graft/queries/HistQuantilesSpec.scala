@@ -37,7 +37,7 @@ class HistQuantilesSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_a22").toString
     rows.toDF("event_type", "value").write.parquet(s"$dir/events.parquet")
 
-    val got = Queries.a22HistQuantiles(spark, dir).collect()
+    val got = AnalyticsQueries("a22_hist_quantiles")(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
     val want = Map(

@@ -39,7 +39,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("s05: filter and projection are pushed into the parquet scan") {
-    val p = planString(Queries.s05ScanProject(spark, sf))
+    val p = planString(CoreQueries("s05_scan_project")(spark, sf))
     assert(p.contains("PushedFilters: [IsNotNull(l_quantity), LessThan(l_quantity,10.0)]"),
       s"filter not pushed:\n$p")
     // column pruning: the 11-column lineitem scan reads exactly 4 columns
@@ -69,12 +69,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("a17: global top-N runs TakeOrderedAndProject, never a full sort") {
-    val p = planString(Queries.a17GlobalTopn(spark, sf))
+    val p = planString(AnalyticsQueries("a17_global_topn")(spark, sf))
     assert(p.contains("TakeOrderedAndProject"), s"no TakeOrdered:\n$p")
   }
 
   test("j01: dimensions broadcast; only the fact-fact join shuffles") {
-    val p = planString(Queries.j01Join5way(spark, sf))
+    val p = planString(CoreQueries("j01_join_5way")(spark, sf))
     assert(p.contains("BroadcastHashJoin"), s"no broadcast joins:\n$p")
     assert(!p.contains("CartesianProduct"))
     // exactly one shuffle join pair (lineitem-orders); customer/nation/region
@@ -85,7 +85,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("f06: anti-join against the filtered dim is broadcast, fact never shuffles") {
-    val p = planString(Queries.f06OrphanDelete(spark, sf))
+    val p = planString(CoreQueries("f06_orphan_delete")(spark, sf))
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"), p)
   }
 
@@ -180,32 +180,32 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("t19: the DSIR probe joins the model by broadcast, never a shuffled join") {
-    val p = planString(Queries.t19DsirWeights(spark, sf))
+    val p = planString(TextQueries("t19_dsir_weights")(spark, sf))
     assert(p.contains("BroadcastHashJoin"), s"no broadcast probe join:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
       s"model join must not shuffle the tokens:\n$p")
   }
 
   test("d14: the span remover re-assembles without a Window or per-doc sort node") {
-    val p = planString(Queries.d14ChunkRemove(spark, sf))
+    val p = planString(DedupQueries("d14_chunk_remove")(spark, sf))
     assert(!p.contains("Window"), s"no window expected:\n$p")
   }
 
   test("d01 exact dedup: map-side partial aggregation before the hash shuffle") {
-    val p = planString(Queries.d01DedupExactGroups(spark, sf))
+    val p = planString(DedupQueries("d01_dedup_exact_groups")(spark, sf))
     // partial_count under HashAggregate before the exchange = map-side combine
     assert(p.contains("partial_count") || p.contains("partial"), s"no partial agg:\n$p")
   }
 
   test("d02 exact dedup groups by the 16-byte content hash, never the raw text") {
-    val p = planString(Queries.d02DedupExactKeep(spark, sf))
+    val p = planString(DedupQueries("d02_dedup_exact_keep")(spark, sf))
     assert(p.contains("md5"), s"no hash group key:\n$p")
     // the shuffle must partition on the fixed-width hash, not the payload
     assert(!p.contains("hashpartitioning(text"), s"shuffle keyed on raw text:\n$p")
   }
 
   test("a10: the top-k heap aggregate partial-aggregates map-side") {
-    val p = planString(Queries.a10TopkAgg(spark, sf))
+    val p = planString(AnalyticsQueries("a10_topk_agg")(spark, sf))
     // partial_top_k before the exchange: each mapper ships at most k pairs
     // per group — the property that makes the aggregate beat the window
     // form at scale. ObjectHashAggregate is the TypedImperativeAggregate
@@ -219,8 +219,8 @@ class PlanSpec extends AnyFunSuite {
     // every distinct id crosses the exchange as a row. The bitmap
     // aggregate must instead show ObjectHashAggregate partials: one
     // mergeable buffer per (group x mapper) crosses, nothing id-keyed.
-    Seq("a21" -> Queries.a21BitmapDistinct(spark, sf),
-        "st11" -> Queries.st11WindowDistinct(spark, sf)).foreach { case (name, df) =>
+    Seq("a21" -> AnalyticsQueries("a21_bitmap_distinct")(spark, sf),
+        "st11" -> StreamQueries("st11_window_distinct")(spark, sf)).foreach { case (name, df) =>
       val p = planString(df)
       assert(p.contains("partial_bitmap_distinct"),
         s"$name: no map-side partial bitmap_distinct:\n$p")
@@ -236,9 +236,9 @@ class PlanSpec extends AnyFunSuite {
     // per task (partial_top_k before the exchange). v03 exercises the
     // shared rerank tail, so this also guards v05/v10 against a future
     // caller reintroducing the window with an unbounded candidate frame.
-    Seq("v01" -> Queries.v01KnnBrute(spark, sf),
-        "v03" -> Queries.v03AnnLsh(spark, sf),
-        "t09" -> Queries.t09Tfidf(spark, sf)).foreach { case (name, df) =>
+    Seq("v01" -> VectorQueries("v01_knn_brute")(spark, sf),
+        "v03" -> VectorQueries("v03_ann_lsh")(spark, sf),
+        "t09" -> TextQueries("t09_tfidf")(spark, sf)).foreach { case (name, df) =>
       val p = planString(df)
       assert(p.contains("partial_top_k"), s"$name: no map-side partial top_k:\n$p")
       assert(!p.contains("Window"), s"$name: window sort in the selection:\n$p")
@@ -249,8 +249,8 @@ class PlanSpec extends AnyFunSuite {
     // the K2 family sits on the ingest hot path: the r5 row_number form
     // shuffled every row and sorted each key-group to keep one; arg_max
     // ships one winner per group per mapper (ObjectHashAggregate partials)
-    Seq("k02" -> Queries.k02DedupLastwins(spark, sf),
-        "j03" -> Queries.j03RepairJoin(spark, sf)).foreach { case (name, df) =>
+    Seq("k02" -> CoreQueries("k02_dedup_lastwins")(spark, sf),
+        "j03" -> CoreQueries("j03_repair_join")(spark, sf)).foreach { case (name, df) =>
       val p = planString(df)
       assert(!p.contains("Window"), s"$name: window sort crept back:\n$p")
       assert(p.contains("partial_arg_max"), s"$name: no map-side partial:\n$p")
@@ -265,10 +265,10 @@ class PlanSpec extends AnyFunSuite {
     // window-free outright; x04 keeps exactly one Window — the as-of
     // union-window IS that operator's single-shuffle formulation — so
     // there assert only that the dedup stage became a map-side arg_max.
-    val p8 = planString(Queries.x08TrainingMix(spark, sf))
+    val p8 = planString(ExtendedQueries("x08_training_mix")(spark, sf))
     assert(!p8.contains("Window"), s"x08: window sort crept back:\n$p8")
     assert(p8.contains("partial_arg_max"), s"x08: no map-side partial:\n$p8")
-    val p4 = planString(Queries.x04AsofJoin(spark, sf))
+    val p4 = planString(ExtendedQueries("x04_asof_join")(spark, sf))
     assert(p4.contains("partial_arg_max"), s"x04: no map-side partial:\n$p4")
   }
 
@@ -277,7 +277,7 @@ class PlanSpec extends AnyFunSuite {
     // and ran three eager count() actions to bake V in as a literal; the
     // one-job form computes V as a broadcast 1-row aggregate over the
     // unigram subtree, deduped against the probe join by ReuseExchange
-    val df = Queries.t12BigramLm(spark, sf)
+    val df = TextQueries("t12_bigram_lm")(spark, sf)
     val p = planString(df)
     assert(!p.contains("InMemoryTableScan"), s"t12 still persists:\n$p")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
@@ -289,7 +289,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("m04: perceptual near-dup candidates come from the banded equi-join, ids only") {
-    val p = planString(Queries.m04PhashNearDup(spark, sf))
+    val p = planString(MediaQueries("m04_phash_neardup")(spark, sf))
     assert(!p.contains("CartesianProduct"), s"cartesian in m04:\n$p")
     // the candidate shuffle is keyed on the (band_idx, band_val) posting,
     // never on a payload column
@@ -313,7 +313,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("a08: HLL++ approximate distinct stays within 3x the configured rsd of exact") {
-    val approx = Queries.a08ApproxDistinct(spark, sf).collect()
+    val approx = AnalyticsQueries("a08_approx_distinct")(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     val exact = spark.read.parquet(s"$sf/lineitem.parquet")
       .groupBy("l_returnflag")
@@ -333,14 +333,14 @@ class PlanSpec extends AnyFunSuite {
     // content hash; the language rollup shuffles its tiny partial aggs —
     // nothing else may add an exchange (AQE repeats the plan under
     // '== Initial Plan ==', so audit the final section only)
-    val p = planString(Queries.x08TrainingMix(spark, sf))
+    val p = planString(ExtendedQueries("x08_training_mix")(spark, sf))
       .split("== Initial Plan ==").head
     val n = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(n <= 2, s"expected <=2 exchanges, got $n:\n$p")
   }
 
   test("m01/t01: document scans prune to the columns the query needs") {
-    val p = planString(Queries.t01TokenCount(spark, sf))
+    val p = planString(TextQueries("t01_token_count")(spark, sf))
     assert(p.contains("ReadSchema: struct<doc_id:bigint,text:string>"),
       s"documents scan not pruned:\n$p")
   }

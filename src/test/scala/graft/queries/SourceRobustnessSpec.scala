@@ -95,7 +95,7 @@ class SourceRobustnessSpec extends AnyFunSuite {
         .orderBy("event_id").select("__tsu").as[Long].collect().toSeq
       assert(got == us, s"variant $variant normalized to $got, expected $us")
       // and a real registered ts-query SHAPE analyzes + runs on the fixture
-      val win = Queries.st01TumblingWindow(spark, dir).collect()
+      val win = StreamQueries("st01_tumbling_window")(spark, dir).collect()
       assert(win.nonEmpty, s"st01 shape produced no rows on $variant fixture")
     }
   }

@@ -771,7 +771,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       (lang, lo, nm, hit(zoneZ).size.toLong, hit(zoneL).size.toLong,
         hit(zoneZ).map(_._5).sum, hit(zoneL).map(_._5).sum)
     }).sortBy(r => (r._1, r._2))
-    val got = graft.queries.Queries.x46ZonemapCensus(spark, dir).collect()
+    val got = graft.queries.ExtendedQueries("x46_zonemap_census")(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6))).toSeq
     assert(got === want, s"got\n${got.mkString("\n")}\nwant\n${want.mkString("\n")}")

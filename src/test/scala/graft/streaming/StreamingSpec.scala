@@ -933,7 +933,7 @@ class StreamingSpec extends AnyFunSuite {
     all.map(t => (t.event_id, t.ts, t.user_id, t.event_type, 1.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
       .write.parquet(s"$dir/events.parquet")
-    val batch = graft.queries.Queries.t48SftAssembly(spark, dir).collect()
+    val batch = graft.queries.TextQueries("t48_sft_assembly")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getString(6), r.getLong(7),
         r.getBoolean(8))).toSet
