@@ -80,7 +80,7 @@ object ImportBag {
     }
     val asOfDate = asOf.getOrElse {
       val today = Config.today()
-      println(s"[import] --as-of not given: using wall-clock today $today " +
+      Log.warn(s"[import] --as-of not given: using wall-clock today $today " +
         "(pass --as-of for reproducible runs)")
       today
     }
@@ -88,29 +88,39 @@ object ImportBag {
       useShortStreetNames = shortNames, deleteNoLongerNeededBagTables = dropRaw)
 
     Sessions.run(master, 32) { spark =>
-      val t0 = System.nanoTime()
-      val adressen = Pipeline.importBag(spark, bag, gemeenten,
-        Pipeline.Layout(staging, warehouse), cfg)
-      val n = adressen.count()
-      println(f"[import] adressen: $n%d rows -> $warehouse/adressen " +
-        f"(${(System.nanoTime() - t0) / 1e9}%.1f s)")
-      if (validate) {
-        val t = Pipeline.openWarehouse(spark, warehouse)._1
-        val checks = Validate.run(adressen, t)
-        checks.foreach(c => println(s"[validate] ${if (c.isError) "FAIL" else "ok  "} ${c.name}"))
-        val errors = Validate.errorCount(checks)
-        if (errors > 0) {
-          System.err.println(s"[validate] $errors check(s) failed")
-          sys.exit(1)
+      // the console view of the run: records/s while the import's tasks
+      // finish; detached at the end so an embedding session is not left
+      // holding the listener
+      val progress = Progress.attach(spark, "bag-import")
+      try {
+        val t0 = System.nanoTime()
+        val adressen = Pipeline.importBag(spark, bag, gemeenten,
+          Pipeline.Layout(staging, warehouse), cfg)
+        val n = adressen.count()
+        Log.info(f"[import] adressen: $n%d rows -> $warehouse/adressen " +
+          f"(${(System.nanoTime() - t0) / 1e9}%.1f s)")
+        Log.info(progress.report())
+        if (validate) {
+          val t = Pipeline.openWarehouse(spark, warehouse)._1
+          val checks = Validate.run(adressen, t)
+          checks.foreach(c =>
+            if (c.isError) Log.error(s"[validate] FAIL ${c.name}")
+            else Log.info(s"[validate] ok   ${c.name}"))
+          val errors = Validate.errorCount(checks)
+          if (errors > 0) {
+            System.err.println(s"[validate] $errors check(s) failed")
+            sys.exit(1)
+          }
         }
-      }
-      // reference order (import_bag.py:60-78): build -> validate -> THEN
-      // delete — a failed validation keeps the raw layer for forensics
-      if (cfg.deleteNoLongerNeededBagTables) {
-        val reclaimed = Pipeline.deleteNoLongerNeededBagTables(spark,
-          Pipeline.Layout(staging, warehouse))
-        println(f"[import] dropped raw tables + staging: ${reclaimed / 1048576.0}%.1f MB reclaimed")
-      }
+        // reference order (import_bag.py:60-78): build -> validate -> THEN
+        // delete — a failed validation keeps the raw layer for forensics
+        if (cfg.deleteNoLongerNeededBagTables) {
+          val reclaimed = Pipeline.deleteNoLongerNeededBagTables(spark,
+            Pipeline.Layout(staging, warehouse))
+          Log.info(f"[import] dropped raw tables + staging: " +
+            f"${reclaimed / 1048576.0}%.1f MB reclaimed")
+        }
+      } finally Progress.detach()
     }
   }
 }

@@ -1,13 +1,12 @@
 package graft
 
-import java.io.{FileWriter, PrintWriter}
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
 /**
- * O4: timestamped console + optional file logging with colored WARN/ERROR —
- * the reference's logger (reference: logger.py:7-32, utils.py:67-97:
- * timestamped lines, yellow warnings, red errors, thread-locked file).
+ * O4: timestamped console logging with colored WARN/ERROR — the reference's
+ * logger (reference: logger.py:7-32, utils.py:67-97: timestamped lines,
+ * yellow warnings, red errors) on the console; no CLI logs to a file.
  *
  * Driver-side only by design: executors log through Spark's own log4j; this
  * mirrors the reference's operator-facing console surface.
@@ -16,25 +15,13 @@ object Log {
 
   private val fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
   private val lock = new Object
-  @volatile private var fileOut: Option[PrintWriter] = None
   @volatile var useColor: Boolean = true
-
-  /** Also append to a log file (reference: utils.py:78-85). */
-  def toFile(path: String): Unit = lock.synchronized {
-    fileOut.foreach(_.close())
-    fileOut = Some(new PrintWriter(new FileWriter(path, true), true))
-  }
-
-  def closeFile(): Unit = lock.synchronized {
-    fileOut.foreach(_.close()); fileOut = None
-  }
 
   private def emit(level: String, color: String, msg: String): Unit = {
     val line = s"${LocalDateTime.now().format(fmt)} $level $msg"
     lock.synchronized {
       if (useColor && color.nonEmpty) Console.println(s"$color$line${Console.RESET}")
       else Console.println(line)
-      fileOut.foreach(_.println(line))
     }
   }
 

@@ -25,7 +25,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *
  * So: inside a loop, disable AQE and set shuffle partitions to
  * `ceil(stateRows / RowsPerTask)` clamped to [1, session setting] — the
- * same auto-sizing discipline as PageRank.autoScale and the bucketed
+ * same auto-sizing discipline as PageRank's in-plan rank scale and the bucketed
  * layouts (scale-adaptive, never a local[32] constant: a 10^9-edge graph
  * keeps the session's full parallelism, a 10^5-edge bench graph gets the
  * single partition its 3 MB of state wants). The session conf is
@@ -65,32 +65,15 @@ object LoopConf {
    */
   private val PlanHeavyAdvisoryBytes: Long = 8L * 1024 * 1024
 
-  def scopedPlanHeavy[T](spark: SparkSession)(body: => T): T = {
-    val conf = spark.conf
-    val k1 = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    val k2 = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val o1 = conf.get(k1, "true")
-    val o2 = conf.get(k2, "67108864b")
-    conf.set(k1, "false")
-    conf.set(k2, PlanHeavyAdvisoryBytes.toString)
-    try body
-    finally { conf.set(k1, o1); conf.set(k2, o2) }
-  }
+  def scopedPlanHeavy[T](spark: SparkSession)(body: => T): T =
+    Sessions.withConf(spark,
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> PlanHeavyAdvisoryBytes.toString)(body)
 
   /** Run `body` with loop-tuned shuffle settings; restore on exit. */
-  def scoped[T](spark: SparkSession, stateRows: Long)(body: => T): T = {
-    val conf = spark.conf
-    val oldAqe = conf.get("spark.sql.adaptive.enabled", "true")
-    val oldPart = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions",
-      partitionsFor(spark, stateRows).toString)
-    try body
-    finally {
-      conf.set("spark.sql.adaptive.enabled", oldAqe)
-      conf.set("spark.sql.shuffle.partitions", oldPart)
-    }
-  }
+  def scoped[T](spark: SparkSession, stateRows: Long)(body: => T): T =
+    Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> partitionsFor(spark, stateRows).toString)(body)
 
   /**
    * Iterate `step` from `state0` until `probe` stops changing; returns the

@@ -126,16 +126,9 @@ object Pipeline {
     * open-cost put every core on the scan (same rule on a cluster: bins
     * sized to the member, tasks = files). [[importBag]] and the ingest
     * probe ([[BagScaleProbe.run]]) both import inside this window. */
-  def withXmlSplits[T](spark: SparkSession)(body: => T): T = {
-    val sizing = Seq("spark.sql.files.maxPartitionBytes" -> "8m",
-      "spark.sql.files.openCostInBytes" -> "1m")
-    // getAll holds only the keys set in this session (getOption would
-    // report the default of an unset key, and restoring that sets it)
-    val prior = sizing.map { case (k, _) => k -> spark.conf.getAll.get(k) }
-    sizing.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
+  def withXmlSplits[T](spark: SparkSession)(body: => T): T =
+    Sessions.withConf(spark, "spark.sql.files.maxPartitionBytes" -> "8m",
+      "spark.sql.files.openCostInBytes" -> "1m")(body)
 
   /** Full import: zip -> staging -> raw -> curated adressen parquet, under
     * the XML split sizing of [[withXmlSplits]]. */

@@ -1,15 +1,13 @@
 package graft
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * Session-scoped resource tracking for operators that allocate state whose
- * lifetime outlives plan construction: explicit `sparkContext.broadcast`
- * variables (e.g. the blocked cosine kernel's corpus matrix) and
- * persisted DataFrames (e.g. the dedup signature tables).
+ * lifetime outlives plan construction: persisted DataFrames (e.g. the
+ * dedup signature tables).
  *
- * Spark reclaims both eventually via the ContextCleaner, but "eventually"
+ * Spark reclaims them eventually via the ContextCleaner, but "eventually"
  * is driven by driver GC of the *handle* — a long-lived session running
  * many queries back-to-back (Bench, a notebook, a service) accumulates
  * storage and pays for it in later, unrelated queries (the r3 driver bench
@@ -18,30 +16,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * [[release]] to free everything deterministically.
  *
  * Calling [[release]] mid-query is unsupported (a live plan may still
- * reference a tracked broadcast); call it between actions, as Bench does.
+ * read a tracked frame); call it between actions, as Bench does.
  */
 object SessionResources {
 
-  private val broadcasts =
-    new java.util.concurrent.ConcurrentLinkedQueue[Broadcast[_]]()
   private val persisted =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
-  def track[T](b: Broadcast[T]): Broadcast[T] = { broadcasts.add(b); b }
-
   def trackPersisted(df: DataFrame): DataFrame = { persisted.add(df); df }
 
-  /** Destroy every tracked broadcast, unpersist every tracked frame, and
-    * clear the session cache. Safe to call repeatedly; never throws (a
-    * broadcast already reclaimed by the ContextCleaner destroys idempotently,
-    * but guard against driver-side races anyway). */
+  /** Unpersist every tracked frame and clear the session cache. Safe to
+    * call repeatedly; never throws. */
   def release(spark: SparkSession): Unit = {
-    var b = broadcasts.poll()
-    while (b != null) {
-      try b.destroy()
-      catch { case _: Throwable => () }
-      b = broadcasts.poll()
-    }
     var p = persisted.poll()
     while (p != null) {
       try p.unpersist()

@@ -39,6 +39,20 @@ object Sessions {
     spark
   }
 
+  /** Runs `body` with the SQL conf `settings` applied to `spark`, then
+    * restores each key as it was: a key that was set gets its value back,
+    * a key that was unset is unset again. Actions inside `body` run under
+    * the settings; a frame `body` returns runs under the restored conf. */
+  def withConf[T](spark: SparkSession, settings: (String, String)*)(body: => T): T = {
+    // getAll holds only the keys set in this session (getOption would
+    // report the default of an unset key, and restoring that sets it)
+    val set = spark.conf.getAll
+    val prior = settings.map { case (k, _) => k -> set.get(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   /** Runs `body` on a new [[get]] session, then stops it. A caller that
     * embeds a main (a test suite, a notebook) keeps its own session:
     * `body` runs on it as the caller configured it, and `run` neither

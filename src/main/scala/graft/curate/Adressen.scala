@@ -35,7 +35,8 @@ import org.apache.spark.sql.functions._
  */
 object Adressen {
 
-  /** Raw-layer inputs, as produced by BagXml.readAll + Gemeenten.read. */
+  /** Raw-layer inputs, as produced by Pipeline.rawTables (BagXml.read per
+    * object type + Gemeenten.read). */
   final case class BagTables(
       woonplaatsen: DataFrame,
       gemeenteWoonplaatsen: DataFrame,

@@ -21,8 +21,8 @@ import org.apache.spark.sql.types._
  * while this Expression is one generated byte loop inside
  * WholeStageCodegen, reading the payload directly from the columnar
  * batch. Same standard as the engine's other kernels (hamming_dist,
- * bpe_token_count); [[graft.llm.Multimodal.MediaCodecStub.phash]] stays
- * as the executable spec, property-tested equal.
+ * bpe_token_count); LlmOpsSpec holds it to a scala-side executable spec
+ * of the same bit rule, property-tested equal.
  */
 object MediaExpressions {
 
@@ -99,7 +99,7 @@ case class PerceptualHash(child: Expression) extends UnaryExpression {
 
 object PerceptualHash {
   /** Interpreted kernel (the non-codegen eval path) — same arithmetic as
-    * the generated loop and as MediaCodecStub.phash (the spec). */
+    * the generated loop and as the specs' executable spec of the bit rule. */
   def hash(payload: Array[Byte]): Array[Long] = {
     val n = payload.length
     if (n > 1500000000)

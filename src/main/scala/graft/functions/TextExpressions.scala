@@ -203,7 +203,7 @@ object TextKernels {
     text.numChars().toLong - spaces - merged
   }
 
-  /** BPE-ish sub-token regex (shared with TextOps.regexTokens / the DuckDB
+  /** BPE-ish sub-token regex (shared with TextOps.TokenRegex / the DuckDB
     * oracle): letter runs, digit runs, single other glyphs, over lowercased
     * text. */
   final val TokenRegex = "[a-z]+|[0-9]+|[^a-z0-9 ]"
@@ -380,8 +380,8 @@ object TextKernels {
 
   /** Fused PII redaction: email -> ip -> phone applied sequentially to the
     * row's string IN MEMORY (identical semantics to three corpus-wide
-    * `regexp_replace` passes — the executable spec in
-    * [[graft.llm.TextOps.piiRedactSpec]], kernel == spec property-tested),
+    * `regexp_replace` passes — the executable spec the specs hold it to,
+    * kernel == spec property-tested),
     * then the audit counts read off the final string by literal substring
     * counting (the spec's count rule: placeholders PRESENT, including any
     * the input already carried). One expression call per row — no

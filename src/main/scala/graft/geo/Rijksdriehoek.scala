@@ -1,7 +1,8 @@
 package graft.geo
 
 /**
- * Rijksdriehoek (Dutch RD New, EPSG:28992) <-> WGS84 conversion.
+ * Rijksdriehoek (Dutch RD New, EPSG:28992) -> WGS84 conversion (the specs
+ * hold the inverse series, for the round trip).
  *
  * Implements the published approximation polynomials by F.H. Schreutelkamp and
  * G.L. Strang van Hees ("Benaderingsformules voor de transformatie tussen RD- en
@@ -29,15 +30,6 @@ object Rijksdriehoek {
     (1, 0, 5260.52916), (1, 1, 105.94684), (1, 2, 2.45656), (3, 0, -0.81885),
     (1, 3, 0.05594), (3, 1, -0.05607), (0, 1, 0.01199), (3, 2, -0.00256),
     (1, 4, 0.00128), (0, 2, 0.00022), (2, 0, -0.00022), (5, 0, 0.00026))
-
-  private val PqR: Array[(Int, Int, Double)] = Array(
-    (0, 1, 190094.945), (1, 1, -11832.228), (2, 1, -114.221), (0, 3, -32.391),
-    (1, 0, -0.705), (3, 1, -2.34), (1, 3, -0.608), (0, 2, -0.008), (2, 3, 0.148))
-
-  private val PqS: Array[(Int, Int, Double)] = Array(
-    (1, 0, 309056.544), (0, 2, 3638.893), (2, 0, 73.077), (1, 2, -157.984),
-    (3, 0, 59.788), (0, 1, 0.433), (2, 2, -6.439), (1, 1, -0.032),
-    (0, 4, 0.092), (1, 4, -0.054))
 
   @inline private def ipow(base: Double, exp: Int): Double = {
     var r = 1.0; var i = 0
@@ -72,25 +64,4 @@ object Rijksdriehoek {
   /** RD (x, y) meters -> (latitude, longitude) degrees. */
   def rdToWgs84(x: Double, y: Double): (Double, Double) =
     (rdToLat(x, y), rdToLon(x, y))
-
-  /** WGS84 (latitude, longitude) degrees -> RD (x, y) meters. */
-  def wgs84ToRd(phi: Double, lam: Double): (Double, Double) = {
-    val dPhi = 0.36 * (phi - Phi0)
-    val dLam = 0.36 * (lam - Lam0)
-    var x = X0
-    var i = 0
-    while (i < PqR.length) {
-      val (p, q, r) = PqR(i)
-      x += r * ipow(dPhi, p) * ipow(dLam, q)
-      i += 1
-    }
-    var y = Y0
-    i = 0
-    while (i < PqS.length) {
-      val (p, q, s) = PqS(i)
-      y += s * ipow(dPhi, p) * ipow(dLam, q)
-      i += 1
-    }
-    (x, y)
-  }
 }

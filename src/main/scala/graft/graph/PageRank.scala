@@ -33,7 +33,8 @@ import org.apache.spark.sql.functions._
  * Overflow bound: in_mass <= total mass = n * scale, so 85 * in_mass
  * needs n * scale * 85 < 2^63. By default `scale` AUTO-SIZES to the
  * largest power of 10 satisfying that bound for the measured node count
- * ([[autoScale]] — one count action over the node set), so the operator
+ * (computed in-plan by [[iterate]]: max(10^k) with 10^k <= (2^63-1) div
+ * 85 div n), so the operator
  * works unmodified from fixture graphs (n=2e3 -> 10^13) to web-scale
  * corpus graphs (n=10^9 -> 10^8, still 8 exact decimal digits of rank);
  * the r4 fixed 10^12 default capped graphs at ~10^5 nodes. The damping
@@ -46,20 +47,7 @@ import org.apache.spark.sql.functions._
  */
 object PageRank {
 
-  /** Largest power of 10 with n * scale * 85 <= Long.MaxValue — the
-    * finest rank granularity that provably cannot overflow the damping
-    * multiply. Any SQL engine mirrors it as
-    * `max(10^k) where 10^k <= (2^63-1) // 85 // n`. */
-  def autoScale(n: Long): Long = {
-    require(n > 0, s"autoScale needs a non-empty node set, got n=$n")
-    val cap = Long.MaxValue / 85L / n
-    require(cap >= 1L, s"node count $n too large for integer PageRank (scale < 1)")
-    var s = 1L
-    while (s <= cap / 10L) s *= 10L
-    s
-  }
-
-  /** `scale <= 0` (the default) auto-sizes via [[autoScale]]. PageRank is
+  /** `scale <= 0` (the default) auto-sizes the scale. PageRank is
     * [[trustRankFixed]] with every node a seed: the teleport term's 0/1
     * weight is 1 everywhere, so the ranks are exactly the plain damping
     * update's. */
@@ -92,8 +80,7 @@ object PageRank {
     * both sides) and `nodes` on `node`, so the only per-round exchanges
     * left are rank-vector-sized (|nodes| rows). Integer-exact semantics
     * are untouched — the storage split is invisible in the result
-    * (GraphSpec proves indexed == direct bit-for-bit). A growing graph
-    * appends batches via [[appendToEdgeLayout]] without rebuilding. */
+    * (GraphSpec proves indexed == direct bit-for-bit). */
   /** Returns the deduped edge-row count (computed anyway for bucket
     * auto-sizing) so serve-side loops can size their shuffles from it
     * ([[graft.LoopConf]]) without re-scanning the store. */
@@ -136,56 +123,11 @@ object PageRank {
   /** Auto-sizing target for [[buildEdgeLayout]]: edge rows per bucket. */
   private val RowsPerBucket = 4L * 1000 * 1000
 
-  /**
-   * Incremental growth of a [[buildEdgeLayout]] layout — the daily-crawl
-   * write mode of the graph side (new links between pages arrive with
-   * every batch; rebuilding a 10^9-edge layout per batch is the cost this
-   * deletes). All three tables grow by APPEND under their own bucket
-   * schemes ([[graft.relational.Bucketing.appendBucketed]]):
-   *
-   *  - edges: the batch is deduped within itself AND against the stored
-   *    edge set (a LEFT ANTI bucket-join — the stored side is read through
-   *    its bucket layout without shuffling, only batch rows move), so the
-   *    stored edge set keeps its build-time set semantics.
-   *  - degrees: the surviving batch edges append per-src DELTA rows;
-   *    [[pageRankIndexed]] sums them on read. The sum runs on the bucketed
-   *    scan's own distribution — no exchange — so serving stays
-   *    corpus-shuffle-free (ScaleOpsSpec re-asserts it on a grown layout).
-   *  - nodes: batch endpoints append possibly-duplicated; the read-side
-   *    distinct collapses them, again exchange-free on the bucket key.
-   *
-   * Work and bytes written are batch-sized; the stored tables are never
-   * rewritten. ScaleOpsSpec proves a grown layout serves bit-identical
-   * ranks to a from-scratch rebuild over the union.
-   */
-  def appendToEdgeLayout(newEdges: DataFrame, name: String): Unit = {
-    import graft.relational.Bucketing
-    val spark = newEdges.sparkSession
-    // The anti-join reads the very table the first append writes: the
-    // batch MUST be materialized against the pre-append snapshot before
-    // any write, and a lazy persist is not enough — a partition recomputed
-    // after the edge append would see its own output in the anti-join and
-    // vanish, silently starving the degree/node writes. The eager local
-    // checkpoint cuts the lineage to stored blocks (the dedupComponents
-    // loop-state discipline), so all three writes read one frozen batch.
-    val fresh = newEdges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst")).distinct()
-      .join(Bucketing.read(spark, s"${name}_edges"), Seq("src", "dst"), "left_anti")
-      .localCheckpoint(true)
-    Bucketing.appendBucketed(fresh, s"${name}_edges")
-    Bucketing.appendBucketed(
-      fresh.groupBy("src").agg(count(lit(1)).as("deg")), s"${name}_degrees")
-    Bucketing.appendBucketed(
-      fresh.select(col("src").as("node"))
-        .union(fresh.select(col("dst").as("node"))).distinct(),
-      s"${name}_nodes")
-  }
-
   /** Run the iteration against a [[buildEdgeLayout]] layout. Degrees are
-    * summed and nodes deduped ON READ — identity passes over a freshly
-    * built layout, and what makes [[appendToEdgeLayout]]'s delta rows
-    * correct after growth; both run on the bucketed scans' own hash
-    * distribution, so they add no exchange to the loop. */
+    * summed and nodes deduped ON READ — identity passes over a layout
+    * written in one build, and correct over one written in several
+    * batches; both run on the bucketed scans' own hash distribution, so
+    * they add no exchange to the loop. */
   def pageRankIndexed(spark: org.apache.spark.sql.SparkSession, name: String,
                       iters: Int = 3, scale: Long = 0L): DataFrame = {
     import graft.relational.Bucketing
@@ -251,7 +193,7 @@ object PageRank {
                       iters: Int, scale: Long, what: String): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     // The auto-sized scale rides IN-PLAN as a broadcast 1-row scalar
-    // computed by the same rule as [[autoScale]] (pow(10,k) is exact in a
+    // max(10^k) with 10^k <= (2^63-1) div 85 div n (pow(10,k) is exact in a
     // double through 10^18, the cast back to long exact through 10^18) —
     // one job end to end, where a driver-side nodes.count() action would
     // scan the edge list a second time before the iteration even starts.

@@ -290,8 +290,4 @@ object BagXml {
     if (cfg.parseGeometries)
       GeoFunctions.ringsToWgs84GeoJson(col("geometry_rings"), lit(is3d))
     else lit("")
-
-  /** Read all 8 object types from a staging layout of per-code XML dirs. */
-  def readAll(spark: SparkSession, stagingDir: String, cfg: Config): Map[String, DataFrame] =
-    allSpecs.map(s => s.name -> read(spark, s"$stagingDir/${s.zipCode}", s, cfg)).toMap
 }

@@ -14,7 +14,7 @@ import org.apache.spark.storage.StorageLevel
  *    generated by an equi-join on the shingle string, never by a cartesian;
  *  - MinHash-LSH near-dup: signature -> banded bucket equi-join -> exact
  *    Jaccard verification of candidates only — the 100 TB scale path;
- *  - SimHash: 64-bit fingerprints + chunk-banded candidate pairing.
+ *  - SimHash: 64-bit word-bag fingerprints ([[withSimhash]]).
  *
  * Scale design: every candidate generator here is an equi-join on a derived
  * key (content hash / shingle / (band, band-hash) / simhash chunk), so Spark
@@ -365,16 +365,6 @@ object Dedup {
   def withSignatures(docs: DataFrame, w: Int, k: Int): DataFrame =
     docShingleHashes(docs, w).withColumn("sig", minhashUdf(k)(col("sh")))
 
-  /** [[withSignatures]] WITHOUT the shingle-ability filter: rows too short
-    * (or null) to shingle are KEPT with a null `sig`. The streaming
-    * admission gate needs totality — an unmatchable row must flow through
-    * to be admitted, not vanish from the stream. */
-  def withSignaturesTotal(docs: DataFrame, w: Int, k: Int): DataFrame =
-    docs.withColumn("sh",
-        graft.functions.TextExpressions.shingleHashes(col("text"), w))
-      .withColumn("n_sh", size(col("sh")).cast("long"))
-      .withColumn("sig", minhashUdf(k)(when(size(col("sh")) > 0, col("sh"))))
-
   /**
    * MinHash-LSH near-duplicate pairs — the scale path.
    *
@@ -442,14 +432,6 @@ object Dedup {
       .select("id_a", "id_b", "inter", "uni", "jaccard")
   }
 
-  /** Keep-first survivor set under MinHash-LSH near-dup: drop the larger id
-    * of every matched pair (transitive chains collapse to the smallest id). */
-  def minhashDedup(docs: DataFrame, w: Int = 5, minJ: Double = 0.7): DataFrame = {
-    val drop = minhashLshPairs(docs, w = w, minJ = minJ)
-      .select(col("id_b").as("doc_id")).distinct()
-    docs.join(drop, Seq("doc_id"), "left_anti")
-  }
-
   // ---- persisted minhash index (index build / serve split) -------------------
 
   /**
@@ -462,12 +444,9 @@ object Dedup {
    * split deletes: [[minhashLshPairsIndexed]] and [[nearDupAdmit]] read
    * stored signatures, and the verify-side shingle re-attach joins id-only
    * candidates against the bucket layout, so the corpus payload (`sh`, the
-   * dominant bytes) never shuffles. A growing corpus indexes new batches
-   * incrementally into the same bucket scheme via
-   * [[appendToMinhashIndex]] (ScaleOpsSpec proves incremental == rebuild
-   * with a batch-sized write). The shingle/signature parameters (w, k)
-   * are recorded as table properties so an append can never mix
-   * incompatible signatures into one index.
+   * dominant bytes) never shuffles. The shingle/signature parameters
+   * (w, k) are recorded as table properties, so a reader can check that
+   * its batch signatures match the index's.
    */
   def buildMinhashIndex(docs: DataFrame, table: String, w: Int = 5, k: Int = 32,
                         buckets: Int = 8, path: Option[String] = None,
@@ -479,30 +458,6 @@ object Dedup {
     docs.sparkSession.sql(
       s"ALTER TABLE $table SET TBLPROPERTIES " +
         s"('graft.minhash.w' = '$w', 'graft.minhash.k' = '$k')")
-  }
-
-  /** Incremental index growth — the write half of the daily-crawl loop:
-    * shingle + sign the NEW batch only and append it into the existing
-    * [[buildMinhashIndex]] table under the table's own bucket scheme
-    * ([[graft.relational.Bucketing.appendBucketed]]). (w, k) come from the
-    * table's recorded properties, so batch signatures are always computed
-    * with the parameters the index was built with. Cost is batch-sized:
-    * the stored corpus is neither read nor re-shuffled, and serving
-    * ([[minhashLshPairsIndexed]] / [[nearDupAdmit]]) sees old + new rows
-    * through the same bucketed scan. */
-  def appendToMinhashIndex(newBatch: DataFrame, table: String,
-                           writerTasksPerBucket: Int = 1): Unit = {
-    val spark = newBatch.sparkSession
-    val props = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).properties
-    val (w, k) = (
-      props.get("graft.minhash.w").map(_.toInt).getOrElse(throw new IllegalStateException(
-        s"appendToMinhashIndex: $table has no graft.minhash.w property — not a buildMinhashIndex table")),
-      props.get("graft.minhash.k").map(_.toInt).getOrElse(throw new IllegalStateException(
-        s"appendToMinhashIndex: $table has no graft.minhash.k property — not a buildMinhashIndex table")))
-    graft.relational.Bucketing.appendBucketed(
-      withSignatures(newBatch, w, k).filter(col("sig").isNotNull),
-      table, writerTasksPerBucket = writerTasksPerBucket)
   }
 
   /** Within-corpus LSH pairing served from a [[buildMinhashIndex]] table —
@@ -528,7 +483,7 @@ object Dedup {
    * come from the cross-side (band, band_hash) equi-join; only batch-side
    * rows and id-only candidates shuffle. NOTE: admission is one-sided and
    * within-batch duplicates are NOT collapsed here — run
-   * [[incrementalDedup]]/[[minhashDedup]] on the admitted set for that.
+   * [[incrementalDedup]] on the admitted set for that.
    */
   def nearDupAdmit(newBatch: DataFrame, index: DataFrame, w: Int = 5,
                    k: Int = 32, bands: Int = 16, minJ: Double = 0.7,
@@ -958,28 +913,6 @@ object Dedup {
     docs.withColumn("simhash", simhashUdf(col("text")))
 
   /**
-   * SimHash near-dup pairs: band the 64-bit fingerprint into four 16-bit
-   * chunks (pigeonhole: hamming <= 3 implies >= 1 identical chunk), equi-join
-   * on (chunk_idx, chunk), verify hamming distance on candidates.
-   */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val fp = withSimhash(docs).select("doc_id", "simhash")
-    val chunked = fp.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until 4).map(i =>
-        shiftrightunsigned(col("simhash"), i * 16).bitwiseAND(lit(0xffffL))): _*))
-        .as(Seq("chunk_idx", "chunk")))
-    val a = chunked.select(col("chunk_idx"), col("chunk"),
-      col("doc_id").as("id_a"), col("simhash").as("fp_a"))
-    val b = chunked.select(col("chunk_idx"), col("chunk"),
-      col("doc_id").as("id_b"), col("simhash").as("fp_b"))
-    a.join(b, Seq("chunk_idx", "chunk")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "fp_a", "fp_b").dropDuplicates("id_a", "id_b")
-      .withColumn("hamming", bit_count(col("fp_a").bitwiseXOR(col("fp_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
-  }
-
-  /**
    * Embedding-cosine near-dup dedup (the fifth dedup family, alongside
    * exact / n-gram Jaccard / MinHash-LSH / SimHash): keep-first semantics
    * over cosine-threshold pairs — every doc with at least one LOWER-id
@@ -1051,8 +984,8 @@ object Dedup {
       col("embedding").as("eb"))
     val pairs = l.join(r, Seq("cl"))
       .filter(col("id_a") < col("id_b"))
-      // zero-norm discipline mirrors cosinePairs: try_divide NULLs the
-      // 0/0, and the null-rejecting filter drops the pair
+      // zero-norm discipline as in Similarity.cosinePairsGrid: try_divide
+      // NULLs the 0/0, and the null-rejecting filter drops the pair
       .withColumn("cos",
         round(try_divide(vecDot(col("ea"), col("eb")),
           vecNorm(col("ea")) * vecNorm(col("eb"))), 6))
@@ -1225,19 +1158,5 @@ object Dedup {
     val s = spark
     import s.implicits._
     verts.toSeq.map(v => (v, find(v))).toDF("doc_id", "comp_id")
-  }
-
-  /** K2-style last-wins dedup on an arbitrary key (shared shape with the BAG
-    * ingest layer): deterministic winner by ordering columns descending
-    * (callers pass a chain whose last column is unique within the key).
-    * One [[graft.functions.ArgMax]] hash aggregate with map-side partials —
-    * never a per-key window sort (struct-max == ORDER BY ... DESC NULLS
-    * LAST, see the BagXml.dedupLastWins scale note). */
-  def lastWins(df: DataFrame, key: String, orderCols: Seq[String]): DataFrame = {
-    val payload = struct(df.columns.map(col).toIndexedSeq: _*)
-    df.groupBy(col(key).as("__k"))
-      .agg(graft.functions.VectorAggregates.argMax(
-        struct(orderCols.map(col).toIndexedSeq: _*), payload).as("__w"))
-      .select(df.columns.map(c => col(s"__w.$c").as(c)).toIndexedSeq: _*)
   }
 }

@@ -9,43 +9,17 @@ import graft.functions.VectorExpressions.{hammingDist, vecDot, vecNorm}
  * Embedding similarity search over `embeddings(vec_id, embedding:
  * array<float>, label)`:
  *
- *  - [[cosine]]: codegen'd cosine via zip_with/aggregate higher-order
- *    functions (floats widened to double before accumulation);
  *  - [[knnBrute]]: exact top-k for a *small query set* against the full
  *    corpus — a broadcast of the queries + one linear scan; this is the
  *    correct plan even at 100 TB (no shuffle of the corpus, no cartesian
  *    blow-up: cost = |corpus| * |queries|, queries bounded);
- *  - [[cosinePairs]]: exact all-pairs >= threshold — the *oracle baseline*,
- *    quadratic by construction; [[cosinePairsGrid]] is the same semantics
- *    as a distributed block-grid kernel (no driver collect, no corpus
- *    broadcast);
+ *  - [[cosinePairsGrid]]: exact all-pairs >= threshold as a distributed
+ *    block-grid kernel (no driver collect, no corpus broadcast);
  *  - [[annLsh]]: random-hyperplane LSH with L independent tables — the
  *    100 TB scale path: candidates come from equi-joins on (table, bucket),
  *    never from a cross product.
  */
 object Similarity {
-
-  /** Left-fold dot product with float->double widening; element order is
-    * the array order, so the result is bit-stable across engines.
-    * HOF (codegen-fallback) form — kept as the dependency-free Column API;
-    * the hot paths below use the native codegen'd vec_dot/vec_norm
-    * expressions ([[graft.functions.VectorExpressions]]) which compute the
-    * identical sequential fold ~40x faster. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** L2-normalize an embedding (double elements). */
-  def normalize(a: Column): Column = {
-    val n = norm(a)
-    transform(a, x => x.cast("double") / n)
-  }
 
   /**
    * Exact top-k neighbors for each query vector. `queries` must be small
@@ -178,55 +152,6 @@ object Similarity {
         (col("t.ord") / lit(1000000.0)).as("dot"))
   }
 
-  /**
-   * The MIPS -> cosine reduction (Bachrach et al. 2014 / Neyshabur &
-   * Srebro 2015): augment every corpus vector with one extra coordinate
-   * sqrt(M^2 - |x|^2) (M = the corpus max norm) and queries with 0. All
-   * augmented corpus vectors then share norm M, so cosine ORDER on the
-   * augmented space == inner-product order on the original — which lets
-   * every cosine ANN structure in this engine (sign-bit, IVF, PQ
-   * indexes) serve MIPS unchanged: augment at index build, augment the
-   * query, done. Returns (corpusAug, queriesAug); LlmOpsSpec proves
-   * rank-for-rank agreement of cosine-over-augmented with [[mipsBrute]].
-   * Map-only after one 1-row max-norm aggregate broadcast in-plan.
-   */
-  def mipsAugment(corpus: DataFrame, queries: DataFrame): (DataFrame, DataFrame) = {
-    val withNorm = corpus
-      .withColumn("__nrm", vecNorm(col("embedding")))
-    val m = broadcast(withNorm.agg(max(col("__nrm")).as("__m")))
-    val corpusAug = withNorm.crossJoin(m)
-      .withColumn("embedding", concat(col("embedding"), array(
-        sqrt(greatest(col("__m") * col("__m") - col("__nrm") * col("__nrm"),
-          lit(0.0))).cast("float"))))
-      .drop("__nrm", "__m")
-    val queriesAug = queries
-      .withColumn("embedding", concat(col("embedding"), array(lit(0.0f))))
-    (corpusAug, queriesAug)
-  }
-
-  /**
-   * All pairs (a < b) with rounded cosine >= minCos. Quadratic — the
-   * verification oracle for [[annLsh]]/ScalaTest at small scale factors; at
-   * scale use [[annLsh]] or [[Dedup.minhashLshPairs]]-style bucketing.
-   */
-  def cosinePairs(emb: DataFrame, minCos: Double): DataFrame = {
-    val n = emb
-      .select(col("vec_id"), col("embedding"), vecNorm(col("embedding")).as("nrm"))
-    val a = n.select(col("vec_id").as("id_a"), col("embedding").as("e_a"), col("nrm").as("nrm_a"))
-    val b = n.select(col("vec_id").as("id_b"), col("embedding").as("e_b"), col("nrm").as("nrm_b"))
-    a.join(b, col("id_a") < col("id_b"))
-      // zero-norm vectors: ANSI division ERRORS on the 0/0; try_divide
-      // yields NULL instead, and the null-rejecting filter below then
-      // drops the pair — matching the grid kernel, whose scala-side 0/0
-      // is NaN and fails its `>=`. (A bare non-try `/` plus `cos >=
-      // minCos` would either crash (ANSI) or, with NaN, KEEP the pair:
-      // Spark's NaN-safe ordering ranks NaN ABOVE every number.)
-      .withColumn("cos",
-        round(try_divide(vecDot(col("e_a"), col("e_b")), col("nrm_a") * col("nrm_b")), 6))
-      .filter(!isnan(col("cos")) && col("cos") >= minCos)
-      .select("id_a", "id_b", "cos")
-  }
-
   /** Sequential-fold L2 norm with float->double widening — the scala-side
     * twin of the native vec_norm expression (identical fold order). */
   private[graft] def l2(v: Array[Float]): Double = {
@@ -244,8 +169,7 @@ object Similarity {
     * return NaN, which scala's >= threshold compare rejects; the
     * declarative path needs an explicit !isnan filter to match, because
     * Spark's NaN-safe ordering treats NaN as GREATER than any number
-    * (round(NaN) >= t would keep the row) — [[cosinePairs]] carries that
-    * filter. */
+    * (round(NaN) >= t would keep the row). */
   private[graft] def roundedCos(a: Array[Float], na: Double,
                                 b: Array[Float], nb: Double): Double = {
     var s = 0.0
@@ -259,9 +183,10 @@ object Similarity {
   }
 
   /**
-   * [[cosinePairs]] as a distributed block-grid kernel: SAME exact
-   * all-pairs semantics and bit-identical output (same sequential dot
-   * fold, same norms, same HALF_UP rounding), with NO driver collect and
+   * All pairs (a < b) with rounded cosine >= minCos, as a distributed
+   * block-grid kernel: the quadratic self-join's exact semantics and
+   * bit-identical output (same sequential dot fold, same norms, same
+   * HALF_UP rounding), with NO driver collect and
    * NO corpus broadcast — the predecessor's bounded-corpus contract
    * (collect + broadcast, maxCorpus guard) is gone.
    *
@@ -776,19 +701,6 @@ object Similarity {
             .otherwise(acc))))
   }
 
-  /** Hamming distance between two [[signBits]]-packed arrays:
-    * popcount(xor) per word, summed. Integer-exact — safe to hash-compare
-    * across engines and to rank on without float tie hazards. HOF
-    * (dependency-free Column API) form; the scan path uses the codegen'd
-    * native [[graft.functions.PackedHamming]], which computes the
-    * identical integer for equal-length signatures (asserted in
-    * LlmOpsSpec). On mismatched lengths they deliberately differ: this
-    * form yields NULL (zip_with pads), the native kernel ERRORS — a
-    * truncated distance is never returned by either. */
-  def hammingPacked(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y))),
-      lit(0L), (acc, v) => acc + v.cast("long"))
-
   /**
    * Exact Hamming top-k over the binary quantization: pack both sides
    * once (map-only), broadcast the bounded query set, one corpus scan of
@@ -870,9 +782,7 @@ object Similarity {
    * the shortlist scan reads stored signatures (no per-query re-packing),
    * and the rerank's embedding re-attach joins the id-only candidates
    * against the bucket layout — only the `queries x shortlist` candidate
-   * rows move to the buckets, the corpus never shuffles. A growing corpus
-   * grows incrementally via [[appendToSignIndex]] (ScaleOpsSpec proves
-   * incremental == rebuild with a batch-sized write).
+   * rows move to the buckets, the corpus never shuffles.
    */
   def buildSignIndex(emb: DataFrame, table: String, buckets: Int,
                      path: Option[String] = None,
@@ -882,21 +792,6 @@ object Similarity {
         col("embedding")),
       table, "vec_id", buckets, path = path,
       writerTasksPerBucket = writerTasksPerBucket)
-
-  /** Incremental growth of a [[buildSignIndex]] table: pack the NEW
-    * batch's sign bits and append under the table's own catalog bucket
-    * scheme ([[graft.relational.Bucketing.appendBucketed]]) — batch-sized
-    * work, the stored corpus is neither read nor re-shuffled, and
-    * [[hammingRerankIndexed]] serves old + new rows through the same
-    * bucketed scan. (Unlike the minhash index there are no tunable
-    * signature parameters to pin: the sign-bit packing is fully
-    * determined by the embedding dimension.) */
-  def appendToSignIndex(emb: DataFrame, table: String,
-                        writerTasksPerBucket: Int = 1): Unit =
-    graft.relational.Bucketing.appendBucketed(
-      emb.select(col("vec_id"), signBits(col("embedding")).as("sig"),
-        col("embedding")),
-      table, writerTasksPerBucket = writerTasksPerBucket)
 
   private def tombstoneTable(table: String): String = s"${table}_tombstones"
 
@@ -911,9 +806,8 @@ object Similarity {
    * stored corpus untouched — and every serve path anti-joins the
    * tombstones. Takedown sets are tiny relative to the corpus, so the
    * anti-join is a BROADCAST: the serve plan stays corpus-exchange-free.
-   * When tombstones accumulate, [[vacuumSignIndex]] folds them in
-   * physically. The same discipline drops onto the minhash/IVF/PQ index
-   * tables unchanged — they share the Bucketing layout and id column.
+   * The same discipline drops onto the minhash/IVF/PQ index tables
+   * unchanged — they share the Bucketing layout and id column.
    */
   def deleteFromSignIndex(spark: org.apache.spark.sql.SparkSession, table: String,
                           ids: DataFrame): Unit = {
@@ -935,35 +829,6 @@ object Similarity {
     else idx
   }
 
-  /**
-   * Fold accumulated tombstones into the physical layout: write the
-   * surviving rows as a NEW bucketed table under the same spec (fresh
-   * path), swap it in with a catalog rename, drop the tombstone table.
-   * Cost is one corpus rewrite — amortized over many deletes (run at a
-   * tombstone-fraction threshold); serving is never interrupted and
-   * never wrong: before the swap the anti-join serves, after it the
-   * clean layout does. No-op without tombstones.
-   */
-  def vacuumSignIndex(spark: org.apache.spark.sql.SparkSession, table: String,
-                      path: Option[String] = None,
-                      writerTasksPerBucket: Int = 1): Unit = {
-    val t = tombstoneTable(table)
-    if (!spark.catalog.tableExists(t)) return
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val spec = spark.sessionState.catalog.getTableMetadata(ident).bucketSpec
-      .getOrElse(throw new IllegalStateException(s"vacuum: $table is not bucketed"))
-    val survivors = liveIndex(spark, table)
-    val staging = s"${table}__vacuum"
-    graft.relational.Bucketing.writeBucketed(survivors, staging,
-      spec.bucketColumnNames.head, spec.numBuckets,
-      path = path.orElse(Some(
-        java.nio.file.Files.createTempDirectory(s"${table}_vacuum").toString)),
-      writerTasksPerBucket = writerTasksPerBucket)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $table")
-    spark.sql(s"DROP TABLE $t")
-  }
-
   /** Two-stage shortlist + exact rerank ([[hammingRerank]]) served from a
     * [[buildSignIndex]] table — shuffle-free on the corpus side, and
     * tombstone-aware: deleted ids ([[deleteFromSignIndex]]) are excluded
@@ -979,9 +844,9 @@ object Similarity {
     rerank(candidates, idx.select(col("vec_id"), col("embedding")), queries, k)
   }
 
-  // ---- persisted IVF index (train once / add incrementally / probe) --------
+  // ---- persisted IVF index (train once / probe) ----------------------------
 
-  /** The quantized corpus frame shared by build and append: every vector
+  /** The quantized corpus frame the index build writes: every vector
     * labeled with its nearest-centroid list id `cl`. ALL corpus columns
     * ride into the index (not just vec_id + embedding) so filtered
     * serving ([[annIvfIndexed]]'s `predicate`) can constrain the scan on
@@ -999,10 +864,7 @@ object Similarity {
    * bucketed on the list id `cl` ([[graft.relational.Bucketing]]).
    *
    * The centroids are the index's pinned parameters — the exact analogue
-   * of the minhash index's (w, k) table properties: [[appendToIvfIndex]]
-   * quantizes new batches with the STORED centroids, never retraining, so
-   * old and new rows always share one list geometry (retraining the
-   * quantizer is a rebuild decision, not an append). Serving
+   * of the minhash index's (w, k) table properties. Serving
    * ([[annIvfIndexed]]) probes lists through the bucketed layout with the
    * query side broadcast — the corpus is scored in place at the scan and
    * never shuffles.
@@ -1036,23 +898,6 @@ object Similarity {
     spark.table(centroidTable(table))
       .orderBy(col("cl")).select("centroid").collect()
       .map(_.getSeq[Float](0).toArray)
-
-  /** Incremental growth of a [[buildIvfIndex]] table: quantize the NEW
-    * batch against the index's stored centroids and append under the
-    * table's own bucket scheme
-    * ([[graft.relational.Bucketing.appendBucketed]]). Batch-sized work —
-    * the stored lists are neither read nor re-shuffled — and because the
-    * quantizer is frozen, the grown index is bit-identical to a rebuild
-    * over old+new with the same centroids (ScaleOpsSpec proves it). */
-  def appendToIvfIndex(newBatch: DataFrame, table: String,
-                       writerTasksPerBucket: Int = 1): Unit = {
-    val spark = newBatch.sparkSession
-    require(spark.catalog.tableExists(centroidTable(table)),
-      s"appendToIvfIndex: ${centroidTable(table)} not found — not a buildIvfIndex table")
-    graft.relational.Bucketing.appendBucketed(
-      ivfAssigned(newBatch, readIvfCentroids(spark, table)), table,
-      writerTasksPerBucket = writerTasksPerBucket)
-  }
 
   /**
    * IVF search served from a [[buildIvfIndex]] table — identical output to
@@ -1264,11 +1109,11 @@ object Similarity {
     rerank(candidates, emb, queries, k)
   }
 
-  // ---- persisted PQ index (train once / add incrementally / query) ---------
+  // ---- persisted PQ index (train once / query) -----------------------------
 
   private def codebookTable(table: String): String = s"${table}_codebooks"
 
-  /** The encoded corpus frame shared by PQ build and append:
+  /** The encoded corpus frame the PQ index build writes:
     * (vec_id, offset codes, embedding). The raw embedding rides along for
     * the serve path's exact rerank — the codes answer WHICH vectors to
     * rerank, the stored embedding answers the rerank itself without
@@ -1279,11 +1124,11 @@ object Similarity {
       col("embedding"))
 
   /**
-   * Index-build half of a PQ-ANN deployment — the same train/add contract
-   * as [[buildIvfIndex]]: codebooks are trained ONCE and persisted in a
-   * tiny `<table>_codebooks` companion table (one row per (subspace,
-   * entry) with its offset code and subvector — the pinned parameters an
-   * append must never retrain), and the corpus is encoded and persisted
+   * Index-build half of a PQ-ANN deployment — the same train-once
+   * contract as [[buildIvfIndex]]: codebooks are trained ONCE and
+   * persisted in a tiny `<table>_codebooks` companion table (one row per
+   * (subspace, entry) with its offset code and subvector — the pinned
+   * parameters), and the corpus is encoded and persisted
    * as `(vec_id, codes, embedding)` bucketed on vec_id, so the serve
    * path's rerank re-attach is exchange-free on the corpus side (the
    * sign-index discipline).
@@ -1320,22 +1165,6 @@ object Similarity {
     val books = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
       .map(_._2.map(_.getSeq[Float](2).toArray).toArray).toArray
     (books, ksub)
-  }
-
-  /** Incremental growth of a [[buildPqIndex]] table: encode the NEW batch
-    * with the STORED codebooks and append under the table's bucket scheme
-    * — batch-sized work, frozen quantizer, so the grown index is
-    * bit-identical to a rebuild over old+new with the same codebooks
-    * (ScaleOpsSpec proves it). */
-  def appendToPqIndex(newBatch: DataFrame, table: String,
-                      writerTasksPerBucket: Int = 1): Unit = {
-    val spark = newBatch.sparkSession
-    require(spark.catalog.tableExists(codebookTable(table)),
-      s"appendToPqIndex: ${codebookTable(table)} not found — not a buildPqIndex table")
-    val (books, ksub) = readPqCodebooks(spark, table)
-    graft.relational.Bucketing.appendBucketed(
-      pqAssigned(newBatch, books, ksub), table,
-      writerTasksPerBucket = writerTasksPerBucket)
   }
 
   /**
@@ -1516,9 +1345,9 @@ object Similarity {
     rerank(candidates, emb, queries, k)
   }
 
-  // ---- persisted IVFADC index (train once / add incrementally / query) -----
+  // ---- persisted IVFADC index (train once / query) -------------------------
 
-  /** The encoded corpus frame shared by IVFADC build and append:
+  /** The encoded corpus frame the IVFADC index build writes:
     * (cl, vec_id, codes, embedding) — cell id for the probe join, codes
     * for the ADC scan, the raw embedding riding along for the exact
     * rerank (the v14 single-table discipline). */
@@ -1536,10 +1365,9 @@ object Similarity {
    * persists as `(cl, vec_id, codes, embedding)` BUCKETED ON THE LIST ID,
    * so a probe touches only its lists' buckets, and what it reads there
    * is 8 offset-codes per vector, not 64 floats. BOTH trained parameter
-   * sets pin in companion tables (`_centroids` + `_codebooks` — the
-   * quantizers an append must never retrain); the codebooks are
-   * residual-trained, so they are only meaningful relative to their
-   * centroids and the pair freezes together.
+   * sets pin in companion tables (`_centroids` + `_codebooks`); the
+   * codebooks are residual-trained, so they are only meaningful relative
+   * to their centroids and the pair freezes together.
    */
   def buildIvfPqIndex(emb: DataFrame, table: String, c: Int = 0, m: Int = PqM,
                       ksub: Int = PqKsub, buckets: Int = 8,
@@ -1569,24 +1397,6 @@ object Similarity {
       bookRows.toSeq.toDF("s", "j", "code", "ksub", "centroid"),
       codebookTable(table),
       path = path.map(p => s"$p/_codebooks"))
-  }
-
-  /** Incremental growth of a [[buildIvfPqIndex]] table: encode the NEW
-    * batch with BOTH stored parameter sets and append under the table's
-    * bucket scheme — batch-sized work, frozen quantizer pair, so the
-    * grown index is bit-identical to a rebuild over old+new with the
-    * same parameters (ScaleOpsSpec proves it). */
-  def appendToIvfPqIndex(newBatch: DataFrame, table: String,
-                         writerTasksPerBucket: Int = 1): Unit = {
-    val spark = newBatch.sparkSession
-    require(spark.catalog.tableExists(centroidTable(table)) &&
-        spark.catalog.tableExists(codebookTable(table)),
-      s"appendToIvfPqIndex: companion tables for $table not found — not a buildIvfPqIndex table")
-    val cents = readIvfCentroids(spark, table)
-    val (books, ksub) = readPqCodebooks(spark, table)
-    graft.relational.Bucketing.appendBucketed(
-      ivfPqAssigned(newBatch, cents, books, ksub), table,
-      writerTasksPerBucket = writerTasksPerBucket)
   }
 
   /**

@@ -27,10 +27,8 @@ object TextOps {
   /** BPE-ish sub-token regex: letter runs, digit runs, single other glyphs. */
   final val TokenRegex = graft.functions.TextKernels.TokenRegex
 
-  def regexTokens(text: Column): Column =
-    regexp_extract_all(lower(text), lit(TokenRegex), lit(0))
-
-  /** Count of [[regexTokens]] without materializing the token array —
+  /** Count of the [[TokenRegex]] matches in `lower(text)` (the size of
+    * `regexp_extract_all`'s array) without materializing the token array —
     * native kernel with an ASCII fast path, Java-regex fallback otherwise. */
   def regexTokenCount(text: Column): Column =
     graft.functions.TextExpressions.regexTokenCount(text)
@@ -210,6 +208,16 @@ object TextOps {
    * selected rows and their ranks never depend on a float comparison whose
    * last ulp could differ between engines/libms; the float score itself is
    * informational output, rounded.
+   *
+   * Selection runs through the bounded-heap
+   * [[graft.functions.VectorAggregates.topKStr]] aggregate on the
+   * integer-exact composite (tf desc, df asc) with the term string as the
+   * heap's byte-order tie-break — exactly the oracle's (tf DESC, df ASC,
+   * term ASC). The r4 row_number window sorted every document's full term
+   * list inside one task; the heap ships at most k terms per doc per
+   * mapper. tf * 2^31 - df is integer-exact in a double for tf < 2^20 and
+   * df < 2^31; out-of-range inputs FAIL via an assert riding inside the
+   * key (the v08 pattern) rather than corrupt the ranking.
    */
   def tfidfTopTerms(docs: DataFrame, k: Int = 3, textCol: String = "text"): DataFrame = {
     // ONE declarative plan, no persist, no eager action: the tf
@@ -219,37 +227,13 @@ object TextOps {
     // persist measured 60% slower than exchange reuse inside one job (the
     // r4 form paid a persist write plus two eager driver actions).
     // explode_outer keeps a null-term row for null-text docs, so
-    // countDistinct(doc_id) over tf IS the document count. At 100 TB,
-    // write the tf table to parquet once and use tfidfTopTermsFrom.
-    val tf = docs.select(col("doc_id"),
+    // countDistinct(doc_id) over the terms IS the document count.
+    val terms = docs.select(col("doc_id"),
         explode_outer(split(col(textCol), " ")).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val nFrame = tf.agg(countDistinct(col("doc_id")).as("__n"))
-    tfidfHeap(tf.filter(col("term").isNotNull), nFrame, k)
-  }
-
-  /** TF-IDF over a pre-materialized `(doc_id, term, tf)` table — at 100 TB
-    * the tf table is written to parquet once and both consumers read it.
-    *
-    * Selection runs through the bounded-heap
-    * [[graft.functions.VectorAggregates.topKStr]] aggregate on the
-    * integer-exact composite (tf desc, df asc) with the term string as the
-    * heap's byte-order tie-break — exactly the oracle's (tf DESC, df ASC,
-    * term ASC). The r4 row_number window sorted every document's full term
-    * list inside one task; the heap ships at most k terms per doc per
-    * mapper. tf * 2^31 - df is integer-exact in a double for tf < 2^20 and
-    * df < 2^31; out-of-range inputs FAIL via an assert riding inside the
-    * key (the v08 pattern) rather than corrupt the ranking. */
-  def tfidfTopTermsFrom(tf: DataFrame, corpusSize: Long, k: Int): DataFrame =
-    tfidfHeap(tf,
-      tf.sparkSession.range(1).select(lit(corpusSize).as("__n")), k)
-
-  /** Selection core: `nFrame` is a 1-row (__n: corpus size) frame,
-    * broadcast-joined after the heap so the corpus size can come either
-    * from a literal ([[tfidfTopTermsFrom]]) or from an in-plan aggregate
-    * over the same tf subtree ([[tfidfTopTerms]] — keeps the whole op one
-    * job with the tf exchange reused, no eager count action). */
-  private def tfidfHeap(tf: DataFrame, nFrame: DataFrame, k: Int): DataFrame = {
+    // the corpus size: a 1-row frame broadcast-joined after the heap
+    val nFrame = terms.agg(countDistinct(col("doc_id")).as("__n"))
+    val tf = terms.filter(col("term").isNotNull)
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val guard = coalesce(assert_true(
       col("tf") > 0 && col("tf") < lit(1L << 20) && col("df") < lit(1L << 31),
@@ -310,9 +294,9 @@ object TextOps {
         s"bpeEncode: merge pair must be 2 printable-ASCII non-space chars, got '$p'")
     }
     // production counting path: the native bpe_token_count kernel — one
-    // byte scan per merge, identical semantics to [[bpeEncodeHof]]'s
-    // replace chain (asserted equal in LlmOpsSpec; the chain stays below
-    // as the executable spec). n_char_tokens = chars minus spaces ==
+    // byte scan per merge, identical semantics to the replace chain above
+    // (LlmOpsSpec asserts it equal to that chain, which it keeps as the
+    // executable spec). n_char_tokens = chars minus spaces ==
     // the per-word length sum (empty words contribute zero chars).
     val guard = coalesce(assert_true(!contains(col(textCol), lit(sep)),
       lit("bpeEncode: text contains the \\u0001 token separator")).cast("long"), lit(0L))
@@ -321,40 +305,6 @@ object TextOps {
           .as("n_char_tokens"),
         graft.functions.TextExpressions.bpeTokenCount(col(textCol), merges)
           .as("n_bpe_tokens"))
-      .withColumn("n_merged", col("n_char_tokens") - col("n_bpe_tokens"))
-  }
-
-  /** The wrapped-separator replace-chain form of [[bpeEncode]] — the
-    * executable semantics spec the kernel is property-tested against
-    * (identical output columns). */
-  private[llm] def bpeEncodeHof(docs: DataFrame, merges: Seq[String],
-                                textCol: String = "text"): DataFrame = {
-    val sep = "\u0001"
-    require(merges.nonEmpty, "bpeEncode: empty merge table")
-    merges.foreach { p =>
-      require(p.length == 2 && p.forall(c => c > ' ' && c < 127),
-        s"bpeEncode: merge pair must be 2 printable-ASCII non-space chars, got '$p'")
-    }
-    def tokensOf(w: Column): Column = {
-      val inter = regexp_replace(w, lit("(.)"), lit(sep + "$1" + sep))
-      val enc = merges.foldLeft(inter) { (acc, p) =>
-        call_function("replace", acc,
-          lit(s"$sep${p(0)}$sep$sep${p(1)}$sep"), lit(s"$sep$p$sep"))
-      }
-      // separators / 2 (each token carries exactly two)
-      shiftright(
-        (length(enc) - length(call_function("replace", enc, lit(sep), lit(""))))
-          .cast("long"), 1)
-    }
-    val words = filter(split(col(textCol), " "), w => length(w) > lit(0))
-    // the separator guard rides inside the summed expression so pruning
-    // can never drop it (the v08 pattern)
-    val guard = coalesce(assert_true(!contains(col(textCol), lit(sep)),
-      lit("bpeEncode: text contains the \\u0001 token separator")).cast("long"), lit(0L))
-    docs.select(col("doc_id"),
-        (aggregate(words, lit(0L), (acc, w) => acc + length(w).cast("long")) + guard)
-          .as("n_char_tokens"),
-        aggregate(words, lit(0L), (acc, w) => acc + tokensOf(w)).as("n_bpe_tokens"))
       .withColumn("n_merged", col("n_char_tokens") - col("n_bpe_tokens"))
   }
 
@@ -584,25 +534,6 @@ object TextOps {
       .withColumn("n_ips", col("__pii.n_ips"))
       .withColumn("n_phones", col("__pii.n_phones"))
       .drop("__pii")
-
-  /** The executable SPECIFICATION of [[piiRedact]]: three sequential
-    * corpus-wide `regexp_replace` passes (email -> ip -> phone) + counts by
-    * length-delta substring counting — the exact shape the DuckDB oracle
-    * runs. Kept for the kernel == spec property tests; production callers
-    * use the fused kernel. */
-  def piiRedactSpec(df: DataFrame, textCol: String = "text"): DataFrame = {
-    def tokens(c: Column, tok: String): Column =
-      ((length(c) - length(replace(c, lit(tok), lit("")))) / tok.length).cast("long")
-    df.withColumn("redacted",
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(col(textCol), Pii.EmailRe, "<EMAIL>"),
-            Pii.Ipv4Re, "<IP>"),
-          Pii.PhoneRe, "<PHONE>"))
-      .withColumn("n_emails", tokens(col("redacted"), "<EMAIL>"))
-      .withColumn("n_ips", tokens(col("redacted"), "<IP>"))
-      .withColumn("n_phones", tokens(col("redacted"), "<PHONE>"))
-  }
 
   /** One input doc's packing assignment: which training sequence it landed
     * in (per stratum) and the sequence's running token total through it. */

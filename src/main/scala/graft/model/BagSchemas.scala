@@ -122,6 +122,4 @@ object BagSchemas {
     StructField("Objecten:heeftAlsHoofdadres", StructType(Seq(
       s("Objecten-ref:NummeraanduidingRef")))),
     voorkomen))
-
-  val standplaats: StructType = ligplaats
 }

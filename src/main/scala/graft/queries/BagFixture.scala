@@ -42,7 +42,7 @@ object BagFixture {
   private def pid(i: Column): Column =
     concat(lit("2"), lpad(i.cast("string"), 15, "0"))
 
-  /** The raw-layer BagTables, as if BagXml.readAll had produced them. */
+  /** The raw-layer BagTables, as if Pipeline.rawTables had produced them. */
   def tables(s: SparkSession, dir: String): BagTables = {
     val orders = Queries.tbl(s, dir, "orders")
     val part = Queries.tbl(s, dir, "part")

@@ -2051,7 +2051,7 @@ object ExtendedQueries extends QueryFamily {
       // div-100 damping), so the match is hash-exact with no rounding.
       // DuckDB's sum() widens to HUGEINT; each round casts back to BIGINT,
       // which is exact within the n*scale*85 < 2^63 bound — guaranteed by
-      // construction here: `sc` mirrors PageRank.autoScale (largest power
+      // construction here: `sc` mirrors PageRank's in-plan scale (largest power
       // of 10 with 10^k <= (2^63-1) // 85 // node_count; power(10, k) is
       // exact in a double through 10^18, so the BIGINT cast is exact).
       pagerankSql)) { (s, dir) =>

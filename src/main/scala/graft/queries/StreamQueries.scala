@@ -6,20 +6,20 @@ import org.apache.spark.sql.functions._
 import Queries.{tbl, tblPar, scratch, events, eventsTs}
 import Oracle.t48Sql
 
-/** Streaming-shaped queries (st), in their batch-equivalent form; the
-  * streaming variants run in StreamingSpec against these answers. */
+/** Streaming-shaped queries (st), in their batch-equivalent form; where
+  * [[graft.streaming.EventStreams]] holds the streaming form, StreamingSpec
+  * runs it against these answers. */
 object StreamQueries extends QueryFamily {
 
   /** ST9 batch mirror: cross-corpus near-dup ADMISSION — the streaming
-    * ingest front door's gate ([[graft.streaming.EventStreams
-    * .admitNearDupStream]] / the foreachBatch indexed path), bounded for
-    * the oracle: corpus = even doc_ids (the already-ingested side), batch
-    * = odd doc_ids, and a batch doc survives iff it has NO corpus
-    * near-dup at 5-gram Jaccard >= 0.5 (LSH candidates, exact verify —
-    * planted pairs sit at j >= 0.87, so banding is deterministic here).
-    * Docs too short to shingle are admitted (totality). StreamingSpec
-    * proves stream==batch on planted cross-corpus dups for BOTH streaming
-    * forms. */
+    * ingest front door's gate ([[graft.llm.Dedup.nearDupAdmit]], which a
+    * `foreachBatch` sink runs per micro-batch), bounded for the oracle:
+    * corpus = even doc_ids (the already-ingested side), batch = odd
+    * doc_ids, and a batch doc survives iff it has NO corpus near-dup at
+    * 5-gram Jaccard >= 0.5 (LSH candidates, exact verify — planted pairs
+    * sit at j >= 0.87, so banding is deterministic here). Docs too short
+    * to shingle are admitted (totality). StreamingSpec proves the
+    * micro-batch sink admits the same set on planted cross-corpus dups. */
   query("st09_neardup_admission", oracle = Some(
       // st09: cross-corpus admission — batch (odd ids) docs with no corpus
       // (even ids) near-dup at 5-gram jaccard >= 0.5; unshingle-able docs
@@ -55,8 +55,8 @@ object StreamQueries extends QueryFamily {
 
   // ===== streaming-shaped (batch-equivalent; streaming variant in tests) ====
 
-  /** Tumbling-window aggregation via window() — identical shape to the
-    * Structured Streaming query in StreamingSpec. */
+  /** Tumbling-window aggregation via window() — the same `groupBy(window)`
+    * runs unchanged on a watermarked stream. */
   query("st01_tumbling_window", oracle = Some(
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS win_start, event_type,
         |       count(*) AS cnt, round(sum(value), 2) AS sum_value_r
@@ -70,10 +70,10 @@ object StreamQueries extends QueryFamily {
       .orderBy("win_start", "event_type")
   }
 
-  /** ST5: windowed top-k — the streaming form runs the bounded-heap TopK
-    * aggregate as stateful streaming state (k pairs per window; see
-    * [[graft.streaming.EventStreams.windowedTopK]], stream==batch in
-    * StreamingSpec); this is its bounded mirror for the oracle. */
+  /** ST5: windowed top-k — on a stream, the bounded-heap TopK aggregate
+    * holds k pairs per window as state (the heap
+    * [[graft.streaming.EventStreams.sessionTopK]] keeps per session); this
+    * is its bounded mirror for the oracle. */
   query("st05_window_topk", oracle = Some(
       // window form of the streaming heap: ranks on the raw double (both
       // engines compare identical parquet doubles), rounds only the output
@@ -210,14 +210,11 @@ object StreamQueries extends QueryFamily {
         coalesce(col("view_id"), lit(-1L)))
   }
 
-  /** ST17 batch mirror: rate-limited admission
-    * ([[graft.streaming.EventStreams.rateLimit]]) — per (event_type,
-    * hour) only the first 50 events in (ts, event_id) order admit: the
-    * ingest-quota gate (crawl politeness, per-source caps). The batch
-    * statement is a window rank over HOUR-BOUNDED groups (each group's
-    * sort is one hour of one type — bounded however long the log);
-    * StreamingSpec proves the keyed-state streaming form admits the
-    * identical set with O(open windows) state. */
+  /** ST17: rate-limited admission — per (event_type, hour) only the
+    * first 50 events in (ts, event_id) order admit: the ingest-quota gate
+    * (crawl politeness, per-source caps). The batch statement is a window
+    * rank over HOUR-BOUNDED groups (each group's sort is one hour of one
+    * type — bounded however long the log). */
   query("st17_rate_limit", oracle = Some(
       // first-50 per (type, hour) in (ts, event_id) order — the quota
       // contract the streaming keyed-state form enforces incrementally
@@ -345,8 +342,8 @@ object StreamQueries extends QueryFamily {
   }
 
   /** ST8: NATIVE session windows ([[EventStreams.sessionWindowCounts]]) —
-    * the engine-managed gap-merged session aggregation (vs st02's custom
-    * keyed-state sessionizer). Same code path batch and streaming; output
+    * the engine-managed gap-merged session aggregation (vs st02's lag +
+    * flag-sum island detection). Same code path batch and streaming; output
     * keys as epoch micros (end = last event + gap, exclusive), so the
     * oracle's island detection (new session when the gap >= 30 min)
     * reproduces the windows integer-exactly. */
@@ -436,14 +433,13 @@ object StreamQueries extends QueryFamily {
       .orderBy("win_start", "event_type")
   }
 
-  /** Batch mirror of the composed streaming ingest
-    * ([[graft.streaming.EventStreams.ingestStream]]): quality gate ->
-    * keep-first fingerprint dedup -> per-language admission counts. The
-    * batch election is the deterministic min-doc_id form of the stream's
-    * first-arrival-wins (StreamingSpec proves they coincide under ordered
-    * arrival). The gate is map-side, the election a partial min over md5
-    * fingerprints and the counts partial-aggregated; text crosses a
-    * shuffle only in the semi-join probe. */
+  /** The composed corpus ingest: quality gate -> keep-first fingerprint
+    * dedup -> per-language admission counts. The election is the
+    * deterministic min-doc_id form of a stream's first-arrival-wins (the
+    * two coincide under ordered arrival). The gate is map-side, the
+    * election a partial min over md5 fingerprints and the counts
+    * partial-aggregated; text crosses a shuffle only in the semi-join
+    * probe. */
   query("st07_stream_ingest", oracle = Some(
       // Quality gate -> keep-first fingerprint election -> per-lang counts:
       // the deterministic batch form of the streaming ingest front door.
@@ -484,13 +480,10 @@ object StreamQueries extends QueryFamily {
       .orderBy("user_id")
   }
 
-  /** ST21: batch mirror of the streaming crawl-change classifier
-    * ([[graft.streaming.EventStreams.crawlChanges]]) — the incremental
-    * face of d25: each fetch classified against the URL's previous
-    * fingerprint in (ts, event_id) order. The mirror states the
-    * deterministic contract declaratively (lag over the URL partition —
-    * the st02 discipline); StreamingSpec proves the O(1)-state streaming
-    * form equals it across micro-batches. Fetch log derived from events:
+  /** ST21: the crawl-change classifier — the incremental face of d25:
+    * each fetch classified against the URL's previous fingerprint in
+    * (ts, event_id) order, stated declaratively (lag over the URL
+    * partition — the st02 discipline). Fetch log derived from events:
     * url from user_id, fingerprint from event_type (types flip over a
     * user's history, so all three statuses are live). */
   query("st21_crawl_changes", oracle = Some(
@@ -632,20 +625,16 @@ object StreamQueries extends QueryFamily {
     s.read.parquet(tmp).orderBy("lang", "rnk")
   }
 
-  /** ST18: batch mirror of the streaming exactly-once dedup
-    * ([[graft.streaming.EventStreams.dedupEvents]]) — the at-least-once
+  /** ST18: exactly-once dedup — the at-least-once
     * delivery scenario stated deterministically: the input is the event
     * log UNION a re-delivered copy of every third event (exact payload
     * copies, as a replayed source partition produces), and admission
     * keeps one row per event_id. Re-delivered rows are bit-identical to
     * their originals, so any-survivor == first-survivor and the batch
-    * `dropDuplicates` states the stream's keep-first contract exactly
-    * (StreamingSpec proves the watermark-bounded streaming form admits
-    * the same set, duplicates dropped, exactly once). Oracle: the
-    * original log — dedup must reconstruct it.
-    * One hash-aggregate dedup on event_id; the streaming form holds one id
-    * per event inside the watermark horizon instead, and either way the
-    * payload shuffles once on the key, never sorts. */
+    * `dropDuplicates` states a stream's keep-first contract exactly.
+    * Oracle: the original log — dedup must reconstruct it.
+    * One hash-aggregate dedup on event_id: the payload shuffles once on
+    * the key, never sorts. */
   query("st18_dedup_redelivery", oracle = Some(
       // exactly-once admission over an at-least-once log: re-delivered
       // copies are exact, so dedup by event_id reconstructs the original
@@ -726,14 +715,11 @@ object StreamQueries extends QueryFamily {
       .orderBy("event_id")
   }
 
-  /** ST19: batch mirror of the streaming near-dup dedup
-    * ([[graft.streaming.EventStreams.dedupNearStream]]) — keep-first per
-    * content fingerprint, stated as the deterministic min-doc_id election
-    * (the st07 discipline: the batch election coincides with the stream's
-    * first-arrival-wins under doc_id-ordered arrival, proven in
-    * StreamingSpec over THIS fingerprint). The fingerprint is the
-    * operator's full fallback chain in its oracle-able md5 form
-    * ([[graft.streaming.EventStreams.nearDupFingerprintMd5]]): null text
+  /** ST19: near-dup dedup — keep-first per content fingerprint, stated
+    * as the deterministic min-doc_id election (the st07 discipline: the
+    * election coincides with a stream's first-arrival-wins under
+    * doc_id-ordered arrival). The fingerprint is a full fallback chain in
+    * an oracle-able md5 form: null text
     * -> id class, short text -> exact-content class, else min md5 over
     * the w=5 word shingles — each class salted so they cannot collide.
     * Scale: fingerprinting is map-only; the election is one equi-shuffle
@@ -760,13 +746,11 @@ object StreamQueries extends QueryFamily {
         |SELECT d.doc_id, d.lang, d.source
         |FROM documents d JOIN win USING (doc_id) ORDER BY d.doc_id""".stripMargin)) { (s, dir) =>
     val docs = tblPar(s, dir, "documents")
-    // same VALUE as EventStreams.nearDupFingerprintMd5, different
-    // physical shape: the streaming form must carry the fingerprint
-    // in-row (it is the state key), but in-row min-over-md5 runs the
-    // interpreted HOF lambda path — 9s at sf0.1. The batch mirror
-    // computes the identical min via explode -> codegen'd md5 -> one
-    // partial-aggregated min (shuffle volume = |docs|), then the
-    // fallback chain totalizes docs with no shingles.
+    // an in-row min-over-md5 (what a streaming state key needs) runs the
+    // interpreted HOF lambda path — 9s at sf0.1. This computes the
+    // identical min via explode -> codegen'd md5 -> one partial-aggregated
+    // min (shuffle volume = |docs|), then the fallback chain totalizes
+    // docs with no shingles.
     val mins = docs
       .select(col("doc_id"), explode(TextOps.shingles(col("text"), 5)).as("sh"))
       .groupBy("doc_id").agg(min(md5(col("sh"))).as("m"))
@@ -781,8 +765,7 @@ object StreamQueries extends QueryFamily {
       .orderBy("doc_id")
   }
 
-  /** ST20: the maintained-aggregate streaming sink's state table
-    * ([[graft.streaming.EventStreams.maintainAggStream]] — its
+  /** ST20: the maintained-aggregate streaming sink's state table (its
     * foreachBatch body is [[graft.relational.IncrementalAgg.applyDelta]],
     * invoked here directly, the st14 discipline): per-user (count, sum)
     * folded in as two micro-batches split by event_id parity, so the

@@ -689,9 +689,9 @@ object VectorQueries extends QueryFamily {
     * — the recommendation-serving primitive: top-k by RAW dot, not
     * cosine (magnitude is signal: popularity/quality-scaled item
     * embeddings). Broadcast queries, one corpus scan, bounded-heap
-    * selection; [[Similarity.mipsAugment]] is the scale path — the
-    * Bachrach/Neyshabur reduction whose rank-equivalence proof in
-    * LlmOpsSpec lets every cosine ANN index here serve MIPS unchanged. */
+    * selection. LlmOpsSpec checks the ranking against cosine top-k over
+    * Bachrach/Neyshabur-augmented vectors, the reduction that lets a
+    * cosine ANN index serve MIPS. */
   query("v18_mips", oracle = Some(
       // raw-dot ranking (NO norm division) — both engines accumulate the
       // dot sequentially in double, so round(dot, 6) is cross-engine exact

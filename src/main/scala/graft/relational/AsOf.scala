@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
  * other single-key shuffle ([[Skew]]).
  *
  * Right rows at the same (key, time) must be unique (dedup first — e.g.
- * [[graft.llm.Dedup.lastWins]]); at equal timestamps the right row sorts
+ * one [[graft.functions.VectorAggregates.argMax]] per key); at equal timestamps the right row sorts
  * BEFORE the left row, so an exactly-simultaneous right row matches
  * ("at or before" semantics, mirroring DuckDB/kdb ASOF JOIN).
  */

@@ -100,8 +100,8 @@ object Bucketing {
     path.fold(w)(p => w.option("path", p)).saveAsTable(table)
   }
 
-  /** The bounded-file-count repartition shared by write and append (see
-    * [[writeBucketed]]'s scaladoc for the (bucket, salt) rationale). */
+  /** The bounded-file-count repartition of [[writeBucketed]] (see its
+    * scaladoc for the (bucket, salt) rationale). */
   private def partitionForBuckets(df: DataFrame, key: String, buckets: Int,
                                   writerTasksPerBucket: Int): DataFrame =
     if (writerTasksPerBucket == 1) df.repartition(buckets, df.col(key))
@@ -113,36 +113,6 @@ object Bucketing {
         .repartition(buckets * k, col("__bucket"), col("__wsalt"))
         .drop("__bucket", "__wsalt")
     }
-
-  /**
-   * Append a batch into an EXISTING bucketed table under the table's own
-   * bucket scheme — the write mode of an incrementally-grown index (a
-   * daily-crawl corpus indexes each new batch without re-shuffling or
-   * re-writing the stored corpus). The bucket spec (key, count, sort) is
-   * read from the catalog, so an append can never silently diverge from
-   * the scheme the table was built with: the batch is hashed into the SAME
-   * murmur3 buckets, each new file joins its bucket's file set, and every
-   * later co-bucketed join stays exchange-free over old + new data alike.
-   * Work and bytes written are batch-sized — the existing table is never
-   * read, only its metadata.
-   */
-  def appendBucketed(df: DataFrame, table: String,
-                     writerTasksPerBucket: Int = 1): Unit = {
-    require(writerTasksPerBucket >= 1, "writerTasksPerBucket must be >= 1")
-    val spark = df.sparkSession
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalStateException(
-      s"appendBucketed: $table is not a bucketed table"))
-    val key = spec.bucketColumnNames.head
-    val sortCols = spec.sortColumnNames
-    partitionForBuckets(df, key, spec.numBuckets, writerTasksPerBucket)
-      .write.format("parquet")
-      .bucketBy(spec.numBuckets, key)
-      .sortBy(sortCols.head, sortCols.tail: _*)
-      .mode("append")
-      .saveAsTable(table)
-  }
 
   def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
 }

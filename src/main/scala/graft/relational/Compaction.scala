@@ -30,7 +30,7 @@ import org.apache.spark.sql.SparkSession
  *    every small byte for cosmetics.)
  *  - A partitioned table compacts per leaf partition directory,
  *    embarrassingly parallel across partitions; this entry point is the
- *    per-directory kernel.
+ *    per-directory kernel, one call per leaf.
  *
  * Commit discipline: the fold is written to a hidden `_compact_tmp`
  * staging dir (underscore-prefixed => invisible to concurrent readers of
@@ -101,57 +101,6 @@ object Compaction {
       small.length, smallTotal)
   }
 
-  /**
-   * Compact every LEAF partition directory of a Hive-layout partitioned
-   * table (`root/k=v/.../files`) — the per-partition loop the kernel doc
-   * advertises. Each leaf is an independent [[compactDir]] call: no
-   * cross-partition reads, no shuffle, partition values live in the dir
-   * names so the folded files never carry (or lose) partition columns.
-   * Embarrassingly parallel across partitions — at cluster scale, leaves
-   * can run as concurrent jobs; sequential here because each inner fold
-   * is already a parallel Spark job and the maintenance window of a
-   * streaming sink is idle time between triggers.
-   *
-   * Returns one report per leaf, keyed by the leaf's path relative to
-   * `root` (e.g. `lang=en`).
-   */
-  def compactPartitioned(spark: SparkSession, root: String, targetBytes: Long,
-                         smallBytes: Long = 0L): Map[String, Report] = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    refuseSinkLog(fs, rootPath)
-
-    def leaves(p: Path): Seq[Path] = {
-      val entries = fs.listStatus(p).filterNot { e =>
-        val n = e.getPath.getName
-        n.startsWith("_") || n.startsWith(".")
-      }
-      val subdirs = entries.filter(_.isDirectory)
-      if (subdirs.isEmpty) Seq(p)
-      else subdirs.toIndexedSeq.flatMap(d => leaves(d.getPath))
-    }
-
-    val rootUri = rootPath.toUri.getPath
-    leaves(rootPath)
-      .filter(p => p != rootPath) // a flat dir has no partitions to loop
-      .map { leaf =>
-        val rel = leaf.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-        rel -> compactDir(spark, leaf.toString, targetBytes, smallBytes)
-      }.toMap
-  }
-
-  /**
-   * A `FileStreamSink` output dir is GOVERNED by its `_spark_metadata`
-   * commit log: batch reads resolve the file list through the log, not
-   * the filesystem, so renaming or deleting data files under it corrupts
-   * the table (readers chase files the log still references). Compaction
-   * therefore refuses such dirs. To maintain a retired or
-   * checkpoint-rotated sink, [[graduateStreamingSink]] drops the log and
-   * turns the dir into a raw parquet table — trading the sink's
-   * exactly-once restart bookkeeping (which only the writing stream ever
-   * used) for maintainability. A LIVE sink must not be graduated: its
-   * next trigger would re-create the log and re-add whatever it commits.
-   */
   /** A BUCKETED table's physical layout is part of its contract: the
     * bucket id lives in the file NAME (`..._00003.c000.parquet`), and
     * every bucket-map join / exchange-free index serve path trusts it.
@@ -169,21 +118,21 @@ object Compaction {
     }
   }
 
+  /** A `FileStreamSink` output dir is GOVERNED by its `_spark_metadata`
+    * commit log: batch reads resolve the file list through the log, not
+    * the filesystem, so renaming or deleting data files under it corrupts
+    * the table (readers chase files the log still references). Compaction
+    * therefore refuses such dirs. A retired sink becomes a raw parquet
+    * table once its log is dropped — trading the sink's exactly-once
+    * restart bookkeeping (which only the writing stream ever used) for
+    * maintainability. A LIVE sink must not lose its log: its next trigger
+    * would re-create the log and re-add whatever it commits. */
   private def refuseSinkLog(fs: org.apache.hadoop.fs.FileSystem,
                             dir: Path): Unit = {
     if (fs.exists(new Path(dir, "_spark_metadata")))
       throw new IllegalStateException(
         s"$dir is a streaming-sink table governed by _spark_metadata; " +
-          "compacting it would orphan the log's file references — run " +
-          "Compaction.graduateStreamingSink first (retired sinks only)")
-  }
-
-  /** Drop a retired streaming sink's `_spark_metadata` log, making the
-    * dir a raw parquet table that [[compactDir]]/[[compactPartitioned]]
-    * may maintain. Returns true if a log existed. */
-  def graduateStreamingSink(spark: SparkSession, dir: String): Boolean = {
-    val log = new Path(dir, "_spark_metadata")
-    val fs = log.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(log, true)
+          "compacting it would orphan the log's file references — " +
+          "drop the _spark_metadata log first (retired sinks only)")
   }
 }

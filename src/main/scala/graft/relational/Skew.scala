@@ -4,12 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
- * Skew-mitigation primitives for hot join/aggregation keys.
+ * Skew mitigation for hot aggregation keys.
  *
- * AQE's skew-join handling (on by default) splits oversized *partitions*,
- * but cannot split a single hot *key* — one key's rows always hash to one
- * task. Salting can: replicate the small side `salt` times and scatter the
- * big side across salt buckets, so a hot key fans out over `salt` tasks.
+ * AQE's skew handling (on by default) splits oversized *partitions*, but
+ * cannot split a single hot *key* — one key's rows always hash to one
+ * task. Salting can: scatter the key's rows across salt buckets, so a hot
+ * key fans out over `salt` tasks.
  *
  * At 100 TB this is the difference between a join that finishes and one
  * task that runs for hours: think "null keys", "empty-string postcode",
@@ -19,39 +19,8 @@ object Skew {
 
   /** Deterministic salt in [0, salt) derived from stable row content —
     * NOT rand(): retries/speculative tasks must land rows in the same
-    * bucket or the join silently duplicates/drops. */
+    * bucket or the aggregate silently double-counts/drops. */
   def saltOf(c: Column, salt: Int): Column = pmod(xxhash64(c), lit(salt))
-
-  /**
-   * Equi-join `big` (skewed keys) with `small` on `key`, scattering each
-   * big-side key over `salt` buckets and replicating the small side once
-   * per bucket. Output columns = big.* ++ (small.* minus the key), like a
-   * plain left join on the key.
-   */
-  def saltedJoinTypes: Set[String] = Set("inner", "left", "left_outer", "leftouter")
-
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String, salt: Int,
-                 joinType: String = "left", saltBy: Option[Column] = None): DataFrame = {
-    require(salt > 0, "salt must be positive")
-    // right/full joins are NOT salting-compatible: each of the `salt`
-    // replicas of a small-side row that finds no big-side partner in its
-    // bucket would surface as its own null-padded output row (up to
-    // salt-1 spurious rows per key vs the plain join)
-    require(saltedJoinTypes.contains(joinType.toLowerCase),
-      s"saltedJoin supports ${saltedJoinTypes.mkString("/")} joins; '$joinType' " +
-        "would emit spurious null-padded rows for replicated small-side rows")
-    // default salt source: hash of the full row CONTENT — never
-    // monotonically_increasing_id(), which depends on partition layout and
-    // would re-salt rows differently on task retry (the hazard saltOf
-    // documents). Identical rows sharing a bucket is harmless.
-    val b = big.withColumn("__salt",
-      saltOf(saltBy.getOrElse(struct(big.columns.map(col).toIndexedSeq: _*)), salt))
-    // replicate the small side salt times: (key, payload) x [0, salt)
-    val s = small.withColumn("__salt", explode(sequence(lit(0), lit(salt - 1))))
-      .withColumnRenamed(key, "__skey")
-    b.join(s, b("__salt") === s("__salt") && b(key) === s("__skey"), joinType)
-      .drop("__salt", "__skey")
-  }
 
   /**
    * Two-phase aggregation for skewed group keys: partial-aggregate on

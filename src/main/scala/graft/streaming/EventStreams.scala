@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -11,22 +11,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * The reference engine is batch-only (SURVEY.md §2.10); this module is the
  * forward-looking streaming surface of the Spark engine. Every transform is
  * written against an unbounded Dataset and works identically on a bounded
- * one — the batch queries st01/st02 in [[graft.queries.Queries]] are the
+ * one — the batch queries in [[graft.queries.StreamQueries]] are the
  * bounded mirrors used by the DuckDB oracle.
  */
 object EventStreams {
-
-  /**
-   * Tumbling 1-hour window counts with a watermark: state for a window is
-   * dropped once the watermark passes its end — bounded state at any scale.
-   */
-  def tumblingCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 2).as("sum_value_r"))
-      .select(col("w.start").as("win_start"), col("event_type"), col("cnt"),
-        col("sum_value_r"))
 
   /**
    * Tumbling-window EXACT distinct users through the mergeable
@@ -52,8 +40,8 @@ object EventStreams {
 
   /**
    * Per-user session aggregation through Spark's NATIVE session_window —
-   * the declarative complement to the custom flatMapGroupsWithState
-   * sessionizer ([[sessionize]]): gap-merged event-time windows
+   * declarative gap sessionization (st02's lag + flag-sum is the batch
+   * form of the same split): gap-merged event-time windows
    * [first_event, last_event + gap) maintained by the engine's built-in
    * session state (merging on watermark advance), no user state code. The
    * same call runs batch (watermark is a no-op) and streaming; a new
@@ -91,49 +79,10 @@ object EventStreams {
         col("sum_value_r"))
 
   /**
-   * Composed streaming corpus ingest — the streaming form of the batch
-   * admission chain (quality gate -> canonical-fingerprint dedup -> admit):
-   * documents arrive as a stream, a stateless word-count gate drops
-   * low-quality rows map-side, and `dropDuplicatesWithinWatermark` admits
-   * the FIRST doc per 5-word-prefix fingerprint, holding one 16-byte key
-   * per admitted doc inside the watermark horizon — the only state in the
-   * pipeline. At 100 TB/day this is the kafka->corpus front door: the
-   * gate never shuffles, dedup shuffles fingerprints only.
-   */
-  def ingestStream(docs: DataFrame, minWords: Int = 30,
-                   watermark: String = "1 hour"): DataFrame =
-    docs.withWatermark("ts", watermark)
-      .filter(size(split(col("text"), " ")) >= minWords)
-      .withColumn("__fp", md5(array_join(slice(split(col("text"), " "), 1, 5), " ")))
-      .dropDuplicatesWithinWatermark("__fp")
-      .select(col("doc_id"), col("lang"), col("ts"))
-
-  /**
-   * Streaming windowed top-k: the k highest-value events per (1-hour
-   * window, event_type) through the native bounded-heap
-   * [[graft.functions.TopK]] aggregate. A TypedImperativeAggregate's
-   * partial-merge contract is exactly what streaming state updates need:
-   * per-(window, type) state is k (value, id) pairs — never the events
-   * themselves — and the watermark drops a window's heap once it closes.
-   */
-  def windowedTopK(events: DataFrame, k: Int = 3,
-                   watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(graft.functions.VectorAggregates
-        .topK(col("value"), col("event_id"), k).as("top"))
-      .select(col("w.start").as("win_start"), col("event_type"),
-        posexplode(col("top")).as(Seq("rnk0", "t")))
-      .select(col("win_start"), col("event_type"),
-        (col("rnk0") + 1).cast("long").as("rnk"),
-        col("t.id").as("event_id"), round(col("t.ord"), 2).as("value_r"))
-
-  /**
    * Session-window top-k — "trending events per user session": the
    * bounded-heap [[graft.functions.TopK]] aggregate as NATIVE
    * session-window state, composing [[sessionWindowCounts]] (engine-managed
-   * gap-merged windows) with [[windowedTopK]] (k-pair heap state). The
+   * gap-merged windows) with the k-pair heap of st05's windowed top-k. The
    * TypedImperativeAggregate's partial-merge contract is what session
    * merging needs: when the engine merges two gap-adjacent session windows
    * it merges their heaps — k (value, id) pairs per open session, never
@@ -155,116 +104,6 @@ object EventStreams {
         col("t.id").as("event_id"), round(col("t.ord"), 2).as("value_r"))
 
   /**
-   * Streaming exactly-once dedup: drop re-delivered events by id, keeping
-   * state only within the watermark horizon (dropDuplicatesWithinWatermark)
-   * — the unbounded-stream analog of the K2 batch dedup, with bounded state.
-   * Batch mirror: st18_dedup_redelivery (re-delivered copies are exact, so
-   * any-survivor == first-survivor and the mirror is deterministic).
-   */
-  def dedupEvents(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** [[dedupNearStream]]'s fingerprint fallback chain (xxhash64 domain).
-    * The chain keeps dropDuplicates' null-grouping from silently collapsing
-    * unrelated docs: short docs (null min-shingle-hash) dedup by exact
-    * content hash, and null-text rows (where xxhash64 degenerates to its
-    * seed, NOT null) dedup by their id — each fallback domain is salted so
-    * the classes cannot collide. */
-  def nearDupFingerprint(text: Column, id: Column, w: Int = 5): Column =
-    when(text.isNull, xxhash64(lit("graft:null-text"), id))
-      .otherwise(coalesce(graft.llm.TextOps.docFingerprint(text, w),
-        xxhash64(lit("graft:short-text"), text)))
-
-  /** The SAME fallback chain in the md5/string domain — semantically the
-    * chain of [[nearDupFingerprint]] (null-text class / short-text class /
-    * min-shingle content class, salted prefixes in place of salted seeds)
-    * with the engine-side 64-bit shingle hash swapped for md5 over the
-    * identical string shingles ([[graft.llm.TextOps.shingles]]), because
-    * md5 + lexicographic min are reproducible in DuckDB while xxhash64 is
-    * not. This is what makes the st19 batch mirror of [[dedupNearStream]]
-    * hash-ORACLE-able; StreamingSpec proves the streaming form over this
-    * fingerprint admits exactly the mirror's winner set. Production keeps
-    * the xxhash64 chain (one codegen kernel, no shingle strings built). */
-  def nearDupFingerprintMd5(text: Column, id: Column, w: Int = 5): Column =
-    when(text.isNull, concat(lit("null:"), id.cast("string")))
-      .otherwise(coalesce(
-        concat(lit("fp:"),
-          array_min(transform(graft.llm.TextOps.shingles(text, w),
-            sh => md5(sh)))),
-        concat(lit("short:"), md5(text))))
-
-  /** Keep the FIRST row per `fingerprint` within the watermark horizon —
-    * the keyed-admission core of [[dedupNearStream]], pluggable so the
-    * oracle-able md5 fingerprint runs the identical streaming path. */
-  def dedupStreamBy(docs: DataFrame, fingerprint: Column,
-                    watermark: String = "1 hour"): DataFrame =
-    docs.withColumn("fingerprint", fingerprint)
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("fingerprint")
-
-  /**
-   * Streaming near-duplicate dedup: keep the first document per content
-   * fingerprint (min shingle hash — [[graft.llm.TextOps.docFingerprint]])
-   * within the watermark horizon. Fingerprint equality catches exact and
-   * near-identical re-crawls cheaply with bounded state; it is the
-   * streaming complement of the batch MinHash-LSH path (which needs the
-   * full corpus for banding + exact verification). Input needs (ts, text).
-   * Batch mirror: st19_neardedup_election (min-doc_id election over the
-   * [[nearDupFingerprintMd5]] form of the chain).
-   */
-  def dedupNearStream(docs: DataFrame, watermark: String = "1 hour",
-                      w: Int = 5, idCol: String = "doc_id"): DataFrame =
-    dedupStreamBy(docs, nearDupFingerprint(col("text"), col(idCol), w),
-      watermark)
-
-  /**
-   * Streaming near-dup ADMISSION against the existing corpus — closes the
-   * loop [[ingestStream]] opened: its gate is quality + exact-fingerprint
-   * WITHIN the stream, while the production front door must also reject
-   * documents that near-duplicate the corpus already ingested. Two forms,
-   * by corpus size:
-   *
-   * 1. THIS operator: a stateless stream-static LEFT ANTI against a
-   *    broadcast signature frame ([[graft.llm.Dedup.withSignatures]]
-   *    output or a [[graft.llm.Dedup.buildMinhashIndex]] read). The match
-   *    predicate is row-local — band-hash ARRAYS overlap (the LSH
-   *    pigeonhole as `arrays_overlap`, no explode, no state) AND exact
-   *    Jaccard >= minJ — so the whole gate is map-side work per
-   *    micro-batch: no shuffle, no streaming state, exactly-once for
-   *    free. Right side must fit a broadcast: decontamination lists,
-   *    benchmark sets, per-domain reference corpora (the d08 shape).
-   * 2. Corpus-scale: `writeStream.foreachBatch` with [[nearDupAdmitBatch]]
-   *    — each micro-batch runs the full BATCH admission
-   *    ([[graft.llm.Dedup.nearDupAdmit]]) against the persisted bucketed
-   *    index: banded candidate equi-joins, id-only shuffles, corpus
-   *    payload never moves. foreachBatch hands a batch frame per trigger,
-   *    so every batch-only operator (distinct, anti-join, persist) is
-   *    legal there while this transform-level operator must stay
-   *    stateless.
-   *
-   * Rows that cannot shingle (short/null text) have null signatures: the
-   * predicate is null -> no match -> ADMITTED, preserving stream totality.
-   */
-  def admitNearDupStream(docs: DataFrame, index: DataFrame, w: Int = 5,
-                         k: Int = 32, bands: Int = 16,
-                         minJ: Double = 0.5): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
-    def bandArr(sig: Column): Column =
-      transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(b, slice(sig, b * r + lit(1), lit(r))))
-    val s = graft.llm.Dedup.withSignaturesTotal(docs, w, k)
-      .withColumn("__bands", bandArr(col("sig")))
-    val c = broadcast(index.select(col("sh").as("__sh_c"),
-      col("n_sh").as("__n_c"), bandArr(col("sig")).as("__bands_c")))
-    val inter = size(array_intersect(col("sh"), col("__sh_c"))).cast("double")
-    val cond = arrays_overlap(col("__bands"), col("__bands_c")) &&
-      inter / (col("n_sh") + col("__n_c") - inter) >= lit(minJ)
-    s.join(c, cond, "left_anti").drop("sh", "n_sh", "sig", "__bands")
-  }
-
-  /**
    * Streaming benchmark DECONTAMINATION gate — d08/d09's guard moved to
    * the crawl front door: an incoming document is dropped iff it shares
    * >= `minShared` distinct w-gram shingles with ANY benchmark document,
@@ -281,8 +120,8 @@ object EventStreams {
    *     admitted map-only, the overwhelmingly common case;
    *  2. bloom suspects (planted contamination + fpp survivors) verify
    *     EXACTLY against the broadcast per-doc bench shingle sets via a
-   *     row-local `array_intersect` LEFT ANTI — the [[admitNearDupStream]]
-   *     discipline, no explode, no aggregation, no false drops.
+   *     row-local `array_intersect` LEFT ANTI — no explode, no
+   *     aggregation, no false drops.
    * Bench sets are bounded (eval suites), so the broadcast is small; the
    * stream side never shuffles. Unshingle-able rows (short/null text)
    * hit neither tier and are admitted — stream totality.
@@ -301,161 +140,6 @@ object EventStreams {
     val verified = suspects.join(benchSets,
       size(array_intersect(col("__sh"), col("__sh_c"))) >= minShared, "left_anti")
     cleanFast.unionByName(verified).drop("__sh", "__hits")
-  }
-
-  /** foreachBatch body for the INDEXED corpus-scale admission path:
-    * `stream.writeStream.foreachBatch { (b, _) =>
-    *   sink(EventStreams.nearDupAdmitBatch(index)(b)) }` — see
-    * [[admitNearDupStream]] form 2.
-    *
-    * materializeBatch is forced OFF: nearDupAdmit's default persist is for
-    * one-shot batch callers, but a streaming query invokes this body every
-    * trigger and nothing here outlives the trigger to unpersist — the
-    * default would leak one persisted batch frame per micro-batch for the
-    * life of the stream. The batch signature subtree is micro-batch-sized,
-    * so letting the planner recompute it for the verify branch is the
-    * bounded choice. */
-  def nearDupAdmitBatch(index: DataFrame, w: Int = 5, k: Int = 32,
-                        bands: Int = 16, minJ: Double = 0.5)(
-                        batch: DataFrame): DataFrame =
-    graft.llm.Dedup.nearDupAdmit(batch, index, w, k, bands, minJ,
-      materializeBatch = false)
-
-  final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
-      event_type: String, value: Double)
-
-  /** Per-user sessionizer state. `events` holds (event_id, ts millis)
-    * pairs at or above the watermark (replays are deduplicated by
-    * event_id); events that have fallen BELOW the watermark can never be
-    * re-delivered (Spark's stateful-op late filter drops them), so they
-    * are compressed into the (headStart, headN, headLast) summary of the
-    * oldest still-open session — at most one open session can span the
-    * watermark, hence one summary. headN == 0 means no summary. State per
-    * user is therefore bounded by the watermark horizon regardless of how
-    * long a session runs.
-    *
-    * State schema v2 (r3): NOT checkpoint-compatible with the r2
-    * single-field shape — a running query upgrading across that boundary
-    * must restart from a fresh checkpoint (Spark's state-schema validation
-    * rejects the old checkpoint rather than corrupting state). */
-  final case class PendingEvents(headStart: Long, headN: Long, headLast: Long,
-      events: Seq[(Long, Long)])
-
-  final case class SessionOut(user_id: Long, session_start_ms: Long,
-      session_end_ms: Long, n_events: Long)
-
-  /**
-   * Gap-based event-time sessionization with explicit keyed state
-   * (flatMapGroupsWithState + EVENT-time timeout).
-   *
-   * Semantics are a pure function of the event content: pending events are
-   * buffered in state (deduplicated by event_id, so replays are idempotent),
-   * and a session is emitted only once the event-time watermark passes its
-   * `last event + gap` horizon — at that point no in-flight event can reopen
-   * it, so late/out-of-order/re-delivered arrivals within the watermark
-   * produce IDENTICAL sessions regardless of batch chunking. The r2 form
-   * used ProcessingTimeTimeout, which keyed eviction on wall clock and made
-   * replayed streams close sessions nondeterministically.
-   *
-   * State is bounded: per user, only events at or above the watermark are
-   * retained verbatim; older events of a still-open session compress into
-   * a constant-size (start, count, last) summary (see [[PendingEvents]]),
-   * emitted sessions are dropped, and the state timeout evicts idle users
-   * entirely — so even a user who never goes idle holds O(watermark
-   * horizon) state, not O(session length).
-   *
-   * Batch execution (no watermark): all events of a user arrive in one
-   * invocation; every gap-closed session is emitted and the final
-   * still-open session is not — the bounded-run streaming contract.
-   * Batch mirror: st02_sessionize (lag + flag-sum).
-   */
-  def sessionize(events: Dataset[Event], gapMs: Long,
-                 watermark: String = "1 hour"): Dataset[SessionOut] = {
-    implicit val outEnc = Encoders.product[SessionOut]
-    implicit val stateEnc = Encoders.product[PendingEvents]
-
-    // split ordered (id, ts) pairs into gap-delimited sessions
-    def split(evs: Seq[(Long, Long)]): Seq[Seq[(Long, Long)]] = {
-      val out = Seq.newBuilder[Seq[(Long, Long)]]
-      var cur = Seq.newBuilder[(Long, Long)]
-      var last = Long.MinValue
-      evs.foreach { case e @ (_, t) =>
-        if (last != Long.MinValue && t - last > gapMs) {
-          out += cur.result()
-          cur = Seq.newBuilder[(Long, Long)]
-        }
-        cur += e
-        last = t
-      }
-      val tail = cur.result()
-      if (tail.nonEmpty) out += tail
-      out.result()
-    }
-
-    // a session as (startMs, lastMs, nEvents, recent events kept verbatim)
-    final case class Sess(startMs: Long, lastMs: Long, n: Long, recent: Seq[(Long, Long)])
-
-    def update(userId: Long, rows: Iterator[Event],
-        state: GroupState[PendingEvents]): Iterator[SessionOut] = {
-      val incoming = rows.map(e => (e.event_id, e.ts.getTime)).toSeq
-      val st = state.getOption.getOrElse(PendingEvents(0L, 0L, 0L, Seq.empty))
-      val all = (st.events ++ incoming).distinctBy(_._1)
-        .sortBy { case (id, t) => (t, id) }
-      // batch execution has no watermark: getCurrentWatermarkMs throws
-      val wm = try state.getCurrentWatermarkMs()
-        catch { case _: UnsupportedOperationException => -1L }
-
-      // gap-split the verbatim events, then chain the compressed head
-      // summary onto the first segment when the gap allows
-      val segs = split(all).map(s => Sess(s.head._2, s.last._2, s.length.toLong, s))
-      val sessions: Seq[Sess] =
-        if (st.headN == 0L) segs
-        else segs match {
-          case first +: rest if first.startMs - st.headLast <= gapMs =>
-            Sess(st.headStart, first.lastMs, st.headN + first.n, first.recent) +: rest
-          case _ =>
-            Sess(st.headStart, st.headLast, st.headN, Seq.empty) +: segs
-        }
-
-      if (wm < 0L) {
-        // bounded input: every gap-closed session emits, the final open one
-        // does not (end-of-input streaming contract); no state to retain
-        return sessions.dropRight(1)
-          .map(s => SessionOut(userId, s.startMs, s.lastMs, s.n)).iterator
-      }
-
-      // a session is safe to close only when NO admissible future event
-      // (ts >= wm) can still chain onto it: last + gap < wm, strictly —
-      // an event at ts == last + gap == wm is not late and belongs to it
-      val (closed, open) = sessions.partition(s => s.lastMs + gapMs < wm)
-      if (open.nonEmpty) {
-        // compress the oldest open session's sub-watermark events into the
-        // head summary (they can never be re-delivered); only one open
-        // session can span the watermark, later ones are entirely >= wm
-        val oldest = open.head
-        val (belowWm, atAbove) = oldest.recent.partition(_._2 < wm)
-        // summary absorbs the pre-existing compressed prefix (counted in
-        // oldest.n but absent from oldest.recent) plus belowWm; its last
-        // timestamp is belowWm's last, or the prior summary's when only
-        // the prefix remains
-        val hN = oldest.n - atAbove.length
-        val hLast = if (belowWm.nonEmpty) belowWm.last._2 else st.headLast
-        state.update(
-          if (hN > 0L)
-            PendingEvents(oldest.startMs, hN, hLast,
-              atAbove ++ open.tail.flatMap(_.recent))
-          else
-            PendingEvents(0L, 0L, 0L, atAbove ++ open.tail.flatMap(_.recent)))
-        state.setTimeoutTimestamp(
-          math.max(open.map(_.lastMs).min + gapMs, wm + 1))
-      } else state.remove()
-      closed.map(s => SessionOut(userId, s.startMs, s.lastMs, s.n)).iterator
-    }
-
-    events.withWatermark("ts", watermark)
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
   }
 
   /** One sensor/price reading: `cents` empty = the reading is missing
@@ -650,38 +334,6 @@ object EventStreams {
     merged.localCheckpoint(true).write.mode("overwrite").parquet(tableDir)
   }
 
-  /** [[sampleBatch]] as the streaming sink. */
-  def sampleStream(docs: DataFrame, tableDir: String, strat: String,
-                   id: String, k: Int): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-      sampleBatch(b, tableDir, strat, id, k)
-    }
-
-  /** [[graft.relational.IncrementalAgg.applyDelta]] as a `foreachBatch`
-    * streaming sink — the always-fresh maintained aggregate fed directly
-    * from the stream: each micro-batch folds its (key, value) rows into
-    * the stored (key, cnt, sum) table, touching only the batch's hash
-    * slots. UNLIKE the upsert sink the fold is additive, NOT idempotent
-    * — a replayed batch double-counts — so this sink belongs behind the
-    * exactly-once dedup gate ([[dedupEvents]]) or a checkpointed source;
-    * the spec exercises the multi-batch convergence contract. */
-  def maintainAggStream(kv: DataFrame, tableDir: String,
-                        nParts: Int = 16): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    kv.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.relational.IncrementalAgg.applyDelta(batch, tableDir, nParts)
-      }
-
-  /** [[upsertBatch]] as a `foreachBatch` streaming sink: the state table
-    * is exactly-once per key because the merge is idempotent (a replayed
-    * batch re-elects the same winners). */
-  def upsertStream(events: DataFrame, tableDir: String,
-                   nParts: Int = 16): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(batch, tableDir, nParts)
-      }
-
   /** LEFT SEMI [[clickViewJoin]] — the conversion-detection form: a
     * click emits ONCE iff at least one view preceded it in the lookback,
     * with no view payload and no per-view row multiplication (the inner
@@ -734,120 +386,6 @@ object EventStreams {
         "left_outer")
       .select(col("click_id"), col("user_id"), col("click_ts"),
         col("click_value"), col("view_id"), col("view_ts"), col("view_value"))
-  }
-
-  /** Per-(type, window) admission counters for [[rateLimit]]: window
-    * start ms -> admitted count, pruned as the watermark passes. */
-  final case class QuotaState(counts: Map[Long, Long])
-
-  /**
-   * RATE-LIMITED admission — ingest quota enforcement at the stream
-   * front door (crawl politeness budgets, per-source daily caps, abuse
-   * throttling): within each (event_type, `windowMs` event-time window)
-   * only the FIRST `n` events in (ts, event_id) order are admitted, the
-   * rest drop. The deterministic contract is event-time rank <= n — the
-   * registered batch mirror states it as a window rank over
-   * hour-bounded groups — and the streaming form enforces it with O(1)
-   * state per OPEN window: a per-type map of window -> admitted-count,
-   * rows sorted within each micro-batch (batch-sized), closed windows
-   * pruned once the watermark passes them. Arrival in event-time order
-   * across triggers makes stream == batch exactly (the st02 sessionizer
-   * contract); out-of-order arrival within one trigger is absorbed by
-   * the in-batch sort.
-   */
-  def rateLimit(events: Dataset[Event], n: Int, windowMs: Long = 3600000L,
-                watermark: String = "2 hours"): Dataset[Event] = {
-    implicit val outEnc = Encoders.product[Event]
-    implicit val stateEnc = Encoders.product[QuotaState]
-    import events.sparkSession.implicits._
-    events.withWatermark("ts", watermark)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[QuotaState, Event](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_, rows, state) =>
-          val counts = scala.collection.mutable.Map.empty[Long, Long]
-          state.getOption.foreach(s => counts ++= s.counts)
-          val admitted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            .filter { e =>
-              val w = e.ts.getTime / windowMs
-              val c = counts.getOrElse(w, 0L)
-              if (c < n) { counts(w) = c + 1; true } else false
-            }
-          // drop counters for windows fully below the watermark: state
-          // is O(open windows), not O(stream lifetime)
-          val wmk = state.getCurrentWatermarkMs()
-          state.update(QuotaState(
-            counts.filter { case (w, _) => (w + 1) * windowMs > wmk }.toMap))
-          admitted.iterator
-      }
-  }
-
-  /** One fetch record at the crawl front door: a URL observed at `ts`
-    * with content fingerprint `fp` (`ts_us` = event-time micros, the
-    * deterministic in-batch sort key — millisecond Timestamp math never
-    * decides an ordering). */
-  final case class Fetch(event_id: Long, ts: java.sql.Timestamp,
-                         url: String, fp: String, ts_us: Long)
-
-  /** Per-URL change state: last seen fingerprint + its event time. */
-  final case class LastFp(fp: String, lastUs: Long)
-
-  final case class ChangeOut(event_id: Long, url: String, status: String)
-
-  /**
-   * Streaming crawl-change classifier — the incremental face of the d25
-   * snapshot diff: as fetches stream in, each record is classified
-   * against the URL's LAST seen fingerprint (`new` = never seen,
-   * `changed` = fingerprint flipped, `unchanged`) and the state advances
-   * — the CDC-at-the-crawl-front-door shape that feeds recrawl
-   * scheduling without ever materializing two snapshots.
-   *
-   * Deterministic contract (what the st21 batch mirror and its DuckDB
-   * oracle state declaratively): status per fetch = comparison against
-   * the previous fetch of the same URL in (ts_us, event_id) order — a
-   * `lag()` over the URL partition. The streaming form holds O(1) state
-   * per URL (one fingerprint, ~50 bytes — state is bounded by the live
-   * URL set, not the fetch history), sorts within each micro-batch, and
-   * expires URLs idle past `idleTtlMs` via event-time timeout (an
-   * expired URL re-reads as `new` — the documented recrawl-horizon
-   * trade every frontier makes; set the TTL above the horizon and the
-   * stream equals the batch mirror exactly, the StreamingSpec proof).
-   */
-  def crawlChanges(fetches: Dataset[Fetch], watermark: String = "2 hours",
-                   idleTtlMs: Long = 7L * 24 * 3600 * 1000): Dataset[ChangeOut] = {
-    implicit val outEnc = Encoders.product[ChangeOut]
-    implicit val stEnc = Encoders.product[LastFp]
-    import fetches.sparkSession.implicits._
-
-    def update(url: String, rows: Iterator[Fetch],
-               state: GroupState[LastFp]): Iterator[ChangeOut] = {
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      val sorted = rows.toSeq.sortBy(f => (f.ts_us, f.event_id))
-      var last = state.getOption.map(_.fp)
-      val out = sorted.map { f =>
-        val status =
-          if (last.isEmpty) "new"
-          else if (last.get != f.fp) "changed"
-          else "unchanged"
-        last = Some(f.fp)
-        ChangeOut(f.event_id, url, status)
-      }
-      // batch execution has no watermark: getCurrentWatermarkMs throws,
-      // and a bounded run keeps no state (the st02 sessionizer contract)
-      val wm = try state.getCurrentWatermarkMs()
-        catch { case _: UnsupportedOperationException => -1L }
-      if (wm >= 0L && sorted.nonEmpty) {
-        state.update(LastFp(last.get, sorted.last.ts_us))
-        state.setTimeoutTimestamp(
-          math.max(sorted.last.ts_us / 1000L + idleTtlMs, wm + 1L))
-      }
-      out.iterator
-    }
-
-    fetches.withWatermark("ts", watermark)
-      .groupByKey(_.url)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
   }
 
   /** FULL OUTER [[clickViewJoin]] — the audit-completeness form, closing

@@ -389,24 +389,6 @@ class BagPipelineSpec extends AnyFunSuite {
       .getString(0) === "Súdwest-Fryslân")
   }
 
-  test("P13/U4: bag date parsing and lat/lon patch utilities") {
-    import org.apache.spark.sql.functions.lit
-    val parsed = spark.range(1)
-      .select(BagUtils.bagDateToTimestamp(lit("2024-06-30T12:34:56.000+02:00")).as("t"),
-        BagUtils.bagDateToTimestamp(lit("2024-06-30")).as("d"))
-      .head()
-    assert(parsed.getTimestamp(0).toString.startsWith("2024-06-30 12:34:56"))
-    assert(parsed.getTimestamp(1).toString.startsWith("2024-06-30 00:00:00"))
-
-    val sess = spark
-    import sess.implicits._
-    val base = Seq(("a", 1.0, 2.0), ("b", 3.0, 4.0)).toDF("id", "latitude", "longitude")
-    val patches = Seq(("b", 30.0, 40.0)).toDF("id", "latitude", "longitude")
-    val out = BagUtils.patchLatLon(base, patches).collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    assert(out("a") === ((1.0, 2.0)) && out("b") === ((30.0, 40.0)))
-  }
-
   test("bucketed materialization: same adressen, join on bucket key shuffle-free") {
     val wh = java.nio.file.Files.createTempDirectory("bag_bucketed").toString
     val bucketed = Pipeline.materializeBucketed(spark, raw, wh, buckets = 4)

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /**
  * [[LoopConf.fixpoint]]: the stop rule, the cap and its one-step exactness
  * check, the `empty` exit, and the cost of a round (one SQL execution: the
- * probe materializes the round's lazy checkpoint).
+ * probe materializes the round's lazy checkpoint). [[LoopConf.scoped]] and
+ * [[LoopConf.scopedPlanHeavy]]: the session conf comes back as it was.
  */
 class LoopConfSpec extends AnyFunSuite {
 
@@ -97,6 +98,26 @@ class LoopConfSpec extends AnyFunSuite {
     val ran = window.filter(e => jobExecs.contains(e._1)).map(_._2)
     assert(ran === Seq.fill(rounds + 1)("count"), s"executions that ran jobs: $ran")
     assert(window.count(_._2 == "localCheckpoint") === rounds, s"executions: $window")
+  }
+
+  test("scoped and scopedPlanHeavy leave a key unset before them unset after them") {
+    val keys = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    keys.foreach(spark.conf.unset)
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    LoopConf.scoped(spark, stateRows = 1L) {
+      assert(spark.conf.get("spark.sql.adaptive.enabled") === "false")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === "1")
+    }
+    intercept[IllegalStateException](LoopConf.scopedPlanHeavy(spark) {
+      assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst") === "false")
+      throw new IllegalStateException("body failed")
+    })
+    val set = spark.conf.getAll
+    assert(keys.filter(set.contains) === Nil, s"set after the scope: ${keys.filter(set.contains)}")
+    // a key that was set gets its value back
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === partitions)
   }
 
   test("kCore: a 60-node path peels to empty at k = 2 in 30 uncapped rounds") {

@@ -198,7 +198,7 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SELECT perceptual_hash(cast('abc' as binary)) AS p," +
         " perceptual_hash(cast('' as binary)) AS z").head()
     assert(ph.getSeq[Long](0) ===
-      graft.llm.Multimodal.MediaCodecStub.phash("abc".getBytes("UTF-8")).toSeq)
+      graft.llm.PhashRef.phash("abc".getBytes("UTF-8")).toSeq)
     assert(ph.getSeq[Long](1) === Seq(0L, 0L, 0L, 0L))
   }
 

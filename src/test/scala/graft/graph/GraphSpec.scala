@@ -112,7 +112,7 @@ class GraphSpec extends AnyFunSuite {
     val powersOf10 = Iterator.iterate(1L)(_ * 10L)
       .takeWhile(_ <= 1000000000000000000L).toSet
     for (n <- Seq(1L, 3L, 1000L, 1000000L, 100000000L, 1000000000L, cap / 10, cap)) {
-      val s = PageRank.autoScale(n)
+      val s = PageRankRef.autoScale(n)
       assert(powersOf10.contains(s), s"n=$n scale=$s not a power of 10")
       // the bound holds ...
       assert(s <= cap / n, s"n=$n scale=$s overflows the damping multiply")
@@ -120,10 +120,10 @@ class GraphSpec extends AnyFunSuite {
       assert(s > cap / n / 10L, s"n=$n scale=$s not maximal")
     }
     // fixture-sized graphs keep >= 12 decimal digits; web-scale keeps >= 8
-    assert(PageRank.autoScale(3L) == 10000000000000000L)
-    assert(PageRank.autoScale(1000000L) == 100000000000L)
-    assert(PageRank.autoScale(1000000000L) == 100000000L)
-    intercept[IllegalArgumentException](PageRank.autoScale(0L))
+    assert(PageRankRef.autoScale(3L) == 10000000000000000L)
+    assert(PageRankRef.autoScale(1000000L) == 100000000000L)
+    assert(PageRankRef.autoScale(1000000000L) == 100000000L)
+    intercept[IllegalArgumentException](PageRankRef.autoScale(0L))
   }
 
   test("pageRankFixed: an empty graph yields an empty result, not an assert failure") {
@@ -147,7 +147,7 @@ class GraphSpec extends AnyFunSuite {
     val e = ring.union(ring.select(col("dst").as("src"), col("src").as("dst")))
     val five = PageRank.pageRankFixed(e, iters = 5)
     val ten = PageRank.pageRankFixed(e, iters = 10)
-    val scale = PageRank.autoScale(n)
+    val scale = PageRankRef.autoScale(n)
     for (r <- Seq(five, ten)) {
       val stats = r.agg(count(lit(1)), min(col("rank")), max(col("rank"))).head()
       assert(stats.getLong(0) == n && stats.getLong(1) == scale && stats.getLong(2) == scale)
@@ -178,7 +178,7 @@ class GraphSpec extends AnyFunSuite {
     val ring = spark.range(n).select(col("id").as("src"),
         ((col("id") + 1L) % n).as("dst"))
     val e = ring.union(ring.select(col("dst").as("src"), col("src").as("dst")))
-    val scale = PageRank.autoScale(n)
+    val scale = PageRankRef.autoScale(n)
     assert(scale == 100000000000L)
     val ranks = PageRank.pageRankFixed(e, iters = 1)
     val stats = ranks.agg(count(lit(1)), min(col("rank")), max(col("rank")))
@@ -192,7 +192,7 @@ class GraphSpec extends AnyFunSuite {
     // seed 1 -> {2, 3}; 4 is disconnected from trust (edge 4 -> 2 only
     // SENDS); with one seed the auto scale is the full 10^16
     val e = edgesDf(Seq(1L -> 2L, 1L -> 3L, 4L -> 2L))
-    val s = PageRank.autoScale(1L) // seed-count bound: 10^17
+    val s = PageRankRef.autoScale(1L) // seed-count bound: 10^17
     assert(s == 100000000000000000L)
     val ranks = PageRank.trustRankFixed(e, nodesDf(Seq(1L)), iters = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -3,77 +3,56 @@ package graft.ingest
 import java.nio.file.{Files, Path}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
-import graft.{BagFixtures, Config, Pipeline}
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import graft.BagFixtures
 import org.scalatest.funsuite.AnyFunSuite
 
-/** S1 staging: the executor-side distributed unzip must be a drop-in for
-  * the driver-side pool — same staging layout, same pipeline results. */
+/** S1 staging: re-staging into a reused directory holds only the new
+  * extract's files. */
 class BagZipSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bagzip-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private def zip(zipPath: Path, files: Seq[Path]): Unit = {
+    val zos = new ZipOutputStream(Files.newOutputStream(zipPath))
+    try files.foreach { f =>
+      zos.putNextEntry(new ZipEntry(f.getFileName.toString))
+      zos.write(Files.readAllBytes(f))
+      zos.closeEntry()
+    } finally zos.close()
+  }
 
   /** Pack each fixture code dir into an inner zip named like the BAG
-    * extract's members (e.g. 9999NUM08102025.zip). */
-  private def packInnerZips(xmlDirs: Map[String, String], zipDir: Path): Unit = {
-    Files.createDirectories(zipDir)
-    xmlDirs.foreach { case (code, dir) =>
+    * extract's members (e.g. 9999NUM08102025.zip), and those into one
+    * outer zip. */
+  private def packExtract(xmlDirs: Map[String, String], root: Path): Path = {
+    val zipDir = Files.createDirectories(root.resolve("zips"))
+    val inner = xmlDirs.toSeq.map { case (code, dir) =>
       val zipPath = zipDir.resolve(s"${code}08102025.zip")
-      val zos = new ZipOutputStream(Files.newOutputStream(zipPath))
-      try {
-        Files.list(java.nio.file.Paths.get(dir)).forEach { f =>
-          zos.putNextEntry(new ZipEntry(f.getFileName.toString))
-          zos.write(Files.readAllBytes(f))
-          zos.closeEntry()
-        }
-      } finally zos.close()
+      zip(zipPath, Files.list(java.nio.file.Paths.get(dir)).iterator.asScala.toSeq)
+      zipPath
     }
+    val outer = root.resolve("bag.zip")
+    zip(outer, inner)
+    outer
   }
 
   test("re-staging clears previous extract's files (XML names embed the extract date)") {
     val root = Files.createTempDirectory("bagzip_restage")
     val (xmlDirs, _) = BagFixtures.write(root.resolve("plain"))
-    packInnerZips(xmlDirs, root.resolve("zips"))
+    val outer = packExtract(xmlDirs, root).toString
     val stagedDir = root.resolve("staged").toString
 
-    val first = BagZip.stageDistributed(spark, root.resolve("zips").toString, stagedDir)
+    val first = BagZip.stage(outer, stagedDir)
     // simulate a file left behind by a previous (older) extract
     val strayCode = first.keys.head
     val stray = java.nio.file.Paths.get(first(strayCode), "9999STALE01012020-000001.xml")
     Files.writeString(stray, "<stale/>")
 
-    val second = BagZip.stageDistributed(spark, root.resolve("zips").toString, stagedDir)
+    val second = BagZip.stage(outer, stagedDir)
     assert(!Files.exists(stray),
       "stale file from a previous extract survived re-staging — both extracts would co-ingest")
     second.values.foreach { d =>
       assert(Files.list(java.nio.file.Paths.get(d)).count() > 0)
     }
-  }
-
-  test("stageDistributed extracts inner zips on executors; pipeline result matches") {
-    val root = Files.createTempDirectory("bagzip_spec")
-    val (xmlDirs, csv) = BagFixtures.write(root.resolve("plain"))
-    packInnerZips(xmlDirs, root.resolve("zips"))
-
-    val staged = BagZip.stageDistributed(spark,
-      root.resolve("zips").toString, root.resolve("staged").toString)
-    assert(staged.keySet === xmlDirs.keySet)
-    staged.values.foreach { d =>
-      assert(Files.list(java.nio.file.Paths.get(d)).count() > 0, s"empty staging dir $d")
-    }
-
-    val cfg = Config(asOfDate = BagFixtures.asOf)
-    val fromPlain = Pipeline.rawTables(spark, xmlDirs, csv, cfg)
-    val fromStaged = Pipeline.rawTables(spark, staged, csv, cfg)
-    val a = fromPlain.nummers.collect().map(_.toString).sorted
-    val b = fromStaged.nummers.collect().map(_.toString).sorted
-    assert(a === b)
-    assert(fromStaged.woonplaatsen.count() === fromPlain.woonplaatsen.count())
   }
 }

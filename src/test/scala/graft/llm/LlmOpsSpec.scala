@@ -67,16 +67,6 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(fromTable === oneShot)
   }
 
-  test("minhashDedup drops the larger id of each matched pair") {
-    val pairs = Dedup.minhashLshPairs(docs, w = 5, minJ = 0.7)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val dropped = pairs.map(_._2).toSet
-    val surviving = Dedup.minhashDedup(docs, minJ = 0.7)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(dropped.forall(id => !surviving.contains(id)))
-    assert(surviving.size === docs.count() - dropped.size)
-  }
-
   test("embedding near-dup: keep-first grouping; LSH-candidate scale path recalls the exact groups") {
     import org.apache.spark.sql.functions.{col, expr, round => f_round}
     graft.functions.GraftExtensions.register(spark)
@@ -186,14 +176,12 @@ class LlmOpsSpec extends AnyFunSuite {
     val base = (1 to 40).map(i => s"w$i").mkString(" ")
     val reordered = (1 to 40).map(i => s"w$i").reverse.mkString(" ")
     val other = (100 to 140).map(i => s"q$i").mkString(" ")
-    val df = docsDf(Seq(1L -> base, 2L -> reordered, 3L -> other))
-    val pairs = Dedup.simhashPairs(df, maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(pairs === Set((1L, 2L, 0L))) // identical bag -> hamming 0
-    // graded distance: a 1-word substitution lands between identical and
-    // unrelated (bit flips scale with the changed weight / sqrt(n))
     val h = (a: String, b: String) => java.lang.Long.bitCount(
       Dedup.simhash64(a.split(" ").toSeq) ^ Dedup.simhash64(b.split(" ").toSeq))
+    assert(h(base, reordered) === 0) // identical bag -> hamming 0
+    assert(h(base, other) > 3)
+    // graded distance: a 1-word substitution lands between identical and
+    // unrelated (bit flips scale with the changed weight / sqrt(n))
     val oneChanged = ((1 to 39).map(i => s"w$i") :+ "CHANGED").mkString(" ")
     assert(h(base, oneChanged) > 0 && h(base, oneChanged) < h(base, other))
   }
@@ -315,7 +303,7 @@ class LlmOpsSpec extends AnyFunSuite {
         Seq("er", "re", "st", "ab"))) {
       val fast = graft.llm.TextOps.bpeEncode(docs, merges)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted
-      val spec = graft.llm.TextOps.bpeEncodeHof(docs, merges)
+      val spec = TextOpsRef.bpeEncodeHof(docs, merges)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted
       assert(fast === spec, s"kernel != replace chain for merges=$merges")
     }
@@ -834,7 +822,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val cols = Seq("doc_id", "redacted", "n_emails", "n_ips", "n_phones")
     val kernel = TextOps.piiRedact(df).select(cols.head, cols.tail: _*)
       .collect().map(_.toString).sorted
-    val spec = TextOps.piiRedactSpec(df).select(cols.head, cols.tail: _*)
+    val spec = TextOpsRef.piiRedactSpec(df).select(cols.head, cols.tail: _*)
       .collect().map(_.toString).sorted
     assert(kernel === spec)
     // registered SQL surface
@@ -1021,7 +1009,7 @@ class LlmOpsSpec extends AnyFunSuite {
   test("native regex_token_count matches size(regexp_extract_all) exactly, incl. non-ASCII fallback") {
     def check(df: org.apache.spark.sql.DataFrame): Unit = {
       val bad = df.select(
-        size(TextOps.regexTokens(col("text"))).as("hof"),
+        size(TextOpsRef.regexTokens(col("text"))).as("hof"),
         TextOps.regexTokenCount(col("text")).as("nat"))
         .filter(col("hof") =!= col("nat")).count()
       assert(bad === 0L)
@@ -1234,14 +1222,11 @@ class LlmOpsSpec extends AnyFunSuite {
             (x, y) => when((x >= 0f) =!= (y >= 0f), 1L).otherwise(0L)),
           lit(0L), (acc, v) => acc + v).as("ham_naive"))
       .select(col("vec_id"), col("vid_b"), col("ham_naive"),
-        Similarity.hammingPacked(col("sig_a"), col("sig_b")).as("ham_packed"),
         expr("hamming_dist(sig_a, sig_b)").as("ham_native"))
       .collect()
     assert(pairs.nonEmpty)
     pairs.foreach { r =>
       assert(r.getLong(3) === r.getLong(2),
-        s"packed hamming diverged for (${r.getLong(0)}, ${r.getLong(1)})")
-      assert(r.getLong(4) === r.getLong(2),
         s"native hamming_dist diverged for (${r.getLong(0)}, ${r.getLong(1)})")
     }
 
@@ -1254,7 +1239,7 @@ class LlmOpsSpec extends AnyFunSuite {
       .join(broadcast(queries.select(col("vec_id").as("query_id"),
         Similarity.signBits(col("embedding")).as("q_sig"))),
         col("query_id") =!= col("neighbor_id"))
-      .withColumn("ham", Similarity.hammingPacked(col("q_sig"), col("c_sig")))
+      .withColumn("ham", graft.functions.VectorExpressions.hammingDist(col("q_sig"), col("c_sig")))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
       .orderBy(col("ham").asc, col("neighbor_id").asc)
     val viaWindow = scored.withColumn("rnk", row_number().over(w).cast("long"))
@@ -1339,7 +1324,7 @@ class LlmOpsSpec extends AnyFunSuite {
   test("grid cosine pairs match the declarative all-pairs join bit-for-bit") {
     def collect(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val declarative = collect(Similarity.cosinePairs(emb, minCos = 0.3))
+    val declarative = collect(SimilarityRef.cosinePairs(emb, minCos = 0.3))
     assert(declarative.nonEmpty)
     // a degenerate single-cell grid, mid/odd widths, and the in-plan AUTO
     // sizing (numBlocks=0) must all agree exactly: cell decomposition is
@@ -1362,7 +1347,7 @@ class LlmOpsSpec extends AnyFunSuite {
     ).toDF("vec_id", "embedding")
     def collect(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val decl = collect(Similarity.cosinePairs(z, minCos = -1.0))
+    val decl = collect(SimilarityRef.cosinePairs(z, minCos = -1.0))
     val grid = collect(Similarity.cosinePairsGrid(z, minCos = -1.0, numBlocks = 3))
     assert(decl === grid, s"NaN handling diverged: decl=$decl grid=$grid")
     assert(decl.map(p => (p._1, p._2)) === Set((1L, 2L)),
@@ -1375,8 +1360,8 @@ class LlmOpsSpec extends AnyFunSuite {
       .crossJoin(emb.limit(5).select(col("vec_id").as("ib"), col("embedding").as("eb")))
     val diffs = pairs.select(
       (expr("vec_dot(ea, eb)") -
-        Similarity.dot(col("ea"), col("eb"))).as("d_dot"),
-      (expr("vec_norm(ea)") - Similarity.norm(col("ea"))).as("d_norm"))
+        SimilarityRef.dot(col("ea"), col("eb"))).as("d_dot"),
+      (expr("vec_norm(ea)") - SimilarityRef.norm(col("ea"))).as("d_norm"))
       .agg(max(abs(col("d_dot"))), max(abs(col("d_norm")))).head()
     assert(diffs.getDouble(0) === 0.0) // identical sequential double fold
     assert(diffs.getDouble(1) === 0.0)
@@ -1387,7 +1372,7 @@ class LlmOpsSpec extends AnyFunSuite {
     import s.implicits._
     val df = Seq((Array(1.0f, 0.0f, 1.0f), Array(0.5f, 0.5f, 0.0f)))
       .toDF("a", "b")
-    val got = df.select(Similarity.cosine(col("a"), col("b")).as("c"))
+    val got = df.select(SimilarityRef.cosine(col("a"), col("b")).as("c"))
       .collect().head.getDouble(0)
     val expect = 0.5 / (math.sqrt(2.0) * math.sqrt(0.5))
     assert(math.abs(got - expect) < 1e-12)
@@ -1515,7 +1500,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // interpreted kernel == spec
     payloads.foreach { p =>
       assert(graft.functions.PerceptualHash.hash(p).toSeq ===
-        Multimodal.MediaCodecStub.phash(p).toSeq, s"len=${p.length}")
+        PhashRef.phash(p).toSeq, s"len=${p.length}")
     }
     // engine path (codegen) == spec
     val s = spark
@@ -1526,7 +1511,7 @@ class LlmOpsSpec extends AnyFunSuite {
         graft.functions.MediaExpressions.perceptualHash(col("payload")).as("ph"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     payloads.zipWithIndex.foreach { case (p, i) =>
-      assert(viaEngine(i.toLong) === Multimodal.MediaCodecStub.phash(p).toSeq,
+      assert(viaEngine(i.toLong) === PhashRef.phash(p).toSeq,
         s"engine diverged from spec at len=${p.length}")
     }
   }
@@ -1577,7 +1562,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // pruning contract: every duplicate it marks is backed by a REAL
     // cosine pair of the exact quadratic grid (clustering only prunes
     // candidates, it can never invent similarity)
-    val exactPaired = Similarity.cosinePairs(emb, 0.35)
+    val exactPaired = SimilarityRef.cosinePairs(emb, 0.35)
       .select("id_a", "id_b").collect()
       .flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
     val dups = out.filter(r => !r.getBoolean(4)).map(_.getLong(0))
@@ -1723,7 +1708,14 @@ class LlmOpsSpec extends AnyFunSuite {
     // space (corpus padded to constant norm M, query padded with 0)
     // reproduces the inner-product ranking exactly — the lemma that lets
     // every cosine ANN index serve MIPS
-    val (corpusAug, queriesAug) = Similarity.mipsAugment(scaled, queries)
+    val withNorm = scaled.withColumn("__nrm", graft.functions.VectorExpressions.vecNorm(col("embedding")))
+    val m = withNorm.agg(max(col("__nrm"))).head().getDouble(0)
+    val corpusAug = withNorm
+      .withColumn("embedding", concat(col("embedding"), array(
+        sqrt(greatest(lit(m * m) - col("__nrm") * col("__nrm"), lit(0.0))).cast("float"))))
+      .drop("__nrm")
+    val queriesAug = queries
+      .withColumn("embedding", concat(col("embedding"), array(lit(0.0f))))
     val viaAug = Similarity.knnBrute(corpusAug, queriesAug, k = 5)
       .select("query_id", "neighbor_id", "rnk")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
@@ -2041,7 +2033,7 @@ class LlmOpsSpec extends AnyFunSuite {
       val frames = (0 until 8).map(_ * step).filter(_ < payload.length)
         .map(o => payload.slice(o, math.min(o + 64, payload.length)))
         .filter(_.nonEmpty)
-      val hs = frames.map(Multimodal.MediaCodecStub.phash)
+      val hs = frames.map(PhashRef.phash)
       val hams = hs.sliding(2).map { case Seq(a, b) =>
         a.zip(b).map { case (x, y) => java.lang.Long.bitCount(x ^ y).toLong }.sum
       }.toSeq

@@ -23,26 +23,6 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  test("saltedJoin returns exactly the plain join result on a skewed key") {
-    val li = spark.read.parquet(s"$sf/lineitem.parquet")
-      .select("l_orderkey", "l_returnflag", "l_quantity") // l_returnflag: 3 hot keys
-    val dim = spark.read.parquet(s"$sf/lineitem.parquet")
-      .select(col("l_returnflag")).distinct()
-      .withColumn("flag_name", concat(lit("flag_"), col("l_returnflag")))
-    val plain = li.join(dim, Seq("l_returnflag"), "left")
-      .select("l_orderkey", "l_quantity", "flag_name")
-      .collect().map(_.toString).sorted
-    val salted = Skew.saltedJoin(li, dim, "l_returnflag", salt = 7)
-      .select("l_orderkey", "l_quantity", "flag_name")
-      .collect().map(_.toString).sorted
-    assert(salted === plain)
-    // the salted exchange hashes on (salt, key), so one hot key spreads
-    // over up to 7 partitions — visible as __salt in the join condition
-    val p = Skew.saltedJoin(li, dim, "l_returnflag", salt = 7)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("__salt"), p)
-  }
-
   test("saltedAgg equals plain aggregation on a hot key") {
     val ev = spark.read.parquet(s"$sf/lineitem.parquet")
     val plain = ev.groupBy("l_returnflag")
@@ -137,49 +117,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
-  test("sign index append: incremental growth == full rebuild, write is batch-sized") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val b1 = emb.filter(col("vec_id") % 2 === 0)
-    val b2 = emb.filter(col("vec_id") % 2 === 1)
-    val queries = emb.filter(col("vec_id") < 8)
-    graft.llm.Similarity.buildSignIndex(b1, "sign_incr_idx", buckets = 4)
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier("sign_incr_idx")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(ident).location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(): Set[String] = {
-      val it = fs.listFiles(loc, true)
-      val b = Set.newBuilder[String]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) b += f.getPath.toString
-      }
-      b.result()
-    }
-    val filesBefore = dataFiles()
-
-    graft.llm.Similarity.appendToSignIndex(b2, "sign_incr_idx")
-
-    val filesAfter = dataFiles()
-    assert(filesBefore.subsetOf(filesAfter),
-      "append must not rewrite or drop existing index files")
-    val newFiles = (filesAfter -- filesBefore).toSeq
-    assert(newFiles.nonEmpty)
-    assert(spark.read.parquet(newFiles: _*).count() === b2.count(),
-      "append must write exactly the batch's rows")
-
-    // serving parity: the grown index answers exactly like a rebuild
-    graft.llm.Similarity.buildSignIndex(emb, "sign_full_idx", buckets = 4)
-    val viaIncr = graft.llm.Similarity.hammingRerankIndexed(
-      spark, "sign_incr_idx", queries, k = 5, shortlist = 20)
-      .collect().map(_.toString).sorted
-    val viaFull = graft.llm.Similarity.hammingRerankIndexed(
-      spark, "sign_full_idx", queries, k = 5, shortlist = 20)
-      .collect().map(_.toString).sorted
-    assert(viaIncr.nonEmpty && viaIncr === viaFull)
-  }
-
-  test("sign index delete: tombstones == never-indexed; vacuum folds physically") {
+  test("sign index delete: tombstones == never-indexed") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 8)
     val deleted = emb.filter(col("vec_id") % 7 === 0).select("vec_id")
@@ -219,22 +157,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     // and no tombstoned id survives as a neighbor anywhere
     val delIds = deleted.collect().map(_.getLong(0)).toSet
     assert(viaTomb.collect().forall(r => !delIds(r.getAs[Long]("neighbor_id"))))
-
-    // vacuum: survivors-only physical layout under the same bucket spec,
-    // tombstone table dropped, serving identical before/after the swap
-    graft.llm.Similarity.vacuumSignIndex(spark, "sign_del_idx")
-    assert(!spark.catalog.tableExists("sign_del_idx_tombstones"))
-    assert(spark.table("sign_del_idx").count() === survivors.count())
-    val spec = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier("sign_del_idx")).bucketSpec
-    assert(spec.exists(s => s.numBuckets == 4 && s.bucketColumnNames == Seq("vec_id")),
-      s"vacuum must preserve the bucket spec, got $spec")
-    val afterVacuum = graft.llm.Similarity.hammingRerankIndexed(
-      spark, "sign_del_idx", queries, k = 5, shortlist = 20)
-      .collect().map(_.toString).sorted
-    assert(afterVacuum === viaRef)
-    // second vacuum with no tombstones: no-op, not an error
-    graft.llm.Similarity.vacuumSignIndex(spark, "sign_del_idx")
   }
 
   test("time travel: pinned reads survive later writes; rollback re-points without rewriting") {
@@ -552,73 +474,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
-  test("minhash index append: incremental growth == full rebuild, write is batch-sized") {
-    val s = spark
-    import s.implicits._
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-      .select("doc_id", "text")
-    val b1 = docs.filter(col("doc_id") % 2 === 0)
-    val b2 = docs.filter(col("doc_id") % 2 === 1)
-    graft.llm.Dedup.buildMinhashIndex(b1, "incr_idx", w = 5, k = 32, buckets = 4)
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier("incr_idx")
-    def meta() = spark.sessionState.catalog.getTableMetadata(ident)
-    val loc = new org.apache.hadoop.fs.Path(meta().location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(): Set[String] = {
-      val it = fs.listFiles(loc, true)
-      val b = Set.newBuilder[String]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) b += f.getPath.toString
-      }
-      b.result()
-    }
-    val filesBefore = dataFiles()
-    val specBefore = meta().bucketSpec
-
-    graft.llm.Dedup.appendToMinhashIndex(b2, "incr_idx")
-
-    // the append wrote ONLY batch-sized data: every pre-existing file
-    // survives untouched and the new files hold exactly the batch's
-    // signature rows — the stored corpus was never read or rewritten
-    val filesAfter = dataFiles()
-    assert(filesBefore.subsetOf(filesAfter),
-      "append must not rewrite or drop existing index files")
-    val newFiles = (filesAfter -- filesBefore).toSeq
-    assert(newFiles.nonEmpty)
-    val newRows = spark.read.parquet(newFiles: _*).count()
-    val batchSigs = graft.llm.Dedup.withSignatures(b2, 5, 32)
-      .filter(col("sig").isNotNull).count()
-    assert(newRows === batchSigs,
-      s"append wrote $newRows rows, batch has $batchSigs signature rows")
-    // the bucket scheme is the table's own — an append can't diverge
-    assert(meta().bucketSpec === specBefore)
-
-    // serving parity: LSH pairs from the incrementally-grown index are
-    // IDENTICAL to a from-scratch rebuild over the full corpus
-    graft.llm.Dedup.buildMinhashIndex(docs, "full_idx", w = 5, k = 32, buckets = 4)
-    val inc = graft.llm.Dedup.minhashLshPairsIndexed(spark, "incr_idx",
-      k = 32, bands = 16, minJ = 0.5).collect().map(_.toString).sorted
-    val full = graft.llm.Dedup.minhashLshPairsIndexed(spark, "full_idx",
-      k = 32, bands = 16, minJ = 0.5).collect().map(_.toString).sorted
-    assert(inc.nonEmpty && inc === full,
-      "incrementally-grown index must serve the rebuild's exact pair set")
-
-    // admission parity: copies of docs from BOTH halves are rejected and a
-    // novel doc admitted, identically through either index
-    val copies = docs.filter(col("doc_id") < 20)
-      .select((col("doc_id") + 500000L).as("doc_id"), col("text"))
-    val probe = copies.union(Seq((999999L,
-      "entirely novel vocabulary about bucketed append parity checks")).toDF("doc_id", "text"))
-    def admit(table: String) = graft.llm.Dedup.nearDupAdmit(probe,
-        graft.relational.Bucketing.read(spark, table), w = 5, k = 32,
-        bands = 16, minJ = 0.7)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    val viaInc = admit("incr_idx")
-    assert(viaInc === admit("full_idx"))
-    assert(viaInc === Seq(999999L), s"admission set wrong: $viaInc")
-  }
-
   test("asofJoin: at-or-before semantics, nulls before first right row, one shuffle, no join node") {
     val s = spark
     import s.implicits._
@@ -908,71 +763,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
   }
 
-  test("pageRank layout append: batch-sized growth == rebuild, loop stays exchange-free") {
-    val s = spark
-    import s.implicits._
-    // base graph: a 40-ring with two chords; batch: new edges including
-    // duplicates of stored ones and a brand-new node 41
-    val a = (0L until 40L).map(i => (i, (i + 1) % 40)) ++ Seq((0L, 20L), (5L, 25L))
-    val b = (0L until 40L).map(i => (i, (i + 2) % 40)) ++
-      Seq((0L, 20L), (7L, 3L), (41L, 0L), (3L, 41L))
-    graft.graph.PageRank.buildEdgeLayout(a.toDF("src", "dst"), "pr_incr", buckets = 4)
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier("pr_incr_edges")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(ident).location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(): Set[String] = {
-      val it = fs.listFiles(loc, true)
-      val out = Set.newBuilder[String]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) out += f.getPath.toString
-      }
-      out.result()
-    }
-    val filesBefore = dataFiles()
-
-    graft.graph.PageRank.appendToEdgeLayout(b.toDF("src", "dst"), "pr_incr")
-
-    // stored edges never rewritten; only the deduped batch appended
-    val filesAfter = dataFiles()
-    assert(filesBefore.subsetOf(filesAfter),
-      "append must not rewrite or drop existing edge files")
-    val newFiles = (filesAfter -- filesBefore).toSeq
-    assert(newFiles.nonEmpty)
-    val expectFresh = (b.toSet -- a.toSet).size
-    assert(spark.read.parquet(newFiles: _*).count() === expectFresh.toLong,
-      "append must write exactly the batch's NEW edges")
-    // stored edge set keeps set semantics through the anti-join dedup
-    val stored = graft.relational.Bucketing.read(spark, "pr_incr_edges")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(stored.length === stored.distinct.length)
-
-    // serving parity: grown layout == from-scratch rebuild, bit-identical
-    graft.graph.PageRank.buildEdgeLayout((a ++ b).toDF("src", "dst"), "pr_full",
-      buckets = 4)
-    val inc = graft.graph.PageRank.pageRankIndexed(spark, "pr_incr")
-      .collect().map(_.toString).sorted
-    val full = graft.graph.PageRank.pageRankIndexed(spark, "pr_full")
-      .collect().map(_.toString).sorted
-    assert(inc.nonEmpty && inc === full)
-
-    // the read-side degree sum + node distinct run on the bucketed scans'
-    // own distribution: the contrib join over the GROWN layout still
-    // plans zero exchanges
-    val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val e = graft.relational.Bucketing.read(spark, "pr_incr_edges")
-      val deg = graft.relational.Bucketing.read(spark, "pr_incr_degrees")
-        .groupBy("src").agg(sum(col("deg")).as("deg"))
-      val p = e.join(deg, "src").queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(!p.contains("Exchange"),
-        s"grown edge/degree join shuffles:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-  }
-
   test("IVF index: identical results to the inline path, corpus scored in place") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 8)
@@ -1021,55 +811,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(filtered.count() > 0 && bad.count() === 0)
   }
 
-  test("IVF index append: frozen-quantizer growth == rebuild, write is batch-sized") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val b1 = emb.filter(col("vec_id") % 2 === 0)
-    val b2 = emb.filter(col("vec_id") % 2 === 1)
-    val queries = emb.filter(col("vec_id") < 8)
-    graft.llm.Similarity.buildIvfIndex(b1, "ivf_incr_idx", buckets = 4)
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier("ivf_incr_idx")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(ident).location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(): Set[String] = {
-      val it = fs.listFiles(loc, true)
-      val b = Set.newBuilder[String]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) b += f.getPath.toString
-      }
-      b.result()
-    }
-    val filesBefore = dataFiles()
-    val centsBefore = graft.llm.Similarity.readIvfCentroids(spark, "ivf_incr_idx")
-
-    graft.llm.Similarity.appendToIvfIndex(b2, "ivf_incr_idx")
-
-    val filesAfter = dataFiles()
-    assert(filesBefore.subsetOf(filesAfter),
-      "append must not rewrite or drop existing index files")
-    val newFiles = (filesAfter -- filesBefore).toSeq
-    assert(newFiles.nonEmpty)
-    assert(spark.read.parquet(newFiles: _*).count() === b2.count(),
-      "append must write exactly the batch's rows")
-    // the quantizer is untouched by an append — retraining is a rebuild
-    val centsAfter = graft.llm.Similarity.readIvfCentroids(spark, "ivf_incr_idx")
-    assert(centsAfter.map(_.toSeq).toSeq === centsBefore.map(_.toSeq).toSeq,
-      "append must not retrain the stored centroids")
-
-    // serving parity: the grown index answers exactly like a full rebuild
-    // with the SAME (frozen) centroids — the FAISS train/add contract
-    graft.llm.Similarity.buildIvfIndex(emb, "ivf_full_idx", buckets = 4,
-      centroids = Some(centsBefore))
-    val viaIncr = graft.llm.Similarity.annIvfIndexed(
-      spark, "ivf_incr_idx", queries, k = 5)
-      .collect().map(_.toString).sorted
-    val viaFull = graft.llm.Similarity.annIvfIndexed(
-      spark, "ivf_full_idx", queries, k = 5)
-      .collect().map(_.toString).sorted
-    assert(viaIncr.nonEmpty && viaIncr === viaFull)
-  }
-
   test("PQ index: identical results to the inline path, corpus never shuffles") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 8)
@@ -1091,59 +832,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(n <= 2, s"corpus side shuffled ($n exchanges):\n$p")
     assert(!"Exchange hashpartitioning\\(neighbor_id".r.findFirstIn(p).isDefined ||
       p.contains("Bucketed: true"), s"rerank re-attach not bucketed:\n$p")
-  }
-
-  test("PQ index append: frozen-codebook growth == rebuild, write is batch-sized") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val b1 = emb.filter(col("vec_id") % 2 === 0)
-    val b2 = emb.filter(col("vec_id") % 2 === 1)
-    val queries = emb.filter(col("vec_id") < 8)
-    graft.llm.Similarity.buildPqIndex(b1, "pq_incr_idx", buckets = 4)
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier("pq_incr_idx")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(ident).location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(): Set[String] = {
-      val it = fs.listFiles(loc, true)
-      val b = Set.newBuilder[String]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) b += f.getPath.toString
-      }
-      b.result()
-    }
-    val filesBefore = dataFiles()
-    val (booksBefore, ksubBefore) =
-      graft.llm.Similarity.readPqCodebooks(spark, "pq_incr_idx")
-
-    graft.llm.Similarity.appendToPqIndex(b2, "pq_incr_idx")
-
-    val filesAfter = dataFiles()
-    assert(filesBefore.subsetOf(filesAfter),
-      "append must not rewrite or drop existing index files")
-    val newFiles = (filesAfter -- filesBefore).toSeq
-    assert(newFiles.nonEmpty)
-    assert(spark.read.parquet(newFiles: _*).count() === b2.count(),
-      "append must write exactly the batch's rows")
-    // codebooks untouched by an append — retraining is a rebuild decision
-    val (booksAfter, ksubAfter) =
-      graft.llm.Similarity.readPqCodebooks(spark, "pq_incr_idx")
-    assert(ksubAfter === ksubBefore)
-    assert(booksAfter.map(_.map(_.toSeq).toSeq).toSeq ===
-      booksBefore.map(_.map(_.toSeq).toSeq).toSeq,
-      "append must not retrain the stored codebooks")
-
-    // serving parity: the grown index answers exactly like a full rebuild
-    // with the SAME (frozen) codebooks
-    graft.llm.Similarity.buildPqIndex(emb, "pq_full_idx", buckets = 4,
-      codebooks = Some(booksBefore))
-    val viaIncr = graft.llm.Similarity.annPqIndexed(
-      spark, "pq_incr_idx", queries, k = 5)
-      .collect().map(_.toString).sorted
-    val viaFull = graft.llm.Similarity.annPqIndexed(
-      spark, "pq_full_idx", queries, k = 5)
-      .collect().map(_.toString).sorted
-    assert(viaIncr.nonEmpty && viaIncr === viaFull)
   }
 
   test("dynamic partition overwrite replaces one partition's files, preserves the rest") {
@@ -1193,59 +881,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     // heap); a corpus-keyed exchange would mean codes or embeddings moved
     val n = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(n <= 2, s"corpus side shuffled ($n exchanges):\n$p")
-  }
-
-  test("IVFADC index append: frozen centroid+codebook growth == rebuild, batch-sized write") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val b1 = emb.filter(col("vec_id") % 2 === 0)
-    val b2 = emb.filter(col("vec_id") % 2 === 1)
-    val queries = emb.filter(col("vec_id") < 8)
-    graft.llm.Similarity.buildIvfPqIndex(b1, "ivfpq_incr_idx", buckets = 4)
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier("ivfpq_incr_idx")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(ident).location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(): Set[String] = {
-      val it = fs.listFiles(loc, true)
-      val b = Set.newBuilder[String]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) b += f.getPath.toString
-      }
-      b.result()
-    }
-    val filesBefore = dataFiles()
-    val centsBefore = graft.llm.Similarity.readIvfCentroids(spark, "ivfpq_incr_idx")
-    val (booksBefore, _) = graft.llm.Similarity.readPqCodebooks(spark, "ivfpq_incr_idx")
-
-    graft.llm.Similarity.appendToIvfPqIndex(b2, "ivfpq_incr_idx")
-
-    val filesAfter = dataFiles()
-    assert(filesBefore.subsetOf(filesAfter),
-      "append must not rewrite or drop existing index files")
-    val newFiles = (filesAfter -- filesBefore).toSeq
-    assert(newFiles.nonEmpty)
-    assert(spark.read.parquet(newFiles: _*).count() === b2.count(),
-      "append must write exactly the batch's rows")
-    // BOTH parameter sets untouched by an append — the residual codebooks
-    // are meaningful only relative to their centroids; the pair freezes
-    val centsAfter = graft.llm.Similarity.readIvfCentroids(spark, "ivfpq_incr_idx")
-    val (booksAfter, _) = graft.llm.Similarity.readPqCodebooks(spark, "ivfpq_incr_idx")
-    assert(centsAfter.map(_.toSeq).toSeq === centsBefore.map(_.toSeq).toSeq)
-    assert(booksAfter.map(_.map(_.toSeq).toSeq).toSeq ===
-      booksBefore.map(_.map(_.toSeq).toSeq).toSeq)
-
-    // serving parity: the grown index answers exactly like a full rebuild
-    // with the SAME (frozen) parameter pair
-    graft.llm.Similarity.buildIvfPqIndex(emb, "ivfpq_full_idx", buckets = 4,
-      params = Some((centsBefore, booksBefore)))
-    val viaIncr = graft.llm.Similarity.annIvfPqIndexed(
-      spark, "ivfpq_incr_idx", queries, k = 5)
-      .collect().map(_.toString).sorted
-    val viaFull = graft.llm.Similarity.annIvfPqIndexed(
-      spark, "ivfpq_full_idx", queries, k = 5)
-      .collect().map(_.toString).sorted
-    assert(viaIncr.nonEmpty && viaIncr === viaFull)
   }
 
   test("compaction refuses a bucketed table dir; serving stays intact") {

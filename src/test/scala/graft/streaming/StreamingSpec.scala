@@ -1,18 +1,18 @@
 package graft.streaming
 
-import graft.streaming.EventStreams.Event
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
- * Structured Streaming tests: the tumbling-window aggregation and the
- * keyed-state sessionizer run on a MemoryStream and must agree with their
- * batch mirrors (st01/st02 shapes in graft.queries.Queries).
+ * Structured Streaming tests: the [[EventStreams]] transforms and the
+ * micro-batch sinks run on a MemoryStream and must agree with their batch
+ * mirrors (the st queries in graft.queries.StreamQueries).
  */
 @graft.SlowTest
 class StreamingSpec extends AnyFunSuite {
+  import StreamingSpec.Event
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -21,6 +21,10 @@ class StreamingSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** A sink that runs `apply` on each micro-batch (`foreachBatch`). */
+  private def foreachBatchSink(df: DataFrame)(apply: DataFrame => Unit) =
+    df.writeStream.foreachBatch { (b: DataFrame, _: Long) => apply(b) }
 
   private def ts(minute: Int): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
@@ -31,36 +35,6 @@ class StreamingSpec extends AnyFunSuite {
     Event(2, ts(65), 2, "view", 3.0),   // second hour window
     Event(3, ts(70), 1, "click", 4.0),
     Event(4, ts(130), 1, "view", 5.0))  // third hour; 60-min gap for user 1
-
-  test("streaming tumbling window agrees with the batch window aggregation") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-
-    val stream = MemoryStream[Event]
-    stream.addData(fixture: _*)
-    val q = EventStreams.tumblingCounts(stream.toDF())
-      .writeStream.format("memory").queryName("tumbling")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-
-    val streamed = spark.table("tumbling")
-      .select(date_format(col("win_start"), "HH:mm").as("w"), col("event_type"),
-        col("cnt"), col("sum_value_r"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-      .toSet
-    val batch = EventStreams.tumblingCounts(fixture.toDF())
-      .select(date_format(col("win_start"), "HH:mm").as("w"), col("event_type"),
-        col("cnt"), col("sum_value_r"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-      .toSet
-    assert(streamed === batch)
-    assert(streamed === Set(
-      ("00:00", "click", 2L, 3.0),
-      ("01:00", "view", 1L, 3.0),
-      ("01:00", "click", 1L, 4.0),
-      ("02:00", "view", 1L, 5.0)))
-  }
 
   test("streaming windowed bitmap-distinct agrees with batch and is exact") {
     val s = spark
@@ -123,40 +97,6 @@ class StreamingSpec extends AnyFunSuite {
       (2L, "01:05", "01:35", 1L, 3.0)))
   }
 
-  test("streaming windowed top-k (bounded-heap state) agrees with the batch mirror") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-
-    // enough events per (window, type) to exceed k=2 and exercise eviction
-    val events = Seq(
-      Event(0, ts(5), 1, "click", 1.0), Event(1, ts(10), 1, "click", 9.0),
-      Event(2, ts(15), 2, "click", 5.0), Event(3, ts(20), 2, "click", 9.0),
-      Event(4, ts(25), 3, "click", 2.0), Event(5, ts(40), 3, "view", 7.0),
-      Event(6, ts(70), 1, "click", 4.0))
-    val stream = MemoryStream[Event]
-    stream.addData(events: _*)
-    val q = EventStreams.windowedTopK(stream.toDF(), k = 2)
-      .writeStream.format("memory").queryName("wtopk")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-
-    def norm(df: org.apache.spark.sql.DataFrame) = df
-      .select(date_format(col("win_start"), "HH:mm").as("w"), col("event_type"),
-        col("rnk"), col("event_id"), col("value_r"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-      .toSet
-    val streamed = norm(spark.table("wtopk"))
-    val batch = norm(EventStreams.windowedTopK(events.toDF(), k = 2))
-    assert(streamed === batch)
-    // value tie at 9.0 in hour 0 "click": event_id 1 < 3 breaks it
-    assert(streamed === Set(
-      ("00:00", "click", 1L, 1L, 9.0), ("00:00", "click", 2L, 3L, 9.0),
-      ("00:00", "view", 1L, 5L, 7.0),
-      ("01:00", "click", 1L, 6L, 4.0)))
-  }
-
   test("session-window top-k: stream == batch, ties and heap eviction inside merged sessions") {
     val s = spark
     import s.implicits._
@@ -195,52 +135,6 @@ class StreamingSpec extends AnyFunSuite {
       (1L, "00:05", "01:10", 2L, 12L, 9.0),  // ids 10, 13 evicted
       (1L, "01:30", "02:00", 1L, 14L, 4.0),
       (2L, "01:05", "01:35", 1L, 15L, 2.0)))
-  }
-
-  test("streaming dedup drops re-delivered event ids within the watermark") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Event]
-    stream.addData(fixture ++ Seq(fixture(1), fixture(3)): _*) // re-deliveries
-    val q = EventStreams.dedupEvents(stream.toDF())
-      .writeStream.format("memory").queryName("dedup").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val ids = spark.table("dedup").select("event_id").collect().map(_.getLong(0)).sorted
-    assert(ids.toSeq === fixture.map(_.event_id).sorted)
-  }
-
-  test("crawl-change classifier: stream == batch across micro-batches, state carries") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import EventStreams.Fetch
-    def f(id: Long, minute: Int, url: String, fp: String): Fetch =
-      Fetch(id, ts(minute), url, fp, ts(minute).getTime * 1000L)
-    val batch1 = Seq(
-      f(0, 5, "u1", "A"), // new
-      f(1, 10, "u1", "A"), // unchanged (same batch)
-      f(2, 15, "u2", "X")) // new
-    val batch2 = Seq(
-      f(3, 65, "u1", "B"), // changed vs batch-1 state
-      f(4, 70, "u2", "X"), // unchanged vs batch-1 state
-      f(5, 75, "u3", "Z")) // new
-    val stream = MemoryStream[Fetch]
-    val q = EventStreams.crawlChanges(stream.toDS())
-      .writeStream.format("memory").queryName("crawlchg").outputMode("append").start()
-    try {
-      stream.addData(batch1: _*); q.processAllAvailable()
-      stream.addData(batch2: _*); q.processAllAvailable()
-    } finally q.stop()
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("event_id", "status").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val streamed = rows(spark.table("crawlchg"))
-    assert(streamed === Map(0L -> "new", 1L -> "unchanged", 2L -> "new",
-      3L -> "changed", 4L -> "unchanged", 5L -> "new"))
-    // bounded run of the same operator agrees (the st21 mirror contract)
-    val batch = rows(EventStreams.crawlChanges((batch1 ++ batch2).toDS()).toDF())
-    assert(batch === streamed)
   }
 
   test("stream-stream interval join agrees with its batch mirror") {
@@ -311,8 +205,8 @@ class StreamingSpec extends AnyFunSuite {
     val rows2 = Seq(("b", 5L), ("c", 7L), ("a", 4L))
     val stream = MemoryStream[(String, Long)]
     stream.addData(rows1: _*)
-    val q = EventStreams.maintainAggStream(
-        stream.toDF().toDF("key", "value"), dir, nParts = 4)
+    val q = foreachBatchSink(stream.toDF().toDF("key", "value"))(
+        graft.relational.IncrementalAgg.applyDelta(_, dir, nParts = 4))
       .outputMode("update").start()
     try {
       q.processAllAvailable()
@@ -330,46 +224,6 @@ class StreamingSpec extends AnyFunSuite {
       k -> ((vs.size.toLong, vs.map(_._2).sum))
     }
     assert(fin === oneShot, s"stream-fed $fin != one-shot $oneShot")
-  }
-
-  test("rate limit admits first-n per (type, window) with pruned state; stream == batch rank") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // window = 1h, n = 2: minute 0-59 has 3 'a' events (third drops) and
-    // 1 'b'; the next hour re-opens 'a' quota; a second TRIGGER continues
-    // the same hour for 'b' (state must carry the count across triggers)
-    val batch1 = Seq(
-      Event(1, ts(1), 1, "a", 1.0), Event(2, ts(2), 2, "a", 1.0),
-      Event(3, ts(3), 3, "a", 1.0), // over quota -> drop
-      Event(4, ts(4), 4, "b", 1.0),
-      Event(5, ts(70), 5, "a", 1.0)) // next hour: admits
-    val batch2 = Seq(
-      Event(6, ts(75), 6, "b", 1.0),  // b's hour-1 window: count carried... (new window, admits)
-      Event(7, ts(80), 7, "a", 1.0),  // a hour-1: second admit
-      Event(8, ts(85), 8, "a", 1.0))  // a hour-1: over quota -> drop
-    val stream = MemoryStream[Event]
-    stream.addData(batch1: _*)
-    val q = EventStreams.rateLimit(stream.toDS(), n = 2)
-      .writeStream.format("memory").queryName("rlimit").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      stream.addData(batch2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("rlimit").select("event_id")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(streamed === Seq(1L, 2L, 4L, 5L, 6L, 7L), s"admitted $streamed")
-    // the batch-mirror rank form admits the identical set
-    val all = (batch1 ++ batch2).toDS()
-    val viaRank = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_type"), expr("date_trunc('HOUR', ts)"))
-        .orderBy(col("ts"), col("event_id"))
-      all.withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
-        .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
-    }
-    assert(viaRank === streamed)
   }
 
   test("stream-stream FULL OUTER join emits every row of both sides exactly once") {
@@ -437,7 +291,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("upsert_t").toString + "/state"
     val stream = MemoryStream[Event]
-    val q = EventStreams.upsertStream(stream.toDF(), dir, nParts = 4)
+    val q = foreachBatchSink(stream.toDF())(EventStreams.upsertBatch(_, dir, nParts = 4))
       .outputMode("update").start()
     def files(p: Int): Set[String] = {
       val d = new java.io.File(s"$dir/__p=$p")
@@ -505,132 +359,6 @@ class StreamingSpec extends AnyFunSuite {
       ("00:00", "(none)", 1L, 4.0), ("01:00", "BUILDING", 1L, 8.0)))
   }
 
-  test("streaming ingest: gate drops low-quality, dedup admits first per fingerprint") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def doc(id: Long, minute: Int, text: String, lang: String) =
-      (id, ts(minute), text, lang)
-    val long1 = (1 to 35).map(i => s"w$i").mkString(" ")          // >= 30 words
-    val long2 = "p q r s t " + (1 to 30).map(i => s"v$i").mkString(" ")
-    val dup1 = long1 + " extra tail words here"                   // same 5-word prefix
-    val stream = MemoryStream[(Long, java.sql.Timestamp, String, String)]
-    val q = EventStreams.ingestStream(
-        stream.toDF().toDF("doc_id", "ts", "text", "lang"), minWords = 30)
-      .writeStream.format("memory").queryName("ingest").outputMode("append").start()
-    try {
-      stream.addData(doc(1, 5, long1, "en"), doc(2, 6, "too short", "en"),
-        doc(3, 7, long2, "fr"))
-      q.processAllAvailable()
-      stream.addData(doc(4, 8, dup1, "en")) // prefix-dup of doc 1: rejected
-      q.processAllAvailable()
-    } finally q.stop()
-    val admitted = spark.table("ingest").select("doc_id").collect()
-      .map(_.getLong(0)).sorted
-    assert(admitted.toSeq === Seq(1L, 3L))
-    // and the deterministic batch election (the st07 query form) coincides
-    val batch = Seq(doc(1, 5, long1, "en"), doc(2, 6, "too short", "en"),
-      doc(3, 7, long2, "fr"), doc(4, 8, dup1, "en"))
-      .toDF("doc_id", "ts", "text", "lang")
-      .filter(size(split(col("text"), " ")) >= 30)
-      .withColumn("__fp", md5(array_join(slice(split(col("text"), " "), 1, 5), " ")))
-    val winners = batch.groupBy("__fp").agg(min(col("doc_id")).as("doc_id"))
-    val batchIds = batch.join(winners, Seq("__fp", "doc_id"), "left_semi")
-      .select("doc_id").collect().map(_.getLong(0)).sorted
-    assert(batchIds.toSeq === admitted.toSeq)
-  }
-
-  test("streaming ingest to a partitioned sink + per-partition compaction maintenance") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft_part_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_part_ckpt").toString
-    def doc(id: Long, minute: Int, text: String, lang: String) =
-      (id, ts(minute), text, lang)
-    def longText(seed: Int) = (1 to 35).map(i => s"w${seed}_$i").mkString(" ")
-
-    // 4 micro-batches x 2 langs: each trigger appends one file per
-    // (lang, task) — the small-file accretion compaction exists for
-    val stream = MemoryStream[(Long, java.sql.Timestamp, String, String)]
-    val q = EventStreams.ingestStream(
-        stream.toDF().toDF("doc_id", "ts", "text", "lang"), minWords = 30)
-      .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .partitionBy("lang").outputMode("append").start()
-    try {
-      for (b <- 0 until 4) {
-        stream.addData(doc(b * 2L, b * 2, longText(b * 2), "en"),
-          doc(b * 2L + 1, b * 2 + 1, longText(b * 2 + 1), "fr"))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-
-    val want = spark.read.parquet(out).select("doc_id", "lang")
-      .collect().map(_.toString).sorted
-    assert(want.length === 8, "all 8 quality-passing docs must land")
-    def leafFiles(lang: String): Int = new java.io.File(s"$out/lang=$lang")
-      .listFiles().count(f => f.isFile && !f.getName.startsWith("_")
-        && !f.getName.startsWith("."))
-    assert(leafFiles("en") >= 4 && leafFiles("fr") >= 4,
-      "each partition must have accreted one file per trigger")
-
-    // the sink dir is governed by its _spark_metadata commit log — batch
-    // readers resolve files THROUGH the log, so compaction must refuse it
-    // until the retired sink is graduated to a raw table
-    assertThrows[IllegalStateException] {
-      graft.relational.Compaction.compactPartitioned(
-        spark, out, targetBytes = 64L << 20)
-    }
-    assert(graft.relational.Compaction.graduateStreamingSink(spark, out))
-
-    // post-batch maintenance: fold each leaf partition independently
-    val reports = graft.relational.Compaction.compactPartitioned(
-      spark, out, targetBytes = 64L << 20)
-
-    assert(reports.keySet === Set("lang=en", "lang=fr"))
-    for ((leaf, r) <- reports) {
-      assert(r.rewritten >= 4, s"$leaf: small files not folded ($r)")
-      assert(r.filesAfter < r.filesBefore, s"$leaf: no file-count win ($r)")
-    }
-    assert(leafFiles("en") === reports("lang=en").filesAfter)
-    assert(leafFiles("fr") === reports("lang=fr").filesAfter)
-    // the partitioned table reads back identically, lang column intact
-    val got = spark.read.parquet(out).select("doc_id", "lang")
-      .collect().map(_.toString).sorted
-    assert(got === want, "compaction must not change table content")
-  }
-
-  test("checkpoint recovery: a restarted query resumes exactly-once (no dup, no loss)") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val stream = MemoryStream[Event]
-    def start() = EventStreams.dedupEvents(stream.toDF())
-      .select("event_id", "user_id", "event_type")
-      .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt).outputMode("append").start()
-
-    // batch 1 committed, then the query "crashes" (stop) before batch 2
-    val q1 = start()
-    stream.addData(fixture.take(3): _*)
-    q1.processAllAvailable()
-    q1.stop()
-    // batch 2 arrives while down; restart from the checkpoint picks it up,
-    // including a re-delivery of event 1 that dedup must drop
-    stream.addData(fixture.drop(3) :+ fixture(1): _*)
-    val q2 = start()
-    q2.processAllAvailable()
-    q2.stop()
-
-    val ids = spark.read.parquet(out).select("event_id")
-      .collect().map(_.getLong(0)).sorted
-    assert(ids.toSeq === fixture.map(_.event_id).sorted,
-      s"exactly-once violated: ${ids.toSeq}")
-  }
-
   test("upsert sink checkpoint recovery: restart re-merges idempotently, state exact") {
     val s = spark
     import s.implicits._
@@ -638,7 +366,7 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ups_ckpt").toString
     val dir = java.nio.file.Files.createTempDirectory("graft_ups_tbl").toString + "/state"
     val stream = MemoryStream[Event]
-    def start() = EventStreams.upsertStream(stream.toDF(), dir, nParts = 4)
+    def start() = foreachBatchSink(stream.toDF())(EventStreams.upsertBatch(_, dir, nParts = 4))
       .option("checkpointLocation", ckpt).outputMode("update").start()
 
     val q1 = start()
@@ -660,69 +388,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === Set((1L, 12L, 9.0), (2L, 11L, 2.0)), s"got $got")
   }
 
-  test("streaming near-dup dedup keeps the first doc per content fingerprint") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
-    val stream = MemoryStream[(Long, java.sql.Timestamp, String)]
-    stream.addData(
-      (1L, ts(1), base),
-      (2L, ts(2), base),           // exact re-crawl -> dropped
-      (3L, ts(3), base + " w11"),  // near-identical: same min shingle hash -> dropped
-      (4L, ts(4), "z1 z2 z3 z4 z5 z6"),
-      (5L, ts(5), "short one"),    // below w words: must NOT collapse together
-      (6L, ts(6), "other short"),
-      (7L, ts(7), "short one"))    // exact short re-crawl -> dropped
-    val q = EventStreams.dedupNearStream(
-        stream.toDF().toDF("doc_id", "ts", "text"))
-      .writeStream.format("memory").queryName("neardup").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val kept = spark.table("neardup").select("doc_id").collect().map(_.getLong(0)).sorted
-    assert(kept.toSeq === Seq(1L, 4L, 5L, 6L))
-  }
-
-  test("st19 mirror: streaming dedup over the md5 fingerprint admits the min-doc_id election set") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
-    // doc_id-ordered arrival (one MemoryStream batch), so the stream's
-    // first-arrival-wins coincides with the batch election's min doc_id
-    val docs = Seq(
-      (1L, ts(1), base),
-      (2L, ts(2), base),            // exact re-crawl -> same fp class
-      (3L, ts(3), base + " w11"),   // near-dup: fp equality decided by md5 min
-      (4L, ts(4), "z1 z2 z3 z4 z5 z6"),
-      (5L, ts(5), "shorty"),        // <5 words -> short: class
-      (6L, ts(6), "shorty"),        // exact short re-crawl -> dropped
-      (7L, ts(7), null.asInstanceOf[String]), // null text -> id class, always kept
-      (8L, ts(8), null.asInstanceOf[String]))
-    val df = docs.toDF("doc_id", "ts", "text")
-    val fp = EventStreams.nearDupFingerprintMd5(col("text"), col("doc_id"), 5)
-    val stream = MemoryStream[(Long, java.sql.Timestamp, String)]
-    stream.addData(docs: _*)
-    val q = EventStreams.dedupStreamBy(
-        stream.toDF().toDF("doc_id", "ts", "text"), fp)
-      .writeStream.format("memory").queryName("nd19").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("nd19").select("doc_id")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    // the st19 batch election over the identical fingerprint
-    val withFp = df.withColumn("__fp", fp)
-    val winners = withFp.groupBy("__fp")
-      .agg(org.apache.spark.sql.functions.min(col("doc_id")).as("doc_id"))
-    val elected = withFp.join(winners, Seq("__fp", "doc_id"), "left_semi")
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(streamed === elected, s"stream $streamed != election $elected")
-    // class disjointness: both null-text docs keep (id class), one short
-    // keeps, and the exact re-crawl of doc 1 never survives
-    assert(streamed.contains(7L) && streamed.contains(8L))
-    assert(streamed.contains(5L) && !streamed.contains(6L))
-    assert(streamed.contains(1L) && !streamed.contains(2L))
-  }
-
-  test("streaming near-dup admission rejects cross-corpus dups: stream == batch, both forms") {
+  test("streaming near-dup admission rejects cross-corpus dups: foreachBatch == batch operator") {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -741,35 +407,23 @@ class StreamingSpec extends AnyFunSuite {
       (4L, ts(4), "tiny"))
     val expected = Seq(3L, 4L)
 
-    // form 1: the stateless stream-static broadcast anti-join gate
-    val stream = MemoryStream[(Long, java.sql.Timestamp, String)]
-    stream.addData(incoming: _*)
-    val q = EventStreams.admitNearDupStream(
-        stream.toDF().toDF("doc_id", "ts", "text"), index, minJ = 0.5)
-      .writeStream.format("memory").queryName("ndadmit").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("ndadmit").select("doc_id")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(streamed === expected, s"stateless gate admitted $streamed")
-    // the stateless gate run on the SAME frame as a batch agrees (its
-    // transform is engine-mode-agnostic)...
+    // the indexed batch admission operator over the whole input
     val batchDf = incoming.toDF("doc_id", "ts", "text")
-    val viaGateBatch = EventStreams.admitNearDupStream(batchDf, index, minJ = 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(viaGateBatch === expected)
-    // ...and matches the indexed batch admission operator exactly
     val viaBatchOp = graft.llm.Dedup.nearDupAdmit(batchDf, index, minJ = 0.5)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(viaBatchOp === expected)
 
-    // form 2: foreachBatch + the indexed batch operator (corpus-scale path)
+    // foreachBatch + the same operator per micro-batch (corpus-scale path);
+    // materializeBatch off: nothing in the body outlives the trigger to
+    // unpersist a per-batch cache
     val stream2 = MemoryStream[(Long, java.sql.Timestamp, String)]
     stream2.addData(incoming.take(2): _*) // two triggers: admission must be
     val admitted = scala.collection.mutable.SortedSet.empty[Long] // per-batch
     val q2 = stream2.toDF().toDF("doc_id", "ts", "text")
       .writeStream.outputMode("append")
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        admitted ++= EventStreams.nearDupAdmitBatch(index, minJ = 0.5)(b)
+        admitted ++= graft.llm.Dedup.nearDupAdmit(b, index, minJ = 0.5,
+            materializeBatch = false)
           .select("doc_id").collect().map(_.getLong(0))
         () // Unit: the (DataFrame, Long) => Unit overload
       }.start()
@@ -824,33 +478,6 @@ class StreamingSpec extends AnyFunSuite {
         incoming.toDF("doc_id", "ts", "text"), bench, w = 3, minShared = 2)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(flagged === Set(1L), s"batch operator flagged $flagged")
-  }
-
-  test("sessionizer state compression: a session spanning watermark advances keeps exact counts") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // user 1 emits every 20 min from minute 0 to 140 (8 events, gap 30 min
-    // -> ONE session). Watermark (1 h) advances past the early events while
-    // the session is still open, forcing them into the compressed head
-    // summary; the final advancer matures the session via the timeout path.
-    val gap = 30L * 60 * 1000
-    val u1 = (0 until 8).map(i => Event(i.toLong, ts(i * 20), 1, "click", 1.0))
-    val stream = MemoryStream[Event]
-    val q = EventStreams.sessionize(stream.toDS(), gapMs = gap)
-      .writeStream.format("memory").queryName("sess_compress").outputMode("append").start()
-    try {
-      stream.addData(u1.take(4) :+ Event(100, ts(120), 99, "adv", 0.0): _*) // wm -> 60
-      q.processAllAvailable()
-      stream.addData(u1.drop(4) :+ Event(101, ts(240), 99, "adv", 0.0): _*) // wm -> 180
-      q.processAllAvailable()
-      stream.addData(Event(102, ts(600), 99, "adv", 0.0)) // fire timeouts
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("sess_compress").as[EventStreams.SessionOut].collect()
-      .filter(_.user_id == 1L)
-      .map(o => (o.session_start_ms, o.session_end_ms, o.n_events)).toSet
-    assert(got === Set((ts(0).getTime, ts(140).getTime, 8L)))
   }
 
   test("streaming SFT gate: one emission per conversation, stream == batch mirror under late/replayed delivery") {
@@ -993,70 +620,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(bounded === expected, s"bounded: $bounded")
   }
 
-  test("event-time sessionizer: late, replayed, re-chunked delivery yields identical sessions") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // user 1 events at minutes 5, 20, 70: sessions [5..20] and [70..70]
-    // (gap 30 min). A watermark-advancing probe at minute 600 (user 99,
-    // watermark 1 h -> wm = minute 540) matures BOTH user-1 sessions, so
-    // the timeout path must emit them without any further user-1 input.
-    val gap = 30L * 60 * 1000
-    def run(name: String)(chunks: Seq[Seq[Event]]): Set[(Long, Long, Long, Long)] = {
-      val stream = MemoryStream[Event]
-      val q = EventStreams.sessionize(stream.toDS(), gapMs = gap)
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        chunks.foreach { c => stream.addData(c: _*); q.processAllAvailable() }
-        // one empty-input microbatch so event-time timeouts registered by
-        // the last data batch get a chance to fire
-        stream.addData(Event(999, ts(610), 99, "probe", 0.0))
-        q.processAllAvailable()
-      } finally q.stop()
-      spark.table(name).as[EventStreams.SessionOut].collect()
-        .map(o => (o.user_id, o.session_start_ms, o.session_end_ms, o.n_events))
-        .filter(_._1 != 99L).toSet
-    }
-
-    val e5 = Event(0, ts(5), 1, "click", 1.0)
-    val e20 = Event(1, ts(20), 1, "click", 2.0)
-    val e70 = Event(3, ts(70), 1, "click", 4.0)
-    val probe = Event(100, ts(600), 99, "probe", 0.0)
-
-    val inOrder = run("sess_inorder")(Seq(Seq(e5, e20, e70), Seq(probe)))
-    // out-of-order across batches: e70 before e20 (e20 is late but within
-    // the 1 h watermark), plus a replay of e5
-    val lateReplay = run("sess_late")(Seq(Seq(e5, e70), Seq(e20, e5), Seq(probe)))
-    // everything in a single batch
-    val oneBatch = run("sess_onebatch")(Seq(Seq(e5, e20, e70, probe)))
-
-    assert(inOrder === lateReplay)
-    assert(inOrder === oneBatch)
-    assert(inOrder === Set(
-      (1L, ts(5).getTime, ts(20).getTime, 2L),
-      (1L, ts(70).getTime, ts(70).getTime, 1L)))
-  }
-
-  test("flatMapGroupsWithState sessionizer closes sessions on gap > 30 min") {
-    val s = spark
-    import s.implicits._
-    // bounded run: sessions still open at end-of-input are not emitted —
-    // assert on the *closed* ones, which is the streaming contract.
-    val closed = EventStreams.sessionize(fixture.toDS(), gapMs = 30L * 60 * 1000)
-      .collect().map(o => (o.user_id, o.n_events)).toSet
-    // user 1: [5,20] then [70] closed by the 130 event; [130] stays open.
-    // user 2: [65] stays open.
-    assert(closed === Set((1L, 2L), (1L, 1L)))
-  }
-
   test("streaming sample sink: maintained sample == direct bottom-k, replay is a no-op") {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("sample_t").toString + "/sample"
     val stream = MemoryStream[(String, Long)]
-    val q = EventStreams.sampleStream(
-      stream.toDF().toDF("source", "doc_id"), dir, "source", "doc_id", k = 4)
+    val q = foreachBatchSink(stream.toDF().toDF("source", "doc_id"))(
+        EventStreams.sampleBatch(_, dir, "source", "doc_id", k = 4))
       .outputMode("update").start()
     val batch2 = (31L to 60L).map(("a", _)) :+ (("b", 99L))
     try {
@@ -1080,4 +651,9 @@ class StreamingSpec extends AnyFunSuite {
       "source", "doc_id", k = 4)
     assert(canon(spark.read.parquet(dir)) === direct, "replayed batch mutated the sample")
   }
+}
+
+object StreamingSpec {
+  final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
+      event_type: String, value: Double)
 }
